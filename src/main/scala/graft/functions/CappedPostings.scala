@@ -97,11 +97,10 @@ case class CappedPostingsAgg(
 
   override def update(buf: PostingsBuffer, input: InternalRow): PostingsBuffer = {
     val id = docId.eval(input)
-    // mirror the former encoder path's effective behavior on the only
-    // inputs these pipelines produce (non-null ids): every row counts
-    // toward df; a (never-occurring) null id cannot be stored
+    // df counts documents: a null id names none, so it is skipped
+    if (id == null) return buf
     buf.df += 1L
-    if (buf.n < keep && id != null) {
+    if (buf.n < keep) {
       val s = sz.eval(input)
       buf.ensure(1, keep)
       buf.ids(buf.n) = id.asInstanceOf[Long]

@@ -48,10 +48,14 @@ object IntermediateRetention {
       val c = s.charAt(i)
       if (c == '\\' && i + 1 < s.length) {
         s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            sb.append(
-              Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
+          case 'u' =>
+            // a \u without four hex digits is not an escape the writer
+            // made: keep it as it stands instead of failing the sweep
+            val hex = s.substring(i + 2, math.min(i + 6, s.length))
+            if (hex.length == 4 && hex.forall(Character.digit(_, 16) >= 0)) {
+              sb.append(Integer.parseInt(hex, 16).toChar)
+              i += 6
+            } else { sb.append("\\u"); i += 2 }
           case 'n' => sb.append('\n'); i += 2
           case 't' => sb.append('\t'); i += 2
           case 'r' => sb.append('\r'); i += 2

@@ -2,6 +2,7 @@ package graft.harness
 
 import graft.harness.connectors.{Datagen, PrintSink}
 import graft.harness.ddl.{DdlParser, TableDef}
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import scala.collection.mutable
@@ -702,14 +703,17 @@ final class SqlSubmitAction(
       val b = SparkSession.builder()
         .appName("graft-sql-submit")
         .withExtensions(new graft.functions.GraftSparkExtensions)
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
         .config("spark.sql.session.timeZone", "UTC")
       // spark-submit injects spark.master; default to local[*] when run
       // directly (dev/tests) so the CLI works standalone.
       if (!sys.props.contains("spark.master"))
         b.master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      b.getOrCreate()
+      val s = b.getOrCreate()
+      // the cores are only known once the context is up
+      val sc = s.sparkContext
+      val n = SqlSubmitAction.shufflePartitions(sc.getConf, sc.defaultParallelism)
+      s.conf.set("spark.sql.shuffle.partitions", n.toString)
+      s
     }
     // the extension operators' SQL functions (graft_simhash, graft_dot,
     // ...) are part of the submitted-script surface; a caller-provided
@@ -2454,6 +2458,19 @@ final class SqlSubmitAction(
       }
     }
   }
+}
+
+object SqlSubmitAction {
+
+  /** Shuffle and state partitions for a session `run()` builds: an
+    * explicit `spark.sql.shuffle.partitions` (`--conf`, `-D`) wins,
+    * else the cores Spark schedules on. A fixed count larger than the
+    * cores makes every micro-batch commit that many near-empty state
+    * stores. A restored stream keeps the count its checkpoint was
+    * written with; `SET parallelism.default` overrides mid-script.
+    */
+  def shufflePartitions(conf: SparkConf, defaultParallelism: Int): Int =
+    conf.getInt("spark.sql.shuffle.partitions", defaultParallelism)
 }
 
 final class SqlSubmitActionFactory extends ActionFactory {

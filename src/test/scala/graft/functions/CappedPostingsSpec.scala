@@ -60,6 +60,16 @@ class CappedPostingsSpec extends AnyFunSuite {
     assert(ds.isEmpty)
   }
 
+  test("a null doc id is neither stored nor counted toward df") {
+    val a = agg(3)
+    val withNull = Seq[Any](1L, null, 2L).foldLeft(a.createAggregationBuffer()) {
+      (b, id) => a.update(b, new GenericInternalRow(Array[Any](id, 7L)))
+    }
+    assert(withNull.n == 2)
+    assert(withNull.df == 2L)
+    assert(finish(a, withNull) == ((Set((1L, 7L), (2L, 7L)), 2L)))
+  }
+
   test("eval of the zero buffer is empty with df 0") {
     val a = agg(3)
     val (ds, df) = finish(a, a.createAggregationBuffer())

@@ -117,6 +117,33 @@ class IntermediateRetentionSpec extends AnyFunSuite {
     assert(Files.exists(data(2)), "safety margin")
   }
 
+  test("a \\u without four hex digits passes through literally instead " +
+      "of failing the sweep") {
+    val (mat, ckpt, data) = scaffold("badesc", files = 3, committed = 3)
+    // batch 0's path carries a non-hex \u, batch 1's ends in a cut-off
+    // one: neither names a listed file, so neither file is deleted,
+    // and the sweep still runs to the end
+    val p0 = s"file://${data(0)}"
+    val i0 = p0.lastIndexOf("part-")
+    val nonHex = p0.substring(0, i0) + "\\uZZZZ" + p0.substring(i0)
+    val cutOff = s"file://${data(1)}\\u12"
+    write(ckpt.resolve("sources/0/0"),
+      s"""v1\n{"path":"$nonHex","timestamp":1000,"batchId":0}""")
+    write(ckpt.resolve("sources/0/1"),
+      s"""v1\n{"path":"$cutOff","timestamp":1001,"batchId":1}""")
+    val n = IntermediateRetention.sweep(conf, mat.toString,
+      Seq(ckpt.toString), retentionMs = 0L)
+    assert(n === 0, n.toString)
+    assert(data.forall(Files.exists(_)))
+    // the same log with batch 0's file named correctly deletes it: the
+    // malformed entry beside it does not stop the sweep
+    write(ckpt.resolve("sources/0/0"),
+      s"""v1\n{"path":"$p0","timestamp":1000,"batchId":0}""")
+    assert(IntermediateRetention.sweep(conf, mat.toString,
+      Seq(ckpt.toString), retentionMs = 0L) === 1)
+    assert(!Files.exists(data(0)) && Files.exists(data(1)))
+  }
+
   test("compacted source-log files contribute only their committed " +
       "slice (entries filter on batchId)") {
     val (mat, ckpt, data) = scaffold("compact", files = 2, committed = 2)

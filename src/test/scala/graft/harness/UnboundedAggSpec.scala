@@ -148,23 +148,39 @@ class UnboundedAggSpec extends AnyFunSuite {
           val r = rows.maxBy(_._6)
           (k, (r._2, r._3, r._4, r._5))
         }
-    val q1 = start()
+    // the restart runs with a different session partition count, as
+    // when sql-submit sizes partitions from another machine's cores:
+    // the query keeps the count its checkpoint's offset log recorded
+    def stateParts(q: org.apache.spark.sql.streaming.StreamingQuery): Long = {
+      awaitTrue("a progress report with state")(
+        Option(q.lastProgress).exists(_.stateOperators.nonEmpty))
+      q.recentProgress.reverseIterator.find(_.stateOperators.nonEmpty)
+        .get.stateOperators(0).numShufflePartitions
+    }
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
     try {
-      input.addData(("a", 5L, "x"), ("a", 9L, "y"), ("b", 3L, "x"))
-      awaitTrue("phase-1 totals")(
-        scala.util.Try(latest()).toOption.contains(Map(
-          "a" -> ((2L, 14L, 5L, 2L)), "b" -> ((1L, 3L, 3L, 1L)))))
-    } finally q1.stop()
-    // rows arriving while the query is down: a re-seen tag (x must
-    // not grow a's distinct count), a fresh tag, a new MIN, and rows
-    // for b folding into its restored accumulator
-    input.addData(("a", 1L, "x"), ("a", 2L, "z"), ("b", 4L, "w"))
-    val q2 = start()
-    try {
-      awaitTrue("restored accumulators fold the downtime rows")(
-        scala.util.Try(latest()).toOption.contains(Map(
-          "a" -> ((4L, 17L, 1L, 3L)), "b" -> ((2L, 7L, 3L, 2L)))))
-    } finally q2.stop()
+      spark.conf.set("spark.sql.shuffle.partitions", "8")
+      val q1 = start()
+      try {
+        input.addData(("a", 5L, "x"), ("a", 9L, "y"), ("b", 3L, "x"))
+        awaitTrue("phase-1 totals")(
+          scala.util.Try(latest()).toOption.contains(Map(
+            "a" -> ((2L, 14L, 5L, 2L)), "b" -> ((1L, 3L, 3L, 1L)))))
+        assert(stateParts(q1) == 8L)
+      } finally q1.stop()
+      spark.conf.set("spark.sql.shuffle.partitions", "4")
+      // rows arriving while the query is down: a re-seen tag (x must
+      // not grow a's distinct count), a fresh tag, a new MIN, and rows
+      // for b folding into its restored accumulator
+      input.addData(("a", 1L, "x"), ("a", 2L, "z"), ("b", 4L, "w"))
+      val q2 = start()
+      try {
+        awaitTrue("restored accumulators fold the downtime rows")(
+          scala.util.Try(latest()).toOption.contains(Map(
+            "a" -> ((4L, 17L, 1L, 3L)), "b" -> ((2L, 7L, 3L, 2L)))))
+        assert(stateParts(q2) == 8L)
+      } finally q2.stop()
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
   test("an aliased FROM keeps its alias through the TTL route (r17 " +
