@@ -30,4 +30,21 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The local batch session Bench, Verify and Profile run on:
+    * `SPARK_GRAFT_CPUS` cores (default: the machine's, at most 32), one
+    * shuffle partition per core, UTC, no UI, WARN logging.
+    */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

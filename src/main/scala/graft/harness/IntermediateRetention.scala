@@ -147,6 +147,18 @@ object IntermediateRetention {
       .filter(_.batchId <= upTo)
   }
 
+  /** The marker a sweep writes into the intermediate directory before
+    * its first deletion. It outlives the run, so a later run that
+    * recomputes the same durable path still sees that the manifest
+    * lists deleted files; Spark's file index skips names that start
+    * with `_`. */
+  private val SweptMarker = "_graft_swept"
+
+  def wasSwept(hadoopConf: Configuration, intermediatePath: String): Boolean = {
+    val p = new Path(intermediatePath, SweptMarker)
+    p.getFileSystem(hadoopConf).exists(p)
+  }
+
   /** One sweep over `intermediatePath` against `consumerCkpts`.
     * Returns the number of data files deleted. Fail-safe by
     * construction: no consumers, or any consumer without a commit yet,
@@ -175,23 +187,22 @@ object IntermediateRetention {
       .map(_.get.map(_.path).toSet)
       .reduce(_ intersect _)
     val horizon = all.map(_.ts).max - retentionMs
-    var deleted = 0
-    all.groupBy(_.path).foreach { case (p, entries) =>
-      if (everyCommitted(p) && entries.head.ts <= horizon) {
-        val hp = new Path(p)
-        val qualified = fs.makeQualified(hp).toString
-        // only ever touch files under the intermediate itself, and
-        // never its _spark_metadata manifest; a single bad delete
-        // (transient IO) must not abort the sweep AFTER earlier
-        // deletions — the returned count drives the caller's
-        // swept-path marking, which a mid-loop throw would lose
-        // (second review pass)
-        if (qualified.startsWith(qualifiedBase + "/") &&
-            !qualified.contains("_spark_metadata") &&
-            scala.util.Try(fs.delete(hp, false)).getOrElse(false))
-          deleted += 1
-      }
+    // only ever touch files under the intermediate itself, and never
+    // its _spark_metadata manifest
+    val doomed = all.groupBy(_.path).toSeq.collect {
+      case (p, entries) if everyCommitted(p) && entries.head.ts <= horizon =>
+        new Path(p)
+    }.filter { hp =>
+      val qualified = fs.makeQualified(hp).toString
+      qualified.startsWith(qualifiedBase + "/") &&
+        !qualified.contains("_spark_metadata")
     }
-    deleted
+    // the marker lands BEFORE the first deletion (a failed write
+    // deletes nothing), so a directory without it has a whole
+    // manifest; a single bad delete (transient IO) must not abort the
+    // ones after it
+    val marker = new Path(base, SweptMarker)
+    if (doomed.nonEmpty && !fs.exists(marker)) fs.create(marker, true).close()
+    doomed.count(hp => scala.util.Try(fs.delete(hp, false)).getOrElse(false))
   }
 }

@@ -1594,6 +1594,23 @@ final class SqlSubmitAction(
                     .listStatus(d).nonEmpty).getOrElse(false)
               }
           }
+        // the sweep's marker file records a deletion, also one by an
+        // EARLIER run: a durable intermediate's path is a hash of the
+        // view, so a later run recomputes the same directory
+        def refuseIfSwept(): Unit =
+          if (IntermediateRetention.wasSwept(
+                spark.sparkContext.hadoopConfiguration, plan.path) &&
+              !resumingConsumer)
+            throw new IllegalArgumentException(
+              s"cannot attach another consumer to intermediate " +
+                s"'${plan.mat}': " +
+                "graft.streaming.intermediate-retention has " +
+                "already deleted files its manifest still lists, " +
+                "so a NEW consumer cannot replay the view's " +
+                "history — group the consumers in one EXECUTE " +
+                "STATEMENT SET ahead of any deletion, or unset " +
+                "the retention (and, if an earlier run swept, " +
+                "start from a fresh checkpoint base)")
         // check-then-register runs ATOMICALLY against the sweeper tick
         // (both under retentionLock): a sweep can no longer land
         // between the swept-path check and the sentinel registration.
@@ -1604,16 +1621,7 @@ final class SqlSubmitAction(
             val s = s"${plan.path}-pending-" +
               java.util.UUID.randomUUID.toString.take(8)
             retentionLock.synchronized {
-              if (sweptPaths.contains(plan.path) && !resumingConsumer)
-                throw new IllegalArgumentException(
-                  s"cannot attach another consumer to intermediate " +
-                    s"'${plan.mat}': " +
-                    "graft.streaming.intermediate-retention has " +
-                    "already deleted files its manifest still lists, " +
-                    "so a NEW consumer cannot replay the view's " +
-                    "history — group the consumers in one EXECUTE " +
-                    "STATEMENT SET ahead of any deletion, or unset " +
-                    "the retention for this run")
+              refuseIfSwept()
               val (_, consumers) = intermediateConsumers
                 .getOrElseUpdate(plan.path,
                   (retMs, mutable.LinkedHashSet.empty[String]))
@@ -1621,6 +1629,7 @@ final class SqlSubmitAction(
             }
             s
           }
+        if (sentinel.isEmpty) retentionLock.synchronized(refuseIfSwept())
         // set when stage 2 ran AND its checkpoint root was resolved and
         // registered with the sweeper — the only case where the
         // sentinel's hold on deletion may be released on success
@@ -1731,11 +1740,6 @@ final class SqlSubmitAction(
       (Long, mutable.LinkedHashSet[String])] =
     mutable.LinkedHashMap.empty
   private val retentionLock = new Object
-  /** Intermediate paths the sweeper has DELETED from this run — a
-    * brand-new consumer must not attach to one (its fresh file source
-    * would read the sink manifest, which still lists the deleted
-    * files; r20 review). */
-  private val sweptPaths = mutable.Set.empty[String]
   /** Run-scoped parse cache for the sweeper (second review pass: a
     * JVM-singleton cache outlived its run on shared sessions). */
   private val retentionCache = IntermediateRetention.newCache()
@@ -1765,10 +1769,9 @@ final class SqlSubmitAction(
         intermediateConsumers.toSeq.foreach {
           case (path, (retMs, consumers)) =>
             try {
-              val deleted = IntermediateRetention.sweep(
+              IntermediateRetention.sweep(
                 spark.sparkContext.hadoopConfiguration, path,
-                consumers.toSeq, retMs, retentionCache)
-              if (deleted > 0) sweptPaths += path: Unit
+                consumers.toSeq, retMs, retentionCache): Unit
             }
             catch { case scala.util.control.NonFatal(_) => () }
         }

@@ -1175,20 +1175,6 @@ object Dedup {
         sum(when(col("df") > DfCapDefault, 1L).otherwise(0L)).as("n_over_cap"))
   }
 
-  /** Dev-only hooks for [[graft.Decompose]] (stage-by-stage timing). */
-  private[graft] def devCanonicalDocs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    canonicalDocs(docs)
-
-  private[graft] def devPairsFromPost(
-      post: org.apache.spark.sql.DataFrame,
-      aggOnly: Boolean): org.apache.spark.sql.DataFrame = {
-    if (aggOnly) {
-      post.groupBy(col("gh"), col("lang"))
-        .agg(expr(s"graft_capped_postings(doc_id, sz, $DfCapDefault)").as("pl"))
-    } else
-      pairsFromPost(post, byLang = true, DfCapDefault, "graft_dev_decomp")
-  }
-
   def all: Seq[Q] = Seq(
     extDedupExact, extJaccardPairs, extDedupCluster,
     extMinhashSig, extMinhashPairs, extMinhashEst, extSimhash,

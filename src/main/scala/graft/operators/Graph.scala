@@ -30,12 +30,6 @@ object Graph {
     */
   @volatile private[graft] var lastStarRounds: Int = 0
 
-  /** Propagation rounds the last [[connectedComponents]] call used (and
-    * whether it converged there or handed off) — test observability.
-    */
-  @volatile private[graft] var lastPropRounds: Int = 0
-  @volatile private[graft] var lastPropConverged: Boolean = false
-
   /** Connected components: (v, component) for every vertex appearing in
     * `edges0` (either orientation; self-loops allowed), where
     * `component` is the minimum vertex id in v's component.
@@ -109,8 +103,6 @@ object Graph {
       labels = next.select(col("v"), col("lbl"))
       rounds += 1
     }
-    lastPropRounds = rounds
-    lastPropConverged = converged
     if (converged) {
       bidir.unpersist()
       labels.select(col("v"), col("lbl").as("component"))

@@ -668,7 +668,8 @@ class AutoSplitSpec extends AnyFunSuite {
       .flatMap(f => "\"path\":".r.findAllIn(
         new String(java.nio.file.Files.readAllBytes(f.toPath),
           "UTF-8")).toSeq).length
-    val dataFiles = entries.filterNot(_ == "_spark_metadata")
+    val dataFiles = entries
+      .filterNot(Set("_spark_metadata", "_graft_swept"))
       .filterNot(_.startsWith("."))
     assert(dataFiles.size <= 5, s"steady state exceeded: $dataFiles")
     assert(everWritten >= dataFiles.size + 5,
@@ -724,6 +725,49 @@ class AutoSplitSpec extends AnyFunSuite {
     new SqlSubmitAction(file.toString, Map.empty,
       existingSession = Some(SparkFixture.spark), durationSec = 40).run()
     assert(readAll("SELECT K, TOTAL FROM ASPDR", 2) === Seq(Seq(0L, 28L)))
+  }
+
+  test("a durable intermediate an EARLIER run swept refuses a brand-new " +
+      "consumer: the sweep's marker outlives the run, so the new sink " +
+      "cannot replay files the manifest still lists") {
+    resetTable("ASPSWA",
+      "CREATE TABLE ASPSWA (K BIGINT PRIMARY KEY, TOTAL BIGINT)")
+    resetTable("ASPSWB",
+      "CREATE TABLE ASPSWB (K BIGINT PRIMARY KEY, TOTAL BIGINT)")
+    val cpBase = Files.createTempDirectory("graft-aspsw-cp").toString
+    // both runs share the session, so the view must be replaceable
+    val srcView = srcAndView("aspsw")
+      .replace("create temporary view", "create or replace temporary view")
+    def script(sink: String): String =
+      s"""SET execution.runtime-mode = streaming;
+         |SET table.exec.state.ttl = 600 s;
+         |SET graft.streaming.auto-split-updating = true;
+         |SET execution.checkpointing.enabled = true;
+         |SET state.checkpoints.dir = $cpBase;
+         |SET graft.streaming.intermediate-retention = 0 s;
+         |$srcView
+         |create table aspsw_$sink (k bigint, total bigint,
+         |  primary key (k) not enforced
+         |) with ('connector' = 'jdbc', 'url' = '$url',
+         |  'table-name' = 'ASPSW${sink.toUpperCase}');
+         |insert into aspsw_$sink
+         |select k, sum(s) as total from aspsw_agg group by k;
+         |""".stripMargin
+    // run 1: the sweep deletes files sink a has committed, which the
+    // intermediate's manifest still lists
+    run(script("a"), "swept-1", durationSec = 20)
+    val matDir = new java.io.File(cpBase, "graft-intermediates").listFiles()
+      .filter(_.getName.startsWith("graft_mat_aspsw_agg_")).head
+    val listed = new java.io.File(matDir, "_spark_metadata").listFiles()
+      .filter(f => !f.getName.startsWith("."))
+      .flatMap(f => "\"path\":\"[^\"]*/([^/\"]+)\"".r.findAllMatchIn(
+        new String(Files.readAllBytes(f.toPath), "UTF-8")).map(_.group(1)))
+    assert(listed.exists(n => !new java.io.File(matDir, n).exists),
+      s"run 1 deleted nothing: ${matDir.list().toSeq}")
+    // run 2: a NEW sink over the same view recomputes the same path
+    val msgs = interceptMessages(script("b"), "swept-2")
+    assert(msgs.exists(_.contains("cannot attach another consumer")),
+      msgs.mkString("\n"))
   }
 
   private def interceptMessages(script: String, tag: String,

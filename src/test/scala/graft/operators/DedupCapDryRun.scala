@@ -2,52 +2,24 @@ package graft.operators
 
 import graft.SparkFixture
 
-/** Dev aid: the df-cap scale rehearsal.
+/** Dev aid: the df-cap guard rehearsal, on the shared test session.
   *
-  * `guard` mode builds an in-memory corpus of N distinct docs sharing
+  * Builds an in-memory corpus of N distinct docs sharing
   * one boilerplate trigram and shows both sides of the cap: with the
   * cap disabled (df-cap = 2^30) the pair expansion dies on the
   * graft_doc_pairs guard exactly as the uncapped code did, and with
   * the default cap the same query completes with the hot shingle
   * dropped (and the drop observed). Usage:
-  * `Test/runMain graft.operators.DedupCapDryRun guard [nDocs=70000]`.
+  * `Test/runMain graft.operators.DedupCapDryRun [nDocs=70000]`.
   *
-  * `scale` mode times the three capped queries against a
-  * distinct-variant corpus (`tools/make_hot_corpus.py`), where shingle
-  * document frequencies genuinely grow with the copy count. Usage:
-  * `Test/runMain graft.operators.DedupCapDryRun scale <dir> [queries]`.
-  *
-  * `GRAFT_DRYRUN_CPUS` sizes a dedicated session (the shared test
-  * fixture is local[4], which starves a 150k-doc rehearsal on a big
-  * box); unset, the shared fixture is used.
+  * To time the capped queries on a distinct-variant corpus
+  * (`tools/make_hot_corpus.py`), point `graft.Profile` at it.
   */
 object DedupCapDryRun {
 
-  private lazy val session = sys.env.get("GRAFT_DRYRUN_CPUS") match {
-    case Some(n) =>
-      val s = org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[$n]")
-        .withExtensions(new graft.functions.GraftSparkExtensions)
-        .appName("graft-dedup-dryrun")
-        .config("spark.sql.shuffle.partitions", n)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    case None => SparkFixture.spark
-  }
-
-  def main(args: Array[String]): Unit = args.headOption.getOrElse("guard") match {
-    case "guard" => guard(args.lift(1).map(_.toInt).getOrElse(70000))
-    case "scale" => scale(args(1),
-      args.lift(2).map(_.split(",").toSeq)
-        .getOrElse(Seq("ext_jaccard_pairs", "ext_band_recall", "ext_dedup_cluster")))
-    case other => sys.error(s"unknown mode $other (guard|scale)")
-  }
-
-  private def guard(nDocs: Int): Unit = {
-    val spark = session
+  def main(args: Array[String]): Unit = {
+    val nDocs = args.headOption.map(_.toInt).getOrElse(70000)
+    val spark = SparkFixture.spark
     graft.functions.GraftFunctions.register(spark)
     graft.functions.GraftMetrics.ensureListener(spark)
     // N distinct docs, every one carrying the hot trigram "hot common
@@ -75,15 +47,5 @@ object DedupCapDryRun {
     spark.conf.set("graft.dedup.df-cap", Dedup.DfCapDefault.toString)
     run(s"capped_${nDocs}_docs")
     spark.conf.unset("graft.dedup.df-cap")
-  }
-
-  private def scale(dir: String, queries: Seq[String]): Unit = {
-    val spark = session
-    graft.functions.GraftMetrics.ensureListener(spark)
-    queries.foreach { name =>
-      val t0 = System.nanoTime()
-      val n = graft.SparkEntry.queries(name)(spark, dir).count()
-      println(f"$name: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
   }
 }

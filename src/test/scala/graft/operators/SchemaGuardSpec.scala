@@ -35,6 +35,16 @@ class SchemaGuardSpec extends AnyFunSuite {
     }
   }
 
+  test("registry names are distinct and every oracle names a query") {
+    // SparkEntry.queries is built with toMap: a repeated name would
+    // silently drop one query from Bench, Verify and the oracle
+    val names = SparkEntry.registry.map(_.name)
+    val repeated = names.diff(names.distinct)
+    assert(repeated.isEmpty, s"repeated query names: $repeated")
+    val orphans = SparkEntry.oracleSql.keySet -- names
+    assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
+  }
+
   test("every registered query has an atomic top-level schema") {
     val spark = SparkFixture.spark
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
