@@ -713,6 +713,8 @@ final class SqlSubmitAction(
       val sc = s.sparkContext
       val n = SqlSubmitAction.shufflePartitions(sc.getConf, sc.defaultParallelism)
       s.conf.set("spark.sql.shuffle.partitions", n.toString)
+      s.conf.set(SqlSubmitAction.CheckpointManagerKey,
+        SqlSubmitAction.checkpointManager(sc.getConf))
       s
     }
     // the extension operators' SQL functions (graft_simhash, graft_dot,
@@ -2474,6 +2476,23 @@ object SqlSubmitAction {
     */
   def shufflePartitions(conf: SparkConf, defaultParallelism: Int): Int =
     conf.getInt("spark.sql.shuffle.partitions", defaultParallelism)
+
+  /** Spark's key naming the class every streaming checkpoint log and
+    * state store writes its files through. */
+  val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** [[graft.streaming.LocalCheckpointFileManager]]: `FileSystem` on a
+    * local path (no `readlink` fork per rename), Spark's default
+    * `FileContext` elsewhere. */
+  val CheckpointManager: String =
+    classOf[graft.streaming.LocalCheckpointFileManager].getName
+
+  /** Checkpoint file manager for a session `run()` builds: an explicit
+    * [[CheckpointManagerKey]] (`--conf`, `-D`) wins, else
+    * [[CheckpointManager]].
+    */
+  def checkpointManager(conf: SparkConf): String =
+    conf.get(CheckpointManagerKey, CheckpointManager)
 }
 
 final class SqlSubmitActionFactory extends ActionFactory {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.harness.SqlSubmitAction
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all specs (sessions are expensive). */
@@ -12,6 +13,8 @@ object SparkFixture {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the checkpoint file manager sql-submit runs streams on
+      .config(SqlSubmitAction.CheckpointManagerKey, SqlSubmitAction.CheckpointManager)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -157,9 +157,14 @@ class UnboundedAggSpec extends AnyFunSuite {
       q.recentProgress.reverseIterator.find(_.stateOperators.nonEmpty)
         .get.stateOperators(0).numShufflePartitions
     }
+    // phase 1 writes the checkpoint through Spark's default manager
+    // (FileContext), as sql-submit did before it named its own; phase 2
+    // restores it through the one sql-submit names
     val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val managerBefore = spark.conf.getOption(SqlSubmitAction.CheckpointManagerKey)
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "8")
+      spark.conf.unset(SqlSubmitAction.CheckpointManagerKey)
       val q1 = start()
       try {
         input.addData(("a", 5L, "x"), ("a", 9L, "y"), ("b", 3L, "x"))
@@ -169,6 +174,7 @@ class UnboundedAggSpec extends AnyFunSuite {
         assert(stateParts(q1) == 8L)
       } finally q1.stop()
       spark.conf.set("spark.sql.shuffle.partitions", "4")
+      spark.conf.set(SqlSubmitAction.CheckpointManagerKey, SqlSubmitAction.CheckpointManager)
       // rows arriving while the query is down: a re-seen tag (x must
       // not grow a's distinct count), a fresh tag, a new MIN, and rows
       // for b folding into its restored accumulator
@@ -180,7 +186,22 @@ class UnboundedAggSpec extends AnyFunSuite {
             "a" -> ((4L, 17L, 1L, 3L)), "b" -> ((2L, 7L, 3L, 2L)))))
         assert(stateParts(q2) == 8L)
       } finally q2.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+      // the latest delta of every state partition, written in phase 2,
+      // keeps Spark's checksum (<v>.delta.crc) and Hadoop's (.<v>.delta.crc)
+      val partitions = new java.io.File(ckpt, "state/0").listFiles()
+        .filter(_.getName.forall(_.isDigit))
+      assert(partitions.length == 8)
+      for (dir <- partitions) {
+        val names = dir.list().toSet
+        val latest = names.collect { case s"$v.delta" => v.toLong }.max
+        assert(names(s"$latest.delta.crc") && names(s".$latest.delta.crc"),
+          s"${dir.getName}: ${names.toSeq.sorted}")
+      }
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", before)
+      managerBefore.fold(spark.conf.unset(SqlSubmitAction.CheckpointManagerKey))(
+        spark.conf.set(SqlSubmitAction.CheckpointManagerKey, _))
+    }
   }
 
   test("an aliased FROM keeps its alias through the TTL route (r17 " +
