@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
   * streaming state trackers — one kind table for the window-TVF
   * aggregation pass ([[WindowTvf]]) and the OVER aggregation pass
   * ([[OverAgg]]), so a new kind or a type-admission change lands in
-  * exactly one place. Kinds are [[graft.streaming.CumulateTracker]]'s:
+  * exactly one place. Kinds are the slot-accumulator law's
+  * ([[graft.streaming.CumAcc]]):
   * 0 = COUNT, 1/2 = SUM long/double, 3/4 = MIN, 5/6 = MAX,
   * 7/8 = AVG double/long, 9 = COUNT(DISTINCT),
   * 10/11 = SUM/AVG(DISTINCT integral), 12/13 = SUM/AVG(DISTINCT
@@ -49,7 +50,7 @@ private[harness] object AggSlots {
     * accumulates central moments in doubles, Spark's cast). */
   def readsDouble(kind: Int): Boolean =
     kind == 2 || kind == 4 || kind == 6 || kind == 7 ||
-      graft.streaming.CumulateTracker.isVarianceKind(kind)
+      graft.streaming.CumAcc.isVarianceKind(kind)
 
   /** Injective string encoding for a DISTINCT value slot: how a value
     * of type `dt` rides the tracker's string state so SQL-equal values
@@ -100,8 +101,8 @@ private[harness] object AggSlots {
         coalesce(expr(p.input).cast("double"), lit(0d))
       else lit(0d)): _*)
     val sv = array(plans.map(p =>
-      if (graft.streaming.CumulateTracker.isDistinctKind(p.kind) ||
-          graft.streaming.CumulateTracker.isDecimalKind(p.kind))
+      if (graft.streaming.CumAcc.isDistinctKind(p.kind) ||
+          graft.streaming.CumAcc.isDecimalKind(p.kind))
         expr(p.input).cast("string")
       else lit(null).cast("string")): _*)
     (nn, lv, dv, sv)

@@ -428,8 +428,8 @@ object OverAgg {
     // (kinds 14-16 — NOT the variance kinds, which ride the double
     // slot)
     val svArr = array(plans.map(p =>
-      if (graft.streaming.CumulateTracker.isDistinctKind(p.kind) ||
-          graft.streaming.CumulateTracker.isDecimalKind(p.kind) ||
+      if (graft.streaming.CumAcc.isDistinctKind(p.kind) ||
+          graft.streaming.CumAcc.isDecimalKind(p.kind) ||
           (p.kind >= 14 && p.kind <= 16))
         expr(p.input).cast("string")
       else lit(null).cast("string")): _*)

@@ -10,23 +10,13 @@ import scala.collection.mutable.ArrayBuffer
   * and per-aggregate input values — `nn(i)` is the i-th aggregate
   * input's non-null flag, with its value cast to both long (`lv`) and
   * double (`dv`) so integral aggregates stay exact; `sv(i)` carries
-  * the string-encoded value for COUNT(DISTINCT) slots (null for other
-  * kinds — only kind 9 reads it).
+  * the string-encoded value for the slots that read it — the DISTINCT
+  * kinds 9-13, 21 and 26-29 and the decimal kinds 22-25 (null for
+  * every other kind; see [[CumAcc]]). The other slot trackers' events
+  * share this (nn, lv, dv, sv) layout.
   */
 final case class CumulateEvent(key: String, ts: Timestamp,
     nn: List[Boolean], lv: List[Long], dv: List[Double], sv: List[String])
-
-/** One per-(span, step, aggregate) accumulator: non-null count, exact
-  * long sum, double sum, typed min/max, for COUNT(DISTINCT)
-  * slots only the exact distinct-value set (string-encoded, sorted
-  * for deterministic state; empty for every other kind), and — for the
-  * variance-family kinds 17-20 only — the central moments `m1`
-  * (running mean) and `m2` (sum of squared deviations), maintained
-  * with Spark's own CentralMomentAgg update/merge arithmetic. */
-final case class CumAcc(span: Long, step: Int, agg: Int, cnt: Long,
-    sumL: Long, sumD: Double, mnL: Long, mxL: Long, mnD: Double, mxD: Double,
-    ds: List[String] = Nil, m1: Double = 0d, m2: Double = 0d,
-    dec: String = null)
 
 /** Per-key state: accumulators plus, per span, how many growing windows
   * have already been emitted. */
@@ -51,233 +41,11 @@ final case class CumulateWindow(key: String, ws: Long, we: Long,
   * soon as its last window emits, so state is bounded by
   * size/step × aggregates per ACTIVE (key, span).
   *
-  * Aggregate kinds: 0 = COUNT (rows with non-null input; COUNT(*)
-  * feeds a literal), 1 = SUM exact over longs, 2 = SUM over doubles,
-  * 3 = MIN long, 4 = MIN double, 5 = MAX long, 6 = MAX double,
-  * 7 = AVG over doubles, 8 = AVG over longs (exact long sum divided
-  * once), 9 = COUNT(DISTINCT) exact — the accumulator keeps the
-  * window's distinct-value set (string-encoded), sized by the key's
-  * distinct values per window exactly as Flink's exact distinct state
-  * is; 17/18/19/20 = VAR_POP/VAR_SAMP/STDDEV_POP/STDDEV_SAMP over the
-  * fixed-size central-moment fields (Spark's CentralMomentAgg
-  * arithmetic — [[momentAdd]]/[[momentMerge]]). A window whose inputs
-  * were all null
-  * (or an empty leading window) emits SQL NULL for SUM/MIN/MAX/AVG and
-  * 0 for COUNT — matching batch aggregation semantics. Windows with
-  * zero rows so far emit nothing at all (the batch rewrite only
-  * produces windows that contain a row).
+  * Aggregate kinds and their arithmetic are the slot-accumulator law
+  * in [[CumAcc]]. Windows with zero rows so far emit nothing at all
+  * (the batch rewrite only produces windows that contain a row).
   */
 object CumulateTracker {
-
-  /** The tracker kinds whose accumulator keeps the window's exact
-    * distinct-value set (string-encoded): 9 = COUNT(DISTINCT),
-    * 10 = SUM(DISTINCT integral), 11 = AVG(DISTINCT integral),
-    * 12 = SUM(DISTINCT double), 13 = AVG(DISTINCT double) — the
-    * double kinds re-parse the exact string carrier and fold in
-    * SORTED order so replay is deterministic (double addition is not
-    * associative; a hash-set iteration order must never reach the
-    * sum). Kind 21 (r16) is the distinct-set PASSTHROUGH: the sorted
-    * value set emits verbatim as a JSON string array, and the harness
-    * finishes the arithmetic in Catalyst decimal expressions
-    * (SUM/AVG(DISTINCT decimal) — exact and fold-order-free, so no
-    * in-tracker fold is needed at all). Kinds 26-29 (r17) are the
-    * variance family over DISTINCT inputs — VAR_POP/VAR_SAMP/
-    * STDDEV_POP/STDDEV_SAMP = plain kind + 9 — whose accumulator keeps
-    * the value set and re-folds the central moments over the SORTED
-    * set at emission (deterministic replay; the values are exactly
-    * what batch deduplication feeds Spark's moment arithmetic).
-    * Shared with [[GridAggTracker]] and the harness slot builder.
-    */
-  private[graft] def isDistinctKind(k: Int): Boolean =
-    (k >= 9 && k <= 13) || k == 21 || (k >= 26 && k <= 29)
-
-  /** The plain-decimal kinds (r16): 22 = SUM, 23 = AVG, 24 = MIN,
-    * 25 = MAX over DECIMAL inputs — the accumulator's `dec` string
-    * seat carries the running exact value (BigDecimal addition is
-    * exact and associative, so folds and merges are order-free;
-    * comparisons are SQL decimal ordering). SUM/MIN/MAX emit the
-    * value as JSON number text decoded straight into the result
-    * decimal type; AVG emits `{"s": sum, "n": count}` and the harness
-    * finishes the division in Catalyst with Spark's Average result
-    * arithmetic — bit-identical to batch. Inputs ride the `sv` string
-    * slot like the distinct kinds.
-    */
-  private[graft] def isDecimalKind(k: Int): Boolean = k >= 22 && k <= 25
-
-  /** Folds (or merges) one exact decimal value into the running `dec`
-    * seat: add for SUM/AVG, SQL ordering for MIN/MAX. `cur` may be
-    * null (no value yet); both arguments are plain decimal texts. */
-  private[streaming] def decFold(kind: Int, cur: String, v: String): String =
-    if (cur == null) v
-    else if (v == null) cur
-    else kind match {
-      case 22 | 23 => new java.math.BigDecimal(cur)
-        .add(new java.math.BigDecimal(v)).toPlainString
-      case 24 => if (new java.math.BigDecimal(v)
-        .compareTo(new java.math.BigDecimal(cur)) < 0) v else cur
-      case _ => if (new java.math.BigDecimal(v)
-        .compareTo(new java.math.BigDecimal(cur)) > 0) v else cur
-    }
-
-  /** The variance-family kinds: 17 = VAR_POP, 18 = VAR_SAMP,
-    * 19 = STDDEV_POP, 20 = STDDEV_SAMP. All four accumulate the same
-    * central moments (count, mean, M2) and differ only at emission —
-    * exactly Spark's CentralMomentAgg family, whose update and merge
-    * arithmetic [[momentAdd]] / [[momentMerge]] replicate step for
-    * step so a streamed variance is the same computation batch runs.
-    */
-  private[graft] def isVarianceKind(k: Int): Boolean = k >= 17 && k <= 20
-
-  /** Welford update — Spark's CentralMomentAgg.updateExpressions:
-    * folds value `x` into moments `(m1, m2)`; `cntAfter` is the
-    * non-null count INCLUDING `x`. */
-  private[streaming] def momentAdd(cntAfter: Long, m1: Double, m2: Double,
-      x: Double): (Double, Double) = {
-    val delta = x - m1
-    val deltaN = delta / cntAfter.toDouble
-    (m1 + deltaN, m2 + delta * (delta - deltaN))
-  }
-
-  /** Parallel moment merge — Spark's CentralMomentAgg
-    * .mergeExpressions (Chan et al.): combines two partial
-    * (count, m1, m2) triples. */
-  private[streaming] def momentMerge(n1: Long, m1a: Double, m2a: Double,
-      n2: Long, m1b: Double, m2b: Double): (Double, Double) = {
-    val n = (n1 + n2).toDouble
-    val delta = m1b - m1a
-    val deltaN = if (n == 0d) 0d else delta / n
-    (m1a + deltaN * n2.toDouble,
-      m2a + m2b + delta * deltaN * n1.toDouble * n2.toDouble)
-  }
-
-  /** Exact double SUM over a distinct-value string set, in ascending
-    * numeric order for deterministic replay. */
-  private[streaming] def distinctDoubleSum(ds: Iterable[String]): Double = {
-    val arr = ds.iterator.map(_.toDouble).toArray
-    java.util.Arrays.sort(arr)
-    var s = 0d
-    var i = 0
-    while (i < arr.length) { s += arr(i); i += 1 }
-    s
-  }
-
-  /** One aggregate slot's emission value as JSON number/text — the
-    * per-kind switch shared by this tracker, [[GridAggTracker]] and
-    * [[SessionAggTracker]]. `None` = SQL NULL (omitted from the vals
-    * object); `ds` is the slot's distinct-value set (empty for
-    * non-distinct kinds).
-    */
-  private[streaming] def fieldValue(kind: Int, a: CumAcc,
-      ds: scala.collection.Set[String]): Option[String] = kind match {
-    case 0 => Some(a.cnt.toString)
-    case 1 => if (a.cnt == 0) None else Some(a.sumL.toString)
-    case 2 => if (a.cnt == 0) None else Some(fmtD(a.sumD))
-    case 3 => if (a.cnt == 0) None else Some(a.mnL.toString)
-    case 4 => if (a.cnt == 0) None else Some(fmtD(a.mnD))
-    case 5 => if (a.cnt == 0) None else Some(a.mxL.toString)
-    case 6 => if (a.cnt == 0) None else Some(fmtD(a.mxD))
-    case 7 => if (a.cnt == 0) None else Some(fmtD(a.sumD / a.cnt))
-    case 9 => Some(ds.size.toString)
-    case 10 => if (ds.isEmpty) None
-      else Some(ds.iterator.map(_.toLong).sum.toString)
-    case 11 => if (ds.isEmpty) None
-      else Some(fmtD(ds.iterator.map(_.toLong).sum.toDouble / ds.size))
-    case 12 => if (ds.isEmpty) None else Some(fmtD(distinctDoubleSum(ds)))
-    case 13 => if (ds.isEmpty) None
-      else Some(fmtD(distinctDoubleSum(ds) / ds.size))
-    // set passthrough: the sorted value set as a JSON string array —
-    // the harness finishes the arithmetic (decimal texts are
-    // [-0-9.]-only, but escape anyway: the carrier contract is general)
-    case 21 => if (ds.isEmpty) None
-      else Some(ds.toSeq.sorted.map(jsonText).mkString("[", ",", "]"))
-    // variance family (kinds 17-20): Spark's ANSI-default divide-by-
-    // zero results, pinned empirically — a single-row *_SAMP is SQL
-    // NULL (with ANSI off Spark would emit NaN instead), a single-row
-    // *_POP is 0.0
-    case 17 => if (a.cnt == 0) None else Some(fmtD(a.m2 / a.cnt.toDouble))
-    case 18 => if (a.cnt <= 1) None
-      else Some(fmtD(a.m2 / (a.cnt - 1L).toDouble))
-    case 19 => if (a.cnt == 0) None
-      else Some(fmtD(math.sqrt(a.m2 / a.cnt.toDouble)))
-    case 20 => if (a.cnt <= 1) None
-      else Some(fmtD(math.sqrt(a.m2 / (a.cnt - 1L).toDouble)))
-    // plain decimal (22-25): SUM/MIN/MAX emit the exact value as JSON
-    // number text; AVG emits (sum, count) for the harness' Catalyst
-    // division
-    case 22 | 24 | 25 => if (a.cnt == 0) None else Some(a.dec)
-    case 23 => if (a.cnt == 0) None
-      else Some(s"""{"s": ${a.dec}, "n": ${a.cnt}}""")
-    // DISTINCT variance (26-29 = plain kind + 9): re-fold the central
-    // moments over the SORTED distinct set — deterministic replay, and
-    // exactly the deduplicated values batch feeds CentralMomentAgg.
-    // Same divide-by-zero pins as 17-20: single-value *_SAMP is NULL,
-    // *_POP is 0.0
-    case 26 | 27 | 28 | 29 =>
-      if (ds.isEmpty) None
-      else {
-        val arr = ds.iterator.map(_.toDouble).toArray
-        java.util.Arrays.sort(arr)
-        var n = 0L
-        var m1 = 0d
-        var m2 = 0d
-        arr.foreach { x =>
-          n += 1L
-          val (a1, a2) = momentAdd(n, m1, m2, x)
-          m1 = a1
-          m2 = a2
-        }
-        kind match {
-          case 26 => Some(fmtD(m2 / n.toDouble))
-          case 27 => if (n <= 1L) None else Some(fmtD(m2 / (n - 1L).toDouble))
-          case 28 => Some(fmtD(math.sqrt(m2 / n.toDouble)))
-          case _ => if (n <= 1L) None
-            else Some(fmtD(math.sqrt(m2 / (n - 1L).toDouble)))
-        }
-      }
-    case _ => if (a.cnt == 0) None else Some(fmtD(a.sumL.toDouble / a.cnt))
-  }
-
-  /** JSON string literal for a carried state value — the one escape
-    * routine for every string the trackers embed in their vals JSON
-    * (the kind-21 set carrier here, the LAG/FIRST/LAST value carrier
-    * in [[OverAggTracker]]). */
-  private[streaming] def jsonText(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
-
-  /** JSON number text for a double aggregate value — integral-valued
-    * doubles render `N.0` so the decoded type is unambiguous; shared
-    * with [[GridAggTracker]].
-    */
-  private[streaming] def fmtD(v: Double): String =
-    if (v == Math.rint(v) && math.abs(v) < 1e15) v.toLong.toString + ".0"
-    else java.lang.Double.toString(v)
-
-  /** Spark SQL's double ordering (`nanSafeCompareDoubles`): NaN equals
-    * NaN and sorts above every other value (including +Infinity), and
-    * -0.0 equals 0.0. MIN/MAX must use this — `Math.min` would
-    * propagate NaN into MIN where Spark's MIN picks the non-NaN value.
-    */
-  private def nanSafeCompare(x: Double, y: Double): Int = {
-    val xNaN = java.lang.Double.isNaN(x)
-    val yNaN = java.lang.Double.isNaN(y)
-    if ((xNaN && yNaN) || x == y) 0
-    else if (xNaN) 1
-    else if (yNaN) -1
-    else if (x > y) 1
-    else -1
-  }
-  private[streaming] def nanMin(x: Double, y: Double): Double =
-    if (nanSafeCompare(x, y) <= 0) x else y
-  private[streaming] def nanMax(x: Double, y: Double): Double =
-    if (nanSafeCompare(x, y) >= 0) x else y
 
   def track(
       input: Dataset[CumulateEvent],
@@ -314,14 +82,18 @@ object CumulateTracker {
     val prev = state.getOption.getOrElse(CumulateState(Nil, Nil))
     // (span, step, agg) -> accumulator
     val accs = scala.collection.mutable.HashMap.empty[(Long, Int, Int), CumAcc]
-    prev.accs.foreach(a => accs((a.span, a.step, a.agg)) = a)
-    // COUNT(DISTINCT) slots keep their set in a mutable side map for
-    // O(1) inserts (the immutable CumAcc.ds list is the state carrier)
+    // DISTINCT slots keep their set in a mutable side map for O(1)
+    // inserts (the immutable CumAcc.ds list is only the state carrier)
     val dsets = scala.collection.mutable.HashMap
       .empty[(Long, Int, Int), scala.collection.mutable.HashSet[String]]
-    prev.accs.foreach(a => if (a.ds.nonEmpty)
-      dsets((a.span, a.step, a.agg)) =
-        scala.collection.mutable.HashSet.from(a.ds))
+    prev.accs.foreach { a =>
+      val k = (a.span, a.step, a.agg)
+      if (a.ds.isEmpty) accs(k) = a
+      else {
+        dsets(k) = scala.collection.mutable.HashSet.from(a.ds)
+        accs(k) = a.copy(ds = Nil)
+      }
+    }
     val emitted = scala.collection.mutable.HashMap.empty[Long, Int]
     prev.emitted.foreach { case (s, k) => emitted(s) = k }
 
@@ -334,44 +106,21 @@ object CumulateTracker {
       var i = 0
       while (i < kinds.length) {
         val k = (span, step, i)
-        val a = accs.getOrElse(k,
-          CumAcc(span, step, i, 0L, 0L, 0d, Long.MaxValue, Long.MinValue,
-            Double.MaxValue, Double.MinValue))
-        if (e.nn(i) && isDistinctKind(kinds(i))) {
+        val a = accs.getOrElse(k, CumAcc.empty(i, span, step))
+        if (e.nn(i) && CumAcc.isDistinctKind(kinds(i)))
           dsets.getOrElseUpdate(k,
             scala.collection.mutable.HashSet.empty[String]) += e.sv(i)
-          accs(k) = a.copy(cnt = a.cnt + 1L)
-        } else if (e.nn(i) && isDecimalKind(kinds(i))) {
-          accs(k) = a.copy(cnt = a.cnt + 1L,
-            dec = decFold(kinds(i), a.dec, e.sv(i)))
-        } else if (e.nn(i)) {
-          // the mn/mx fields of a cnt=0 accumulator are unset sentinels
-          // that must never meet real data: the first non-null value
-          // seeds them outright (a Long.MaxValue input or a NaN/Infinity
-          // double would otherwise lose to — or corrupt against — the
-          // sentinel), and doubles merge with Spark's NaN-safe ordering
-          val first = a.cnt == 0L
-          val (nm1, nm2) =
-            if (isVarianceKind(kinds(i)))
-              momentAdd(a.cnt + 1L, a.m1, a.m2, e.dv(i))
-            else (a.m1, a.m2)
-          accs(k) = a.copy(cnt = a.cnt + 1L,
-            sumL = a.sumL + e.lv(i), sumD = a.sumD + e.dv(i),
-            mnL = if (first) e.lv(i) else math.min(a.mnL, e.lv(i)),
-            mxL = if (first) e.lv(i) else math.max(a.mxL, e.lv(i)),
-            mnD = if (first) e.dv(i) else nanMin(a.mnD, e.dv(i)),
-            mxD = if (first) e.dv(i) else nanMax(a.mxD, e.dv(i)),
-            m1 = nm1, m2 = nm2)
-        } else if (!accs.contains(k)) accs(k) = a
+        // a null-input row still creates the (cnt=0) entry: the step
+        // had a row, so its windows exist
+        accs(k) =
+          if (e.nn(i)) CumAcc.fold(kinds(i), a, e.lv(i), e.dv(i), e.sv(i))
+          else a
         i += 1
       }
       emitted.getOrElseUpdate(span, 0): Unit
     }
 
-    // batch execution (bounded source, no watermark): everything final
-    val (wmMs, isFinal) =
-      try (state.getCurrentWatermarkMs(), false)
-      catch { case _: UnsupportedOperationException => (Long.MaxValue, true) }
+    val (wmMs, isFinal) = Watermarks.current(state)
 
     val out = ArrayBuffer.empty[CumulateWindow]
     val doneSpans = ArrayBuffer.empty[Long]
@@ -381,10 +130,9 @@ object CumulateTracker {
       // rebuilt once per update call (O(nSteps × aggs)), then each
       // emitted window folds in exactly one more step — catching up a
       // whole span is linear in nSteps, not quadratic
-      val merged = Array.tabulate(kinds.length)(i =>
-        CumAcc(span, 0, i, 0L, 0L, 0d, Long.MaxValue, Long.MinValue,
-          Double.MaxValue, Double.MinValue))
-      // cumulative distinct sets for kind-9 slots (union across steps)
+      val merged = Array.tabulate(kinds.length)(i => CumAcc.empty(i, span))
+      // cumulative distinct sets of the DISTINCT slots (union across
+      // steps)
       val mergedDs = Array.fill(kinds.length)(
         scala.collection.mutable.HashSet.empty[String])
       // any-row presence for window existence: COUNT semantics per agg
@@ -398,28 +146,7 @@ object CumulateTracker {
           accs.get((span, s, i)).foreach { a =>
             sawStep = true
             dsets.get((span, s, i)).foreach(mergedDs(i) ++= _)
-            // cnt=0 accumulators carry unset mn/mx sentinels — merge
-            // counts/sums (zeros) but never let sentinels meet data;
-            // doubles merge with Spark's NaN-safe ordering
-            val m = merged(i)
-            if (a.cnt > 0L) {
-              merged(i) =
-                if (m.cnt == 0L)
-                  m.copy(cnt = a.cnt, sumL = a.sumL, sumD = a.sumD,
-                    mnL = a.mnL, mxL = a.mxL, mnD = a.mnD, mxD = a.mxD,
-                    m1 = a.m1, m2 = a.m2, dec = a.dec)
-                else {
-                  val (nm1, nm2) = momentMerge(m.cnt, m.m1, m.m2,
-                    a.cnt, a.m1, a.m2)
-                  m.copy(cnt = m.cnt + a.cnt,
-                    sumL = m.sumL + a.sumL, sumD = m.sumD + a.sumD,
-                    mnL = math.min(m.mnL, a.mnL),
-                    mxL = math.max(m.mxL, a.mxL),
-                    mnD = nanMin(m.mnD, a.mnD), mxD = nanMax(m.mxD, a.mxD),
-                    m1 = nm1, m2 = nm2,
-                    dec = decFold(kinds(i), m.dec, a.dec))
-                }
-            }
+            merged(i) = CumAcc.merge(kinds(i), merged(i), a)
           }
           i += 1
         }
@@ -432,14 +159,9 @@ object CumulateTracker {
         val winEnd = span + (k + 1).toLong * stepMs
         if (isFinal || wmMs >= winEnd) {
           mergeStep(k)
-          if (stepsWithRows > 0) {
-            val fields = kinds.indices.flatMap { i =>
-              fieldValue(kinds(i), merged(i), mergedDs(i))
-                .map(s => s""""a$i": $s""")
-            }
+          if (stepsWithRows > 0)
             out += CumulateWindow(key, span, winEnd,
-              fields.mkString("{", ", ", "}"))
-          }
+              CumAcc.vals(kinds, merged(_), mergedDs(_)))
           k += 1
           emitted(span) = k
         } else advanced = false

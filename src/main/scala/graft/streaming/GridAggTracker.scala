@@ -18,21 +18,18 @@ import scala.collection.mutable.ArrayBuffer
 final case class GridEvent(key: String, ts: Timestamp, ws: Long, we: Long,
     nn: List[Boolean], lv: List[Long], dv: List[Double], sv: List[String])
 
-/** One per-(window, aggregate) accumulator — [[CumAcc]] with the window
-  * pinned by both bounds instead of span/step coordinates; `ds` is the
-  * exact value set of the DISTINCT kinds 9-13 (COUNT/SUM/AVG DISTINCT
-  * over integral or float/double inputs; empty for non-distinct kinds).
+/** One open pinned window of a key: its instant bounds and one
+  * accumulator per aggregate slot ([[CumAcc]] with span/step unused —
+  * the bounds pin the window). `ds` lists are sorted at state-save time
+  * for deterministic replay.
   */
-final case class GridAcc(ws: Long, we: Long, agg: Int, cnt: Long,
-    sumL: Long, sumD: Double, mnL: Long, mxL: Long, mnD: Double, mxD: Double,
-    ds: List[String] = Nil, m1: Double = 0d, m2: Double = 0d,
-    dec: String = null)
+final case class GridWin(ws: Long, we: Long, accs: List[CumAcc])
 
-/** Per-key state: accumulators of the still-open pinned windows. State
-  * is bounded by aggregates × ACTIVE (key, window) — each window's
-  * state drops at emission.
+/** Per-key state: the still-open pinned windows. State is bounded by
+  * aggregates × ACTIVE (key, window) — each window's state drops at
+  * emission.
   */
-final case class GridAggState(accs: List[GridAcc])
+final case class GridAggState(wins: List[GridWin])
 
 /** Streaming aggregation over PINNED windows — the window set is
   * assigned per row upstream (each row already fanned out to every
@@ -46,12 +43,11 @@ final case class GridAggState(accs: List[GridAcc])
   * its end (append mode — late rows are dropped upstream by the
   * watermark); event-time timeouts re-drive keys whose watermark
   * advanced without traffic; emitted windows drop from state.
-  * Aggregate kinds and null semantics are [[CumulateTracker]]'s
-  * (0 = COUNT … 8 = AVG over longs, 9/10/11 = exact
-  * COUNT/SUM/AVG(DISTINCT) over the window's value set —
-  * besides the DST-zone case, plain UTC TUMBLE/HOP with a distinct
-  * aggregate also route here, since the native streaming aggregate
-  * would only run it as an HLL approximation); output rides the same
+  * Aggregate kinds and null semantics are the [[CumAcc]] law (the
+  * DISTINCT kinds keep the window's exact value set — besides the
+  * DST-zone case, plain UTC TUMBLE/HOP with a distinct aggregate also
+  * route here, since the native streaming aggregate would only run it
+  * as an HLL approximation); output rides the same
   * [[CumulateWindow]] JSON carrier, so the harness decode path is
   * shared.
   */
@@ -79,100 +75,62 @@ object GridAggTracker {
       rows: Iterator[GridEvent],
       state: GroupState[GridAggState],
       kinds: Array[Int]): Iterator[CumulateWindow] = {
-    // (ws, we, agg) -> accumulator
-    val accs = scala.collection.mutable.HashMap.empty[(Long, Long, Int), GridAcc]
-    state.getOption.foreach(_.accs.foreach(a =>
-      accs((a.ws, a.we, a.agg)) = a))
-    // COUNT(DISTINCT) slots keep their set in a mutable side map for
-    // O(1) inserts (the immutable GridAcc.ds list is the state carrier)
-    val dsets = scala.collection.mutable.HashMap
-      .empty[(Long, Long, Int), scala.collection.mutable.HashSet[String]]
-    state.getOption.foreach(_.accs.foreach(a => if (a.ds.nonEmpty)
-      dsets((a.ws, a.we, a.agg)) =
-        scala.collection.mutable.HashSet.from(a.ds)))
+    // (ws, we) -> one accumulator per slot, plus the DISTINCT slots'
+    // side sets for O(1) inserts (the CumAcc.ds list is only the state
+    // carrier)
+    val wins = scala.collection.mutable.HashMap.empty[(Long, Long),
+      (Array[CumAcc], Array[scala.collection.mutable.HashSet[String]])]
+    state.getOption.foreach(_.wins.foreach { w =>
+      val accs = w.accs.toArray
+      wins((w.ws, w.we)) =
+        (accs, accs.map(a => scala.collection.mutable.HashSet.from(a.ds)))
+    })
 
     rows.foreach { e =>
+      // any row creates its window's entry, null inputs included: the
+      // window exists — matching the batch rewrite, which only
+      // produces windows containing a row
+      val (accs, dsets) = wins.getOrElseUpdate((e.ws, e.we),
+        (Array.tabulate(kinds.length)(CumAcc.empty(_)),
+          Array.fill(kinds.length)(
+            scala.collection.mutable.HashSet.empty[String])))
       var i = 0
       while (i < kinds.length) {
-        val k = (e.ws, e.we, i)
-        val a = accs.getOrElse(k,
-          GridAcc(e.ws, e.we, i, 0L, 0L, 0d, Long.MaxValue, Long.MinValue,
-            Double.MaxValue, Double.MinValue))
-        if (e.nn(i) && CumulateTracker.isDistinctKind(kinds(i))) {
-          dsets.getOrElseUpdate(k,
-            scala.collection.mutable.HashSet.empty[String]) += e.sv(i)
-          accs(k) = a.copy(cnt = a.cnt + 1L)
-        } else if (e.nn(i) && CumulateTracker.isDecimalKind(kinds(i))) {
-          accs(k) = a.copy(cnt = a.cnt + 1L,
-            dec = CumulateTracker.decFold(kinds(i), a.dec, e.sv(i)))
-        } else if (e.nn(i)) {
-          // cnt=0 accumulators carry unset mn/mx sentinels: the first
-          // non-null value seeds them outright, doubles merge with
-          // Spark's NaN-safe ordering (CumulateTracker's law)
-          val first = a.cnt == 0L
-          val (nm1, nm2) =
-            if (CumulateTracker.isVarianceKind(kinds(i)))
-              CumulateTracker.momentAdd(a.cnt + 1L, a.m1, a.m2, e.dv(i))
-            else (a.m1, a.m2)
-          accs(k) = a.copy(cnt = a.cnt + 1L,
-            sumL = a.sumL + e.lv(i), sumD = a.sumD + e.dv(i),
-            mnL = if (first) e.lv(i) else math.min(a.mnL, e.lv(i)),
-            mxL = if (first) e.lv(i) else math.max(a.mxL, e.lv(i)),
-            mnD = if (first) e.dv(i) else CumulateTracker.nanMin(a.mnD, e.dv(i)),
-            mxD = if (first) e.dv(i) else CumulateTracker.nanMax(a.mxD, e.dv(i)),
-            m1 = nm1, m2 = nm2)
-        } else if (!accs.contains(k)) accs(k) = a
+        if (e.nn(i)) {
+          if (CumAcc.isDistinctKind(kinds(i))) dsets(i) += e.sv(i)
+          accs(i) = CumAcc.fold(kinds(i), accs(i), e.lv(i), e.dv(i), e.sv(i))
+        }
         i += 1
       }
     }
 
-    // batch execution (bounded source, no watermark): everything final
-    val (wmMs, isFinal) =
-      try (state.getCurrentWatermarkMs(), false)
-      catch { case _: UnsupportedOperationException => (Long.MaxValue, true) }
+    val (wmMs, isFinal) = Watermarks.current(state)
 
     val out = ArrayBuffer.empty[CumulateWindow]
     // per-trigger O(W log W) over this key's OPEN windows only — W is
     // bounded by grid geometry, not data volume: (covering windows per
     // event, <= size/slide or the zone fan-out) x (watermark horizon /
     // slide), since emission removes every window at or behind the
-    // watermark each trigger. The stored state is already (ws, we,
-    // agg)-sorted; the re-sort here only orders the handful of windows
-    // newly opened this trigger among them.
-    val windows = accs.keys.map(k => (k._1, k._2)).toSeq.distinct.sorted
-    windows.foreach { case (ws, we) =>
+    // watermark each trigger.
+    wins.keys.toSeq.sorted.foreach { case k @ (ws, we) =>
       if (isFinal || wmMs >= we) {
-        val fields = kinds.indices.flatMap { i =>
-          accs.remove((ws, we, i)).flatMap { a =>
-            val ds: scala.collection.Set[String] =
-              if (CumulateTracker.isDistinctKind(kinds(i)))
-                dsets.remove((ws, we, i))
-                  .getOrElse(scala.collection.Set.empty[String])
-              else scala.collection.Set.empty[String]
-            CumulateTracker.fieldValue(kinds(i),
-              CumAcc(0L, 0, i, a.cnt, a.sumL, a.sumD, a.mnL, a.mxL,
-                a.mnD, a.mxD, m1 = a.m1, m2 = a.m2, dec = a.dec), ds)
-              .map(s => s""""a$i": $s""")
-          }
-        }
-        // any accumulator entry present means >= 1 row landed in the
-        // window (null-input rows create cnt=0 entries), so the window
-        // exists — matching the batch rewrite, which only produces
-        // windows containing a row
-        out += CumulateWindow(key, ws, we, fields.mkString("{", ", ", "}"))
+        val (accs, dsets) = wins.remove(k).get
+        out += CumulateWindow(key, ws, we,
+          CumAcc.vals(kinds, accs(_), dsets(_)))
       }
     }
 
     if (!isFinal) {
-      if (accs.isEmpty) state.remove()
+      if (wins.isEmpty) state.remove()
       else {
-        state.update(GridAggState(accs.values.toList.map(a =>
-          dsets.get((a.ws, a.we, a.agg)) match {
-            case Some(ds) => a.copy(ds = ds.toList.sorted)
-            case None => a
-          }).sortBy(a => (a.ws, a.we, a.agg))))
+        state.update(GridAggState(wins.toList.sortBy(_._1).map {
+          case ((ws, we), (accs, dsets)) =>
+            GridWin(ws, we, accs.indices.map(i =>
+              if (dsets(i).isEmpty) accs(i)
+              else accs(i).copy(ds = dsets(i).toList.sorted)).toList)
+        }))
         // wake at the earliest pending window end
-        val nextEnd = accs.keys.map(_._2).min
+        val nextEnd = wins.keys.map(_._2).min
         state.setTimeoutTimestamp(math.max(nextEnd, wmMs + 1L))
       }
     }

@@ -68,7 +68,7 @@ final case class OverOut(key: String, tsMs: Long, payload: String,
   * double sums match batch bit-for-bit (an add/retract accumulator
   * would drift). Cost is O(frame) per row with the frame bounded by
   * the declared range/N, not data volume. Aggregate kinds and
-  * emission values are [[CumulateTracker]]'s — kinds 0-8 plus the
+  * emission values are the [[CumAcc]] law — kinds 0-8 plus the
   * exact DISTINCT kinds 9-13 (bounded frames rebuild the frame's
   * value set from its rows; UNBOUNDED frames keep running per-slot
   * sets, growing with the key's distinct values exactly as Flink's
@@ -100,10 +100,6 @@ object OverAggTracker extends Serializable {
   /** ROWS BETWEEN <n> PRECEDING AND CURRENT ROW. */
   final case class RowsPreceding(n: Int) extends Frame
 
-  private def emptyAcc(i: Int): CumAcc =
-    CumAcc(0L, 0, i, 0L, 0L, 0d, Long.MaxValue, Long.MinValue,
-      Double.MaxValue, Double.MinValue)
-
   /** Test-observable per-key state high-water marks (the
     * MatchRecognize.peakWindowRows pattern): saved-state row counts
     * and distinct-set sizes, updated at every state save. Monotonic
@@ -117,31 +113,12 @@ object OverAggTracker extends Serializable {
   private def bump(g: java.util.concurrent.atomic.AtomicLong, v: Long): Unit =
     { g.getAndAccumulate(v, math.max(_, _)): Unit }
 
-  /** Folds one row's slot `i` of kind `kind` into `a` — the shared
-    * accumulator law (first non-null value seeds the min/max
-    * sentinels, doubles merge NaN-safe, central moments fold by
-    * Welford for the variance kinds only — the sequential per-row
-    * fold is exactly the update path Spark's batch window execution
-    * runs, so streamed variance matches batch bit for bit). */
+  /** Folds one row's slot `i` of kind `kind` into `a` by the shared
+    * slot-accumulator law — the sequential per-row fold is exactly the
+    * update path Spark's batch window execution runs, so streamed
+    * variance matches batch bit for bit. */
   private def fold(a: CumAcc, r: OverRow, i: Int, kind: Int): CumAcc =
-    if (!r.nn(i)) a
-    else if (CumulateTracker.isDecimalKind(kind))
-      a.copy(cnt = a.cnt + 1L,
-        dec = CumulateTracker.decFold(kind, a.dec, r.sv(i)))
-    else {
-      val first = a.cnt == 0L
-      val (nm1, nm2) =
-        if (CumulateTracker.isVarianceKind(kind))
-          CumulateTracker.momentAdd(a.cnt + 1L, a.m1, a.m2, r.dv(i))
-        else (a.m1, a.m2)
-      a.copy(cnt = a.cnt + 1L,
-        sumL = a.sumL + r.lv(i), sumD = a.sumD + r.dv(i),
-        mnL = if (first) r.lv(i) else math.min(a.mnL, r.lv(i)),
-        mxL = if (first) r.lv(i) else math.max(a.mxL, r.lv(i)),
-        mnD = if (first) r.dv(i) else CumulateTracker.nanMin(a.mnD, r.dv(i)),
-        mxD = if (first) r.dv(i) else CumulateTracker.nanMax(a.mxD, r.dv(i)),
-        m1 = nm1, m2 = nm2)
-    }
+    if (r.nn(i)) CumAcc.fold(kind, a, r.lv(i), r.dv(i), r.sv(i)) else a
 
   /** The LAG slot kind: emission is the string-carried value of the
     * row `lags(i)` positions back in matured order (NULL when there is
@@ -158,10 +135,6 @@ object OverAggTracker extends Serializable {
   private[streaming] val FirstValueKind = 15
   private[streaming] val LastValueKind = 16
 
-  /** JSON string literal for a carried LAG/FIRST/LAST value — the
-    * shared tracker escape routine. */
-  private def jsonStr(s: String): String = CumulateTracker.jsonText(s)
-
   def track(events: Dataset[OverEvent], watermarkDelay: String,
       kinds: Seq[Int], frame: Frame, lags: Seq[Int]): Dataset[OverOut] = {
     val spark = events.sparkSession
@@ -175,15 +148,12 @@ object OverAggTracker extends Serializable {
         state: GroupState[OverAggState]): Iterator[OverOut] = {
       val st = state.getOption.getOrElse(
         OverAggState(Nil, Nil,
-          if (unbounded) kinds.indices.map(emptyAcc).toList else Nil,
+          if (unbounded) kinds.indices.map(CumAcc.empty(_)).toList else Nil,
           if (unbounded) kinds.indices.map(_ => List.empty[String]).toList
           else Nil, Nil))
       val incoming = it.map(e => OverRow(e.ts.getTime, e.nn, e.lv, e.dv,
         e.sv, e.payload)).toList
-      val (wmMs, isFinal) =
-        try (state.getCurrentWatermarkMs(), false)
-        catch { case _: UnsupportedOperationException =>
-          (Long.MaxValue, true) }
+      val (wmMs, isFinal) = Watermarks.current(state)
       val all = st.pending ++ incoming
       // a row matures when the watermark passes it STRICTLY: only then
       // is its peer group (same-timestamp rows) complete
@@ -212,7 +182,7 @@ object OverAggTracker extends Serializable {
           } else if (kinds(i) == LastValueKind) {
             if (r.nn(i)) { runDs(i).clear(); runDs(i) += r.sv(i) }
             acc(i)
-          } else if (CumulateTracker.isDistinctKind(kinds(i))) {
+          } else if (CumAcc.isDistinctKind(kinds(i))) {
             if (r.nn(i)) runDs(i) += r.sv(i)
             acc(i)
           } else fold(acc(i), r, i, kinds(i))
@@ -220,7 +190,7 @@ object OverAggTracker extends Serializable {
       }
       def runSnapshot: IndexedSeq[scala.collection.Set[String]] =
         kinds.indices.map(i =>
-          if (CumulateTracker.isDistinctKind(kinds(i)) ||
+          if (CumAcc.isDistinctKind(kinds(i)) ||
               kinds(i) == FirstValueKind || kinds(i) == LastValueKind)
             runDs(i)
           else noSet)
@@ -228,12 +198,12 @@ object OverAggTracker extends Serializable {
       def foldFrame(rows: Seq[OverRow]):
           (IndexedSeq[CumAcc], IndexedSeq[scala.collection.Set[String]]) = {
         val a = kinds.indices.map { i =>
-          if (CumulateTracker.isDistinctKind(kinds(i)) ||
-              kinds(i) == LagKind) emptyAcc(i)
-          else rows.foldLeft(emptyAcc(i))((x, r) => fold(x, r, i, kinds(i)))
+          if (CumAcc.isDistinctKind(kinds(i)) ||
+              kinds(i) == LagKind) CumAcc.empty(i)
+          else rows.foldLeft(CumAcc.empty(i))((x, r) => fold(x, r, i, kinds(i)))
         }.toIndexedSeq
         val d = kinds.indices.map { i =>
-          if (CumulateTracker.isDistinctKind(kinds(i)))
+          if (CumAcc.isDistinctKind(kinds(i)))
             rows.iterator.filter(_.nn(i)).map(_.sv(i))
               .toSet: scala.collection.Set[String]
           else if (kinds(i) == FirstValueKind)
@@ -261,21 +231,19 @@ object OverAggTracker extends Serializable {
             val v =
               if (present) {
                 val p = lagHist(lagHist.size - k)
-                if (p.nn(i)) Some(jsonStr(p.sv(i))) else None
+                if (p.nn(i)) Some(CumAcc.jsonText(p.sv(i))) else None
               } else None
-            v.map(s => s""""a$i": $s""").toSeq :+
-              s""""a${i}_p": $present"""
+            v.map(s"a$i" -> _).toSeq :+ (s"a${i}_p" -> present.toString)
           } else {
             val v =
               if (kinds(i) == FirstValueKind ||
                   kinds(i) == LastValueKind)
-                d(i).headOption.map(jsonStr)
-              else CumulateTracker.fieldValue(kinds(i), a(i), d(i))
-            v.map(s => s""""a$i": $s""").toSeq
+                d(i).headOption.map(CumAcc.jsonText)
+              else CumAcc.fieldValue(kinds(i), a(i), d(i))
+            v.map(s"a$i" -> _).toSeq
           }
         }
-        out += OverOut(key, r.tsMs, r.payload,
-          fields.mkString("{", ", ", "}"))
+        out += OverOut(key, r.tsMs, r.payload, CumAcc.valsJson(fields))
         if (maxLag > 0) lagHist = (lagHist :+ r).takeRight(maxLag)
       }
 

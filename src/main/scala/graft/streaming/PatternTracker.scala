@@ -305,13 +305,10 @@ object PatternTracker {
     // all three keeps replays deterministic (Flink breaks CEP ties by
     // arrival)
     val all = (prev.rows ++ incoming).sortBy(identity)
-    // batch execution (a bounded source under the same operator) has no
-    // watermark: the group's rows ARE the complete input, so everything
+    // a bounded run has the group's complete input here, so everything
     // is matured and every decision is final — the batch matcher's
     // semantics through the identical code path
-    val (wmMs, isFinal) =
-      try (state.getCurrentWatermarkMs(), false)
-      catch { case _: UnsupportedOperationException => (Long.MaxValue, true) }
+    val (wmMs, isFinal) = Watermarks.current(state)
     val matured = all.takeWhile(_._1 < wmMs).toArray
     val unmatured = all.drop(matured.length)
 

@@ -57,37 +57,6 @@ object SessionAggTracker {
           update(key, rows, state, gapMs, kinds))
   }
 
-  private def emptyAcc(i: Int): CumAcc =
-    CumAcc(0L, 0, i, 0L, 0L, 0d, Long.MaxValue, Long.MinValue,
-      Double.MaxValue, Double.MinValue)
-
-  /** Merges two slot accumulators of kind `kind` — the same sentinel
-    * discipline as [[CumulateTracker]]'s step merge (a cnt=0
-    * accumulator's min/max sentinels never meet real data; doubles
-    * merge NaN-safely; the exact decimal seat merges by the kind's
-    * add/compare law). Distinct-value lists concatenate here and
-    * deduplicate once per update (state save / emission), not per
-    * merge.
-    */
-  private def mergeAcc(kind: Int, m: CumAcc, a: CumAcc): CumAcc = {
-    val ds =
-      if (a.ds.isEmpty) m.ds else if (m.ds.isEmpty) a.ds else m.ds ++ a.ds
-    if (a.cnt == 0L) m.copy(ds = ds)
-    else if (m.cnt == 0L) a.copy(span = m.span, step = m.step, agg = m.agg,
-      ds = ds)
-    else {
-      val (nm1, nm2) = CumulateTracker.momentMerge(m.cnt, m.m1, m.m2,
-        a.cnt, a.m1, a.m2)
-      m.copy(cnt = m.cnt + a.cnt,
-        sumL = m.sumL + a.sumL, sumD = m.sumD + a.sumD,
-        mnL = math.min(m.mnL, a.mnL), mxL = math.max(m.mxL, a.mxL),
-        mnD = CumulateTracker.nanMin(m.mnD, a.mnD),
-        mxD = CumulateTracker.nanMax(m.mxD, a.mxD),
-        ds = ds, m1 = nm1, m2 = nm2,
-        dec = CumulateTracker.decFold(kind, m.dec, a.dec))
-    }
-  }
-
   private def update(
       key: String,
       rows: Iterator[CumulateEvent],
@@ -98,19 +67,14 @@ object SessionAggTracker {
     val units = rows.map { e =>
       val t = e.ts.getTime
       val accs = kinds.indices.map { i =>
-        val base = emptyAcc(i)
-        if (!e.nn(i)) base
-        else if (CumulateTracker.isDistinctKind(kinds(i)))
-          // distinct slots: count the non-null row, carry its encoded
-          // value; min/max sentinels never meet data for these kinds
-          base.copy(cnt = 1L, ds = List(e.sv(i)))
-        else if (CumulateTracker.isDecimalKind(kinds(i)))
-          base.copy(cnt = 1L, dec = e.sv(i))
-        else base.copy(cnt = 1L, sumL = e.lv(i), sumD = e.dv(i),
-          mnL = e.lv(i), mxL = e.lv(i), mnD = e.dv(i), mxD = e.dv(i),
-          // single-value central moments (variance kinds read them;
-          // harmless elsewhere): mean = the value, M2 = 0
-          m1 = e.dv(i), m2 = 0d)
+        val a = CumAcc.empty(i)
+        if (!e.nn(i)) a
+        else {
+          val u = CumAcc.fold(kinds(i), a, e.lv(i), e.dv(i), e.sv(i))
+          // a DISTINCT slot carries the row's encoded value
+          if (CumAcc.isDistinctKind(kinds(i))) u.copy(ds = List(e.sv(i)))
+          else u
+        }
       }.toList
       OpenSess(t, t, accs)
     }.toList
@@ -125,27 +89,17 @@ object SessionAggTracker {
           merged(merged.size - 1) = OpenSess(c.start,
             math.max(c.last, s.last),
             c.accs.lazyZip(s.accs).lazyZip(kinds.toSeq)
-              .map((m, a, k) => mergeAcc(k, m, a)))
+              .map((m, a, k) => CumAcc.merge(k, m, a)))
         case _ => merged += s
       }
     }
-    val (wmMs, isFinal) =
-      try (state.getCurrentWatermarkMs(), false)
-      catch { case _: UnsupportedOperationException => (Long.MaxValue, true) }
+    val (wmMs, isFinal) = Watermarks.current(state)
     val out = ArrayBuffer.empty[CumulateWindow]
     val open = ArrayBuffer.empty[OpenSess]
     merged.foreach { s =>
       if (isFinal || wmMs > s.last + gapMs) {
-        val fields = kinds.indices.flatMap { i =>
-          val a = s.accs(i)
-          val ds: scala.collection.Set[String] =
-            if (a.ds.isEmpty) scala.collection.Set.empty[String]
-            else a.ds.toSet
-          CumulateTracker.fieldValue(kinds(i), a, ds)
-            .map(v => s""""a$i": $v""")
-        }
         out += CumulateWindow(key, s.start, s.last + gapMs,
-          fields.mkString("{", ", ", "}"))
+          CumAcc.vals(kinds, s.accs(_), i => s.accs(i).ds.toSet))
       } else open += s
     }
     if (!isFinal) {

@@ -116,12 +116,14 @@ object StateFormat {
     */
   val UnboundedTopNVersion = 2
 
-  /** Bump when [[GridAggState]]/[[GridEvent]] change shape (the
-    * pinned-window aggregation tracker behind DST-region zone grids,
-    * round 14). v2 = GridAcc gains the m1/m2 central-moment fields
-    * (variance family, round 16).
+  /** Bump when [[GridAggState]]/[[GridWin]]/[[GridEvent]] change shape
+    * (the pinned-window aggregation tracker behind DST-region zone
+    * grids, round 14). v2 = the per-(window, aggregate) accumulator
+    * gains the m1/m2 central-moment fields (variance family, round 16);
+    * v3 = per-window [[GridWin]] rows carrying one shared [[CumAcc]]
+    * per aggregate, in place of the grid-only accumulator rows.
     */
-  val GridAggTrackerVersion = 2
+  val GridAggTrackerVersion = 3
 
   /** Bump when [[SessionAggState]]/[[OpenSess]] change shape (the
     * gap-merge aggregation tracker behind exact distinct aggregates in

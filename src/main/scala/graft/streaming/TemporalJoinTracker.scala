@@ -219,10 +219,7 @@ object TemporalJoinTracker extends Serializable {
     val versions = (prev.versions ++ newVersions).sortBy(v => (v._1, v._2))
     val pending = prev.pending ++ newProbes
 
-    // batch execution (bounded source): no watermark — everything final
-    val (wmMs, isFinal) =
-      try (state.getCurrentWatermarkMs(), false)
-      catch { case _: UnsupportedOperationException => (Long.MaxValue, true) }
+    val (wmMs, isFinal) = Watermarks.current(state)
 
     val (matured, waiting) =
       if (isFinal) (pending, Nil)

@@ -124,10 +124,7 @@ object TopNTracker {
       buffers((ws, we)) = merged
     }
 
-    // batch execution (bounded source, no watermark): everything final
-    val (wmMs, isFinal) =
-      try (state.getCurrentWatermarkMs(), false)
-      catch { case _: UnsupportedOperationException => (Long.MaxValue, true) }
+    val (wmMs, isFinal) = Watermarks.current(state)
 
     val out = ArrayBuffer.empty[TopNRow]
     buffers.keys.toSeq.sorted.foreach { case k @ (ws, we) =>

@@ -28,9 +28,9 @@ final case class UnboundedAggRow(key: String, vals: String)
   * per-key accumulator after the configured idle TTL. This tracker
   * re-hosts the aggregation on `flatMapGroupsWithState`:
   *
-  *  - rows fold into per-key slot accumulators with exactly the shared
-  *    kind arithmetic ([[CumulateTracker]]'s fold: Welford moments,
-  *    NaN-safe extrema, exact decimal seats, sorted distinct sets);
+  *  - rows fold into per-key slot accumulators by the shared
+  *    slot-accumulator law ([[CumAcc]]: Welford moments, NaN-safe
+  *    extrema, exact decimal seats, sorted distinct sets);
   *  - every batch that touches a key re-emits the key's current
   *    aggregate row (update-mode semantics, same as Spark's native
   *    update-mode aggregation);
@@ -86,47 +86,23 @@ object UnboundedAggTracker {
       state: GroupState[UnboundedAggState],
       kinds: Array[Int],
       ttlSec: Long): Iterator[UnboundedAggRow] = {
-    import CumulateTracker._
     // idle past the TTL: drop the key's accumulators — a later row
     // aggregates fresh (Flink's expired-state behavior)
     if (state.hasTimedOut) {
       state.remove()
       return Iterator.empty
     }
-    val accs: Array[CumAcc] = state.getOption match {
-      case Some(s) => s.accs.toArray
-      case None => Array.tabulate(kinds.length)(i =>
-        CumAcc(0L, 0, i, 0L, 0L, 0d, Long.MaxValue, Long.MinValue,
-          Double.MaxValue, Double.MinValue))
-    }
-    val dsets = Array.tabulate(kinds.length)(i =>
-      scala.collection.mutable.HashSet.from(accs(i).ds))
+    val accs = state.getOption.map(_.accs.toArray)
+      .getOrElse(Array.tabulate(kinds.length)(CumAcc.empty(_)))
+    // DISTINCT slots keep their set in a mutable side set for O(1)
+    // inserts (the CumAcc.ds list is only the state carrier)
+    val dsets = accs.map(a => scala.collection.mutable.HashSet.from(a.ds))
     rows.foreach { e =>
       var i = 0
       while (i < kinds.length) {
-        val a = accs(i)
-        if (e.nn(i) && isDistinctKind(kinds(i))) {
-          dsets(i) += e.sv(i)
-          accs(i) = a.copy(cnt = a.cnt + 1L)
-        } else if (e.nn(i) && isDecimalKind(kinds(i))) {
-          accs(i) = a.copy(cnt = a.cnt + 1L,
-            dec = decFold(kinds(i), a.dec, e.sv(i)))
-        } else if (e.nn(i)) {
-          // first non-null value seeds the extrema outright — the
-          // cnt=0 sentinels must never meet real data (the shared
-          // tracker contract); doubles merge NaN-safe
-          val first = a.cnt == 0L
-          val (nm1, nm2) =
-            if (isVarianceKind(kinds(i)))
-              momentAdd(a.cnt + 1L, a.m1, a.m2, e.dv(i))
-            else (a.m1, a.m2)
-          accs(i) = a.copy(cnt = a.cnt + 1L,
-            sumL = a.sumL + e.lv(i), sumD = a.sumD + e.dv(i),
-            mnL = if (first) e.lv(i) else math.min(a.mnL, e.lv(i)),
-            mxL = if (first) e.lv(i) else math.max(a.mxL, e.lv(i)),
-            mnD = if (first) e.dv(i) else nanMin(a.mnD, e.dv(i)),
-            mxD = if (first) e.dv(i) else nanMax(a.mxD, e.dv(i)),
-            m1 = nm1, m2 = nm2)
+        if (e.nn(i)) {
+          if (CumAcc.isDistinctKind(kinds(i))) dsets(i) += e.sv(i)
+          accs(i) = CumAcc.fold(kinds(i), accs(i), e.lv(i), e.dv(i), e.sv(i))
         }
         i += 1
       }
@@ -138,9 +114,7 @@ object UnboundedAggTracker {
     // re-arm on every write (OnCreateAndWrite); bounded runs execute
     // the operator in batch where the timeout never fires
     state.setTimeoutDuration(ttlSec * 1000L)
-    val fields = kinds.indices.flatMap { i =>
-      fieldValue(kinds(i), accs(i), dsets(i)).map(s => s""""a$i": $s""")
-    }
-    Iterator.single(UnboundedAggRow(key, fields.mkString("{", ", ", "}")))
+    Iterator.single(
+      UnboundedAggRow(key, CumAcc.vals(kinds, accs(_), dsets(_))))
   }
 }

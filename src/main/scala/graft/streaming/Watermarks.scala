@@ -18,6 +18,16 @@ import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
   */
 object Watermarks {
 
+  /** A stateful tracker's watermark probe: `(watermark ms, isFinal)`.
+    * A bounded run executes the operator in batch, where
+    * `getCurrentWatermarkMs` throws: the single invocation then holds
+    * the key's whole input, so every window is final — Flink's
+    * MAX_WATERMARK at the end of a bounded stream. */
+  def current(state: org.apache.spark.sql.streaming.GroupState[_])
+      : (Long, Boolean) =
+    try (state.getCurrentWatermarkMs(), false)
+    catch { case _: UnsupportedOperationException => (Long.MaxValue, true) }
+
   /** `ds.withWatermark(column, delay)` unless an existing event-time
     * watermark node already DEFINES this column — same attribute name,
     * or the column carries the event-time delay tag (how a rename or

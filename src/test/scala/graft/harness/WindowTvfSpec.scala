@@ -395,6 +395,34 @@ class WindowTvfSpec extends AnyFunSuite {
     } finally MatchRecognize.dropViews(spark, cuStream)
   }
 
+  test("a one-row SESSION's variance of a non-finite value is NaN, as in batch") {
+    // the gap-merge tracker folds a row by the same Welford step as
+    // Spark's CentralMomentAgg: a lone ±Infinity or NaN gives M2 = NaN
+    val spark = graft.SparkFixture.spark
+    import spark.implicits._
+    Seq(("a", 0L, Double.PositiveInfinity), ("b", 0L, Double.NaN),
+        ("c", 0L, Double.NegativeInfinity), ("d", 0L, 2.5))
+      .map { case (k, s, d) => (k, new java.sql.Timestamp(s * 1000L), d) }
+      .toDF("k", "ts", "d").createOrReplaceTempView("sess_nonfinite_in")
+    val stmt = "SELECT k, window_start, window_end, " +
+      "COUNT(DISTINCT d) AS n, VAR_POP(d) AS vp, STDDEV_POP(d) AS sp " +
+      "FROM TABLE(SESSION(TABLE sess_nonfinite_in PARTITION BY k, " +
+      "DESCRIPTOR(ts), INTERVAL '30' SECOND)) " +
+      "GROUP BY k, window_start, window_end"
+    def rows(sql: String) = spark.sql(sql).collect()
+      .map(r => (r.getString(0), r.getLong(3),
+        java.lang.Double.doubleToLongBits(r.getDouble(4)),
+        java.lang.Double.doubleToLongBits(r.getDouble(5)))).toSet
+    val batch = rows(WindowTvf.rewrite(stmt))
+    val streamSql = WindowTvf.rewriteStreaming(stmt, spark,
+      _ => Some(("ts", "5 seconds")))
+    try assert(rows(streamSql) === batch)
+    finally MatchRecognize.dropViews(spark, streamSql)
+    val nan = java.lang.Double.doubleToLongBits(Double.NaN)
+    assert(batch.filter(_._1 != "d").forall(r => r._3 == nan && r._4 == nan),
+      batch)
+  }
+
   test("streaming SESSION distinct aggregates are exact via the gap-merge tracker") {
     // round 15: previously the one place the engine silently
     // approximated (the native session_window path + HLL rule) where

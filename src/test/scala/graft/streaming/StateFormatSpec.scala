@@ -76,6 +76,33 @@ class StateFormatSpec extends AnyFunSuite {
       s"message: ${e.getMessage}")
   }
 
+  test("grid v2 stamp (per-aggregate grid accumulators) fails by name") {
+    // GridAggState went from per-(window, aggregate) accumulator rows
+    // to per-window GridWin rows of CumAcc: a checkpoint stamped with
+    // every current key but gridAggTracker v2 holds the old shape, so
+    // its restore must fail the named check, never die in the encoder
+    val dir = tmp() + "/cp"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dir, "graft-state-format.json"),
+      s"""{"patternTracker": ${StateFormat.PatternTrackerVersion},
+         | "cumulateTracker": ${StateFormat.CumulateTrackerVersion},
+         | "topNTracker": ${StateFormat.TopNTrackerVersion},
+         | "unboundedTopN": ${StateFormat.UnboundedTopNVersion},
+         | "gridAggTracker": 2,
+         | "sessionAggTracker": ${StateFormat.SessionAggTrackerVersion},
+         | "overAggTracker": ${StateFormat.OverAggTrackerVersion},
+         | "temporalJoinTracker": ${StateFormat.TemporalJoinTrackerVersion},
+         | "ttlTopNTracker": ${StateFormat.TtlTopNTrackerVersion},
+         | "unboundedAggTracker": ${StateFormat.UnboundedAggTrackerVersion}}
+         |""".stripMargin)
+    val e = intercept[IllegalStateException](StateFormat.check(spark, dir))
+    assert(e.getMessage.contains("gridAggTracker v2"),
+      s"message: ${e.getMessage}")
+    assert(e.getMessage.contains("incompatible streaming state"),
+      s"message: ${e.getMessage}")
+  }
+
   test("current stamp lists every checkpointable tracker state") {
     // the stamp's reason to exist: any state carrier a durable
     // checkpoint can hold must have a version key — pin the full key
