@@ -11,8 +11,7 @@ import scala.collection.immutable.HashSet
   * Partial aggregation applies: each partition builds its own set and
   * only sets (not rows) cross the shuffle. State is O(distinct) per
   * group — the minimum for exactness; at 100 TB cardinalities switch to
-  * the HLL sketch (`approx_count_distinct`) or the dedup-then-count
-  * form (`graft.streaming.StreamOps.streamingCountDistinct`).
+  * the HLL sketch (`approx_count_distinct`).
   */
 object ExactDistinct
     extends Aggregator[java.lang.Long, HashSet[Long], Long] {

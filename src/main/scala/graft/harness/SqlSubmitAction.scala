@@ -2189,8 +2189,8 @@ final class SqlSubmitAction(
                 // gate, which SET forwards to the session conf). This
                 // text-level fallback only serves caller-provided
                 // extension-less sessions. Exact semantics stay available
-                // as the two-stage dedup-then-count form
-                // (graft.streaming.StreamOps).
+                // under table.exec.state.ttl (UnboundedAgg) and on the
+                // window-TVF pinned-window tracker.
                 if (config.raw.get("graft.streaming.approx-distinct").forall(_.toBoolean)) {
                   System.err.println(
                     "Streaming COUNT(DISTINCT) not supported natively; " +

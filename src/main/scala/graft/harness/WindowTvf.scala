@@ -1333,8 +1333,7 @@ object WindowTvf {
     * native window STRUCT as `__graft_w`; the ON's two window
     * equalities (Flink's own window-join requirement) are replaced by
     * ONE equality on the struct — the shape Spark's stream-stream
-    * join recognizes for watermark-driven state eviction (the same
-    * contract as [[graft.streaming.StreamOps.windowJoin]]). TUMBLE
+    * join recognizes for watermark-driven state eviction. TUMBLE
     * and HOP only: SESSION windows are per-key merges with no shared
     * grid to equate, CUMULATE's expanding windows pair every prefix.
     */

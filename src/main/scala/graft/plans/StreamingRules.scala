@@ -9,25 +9,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, Deduplicate, Filter, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Analysis-time rewrite of `COUNT(DISTINCT x)` to the mergeable HLL
-  * sketch (`approx_count_distinct`) inside *streaming* aggregates.
-  *
-  * Spark's streaming aggregation rejects exact distinct aggregates
-  * (state would be unbounded per group), but the reference fixture uses
-  * `COUNT(DISTINCT)` in its streaming GROUP BY (test.sql:51). The
-  * principled engine answer is this resolution rule: a streaming
-  * `Count(distinct)` becomes `HyperLogLogPlusPlus` during analysis —
-  * before the UnsupportedOperationChecker sees the plan at query start —
-  * while batch plans are untouched and exact semantics stay available
-  * as the two-stage dedup-then-count form
-  * ([[graft.streaming.StreamOps.streamingCountDistinct]]).
-  *
-  * Gated by `graft.streaming.approx-distinct` (default true); `SET
-  * graft.streaming.approx-distinct = false` to surface the native error
-  * instead. Output attribute names and expr ids are preserved (the
-  * rewrite happens under the existing Alias), so downstream resolution
-  * is unaffected.
-  */
 /** Analysis-time rewrite of Flink's streaming Deduplication pattern —
   * `SELECT ... FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY keys
   * ORDER BY x [ASC|DESC]) AS rn FROM s) WHERE rn = 1`. Spark rejects
@@ -192,6 +173,27 @@ case class StreamingTopOneDedup() extends Rule[LogicalPlan] {
   }
 }
 
+/** Analysis-time rewrite of `COUNT(DISTINCT x)` to the mergeable HLL
+  * sketch (`approx_count_distinct`) inside *streaming* aggregates.
+  *
+  * Spark's streaming aggregation rejects exact distinct aggregates
+  * (state would be unbounded per group), but the reference fixture uses
+  * `COUNT(DISTINCT)` in its streaming GROUP BY (test.sql:51). The
+  * principled engine answer is this resolution rule: a streaming
+  * `Count(distinct)` becomes `HyperLogLogPlusPlus` during analysis —
+  * before the UnsupportedOperationChecker sees the plan at query start —
+  * while batch plans are untouched. `sql-submit` keeps exact semantics
+  * on two routes that never reach this rule: a GROUP BY under
+  * `table.exec.state.ttl` ([[graft.harness.UnboundedAgg]]) and a
+  * TUMBLE/HOP window-TVF aggregation on the pinned-window tracker
+  * ([[graft.streaming.GridAggTracker]]).
+  *
+  * Gated by `graft.streaming.approx-distinct` (default true); `SET
+  * graft.streaming.approx-distinct = false` to surface the native error
+  * instead. Output attribute names and expr ids are preserved (the
+  * rewrite happens under the existing Alias), so downstream resolution
+  * is unaffected.
+  */
 case class StreamingApproxDistinct() extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!plan.isStreaming ||

@@ -1,88 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Structured Streaming operator library: the streaming surface the
-  * reference harness admits (SURVEY.md §2.C "Streaming semantics"),
-  * re-expressed on Spark's incremental execution model.
+/** The stream-static faces of the batch dedup, similarity and vector
+  * operators: a micro-batch probes a static corpus (or an index or
+  * sketch built from it) with no SQL form in the reference dialect.
+  *  - [[incrementalDedup]]: left-anti join on exact fingerprints;
+  *  - [[bloomMaskOf]] / [[bloomScreen]]: a Bloom mask built once,
+  *    tested per row as a literal;
+  *  - [[minhashBandIndex]] / [[nearDupCandidates]]: MinHash LSH band
+  *    index and near-duplicate probe;
+  *  - [[annIndex]] / [[annLookup]]: IVF index and top-k probe.
   *
-  * Reference semantics pinned by the fixture:
-  *  - event-time watermark with 5s delay (test.sql:19) → `withWatermark`;
-  *  - unbounded multi-aggregate GROUP BY with incremental updates
-  *    (test.sql:47-60) → update-mode streaming aggregation;
-  *  - mini-batch latency (test.sql:4-6) → micro-batch trigger interval;
-  *  - `COUNT(DISTINCT)` in a streaming group-by (test.sql:51), which
-  *    Spark's streaming aggregation rejects → exact two-stage form:
-  *    watermarked `dropDuplicates` on (group keys ++ distinct col), then
-  *    a count per group (SURVEY §7 hard part 1, option (a)).
+  * Watermarked windows, joins, sessions and distinct counts are written
+  * in SQL and run through `sql-submit` ([[graft.harness.SqlSubmitAction]]).
   */
 object StreamOps {
-
-  /** Watermarked tumbling-window aggregate. Late rows beyond `delay` are
-    * dropped by the watermark, matching Flink's late-row semantics.
-    */
-  def windowedAgg(
-      df: DataFrame,
-      eventTime: String,
-      delay: String,
-      windowDuration: String,
-      keys: Seq[Column],
-      aggs: Seq[Column]): DataFrame =
-    Watermarks.ensure(df, eventTime, delay)
-      .groupBy(keys :+ window(col(eventTime), windowDuration): _*)
-      .agg(aggs.head, aggs.tail: _*)
-
-  /** Exact streaming COUNT(DISTINCT distinctCol) GROUP BY keys.
-    *
-    * Spark's streaming agg rejects distinct aggregates; the exact,
-    * scale-correct form is dedup-then-count: `dropDuplicates` keyed by
-    * (keys ++ distinctCol) holds one state row per distinct combination
-    * (bounded by the watermark), and the downstream count is an ordinary
-    * incremental aggregation. Two shuffles on the same keys; state is
-    * O(distinct), the minimum any exact implementation needs.
-    */
-  def streamingCountDistinct(
-      df: DataFrame,
-      eventTime: String,
-      delay: String,
-      keys: Seq[String],
-      distinctCol: String,
-      windowDuration: String = "1 minute"): DataFrame =
-    Watermarks.ensure(df, eventTime, delay)
-      // one state row per (keys, window, distinct value); the window
-      // column carries event time, so state expires with the watermark
-      .withColumn("window", window(col(eventTime), windowDuration))
-      .dropDuplicates((keys :+ distinctCol) :+ "window")
-      .groupBy(keys.map(col) :+ col("window"): _*)
-      .agg(count(lit(1)).as("distinct_count"))
-
-  /** Approximate variant: HLL-sketch count-distinct works directly in a
-    * streaming agg (mergeable state, no dedup stage) — the cheap path at
-    * scale when exactness is negotiable (SURVEY §7 hard part 1, (b)).
-    */
-  def approxCountDistinct(
-      df: DataFrame,
-      eventTime: String,
-      delay: String,
-      keys: Seq[Column],
-      distinctCol: String,
-      rsd: Double = 0.05,
-      windowDuration: String = "1 minute"): DataFrame =
-    Watermarks.ensure(df, eventTime, delay)
-      .groupBy(keys :+ window(col(eventTime), windowDuration): _*)
-      .agg(approx_count_distinct(distinctCol, rsd).as("approx_distinct_count"))
-
-  /** Streaming exact dedup within the watermark horizon — state expires
-    * once the watermark passes, so memory is bounded.
-    */
-  def dedupWithinWatermark(
-      df: DataFrame,
-      eventTime: String,
-      delay: String,
-      keyCols: Seq[String]): DataFrame =
-    Watermarks.ensure(df, eventTime, delay)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   /** Streaming incremental dedup: drop incoming docs whose fingerprint
     * already exists in the (static) corpus — the continuous-ingestion
@@ -193,65 +127,6 @@ object StreamOps {
       .dropDuplicatesWithinWatermark(idCol, "corpus_id")
   }
 
-  /** Stream-stream interval join: right-side events within
-    * `windowBeforeSec` seconds before each left event, on an equi key.
-    * Both sides carry watermarks and the time-range condition bounds
-    * exactly how long each side's state must be retained — the
-    * Structured Streaming form of the reference's time-bounded join
-    * surface (SURVEY §2.C joins). Column names must be disjoint across
-    * sides (rename before calling), as in any stream-stream join.
-    */
-  def intervalJoin(
-      left: DataFrame,
-      leftTime: String,
-      leftDelay: String,
-      right: DataFrame,
-      rightTime: String,
-      rightDelay: String,
-      leftKey: String,
-      rightKey: String,
-      windowBeforeSec: Long): DataFrame =
-    Watermarks.ensure(left, leftTime, leftDelay)
-      .join(
-        Watermarks.ensure(right, rightTime, rightDelay),
-        col(leftKey) === col(rightKey) &&
-          col(rightTime) >= col(leftTime) -
-            expr(s"INTERVAL $windowBeforeSec SECONDS") &&
-          col(rightTime) < col(leftTime))
-
-  /** Stream-stream window join (Flink 1.14+ window TVF join, streaming
-    * analog of the batch q92 operator): rows of both streams that fall
-    * in the SAME tumbling window and share an equi key pair up. The
-    * window struct is part of the equi-join key, so Spark derives the
-    * state bound from the watermark + window equality — each side
-    * retains one window past the watermark, the same retention Flink's
-    * window join maintains. Column names must be disjoint across sides
-    * (rename before calling); the left window survives as `window`.
-    * The raw time columns are consumed by the window (Spark allows at
-    * most ONE event-time column per stream, and the window struct
-    * inherits the watermark) — rows keep their window, not their
-    * per-row timestamp.
-    */
-  def windowJoin(
-      left: DataFrame,
-      leftTime: String,
-      leftDelay: String,
-      right: DataFrame,
-      rightTime: String,
-      rightDelay: String,
-      leftKey: String,
-      rightKey: String,
-      windowDuration: String): DataFrame = {
-    val l = Watermarks.ensure(left, leftTime, leftDelay)
-      .withColumn("window", window(col(leftTime), windowDuration))
-      .drop(leftTime)
-    val r = Watermarks.ensure(right, rightTime, rightDelay)
-      .withColumn("r_window", window(col(rightTime), windowDuration))
-      .drop(rightTime)
-    l.join(r, col(leftKey) === col(rightKey) && col("window") === col("r_window"))
-      .drop("r_window")
-  }
-
   /** Static IVF index for streaming ANN probes: corpus vectors
     * L2-normalized and bucketed to their nearest centroid (quantized
     * argmax, ties to the smallest centroid id — the batch IVF
@@ -318,18 +193,4 @@ object StreamOps {
       .select(col("qid"), col(eventTime), col("t.corpus_id").as("corpus_id"),
         col("t.cos_micros").as("cos_micros"), (col("pos") + 1L).as("rn"))
   }
-
-  /** Session windows with an inactivity gap (streaming analog of the
-    * batch gaps-and-islands operator in graft.operators.Events).
-    */
-  def sessionAgg(
-      df: DataFrame,
-      eventTime: String,
-      delay: String,
-      gap: String,
-      keys: Seq[Column],
-      aggs: Seq[Column]): DataFrame =
-    Watermarks.ensure(df, eventTime, delay)
-      .groupBy(keys :+ session_window(col(eventTime), gap): _*)
-      .agg(aggs.head, aggs.tail: _*)
 }

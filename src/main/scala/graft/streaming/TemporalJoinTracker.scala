@@ -7,35 +7,16 @@ import scala.collection.mutable.ArrayBuffer
 
 /** One tagged row of the unioned temporal-join input: `isVersion = true`
   * rows are versioned-table updates, `false` rows are probes to enrich.
-  * Callers watermark-tag and union their two streams into this shape.
-  */
-final case class TemporalInput(
-    key: Long, ts: Timestamp, isVersion: Boolean, value: Double)
-
-/** Per-key temporal-join state: versions sorted by time ascending, and
-  * probes still waiting for the watermark to pass their event time.
-  * Both lists are (second, value) pairs.
-  */
-final case class TemporalJoinState(
-    versions: List[(Long, Double)], pending: List[(Long, Double)])
-
-/** One enriched probe: the version in effect at the probe's event time,
-  * or `versionSec = -1` when no version existed yet (LEFT semantics —
-  * filter `versionSec >= 0` for INNER).
-  */
-final case class TemporalMatch(
-    key: Long, probeSec: Long, probeValue: Double,
-    versionSec: Long, versionValue: Double)
-
-/** Generic (SQL-facing) variant of [[TemporalInput]]: the key is the
-  * JSON-encoded equi-key tuple and the payload a JSON row of the
-  * side's columns through the exact state carrier
-  * ([[StateFormat.carrierOf]]) — the same generic shape the other SQL
+  * The key is the JSON-encoded equi-key tuple and the payload a JSON
+  * row of the side's columns through the exact state carrier
+  * ([[StateFormat.carrierOf]]), the generic shape the other SQL
   * trackers ride. */
 final case class TemporalRow(
     key: String, ts: Timestamp, isVersion: Boolean, payload: String)
 
-/** Per-key generic temporal-join state, millisecond event times. */
+/** Per-key temporal-join state, millisecond event times: versions
+  * sorted by time ascending, and probes still waiting for the
+  * watermark to pass their event time. */
 final case class TemporalRowState(
     versions: List[(Long, String)], pending: List[(Long, String)])
 
@@ -47,20 +28,12 @@ final case class TemporalRowMatch(
     versionPayload: String)
 
 /** Streaming event-time temporal join (`FOR SYSTEM_TIME AS OF` as a
-  * stream-stream operator): each probe row is enriched with the latest
-  * version at or before its event time, on the same key.
-  *
-  * The batch harness rewrite ([[graft.harness.TemporalJoin]]) interval-
-  * izes a static version table; this is the streaming form, matching
-  * Flink's event-time temporal join mechanics:
-  *  - probes buffer in per-key state until the watermark passes their
-  *    event time — only then can no earlier version still arrive, so
-  *    the match is final (exactly-once, no retraction needed);
-  *  - version state is pruned to the single latest version at or below
-  *    the watermark plus everything newer — the same retention Flink's
-  *    temporal-join state keeps;
-  *  - maturation is driven by event-time timeouts, so probes emit even
-  *    when their key receives no further input.
+  * stream-stream operator), the operator behind the CLI's streaming
+  * rewrite ([[graft.harness.TemporalJoin.rewriteStreaming]]): each
+  * probe row is enriched with the latest version at or before its
+  * event time, on the same key. The batch rewrite
+  * ([[graft.harness.TemporalJoin]]) intervalizes a static version
+  * table instead.
   *
   * State is per-key and partitioned. The probe buffer is bounded by
   * the watermark delay; the version buffer retains the latest version
@@ -87,99 +60,21 @@ object TemporalJoinTracker extends Serializable {
       v: Long): Unit =
     { g.getAndAccumulate(v, math.max(_, _)): Unit }
 
-  def join(
-      input: Dataset[TemporalInput],
-      watermarkDelay: String = "10 seconds",
-      idleVersionTtlSec: Long = 0L): Dataset[TemporalMatch] = {
-    implicit val matchEnc = Encoders.product[TemporalMatch]
-    implicit val stateEnc = Encoders.product[TemporalJoinState]
-    implicit val longEnc = Encoders.scalaLong
-    Watermarks.ensure(input, "ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: Long, rows: Iterator[TemporalInput],
-         state: GroupState[TemporalJoinState]) =>
-          update(key, rows, state, idleVersionTtlSec))
-  }
-
-  // NOTE: [[updateRows]] below is this state machine's generic twin
-  // (string payloads, millisecond maturity, batch finality) — a change
-  // to the retention cutoff or timeout arithmetic here almost
-  // certainly applies there too. The typed variant keeps its
-  // second-granularity maturity contract (a probe matures once its
-  // WHOLE second is behind the watermark), pinned by StreamingSpec.
-  private def update(
-      key: Long,
-      rows: Iterator[TemporalInput],
-      state: GroupState[TemporalJoinState],
-      idleVersionTtlSec: Long): Iterator[TemporalMatch] = {
-    val prev = state.getOption.getOrElse(TemporalJoinState(Nil, Nil))
-    // a timeout with nothing pending is the idle-TTL expiry: drop the
-    // retained version state (probe timeouts always have pending rows)
-    if (state.hasTimedOut && prev.pending.isEmpty) {
-      state.remove()
-      return Iterator.empty
-    }
-    // ingest this batch (absent on a pure timeout invocation)
-    val newVersions = ArrayBuffer.empty[(Long, Double)]
-    val newProbes = ArrayBuffer.empty[(Long, Double)]
-    rows.foreach { r =>
-      val sec = r.ts.getTime / 1000L
-      if (r.isVersion) newVersions += ((sec, r.value))
-      else newProbes += ((sec, r.value))
-    }
-    val versions = (prev.versions ++ newVersions).sortBy(v => (v._1, v._2))
-    val pending = prev.pending ++ newProbes
-
-    val wmMs = state.getCurrentWatermarkMs()
-    val wmSec = wmMs / 1000L
-    // a probe matures once its WHOLE second is behind the watermark:
-    // rows at exactly the watermark are still on time, so a version in
-    // the probe's own second could otherwise arrive after we finalized
-    val (matured, waiting) = pending.partition(p => (p._1 + 1L) * 1000L <= wmMs)
-    val out = matured.sortBy(p => (p._1, p._2)).map { case (pSec, pVal) =>
-      versions.takeWhile(_._1 <= pSec).lastOption match {
-        case Some((vSec, vVal)) => TemporalMatch(key, pSec, pVal, vSec, vVal)
-        case None => TemporalMatch(key, pSec, pVal, -1L, 0.0d)
-      }
-    }
-
-    // retention: the earliest possible future probe second is wmSec, so
-    // only the latest version at or below it (plus all newer) can match
-    val cutoff = versions.takeWhile(_._1 <= wmSec).lastOption
-    val kept = cutoff.toList ::: versions.dropWhile(_._1 <= wmSec)
-
-    if (waiting.isEmpty && kept.isEmpty) state.remove()
-    else {
-      state.update(TemporalJoinState(kept, waiting))
-      // wake when the earliest waiting probe matures; that instant is
-      // strictly past the current watermark, or it would have matured
-      waiting.map(_._1).minOption match {
-        case Some(sec) => state.setTimeoutTimestamp((sec + 1L) * 1000L)
-        case None if idleVersionTtlSec > 0L =>
-          // version-only state: expire after the idle TTL
-          state.setTimeoutTimestamp(
-            math.max(wmMs, 0L) + idleVersionTtlSec * 1000L)
-        case None => () // retain the latest version indefinitely
-      }
-    }
-    out.iterator
-  }
-
-  /** Generic (SQL-facing) temporal join over [[TemporalRow]]s — the
-    * operator behind the CLI's streaming `FOR SYSTEM_TIME AS OF`
-    * rewrite ([[graft.harness.TemporalJoin.rewriteStreaming]]). Same
-    * mechanics as [[join]] at millisecond precision: probes buffer
-    * until the watermark passes their event time STRICTLY (a version
-    * AT the probe's instant is still on time until then), version
-    * state prunes to the latest at-or-below the watermark plus
-    * everything newer, and maturation is timeout-driven. On a BOUNDED
-    * run (batch execution of the stateful operator — Spark throws
-    * from `getCurrentWatermarkMs`) every probe is final: the single
-    * invocation holds the whole input, Flink's MAX_WATERMARK at the
-    * end of a bounded stream. Version ties on one timestamp order by
-    * payload text — deterministic, matching the batch interval
+  /** Temporal join over [[TemporalRow]]s, Flink's event-time
+    * mechanics at millisecond precision:
+    *  - probes buffer in per-key state until the watermark passes their
+    *    event time STRICTLY (a version AT the probe's instant is still
+    *    on time until then), so each match is final (exactly-once, no
+    *    retraction needed);
+    *  - version state prunes to the latest version at or below the
+    *    watermark plus everything newer;
+    *  - maturation is driven by event-time timeouts, so probes emit
+    *    even when their key receives no further input.
+    * On a BOUNDED run (batch execution of the stateful operator — Spark
+    * throws from `getCurrentWatermarkMs`) every probe is final: the
+    * single invocation holds the whole input, Flink's MAX_WATERMARK at
+    * the end of a bounded stream. Version ties on one timestamp order
+    * by payload text — deterministic, matching the batch interval
     * rewrite only on tie-free data (ties are non-deterministic there
     * too: LEAD over an ambiguous sort).
     */
@@ -205,6 +100,8 @@ object TemporalJoinTracker extends Serializable {
       state: GroupState[TemporalRowState],
       idleVersionTtlSec: Long): Iterator[TemporalRowMatch] = {
     val prev = state.getOption.getOrElse(TemporalRowState(Nil, Nil))
+    // a timeout with nothing pending is the idle-TTL expiry: drop the
+    // retained version state (probe timeouts always have pending rows)
     if (state.hasTimedOut && prev.pending.isEmpty) {
       state.remove()
       return Iterator.empty
@@ -247,6 +144,8 @@ object TemporalJoinTracker extends Serializable {
       state.update(TemporalRowState(kept, waiting))
       bump(peakVersionRows, kept.size.toLong)
       bump(peakPendingProbes, waiting.size.toLong)
+      // wake when the earliest waiting probe matures; that instant is
+      // strictly past the current watermark, or it would have matured
       waiting.map(_._1).minOption match {
         case Some(ms) => state.setTimeoutTimestamp(ms + 1L)
         case None if idleVersionTtlSec > 0L =>

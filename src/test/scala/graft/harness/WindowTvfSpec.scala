@@ -1131,7 +1131,7 @@ class WindowTvfSpec extends AnyFunSuite {
     assert(!raw"(?i)window_start\s*=".r.findFirstIn(out).isDefined, out)
 
     // e2e: click/error pairing per (key, 10 s window) over two live
-    // streams — the SQL twin of StreamOps.windowJoin
+    // streams
     val spark = graft.SparkFixture.spark
     import spark.implicits._
     implicit val sc = spark.sqlContext

@@ -1,168 +1,23 @@
 package graft.streaming
 
+import java.nio.file.Files
 import java.sql.Timestamp
 import graft.SparkFixture
+import graft.harness.SqlSubmitAction
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming-semantics tests (SURVEY.md §5 item 5): watermark late-row
-  * dropping, exact streaming count-distinct, dedup-within-watermark,
-  * custom flatMapGroupsWithState sessions.
+  * dropping and interval joins through `sql-submit`, the injected
+  * streaming rules (HLL distinct, dedup and top-1 rewrites), checkpoint
+  * restart, and the stream-static faces in [[StreamOps]].
   */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   import spark.implicits._
 
   private def ts(sec: Long) = new Timestamp(sec * 1000L)
-
-  test("watermark drops rows later than the delay (5s, test.sql:19 semantics)") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String, Double)]
-    val agg = StreamOps.windowedAgg(
-      input.toDF().toDF("row_time", "dim", "price"),
-      "row_time", "5 seconds", "1 minute",
-      Seq($"dim"), Seq(count(lit(1)).as("pv"), sum($"price").as("sum_price")))
-    val query = agg.writeStream.format("memory")
-      .queryName("wm_agg").outputMode("append").start()
-    try {
-      // batch 1: two rows at t=60..70, then advance watermark far ahead
-      input.addData((ts(60), "a", 1.0), (ts(70), "a", 2.0))
-      query.processAllAvailable()
-      input.addData((ts(300), "b", 9.0)) // watermark -> 295
-      query.processAllAvailable()
-      // batch 3: a row at t=65 is behind the watermark -> dropped
-      input.addData((ts(65), "a", 100.0))
-      query.processAllAvailable()
-      input.addData((ts(600), "c", 1.0)) // close the [60,120) window
-      query.processAllAvailable()
-      val a = spark.table("wm_agg").filter($"dim" === "a")
-        .select($"pv", $"sum_price").as[(Long, Double)].collect()
-      // the late t=65 row must NOT be counted
-      assert(a.toSeq == Seq((2L, 3.0)))
-    } finally query.stop()
-  }
-
-  test("exact streaming COUNT(DISTINCT) via dedup-then-count") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String, Long)]
-    val agg = StreamOps.streamingCountDistinct(
-      input.toDF().toDF("row_time", "dim", "user_id"),
-      "row_time", "5 seconds", Seq("dim"), "user_id")
-    val query = agg.writeStream.format("memory")
-      .queryName("cd_agg").outputMode("append").start()
-    try {
-      // same user twice, three users total for dim=a within one minute
-      input.addData(
-        (ts(60), "a", 1L), (ts(61), "a", 1L), (ts(62), "a", 2L),
-        (ts(63), "a", 3L), (ts(64), "b", 7L))
-      query.processAllAvailable()
-      input.addData((ts(600), "z", 99L)) // advance watermark, close windows
-      query.processAllAvailable()
-      val byDim = spark.table("cd_agg")
-        .select($"dim", $"distinct_count").as[(String, Long)]
-        .collect().toMap
-      assert(byDim("a") == 3L)
-      assert(byDim("b") == 1L)
-    } finally query.stop()
-  }
-
-  test("dropDuplicatesWithinWatermark dedups within the horizon") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long)]
-    val out = StreamOps.dedupWithinWatermark(
-      input.toDF().toDF("row_time", "event_id"),
-      "row_time", "10 seconds", Seq("event_id"))
-    val query = out.writeStream.format("memory")
-      .queryName("dedup_out").outputMode("append").start()
-    try {
-      input.addData((ts(100), 1L), (ts(101), 1L), (ts(102), 2L))
-      query.processAllAvailable()
-      input.addData((ts(103), 1L)) // still within horizon -> dropped
-      query.processAllAvailable()
-      assert(spark.table("dedup_out").count() == 2L)
-    } finally query.stop()
-  }
-
-  test("session_window streaming agg merges events within the gap") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, Double)]
-    val agg = StreamOps.sessionAgg(
-      input.toDF().toDF("row_time", "user_id", "value"),
-      "row_time", "5 seconds", "30 seconds",
-      Seq($"user_id"), Seq(count(lit(1)).as("n"), sum($"value").as("total")))
-    val query = agg.writeStream.format("memory")
-      .queryName("sess_win").outputMode("append").start()
-    try {
-      // two events 10s apart (one session), one 100s later (another)
-      input.addData((ts(100), 1L, 1.0), (ts(110), 1L, 2.0), (ts(210), 1L, 5.0))
-      query.processAllAvailable()
-      input.addData((ts(900), 9L, 0.0)) // advance watermark, close sessions
-      query.processAllAvailable()
-      val rows = spark.table("sess_win")
-        .filter($"user_id" === 1L)
-        .select($"n", $"total").as[(Long, Double)].collect().toSet
-      assert(rows == Set((2L, 3.0), (1L, 5.0)))
-    } finally query.stop()
-  }
-
-  test("approx streaming count-distinct runs as a plain windowed agg") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String, Long)]
-    val agg = StreamOps.approxCountDistinct(
-      input.toDF().toDF("row_time", "dim", "user_id"),
-      "row_time", "5 seconds", Seq($"dim"), "user_id")
-    val query = agg.writeStream.format("memory")
-      .queryName("acd_agg").outputMode("append").start()
-    try {
-      input.addData(
-        (ts(60), "a", 1L), (ts(61), "a", 1L), (ts(62), "a", 2L),
-        (ts(63), "a", 3L))
-      query.processAllAvailable()
-      input.addData((ts(600), "z", 9L))
-      query.processAllAvailable()
-      val a = spark.table("acd_agg").filter($"dim" === "a")
-        .select($"approx_distinct_count").as[Long].collect()
-      // HLL with default rsd is exact at this tiny cardinality
-      assert(a.toSeq == Seq(3L))
-    } finally query.stop()
-  }
-
-  test("flatMapGroupsWithState closes sessions on gap timeout") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[UserEvent]
-    val sessions = SessionTracker.trackSessions(
-      input.toDS(), gapSec = 30L, watermarkDelay = "5 seconds")
-    val query = sessions.writeStream.format("memory")
-      .queryName("sessions_out").outputMode("append").start()
-    try {
-      // user 1: two events 10s apart (one session), then a 100s gap
-      input.addData(
-        UserEvent(1L, ts(100), 1.0), UserEvent(1L, ts(110), 2.0))
-      query.processAllAvailable()
-      input.addData(UserEvent(1L, ts(210), 5.0)) // gap 100s -> closes first
-      query.processAllAvailable()
-      val closed = spark.table("sessions_out").as[ClosedSession].collect()
-      assert(closed.exists(s =>
-        s.userId == 1L && s.startSec == 100L && s.endSec == 110L &&
-          s.nEvents == 2L && s.sumValue == 3.0))
-      // an out-of-order event still within the watermark extends the
-      // open session's start backward
-      input.addData(UserEvent(1L, ts(208), 1.5))
-      query.processAllAvailable()
-      // advance watermark far ahead -> timeout closes the open session
-      input.addData(UserEvent(9L, ts(1000), 0.0))
-      query.processAllAvailable()
-      input.addData(UserEvent(9L, ts(2000), 0.0))
-      query.processAllAvailable()
-      val all = spark.table("sessions_out").as[ClosedSession].collect()
-      // the second session closed with its start extended back to 208
-      assert(all.exists(s =>
-        s.userId == 1L && s.startSec == 208L && s.endSec == 210L &&
-          s.nEvents == 2L && s.sumValue == 6.5))
-    } finally query.stop()
-  }
 
   test("extension-injected functions resolve in plain SQL without register()") {
     // SparkFixture builds with GraftSparkExtensions: graft_* must work
@@ -198,66 +53,99 @@ class StreamingSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("stream-stream interval join matches only rows inside the time window") {
-    implicit val sc = spark.sqlContext
-    val purchases = MemoryStream[(Long, Timestamp)]
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val joined = StreamOps.intervalJoin(
-      purchases.toDF().toDF("p_user", "p_time"), "p_time", "5 seconds",
-      clicks.toDF().toDF("c_user", "c_time"), "c_time", "5 seconds",
-      "p_user", "c_user", windowBeforeSec = 60L)
-    val query = joined.writeStream.format("memory")
-      .queryName("ivl_join").outputMode("append").start()
+  /** Runs `script` through sql-submit on the shared session for 15 s:
+    * an unbounded file source never finishes on its own. */
+  private def submit(script: String): Unit = {
+    val file = Files.createTempFile("graft-stream-", ".sql")
     try {
-      clicks.addData((1L, ts(100)), (1L, ts(150)), (1L, ts(170)), (2L, ts(160)))
-      purchases.addData((1L, ts(165)))
-      query.processAllAvailable()
-      // user 1 purchase at 165: clicks at 150 (in [105,165)) match;
-      // 100 is too old, 170 is after, user 2 is another key
-      val got = spark.table("ivl_join")
-        .select($"p_user", $"c_time").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000)).toSet
-      assert(got == Set((1L, 150L)))
-      // advance both watermarks past the window, then a late click
-      // behind the watermark must not join
-      purchases.addData((9L, ts(1000)))
-      clicks.addData((9L, ts(990)))
-      query.processAllAvailable()
-      clicks.addData((1L, ts(155)))
-      query.processAllAvailable()
-      val after = spark.table("ivl_join").count()
-      assert(after == 2L) // only the (9,990)→(9,1000) pair was added
-    } finally query.stop()
+      Files.writeString(file, script)
+      new SqlSubmitAction(file.toString, Map.empty, Some(spark),
+        durationSec = 15L).run()
+    } finally Files.deleteIfExists(file): Unit
   }
 
-  test("stream-stream window join pairs rows in the same window and key only") {
-    implicit val sc = spark.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val errors = MemoryStream[(Long, Timestamp)]
-    val joined = StreamOps.windowJoin(
-      clicks.toDF().toDF("c_user", "c_time"), "c_time", "5 seconds",
-      errors.toDF().toDF("e_user", "e_time"), "e_time", "5 seconds",
-      "c_user", "e_user", windowDuration = "60 seconds")
-    val query = joined.writeStream.format("memory")
-      .queryName("win_join").outputMode("append").start()
-    try {
-      // window [60,120): user 1 click@70 + error@100 pair; user 2's
-      // error@80 is another key; user 1's error@130 is the next window
-      clicks.addData((1L, ts(70)), (3L, ts(75)))
-      errors.addData((1L, ts(100)), (2L, ts(80)), (1L, ts(130)))
-      // advance both watermarks so the [60,120) window finalizes
-      clicks.addData((9L, ts(500)))
-      errors.addData((9L, ts(500)))
-      query.processAllAvailable()
-      val got = spark.table("win_join")
-        .select($"c_user", $"window.start").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000)).toSet
-      assert(got == Set((1L, 60L), (9L, 480L)))
-      // a click behind the watermark must not resurrect the closed window
-      clicks.addData((1L, ts(95)))
-      query.processAllAvailable()
-      assert(spark.table("win_join").count() == 2L)
-    } finally query.stop()
+  /** Streaming-mode script header: a durable checkpoint under `dir`, so
+    * a second run of the same script resumes the first one's offsets
+    * and watermark. Each run reads only the files added since. */
+  private def restartable(dir: String, name: String): String =
+    s"""SET execution.runtime-mode = streaming;
+       |SET execution.checkpointing.enabled = true;
+       |SET state.checkpoints.dir = file://$dir/cp;
+       |SET pipeline.name = $name;
+       |""".stripMargin
+
+  test("sql-submit: a TUMBLE GROUP BY does not count a row behind the DDL watermark") {
+    val dir = Files.createTempDirectory("graft-late-row").toString
+    def put(rows: (Timestamp, String, Double)*): Unit =
+      rows.toDF("row_time", "dim", "price").write.mode("append")
+        .parquet(s"$dir/src")
+    val script = restartable(dir, "late-row") +
+      s"""create table src (
+         |  row_time timestamp(3),
+         |  dim string,
+         |  price double,
+         |  watermark for row_time as row_time - interval '5' second
+         |) with ('connector' = 'filesystem', 'path' = 'file://$dir/src',
+         |  'format' = 'parquet');
+         |create table snk (ws timestamp, dim string, pv bigint,
+         |  sum_price double) with ('connector' = 'filesystem',
+         |  'path' = 'file://$dir/out', 'format' = 'parquet');
+         |insert into snk
+         |select TUMBLE_START(row_time, INTERVAL '1' MINUTE) as ws, dim,
+         |  count(*) as pv, sum(price) as sum_price
+         |from src group by dim, TUMBLE(row_time, INTERVAL '1' MINUTE);
+         |""".stripMargin
+    put((ts(60), "a", 1.0), (ts(70), "a", 2.0), (ts(300), "b", 9.0))
+    submit(script) // watermark -> 295 s, so [60,120) closes for "a"
+    // the row at 65 s is behind the restored watermark when it arrives
+    put((ts(65), "a", 100.0), (ts(600), "c", 1.0))
+    submit(script) // watermark -> 595 s, so [300,360) closes for "b"
+    val got = spark.read.parquet(s"$dir/out")
+      .select($"dim", $"pv", $"sum_price").as[(String, Long, Double)]
+      .collect().toSeq
+    // the late row is not counted, and no second "a" window emits;
+    // "b" shows that the second run processed its batch
+    assert(got.sortBy(_._1) == Seq(("a", 2L, 3.0), ("b", 1L, 9.0)), got)
+  }
+
+  test("sql-submit: a BETWEEN interval join pairs in-window rows, drops late ones") {
+    val dir = Files.createTempDirectory("graft-interval-join").toString
+    def put(table: String, rows: (Long, Timestamp)*): Unit =
+      rows.toDF("user_id", "t").write.mode("append").parquet(s"$dir/$table")
+    def source(name: String) =
+      s"""create table $name (
+         |  user_id bigint,
+         |  t timestamp(3),
+         |  watermark for t as t - interval '5' second
+         |) with ('connector' = 'filesystem', 'path' = 'file://$dir/$name',
+         |  'format' = 'parquet');
+         |""".stripMargin
+    val script = restartable(dir, "interval-join") + source("purchases") +
+      source("clicks") +
+      s"""create table snk (p_user bigint, p_time timestamp,
+         |  c_time timestamp) with ('connector' = 'filesystem',
+         |  'path' = 'file://$dir/out', 'format' = 'parquet');
+         |insert into snk
+         |select p.user_id as p_user, p.t as p_time, c.t as c_time
+         |from purchases p join clicks c
+         |  on p.user_id = c.user_id
+         |  and c.t between p.t - interval '60' second and p.t;
+         |""".stripMargin
+    put("clicks", (1L, ts(100)), (1L, ts(150)), (1L, ts(170)), (2L, ts(160)))
+    put("purchases", (1L, ts(165)))
+    submit(script) // watermark -> min(165, 170) - 5 = 160 s
+    def pairs() = spark.read.parquet(s"$dir/out")
+      .select($"p_user", $"c_time").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000)).toSet
+    // user 1's purchase at 165: only the click at 150 is in [105,165];
+    // 100 is too old, 170 is after, user 2 is another key
+    assert(pairs() == Set((1L, 150L)))
+    // the click at 155 lies in the held purchase's window but behind
+    // the restored watermark, so it joins nothing
+    put("clicks", (9L, ts(990)), (1L, ts(155)))
+    put("purchases", (9L, ts(1000)))
+    submit(script)
+    assert(pairs() == Set((1L, 150L), (9L, 990L)))
   }
 
   test("stream-static incremental dedup drops known fingerprints statelessly") {
@@ -357,57 +245,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(all(5L) && all(6L) == hit(probes(2)))
       assert(all.size == 6)
       assert(query.lastProgress.stateOperators.isEmpty)
-    } finally query.stop()
-  }
-
-  test("streaming temporal join enriches probes with the version as-of their time") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[TemporalInput]
-    val joined = TemporalJoinTracker.join(input.toDS(), "10 seconds")
-    val query = joined.writeStream.format("memory")
-      .queryName("tj_stream").outputMode("append").start()
-    try {
-      // key 1: versions 100@10s, 200@20s; probes at 15s, 25s;
-      // key 2: a probe with no version at all
-      input.addData(
-        TemporalInput(1L, ts(10), isVersion = true, 100.0),
-        TemporalInput(1L, ts(20), isVersion = true, 200.0),
-        TemporalInput(1L, ts(15), isVersion = false, 1.0),
-        TemporalInput(1L, ts(25), isVersion = false, 2.0),
-        TemporalInput(2L, ts(15), isVersion = false, 3.0))
-      query.processAllAvailable()
-      // nothing matures until the watermark passes the probe times
-      assert(spark.table("tj_stream").count() == 0L)
-      input.addData(TemporalInput(9L, ts(1000), isVersion = true, 0.0))
-      query.processAllAvailable() // watermark -> 990s
-      query.processAllAvailable() // deliver the event-time timeouts
-      val got = spark.table("tj_stream")
-        .select($"key", $"probeSec", $"versionSec", $"versionValue")
-        .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-      assert(got === Seq(
-        (1L, 15L, 10L, 100.0), // probe@15 sees the version as of 10s
-        (1L, 25L, 20L, 200.0), // probe@25 sees the version as of 20s
-        (2L, 15L, -1L, 0.0))) // no version for key 2: LEFT-style miss
-    } finally query.stop()
-  }
-
-  test("streaming temporal join idle TTL drops version-only key state") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[TemporalInput]
-    val joined = TemporalJoinTracker.join(
-      input.toDS(), "10 seconds", idleVersionTtlSec = 5L)
-    val query = joined.writeStream.format("memory")
-      .queryName("tj_ttl").outputMode("append").start()
-    try {
-      input.addData(TemporalInput(1L, ts(10), isVersion = true, 100.0))
-      query.processAllAvailable()
-      input.addData(TemporalInput(9L, ts(1000), isVersion = true, 0.0))
-      query.processAllAvailable() // watermark -> 990s, far past key 1's TTL
-      input.addData(TemporalInput(8L, ts(1001), isVersion = true, 0.0))
-      query.processAllAvailable() // batch that delivers the timeouts
-      // keys 1 and 9 both registered their TTL against the pre-jump
-      // watermark and expired once it passed; only key 8 remains
-      assert(query.lastProgress.stateOperators(0).numRowsTotal == 1L)
     } finally query.stop()
   }
 

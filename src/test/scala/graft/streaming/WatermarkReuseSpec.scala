@@ -177,14 +177,19 @@ class WatermarkReuseSpec extends AnyFunSuite {
     }
   }
 
-  test("stream ops reuse an upstream watermark (windowedAgg, dedup)") {
+  test("a window aggregation reuses an upstream watermark") {
     implicit val sc = spark.sqlContext
     import org.apache.spark.sql.functions._
     val input = MemoryStream[(Timestamp, String, Long)]
     val src = input.toDF().toDF("ts", "k", "v")
       .withWatermark("ts", "5 seconds")
-    val agg = StreamOps.windowedAgg(src, "ts", "5 seconds", "1 minute",
-      Seq(col("k")), Seq(count(lit(1)).as("n")))
+    val agg = Watermarks.ensure(src, "ts", "5 seconds")
+      .groupBy(col("k"), window(col("ts"), "1 minute"))
+      .agg(count(lit(1)).as("n"))
+    // the upstream definition is reused, not stacked
+    assert(agg.queryExecution.analyzed.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => w
+    }.size == 1)
     val q = agg.writeStream.format("memory").queryName("wmr_ops_out")
       .outputMode("append").start()
     try {
