@@ -136,9 +136,7 @@ object OverAgg {
       fullSql: String,
       watermarkOf: String => Option[(String, String)]): String = {
     import graft.streaming.OverAggTracker._
-    val InsertPrefixRe =
-      raw"(?is)^\s*(INSERT\s+(?:INTO|OVERWRITE)\s+[\w.`]+\s*(?:\([^)]*\)\s*)?)".r
-    val (insertPrefix, sql) = InsertPrefixRe.findFirstMatchIn(fullSql)
+    val (insertPrefix, sql) = ScriptParser.InsertPrefixRe.findFirstMatchIn(fullSql)
       .map(m => (m.group(1), fullSql.substring(m.end)))
       .getOrElse(("", fullSql))
     val masked = MatchRecognize.maskQuoted(sql)

@@ -4,11 +4,14 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.net.URI
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, LogicalPlan}
+import org.apache.spark.sql.catalyst.trees.TreeNode
 import scala.collection.mutable
 import scala.util.matching.Regex
 
 /** SQL-script loader: comment stripping, statement splitting, `${var}`
-  * substitution, classification.
+  * substitution, classification, query parsing.
   *
   * Reproduces the reference's exact line-based semantics
   * (`SQLSubmitAction.java:101-161`), including its deliberate quirks:
@@ -80,6 +83,42 @@ object ScriptParser {
 
   def classify(sql: String): Statement =
     Statement(StatementType.fromStatement(sql), sql)
+
+  /** `INSERT INTO|OVERWRITE target [(cols)] ` for text front ends. */
+  private[harness] val InsertPrefixRe =
+    raw"(?is)^\s*(INSERT\s+(?:INTO|OVERWRITE)\s+[\w.`]+\s*(?:\([^)]*\)\s*)?)".r
+
+  /** The insert prefix (`INSERT INTO snk (a, b) `, or empty) and Spark's
+    * unresolved plan of the query; None for a text Spark cannot parse
+    * (window TVFs, MATCH_RECOGNIZE) or a PARTITION / BY NAME insert. */
+  private[harness] def parseQuery(sql: String): Option[(String, LogicalPlan)] =
+    scala.util.Try(CatalystSqlParser.parsePlan(sql)).toOption.collect {
+      case i: InsertIntoStatement if i.partitionSpec.isEmpty && !i.byName =>
+        (sql.substring(i.origin.startIndex.get, i.origin.stopIndex.get + 1) +
+          " ", i.query)
+      case q if !q.isInstanceOf[InsertIntoStatement] => ("", q)
+    }
+
+  /** The source text of expressions (or a leaf relation) of
+    * [[parseQuery]]'s plan: their trees' origins, widened to balanced
+    * parentheses (a node's own origin can leave out enclosing
+    * parentheses and, for `a LIKE 'x%'`, the left operand). */
+  private[harness] def textOf(sql: String,
+      nodes: TreeNode[_ <: TreeNode[_]]*): String = {
+    val origins = nodes.flatMap(_.collect { case n => n.origin })
+    val masked = MatchRecognize.maskQuoted(sql)
+    def depths(from: Int, to: Int) =
+      masked.substring(from, to).scanLeft(0)((d, c) =>
+        d + (if (c == '(') 1 else if (c == ')') -1 else 0))
+    var (from, to) =
+      (origins.flatMap(_.startIndex).min, origins.flatMap(_.stopIndex).max + 1)
+    // a parenthesis inside a comment can leave no partner: stop at the ends
+    while (from > 0 && depths(from, to).min < 0)
+      from = masked.lastIndexOf('(', from - 1).max(0)
+    while (to < sql.length && depths(from, to).last > 0)
+      to = Some(masked.indexOf(')', to)).filter(_ >= 0).fold(sql.length)(_ + 1)
+    sql.substring(from, to)
+  }
 
   /** Load + parse a script from `file://` or `hdfs://` (or any Hadoop FS
     * scheme — one code path, unlike the reference's two-way branch at

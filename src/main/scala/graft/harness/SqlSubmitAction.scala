@@ -1860,36 +1860,35 @@ final class SqlSubmitAction(
     val durable =
       config.checkpointingEnabled && config.checkpointDir.isDefined
     val masked = MatchRecognize.maskQuoted(sql)
-    val froms = raw"(?is)\bFROM\s+([A-Za-z_]\w*)\b".r
-      .findAllMatchIn(masked).map(_.group(1)).toSeq.distinct
     val single =
-      if (UnboundedAgg.hasShape(spark, sql) ||
-          UnboundedTopN.hasShape(sql, 1))
-        for {
-          view <- Some(froms).collect { case Seq(one) => one }
-          m <- compileMaterialization(spark, config, view, durable)
-        } yield {
-          // stage 2: swap the view for the intermediate in BOTH its
-          // FROM position and as a column QUALIFIER (`sum(view.v)`,
-          // `WHERE view.v > 0` — r19 review); matches run on masked
-          // text so a string literal spelling the view name is never
-          // touched
-          val vQ = java.util.regex.Pattern.quote(view)
-          val SwapRe = (raw"(?is)(\bFROM\s+)$vQ\b|\b$vQ(?=\s*\.)").r
-          val out = new StringBuilder
-          var last = 0
-          SwapRe.findAllMatchIn(masked).foreach { mm =>
-            out.append(sql.substring(last, mm.start))
-            if (mm.group(1) != null)
-              out.append(sql.substring(mm.start(1), mm.end(1)))
-            out.append(m.mat)
-            last = mm.end
-          }
-          out.append(sql.substring(last))
-          AutoSplitPlan(m.ddl, m.stage1, out.toString, m.mat, m.path,
-            view.toLowerCase, m.reuse, durable, enrich = None)
+      for {
+        // the shape's one relation, spelled as a plain name: stage 2
+        // swaps that spelling in the text
+        view <- UnboundedAgg.sourceOf(spark, sql)
+          .orElse(UnboundedTopN.sourceOf(sql, 1))
+          .filter(_.matches(GeneratedSqlIdent))
+        m <- compileMaterialization(spark, config, view, durable)
+      } yield {
+        // stage 2: swap the view for the intermediate in BOTH its
+        // FROM position and as a column QUALIFIER (`sum(view.v)`,
+        // `WHERE view.v > 0` — r19 review); matches run on masked
+        // text so a string literal spelling the view name is never
+        // touched
+        val vQ = java.util.regex.Pattern.quote(view)
+        val SwapRe = (raw"(?is)(\bFROM\s+)$vQ\b|\b$vQ(?=\s*\.)").r
+        val out = new StringBuilder
+        var last = 0
+        SwapRe.findAllMatchIn(masked).foreach { mm =>
+          out.append(sql.substring(last, mm.start))
+          if (mm.group(1) != null)
+            out.append(sql.substring(mm.start(1), mm.end(1)))
+          out.append(m.mat)
+          last = mm.end
         }
-      else None
+        out.append(sql.substring(last))
+        AutoSplitPlan(m.ddl, m.stage1, out.toString, m.mat, m.path,
+          view.toLowerCase, m.reuse, durable, enrich = None)
+      }
     single.orElse(joinAutoSplit(spark, config, sql, masked, durable))
   }
 
@@ -2168,40 +2167,15 @@ final class SqlSubmitAction(
                 "INSERT with a static PARTITION clause is not supported " +
                   "on connector sinks — write the partition column in " +
                   "the query and declare PARTITIONED BY on the sink table")
-            val reorder: DataFrame => DataFrame = df =>
-              Option(colList).filter(_.trim.nonEmpty) match {
-                case Some(cols) =>
-                  // INSERT INTO t(c1, c2): name the query's columns c1, c2
-                  df.toDF(cols.split(",").map(c =>
-                    DdlParser.unquoteName(c.trim)).toIndexedSeq: _*)
-                case None => df
-              }
-            val df = reorder(spark.sql(query))
-            try writeToSink(spark, config, df, sinkDef, overwrite)
-            catch {
-              case e: org.apache.spark.sql.AnalysisException
-                  if df.isStreaming && e.getMessage.toLowerCase.contains("distinct") =>
-                // Spark streaming aggregation rejects COUNT(DISTINCT x)
-                // (the reference fixture uses it, test.sql:51). Sessions
-                // built with GraftSparkExtensions never reach this catch —
-                // the StreamingApproxDistinct resolution rule rewrites
-                // during analysis (same graft.streaming.approx-distinct
-                // gate, which SET forwards to the session conf). This
-                // text-level fallback only serves caller-provided
-                // extension-less sessions. Exact semantics stay available
-                // under table.exec.state.ttl (UnboundedAgg) and on the
-                // window-TVF pinned-window tracker.
-                if (config.raw.get("graft.streaming.approx-distinct").forall(_.toBoolean)) {
-                  System.err.println(
-                    "Streaming COUNT(DISTINCT) not supported natively; " +
-                      "rewriting to approx_count_distinct (HLL). " +
-                      "SET graft.streaming.approx-distinct = false to fail instead.")
-                  val rewritten = raw"(?i)count\s*\(\s*distinct\s+([^)]+)\)".r
-                    .replaceAllIn(query, m => s"approx_count_distinct(${m.group(1)})")
-                  writeToSink(spark, config, reorder(spark.sql(rewritten)),
-                    sinkDef, overwrite)
-                } else throw e
+            val df = spark.sql(query)
+            val named = Option(colList).filter(_.trim.nonEmpty) match {
+              case Some(cols) =>
+                // INSERT INTO t(c1, c2): name the query's columns c1, c2
+                df.toDF(cols.split(",").map(c =>
+                  DdlParser.unquoteName(c.trim)).toIndexedSeq: _*)
+              case None => df
             }
+            writeToSink(spark, config, named, sinkDef, overwrite)
           case None =>
             // not an engine sink — let Spark SQL handle the whole INSERT
             // (still the rewritten text: temporal joins must not leak

@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 /** Flink's plain unbounded GROUP BY aggregation under
   * `table.exec.state.ttl` — the canonical
   *
-  * {{{ [INSERT INTO sink] SELECT k1, ..., AGG(expr) AS a, ...
-  *     FROM stream [WHERE pred] GROUP BY k1, ... }}}
+  * {{{ [INSERT INTO sink] SELECT k1, ..., AGG(expr) [AS] a, ...
+  *     FROM stream [[AS] alias] [WHERE pred] GROUP BY k1, ... }}}
   *
   * shape on a STREAM relation. Spark's native update-mode aggregation
   * runs this fine but keeps one state row per key FOREVER (no TTL
@@ -23,78 +23,92 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * aggregates come out EXACT on this path (value-set / BigDecimal
   * state), where the native streaming route would HLL-approximate.
   *
-  * Shapes outside the contract (joins, expression group keys,
-  * unaliased aggregates, HAVING, set ops) stay on the native path —
-  * [[hasShape]] returns false — and their state remains TTL-less;
-  * statements the shape admits but whose details violate the contract
-  * (non-JSON-lossless keys, nested-type aggregate inputs) fail by
-  * name inside [[rewrite]] exactly like the window-TVF pass.
+  * The shape is matched on Spark's unresolved plan
+  * ([[ScriptParser.parseQuery]]); everything else (joins, expression
+  * keys, unaliased aggregates, HAVING, set ops, subqueries, window
+  * TVFs) stays on the native, TTL-less path. Statements the shape
+  * admits but whose details violate the contract (non-JSON-lossless
+  * keys, nested-type aggregate inputs) fail by name inside [[rewrite]].
   */
 object UnboundedAgg {
+  import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+    UnresolvedFunction, UnresolvedRelation}
+  import org.apache.spark.sql.catalyst.expressions.{Alias, Expression,
+    Literal, SubqueryExpression}
+  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
+    SubqueryAlias}
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(msg)
 
   private val viewCounter = new java.util.concurrent.atomic.AtomicInteger()
 
-  private val InsertPrefixRe =
-    raw"(?is)^\s*(INSERT\s+(?:INTO|OVERWRITE)\s+[\w.`]+\s*(?:\([^)]*\)\s*)?)".r
-  private val SelectRe = raw"(?is)^\s*SELECT\s+".r
-  private val TableRe =
-    raw"(?is)^([A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?$$".r
-  private val AggItemRe =
-    (raw"(?is)^(" + AggSlots.FnAlternation +
-      raw")\s*\((.+)\)\s+AS\s+([A-Za-z_]\w*)$$").r
-  private val KeyRe = raw"(?s)^[A-Za-z_]\w*$$".r
+  private val AggFns: Set[String] = AggSlots.FnAlternation.split('|').toSet
 
-  /** Structural parse of the canonical shape; None when the statement
-    * is not a plain single-table GROUP BY aggregation. Yields
-    * (insert prefix, select list, table, optional alias, optional
-    * WHERE, group keys). */
-  private def parse(sql: String): Option[(String, String, String,
-      Option[String], Option[String], Seq[String])] = {
-    if (WindowTvf.hasWindowTvf(sql) || MatchRecognize.hasMatchRecognize(sql))
-      return None
-    val (prefix, body) = InsertPrefixRe.findFirstMatchIn(sql)
-      .map(m => (m.group(1), sql.substring(m.end)))
-      .getOrElse(("", sql))
-    val masked = MatchRecognize.maskQuoted(body)
-    // OVER / QUALIFY / nested SELECT / set ops: other passes' territory
-    if (raw"(?is)\bOVER\s*\(|\bQUALIFY\b|\bUNION\b|\bINTERSECT\b|\bEXCEPT\b|\bHAVING\b|\bORDER\s+BY\b|\bLIMIT\b".r
-        .findFirstIn(masked).isDefined) return None
-    if (raw"(?is)\bSELECT\b".r.findAllMatchIn(masked).size != 1) return None
-    for {
-      selM <- SelectRe.findFirstMatchIn(masked)
-      fromIdx <- WindowTvf.findTopLevel(masked, selM.end, "FROM")
-      groupIdx <- WindowTvf.findTopLevel(masked, fromIdx, "GROUP")
-      if raw"(?is)^GROUP\s+BY\b".r
-        .findFirstIn(masked.substring(groupIdx)).isDefined
-      whereIdx = WindowTvf.findTopLevel(masked, fromIdx, "WHERE")
-        .filter(_ < groupIdx)
-      relEnd = whereIdx.getOrElse(groupIdx)
-      relRegion = body.substring(fromIdx + "FROM".length, relEnd).trim
-      tm <- TableRe.findFirstMatchIn(relRegion)
-      keysRegion = raw"(?is)^GROUP\s+BY\b".r
-        .replaceFirstIn(body.substring(groupIdx), "").stripSuffix(";").trim
-    } yield (prefix, body.substring(selM.end, fromIdx).trim,
-      ddl.DdlParser.unquoteName(tm.group(1)), Option(tm.group(2)),
-      whereIdx.map(w => body.substring(w + "WHERE".length, groupIdx).trim),
-      MatchRecognize.splitTopLevel(keysRegion).map(_.trim))
+  private sealed trait Item
+  private final case class KeyItem(name: String) extends Item
+  private final case class AggItem(fn: String, distinct: Boolean,
+      input: String, alias: String) extends Item
+
+  /** The canonical shape, its texts as written (relation, WHERE). */
+  private final case class Shape(prefix: String, relText: String,
+      table: String, alias: Option[String], where: Option[String],
+      keys: Seq[String], items: Seq[Item])
+
+  private def shape(sql: String): Option[Shape] = {
+    def hasSubquery(e: Expression) =
+      e.exists(_.isInstanceOf[SubqueryExpression])
+    ScriptParser.parseQuery(sql).flatMap {
+      case (prefix, agg: Aggregate) if agg.groupingExpressions.nonEmpty =>
+        val keys = agg.groupingExpressions.collect { case UnresolvedAttribute(Seq(k)) => k }
+        val (child, where) = agg.child match {
+          case Filter(cond, child) if !hasSubquery(cond) =>
+            (child, Some(ScriptParser.textOf(sql, cond)))
+          case child => (child, None)
+        }
+        val rel = child match {
+          case r: UnresolvedRelation => Some((r, None))
+          case SubqueryAlias(a, r: UnresolvedRelation) => Some((r, Some(a.name)))
+          case _ => None
+        }
+        val items = agg.aggregateExpressions.map {
+          case UnresolvedAttribute(Seq(k)) if keys.exists(_.equalsIgnoreCase(k)) =>
+            Some(KeyItem(k))
+          case Alias(f: UnresolvedFunction, alias)
+              if f.nameParts.size == 1 && AggFns(f.nameParts.head.toUpperCase) &&
+                f.arguments.nonEmpty && f.filter.isEmpty && !f.ignoreNulls &&
+                f.orderingWithinGroup.isEmpty && !hasSubquery(f) =>
+            val fn = f.nameParts.head.toUpperCase
+            val input = f.arguments match {
+              // COUNT(*) parses to a literal 1 spanning the whole call
+              case Seq(l: Literal) if l.origin.startIndex == f.origin.startIndex => "1"
+              case args => ScriptParser.textOf(sql, args: _*)
+            }
+            // MIN/MAX are distinct-invariant (Flink plans the same)
+            Some(AggItem(fn, f.isDistinct && fn != "MIN" && fn != "MAX",
+              input, alias))
+          case _ => None
+        }
+        for {
+          (r, alias) <- rel
+          if keys.size == agg.groupingExpressions.size && items.forall(_.isDefined)
+        } yield Shape(prefix, ScriptParser.textOf(sql, r),
+          r.multipartIdentifier.last, alias, where, keys, items.flatten)
+      case _ => None
+    }
   }
 
-  /** The TTL-routable shape: the canonical parse succeeds, the group
-    * keys are plain columns, every select item is a group key or an
-    * ALIASED aggregate call, and the FROM names a STREAM relation
-    * (a bounded relation aggregates natively with no state to bound).
-    */
+  /** The source text of the shape's relation, when `sql` is the
+    * TTL-routable shape: a plain-column GROUP BY whose items are keys
+    * or aliased aggregate calls, over one STREAM relation (a bounded
+    * relation aggregates natively with no state to bound). */
+  private[harness] def sourceOf(spark: SparkSession, sql: String): Option[String] =
+    shape(sql).filter(s =>
+      scala.util.Try(spark.table(s.table).isStreaming).getOrElse(false))
+      .map(_.relText)
+
   def hasShape(spark: SparkSession, sql: String): Boolean =
-    parse(sql).exists { case (_, items, table, _, _, keys) =>
-      keys.forall(KeyRe.matches) &&
-        MatchRecognize.splitTopLevel(items).map(_.trim).forall(it =>
-          keys.exists(_.equalsIgnoreCase(it)) ||
-            AggItemRe.findFirstMatchIn(it).isDefined) &&
-        scala.util.Try(spark.table(table).isStreaming).getOrElse(false)
-    }
+    sourceOf(spark, sql).isDefined
 
   /** Compiles the shape onto the TTL'd tracker; call only when
     * [[hasShape]] holds. Mirrors the window-TVF pass' slot plumbing:
@@ -104,10 +118,8 @@ object UnboundedAgg {
     */
   def rewrite(spark: SparkSession, sql: String, stateTtlSec: Long): String = {
     require(stateTtlSec > 0L, "UnboundedAgg is the TTL'd route")
-    val (prefix, selectList, table, aliasOpt, wherePred, keys) =
-      parse(sql).getOrElse(fail("not an unbounded GROUP BY shape"))
-    keys.foreach(k => if (!KeyRe.matches(k))
-      fail(s"GROUP BY key must be a plain column, got: $k"))
+    val Shape(prefix, _, table, aliasOpt, wherePred, keys, items) =
+      shape(sql).getOrElse(fail("not an unbounded GROUP BY shape"))
 
     // the relation rides under its statement alias so alias-qualified
     // references in WHERE and aggregate inputs resolve
@@ -119,30 +131,6 @@ object UnboundedAgg {
       src.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         fail(s"column $c not found in $table"))
 
-    sealed trait Item
-    final case class KeyItem(name: String) extends Item
-    final case class AggItem(fn: String, distinct: Boolean, input: String,
-        alias: String) extends Item
-    val items: Seq[Item] = MatchRecognize.splitTopLevel(selectList)
-      .map(_.trim).filter(_.nonEmpty).map {
-        case it if keys.exists(_.equalsIgnoreCase(it)) => KeyItem(it)
-        case AggItemRe(fn, in, alias) =>
-          val distinct =
-            raw"(?i)^DISTINCT\b".r.findFirstIn(in.trim).isDefined
-          val arg =
-            if (distinct) in.trim.replaceFirst(raw"(?i)^DISTINCT\s+", "")
-            else in.trim
-          if (!distinct &&
-              raw"(?i)\bDISTINCT\b".r.findFirstIn(in).isDefined)
-            fail(s"unsupported DISTINCT placement in ${fn.toUpperCase}($in)")
-          // MIN/MAX are distinct-invariant (Flink plans the same)
-          val f = fn.toUpperCase
-          val d = distinct && f != "MIN" && f != "MAX"
-          AggItem(f, d, arg, alias)
-        case other => fail("unsupported select item under the TTL'd " +
-          "unbounded aggregation (want a group key or AGG(expr) AS " +
-          s"alias): $other")
-      }
     val aggs = items.collect { case a: AggItem => a }
     if (aggs.isEmpty) fail("at least one aggregate is required")
 
@@ -160,8 +148,7 @@ object UnboundedAgg {
       k => fieldOf(k).dataType, keys, "GROUP BY", fail,
       hint = "; unset table.exec.state.ttl for the native path")
     val keyStruct = StructType(keys.map(fieldOf).toArray)
-    val keyExpr =
-      if (keys.isEmpty) lit("{}") else to_json(struct(keys.map(col): _*))
+    val keyExpr = to_json(struct(keys.map(col): _*))
     val (nnArr, lvArr, dvArr, svArr) =
       AggSlots.slotInputArrays(plans.map(_._2))
     val prepared = src.select(keyExpr.as("key"),

@@ -2,14 +2,15 @@ package graft.harness
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructField
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 /** Flink's UNBOUNDED updating Top-N for N ≥ 2 — `SELECT ... FROM
   * (SELECT *, ROW_NUMBER() OVER (PARTITION BY keys ORDER BY m
-  * DESC|ASC) AS rn FROM t) WHERE rn <= N [AND conditions]` on a stream
-  * with NO window TVF. Spark rejects ranking functions on streams;
-  * Flink runs this as an updating operator holding the N best rows per
-  * key. The rewrite compiles the same semantics natively: an
+  * [DESC|ASC]) [AS] rn FROM t) [alias] WHERE rn <= N [AND conditions]`
+  * on a stream, matched on Spark's unresolved plan
+  * ([[ScriptParser.parseQuery]]). Spark rejects ranking functions on
+  * streams; Flink runs this as an updating operator holding the N best
+  * rows per key. The rewrite compiles the same semantics natively: an
   * update-mode aggregation through the bounded
   * [[graft.functions.TopRows]] collector (per-key state = exactly N
   * rows, Flink's own bound), a `posexplode` fanning the held rows back
@@ -40,96 +41,96 @@ import org.apache.spark.sql.types.StructField
   * TTL Spark's native aggregation state cannot express.
   */
 object UnboundedTopN {
+  import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+    UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
+  import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending,
+    EqualTo, Expression, LessThan, LessThanOrEqual, Literal, Or, SortOrder,
+    UnspecifiedFrame, WindowExpression, WindowSpecDefinition}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project,
+    SubqueryAlias}
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(msg)
 
   private val viewCounter = new java.util.concurrent.atomic.AtomicInteger()
 
-  private val OuterRe =
-    raw"(?is)^\s*SELECT\s+(.*?)\s+FROM\s*\(".r
-  private val InnerRe = (
-    raw"(?is)^\s*SELECT\s+\*\s*,\s*ROW_NUMBER\s*\(\s*\)\s+OVER\s*\(\s*" +
-      raw"PARTITION\s+BY\s+(.+?)\s+ORDER\s+BY\s+([A-Za-z_]\w*)\s+(DESC|ASC)\s*\)\s+" +
-      raw"AS\s+([A-Za-z_]\w*)\s+FROM\s+([A-Za-z_][\w.]*)\s*$$").r
-  private val WhereRe =
-    raw"(?is)^(?:AS\s+)?([A-Za-z_]\w*\s+)?WHERE\s+([A-Za-z_]\w*)\s*(<=|<|=)\s*(\d{1,9})\s*(?:\bAND\b\s+(.+?))?\s*$$".r
-  private val InsertPrefixRe =
-    raw"(?is)^\s*(INSERT\s+(?:INTO|OVERWRITE)\s+[\w.`]+\s*(?:\([^)]*\)\s*)?)".r
+  /** The canonical shape, its texts as written (outer select list,
+    * residual conjuncts, relation) and the rank bound N. */
+  private final case class Shape(prefix: String, outSel: String,
+      outerAlias: Option[String], rnAlias: String, n: Int,
+      residual: Option[String], keys: Seq[Expression], metricCol: String,
+      asc: Boolean, relText: String, table: String)
 
-  /** The rank bound N of a `rn <op> k` filter, if the filter is a
-    * top-N prefix: `<=` keeps k, `<` keeps k-1, and `=` is a top-N
-    * only for `rn = 1` (Flink's deduplication shape — `rn = 2` pins a
-    * single rank, not a prefix). */
-  private def boundOf(op: String, k: Int): Option[Int] = op match {
-    case "<"  => Some(k - 1)
-    case "<=" => Some(k)
-    case _    => if (k == 1) Some(1) else None
+  private def shape(sql: String): Option[Shape] = {
+    @scala.annotation.tailrec // the rank filter is the first conjunct
+    def first(e: Expression): Expression = e match {
+      case And(l, _) => first(l)
+      case Or(l, _) => first(l)
+      case other => other
+    }
+    ScriptParser.parseQuery(sql).flatMap {
+      case (prefix, Project(outItems, Filter(cond, SubqueryAlias(outer,
+          Project(Seq(UnresolvedStar(None), Alias(WindowExpression(
+            f: UnresolvedFunction, WindowSpecDefinition(keys, Seq(SortOrder(
+              UnresolvedAttribute(Seq(metricCol)), dir, nulls, _)),
+              UnspecifiedFrame)), rnAlias)), rel: UnresolvedRelation)))))
+          if f.nameParts.map(_.toLowerCase) == Seq("row_number") &&
+            f.arguments.isEmpty && keys.nonEmpty &&
+            nulls == dir.defaultNullOrdering =>
+        def isRn(e: Expression) = PartialFunction.cond(e) {
+          case UnresolvedAttribute(Seq(c)) => c.equalsIgnoreCase(rnAlias) }
+        // `<=` keeps k, `<` keeps k-1, and `=` is a top-N only for
+        // rn = 1 (Flink's deduplication shape — rn = 2 pins a single
+        // rank, not a prefix)
+        val rank = first(cond)
+        val bound = rank match {
+          case LessThanOrEqual(c, Literal(k: Int, IntegerType)) if isRn(c) => Some(k)
+          case LessThan(c, Literal(k: Int, IntegerType)) if isRn(c) => Some(k - 1)
+          case EqualTo(c, Literal(1, IntegerType)) if isRn(c) => Some(1)
+          case _ => None
+        }
+        val rest = sql.substring(rank.origin.stopIndex.get + 1,
+          cond.origin.stopIndex.get + 1).trim
+        for {
+          n <- bound
+          if rank.origin.startIndex == cond.origin.startIndex &&
+            (rest.isEmpty || rest.regionMatches(true, 0, "AND", 0, 3) &&
+              rest.lift(3).exists(!Character.isJavaIdentifierPart(_)))
+        } yield Shape(prefix, ScriptParser.textOf(sql, outItems: _*),
+          Some(outer.name).filter(_ != "__auto_generated_subquery_name"),
+          rnAlias, n, Some(rest.drop(3).trim).filter(_.nonEmpty), keys,
+          metricCol, dir == Ascending, ScriptParser.textOf(sql, rel),
+          rel.tableName)
+      case _ => None
+    }
   }
 
-  /** The unbounded updating-top-N shape: a rank-bounded ROW_NUMBER
-    * subquery over a bare table with no window TVF, N ≥ `minN`. The
-    * default (2) leaves N = 1 to the Deduplicate/argmax analysis-rule
-    * family; under `table.exec.state.ttl` the caller passes 1 so the
-    * rn = 1 deduplication shapes route onto the TTL'd tracker instead
-    * (the analysis rules compile onto Spark's native state, which has
-    * no TTL).
-    */
-  def hasShape(sql: String, minN: Int = 2): Boolean = {
-    if (WindowTvf.hasWindowTvf(sql)) return false
-    val body = InsertPrefixRe.findFirstMatchIn(sql)
-      .map(m => sql.substring(m.end)).getOrElse(sql)
-    (for {
-      om <- OuterRe.findFirstMatchIn(body)
-      open = om.end - 1
-      end <- scala.util.Try(MatchRecognize.closeParen(body, open)).toOption
-      im <- InnerRe.findFirstMatchIn(body.substring(open + 1, end - 1))
-      wm <- WhereRe.findFirstMatchIn(body.substring(end).trim)
-    } yield wm.group(2).equalsIgnoreCase(im.group(4)) &&
-      boundOf(wm.group(3), wm.group(4).toInt).exists(_ >= minN)
-    ).getOrElse(false)
-  }
+  /** The source text of the shape's relation, when `sql` is the
+    * updating-top-N shape with N ≥ `minN`: 2 leaves rn = 1 to the
+    * Deduplicate/argmax analysis rules (Spark's native state, no TTL);
+    * under `table.exec.state.ttl` the caller passes 1. */
+  private[harness] def sourceOf(sql: String, minN: Int = 2): Option[String] =
+    shape(sql).filter(_.n >= minN).map(_.relText)
+
+  def hasShape(sql: String, minN: Int = 2): Boolean =
+    sourceOf(sql, minN).isDefined
 
   def rewrite(spark: SparkSession, fullSql: String,
       stateTtlSec: Long = 0L): String = {
-    val (insertPrefix, sql) = InsertPrefixRe.findFirstMatchIn(fullSql)
-      .map(m => (m.group(1), fullSql.substring(m.end)))
-      .getOrElse(("", fullSql))
-    val om = OuterRe.findFirstMatchIn(sql).getOrElse(fail(
-      "streaming top-N must be `SELECT ... FROM (SELECT *, ROW_NUMBER() " +
-        "OVER (...) AS rn FROM t) WHERE rn <= N`"))
-    val outSel = om.group(1)
-    val open = om.end - 1
-    val end = MatchRecognize.closeParen(sql, open)
-    val im = InnerRe.findFirstMatchIn(sql.substring(open + 1, end - 1))
-      .getOrElse(fail(
-        "streaming top-N inner query must be exactly `SELECT *, " +
+    val Shape(insertPrefix, outSel, outerAlias, rnAlias, n, residual,
+        keyExprs, metricCol, asc, _, table) =
+      shape(fullSql).getOrElse(fail(
+        "streaming top-N must be `SELECT ... FROM (SELECT *, " +
           "ROW_NUMBER() OVER (PARTITION BY keys ORDER BY <column> " +
-          "DESC|ASC) AS rn FROM <table>`"))
-    val keys = MatchRecognize.splitTopLevel(im.group(1)).map(_.trim)
-    val metricCol = im.group(2)
-    val asc = im.group(3).equalsIgnoreCase("ASC")
-    val rnAlias = im.group(4)
-    val table = im.group(5)
-    keys.foreach { k =>
-      if (!k.matches(raw"^[A-Za-z_]\w*$$"))
-        fail(s"streaming top-N PARTITION BY keys must be plain columns, " +
-          s"got: $k")
+          "[DESC|ASC]) AS rn FROM <table>) WHERE rn <= N [AND conditions]`"))
+    val keys = keyExprs.map {
+      case UnresolvedAttribute(Seq(k)) => k
+      case e => fail("streaming top-N PARTITION BY keys must be plain " +
+        s"columns, got: ${ScriptParser.textOf(fullSql, e)}")
     }
-    val wm = WhereRe.findFirstMatchIn(sql.substring(end).trim).getOrElse(fail(
-      "streaming top-N must end `WHERE rn <= N [AND conditions]`"))
-    val outerAlias = Option(wm.group(1)).map(_.trim)
-    if (!wm.group(2).equalsIgnoreCase(rnAlias))
-      fail(s"the WHERE rank filter must use the ROW_NUMBER alias " +
-        s"$rnAlias, got ${wm.group(2)}")
-    val n = boundOf(wm.group(3), wm.group(4).toInt).getOrElse(fail(
-      s"WHERE $rnAlias = ${wm.group(4)} pins a single rank, not a " +
-        "top-N prefix; only rn = 1 (deduplication) takes the equality " +
-        "form"))
     if (n < 2 && stateTtlSec <= 0L)
       fail("unbounded streaming top-N compiles N >= 2; rn = 1 " +
         "runs through the dedup/argmax analysis rules")
-    val residual = Option(wm.group(5)).map(_.trim).filter(_.nonEmpty)
     WindowTopN.rejectResidualOr(residual, fail)
 
     val src = spark.table(table)

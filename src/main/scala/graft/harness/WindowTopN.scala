@@ -150,11 +150,8 @@ object WindowTopN {
   /** Compiles the statement onto the tracker and returns the spliced
     * outer SELECT over the registered `graft_topn_<k>` view.
     * `watermarkOf` resolves the source table's event-time declaration.
-    */
-  private val InsertPrefixRe =
-    raw"(?is)^\s*(INSERT\s+(?:INTO|OVERWRITE)\s+[\w.`]+\s*(?:\([^)]*\)\s*)?)".r
-
-  /** `localZone` (set only for a DST REGION `table.local-time-zone`)
+    *
+    * `localZone` (set only for a DST REGION `table.local-time-zone`)
     * switches window assignment onto that zone's wall-clock timeline:
     * each row's covering windows are computed with the batch rewrite's
     * `from_utc_timestamp` floor, their bounds convert back to instants
@@ -172,7 +169,7 @@ object WindowTopN {
       localZone: Option[String] = None): String = {
     // the statement may be the INSERT carrying the top-N query; the
     // prefix rides through untouched
-    val (insertPrefix, sql) = InsertPrefixRe.findFirstMatchIn(fullSql)
+    val (insertPrefix, sql) = ScriptParser.InsertPrefixRe.findFirstMatchIn(fullSql)
       .map(m => (m.group(1), fullSql.substring(m.end)))
       .getOrElse(("", fullSql))
     val om = OuterRe.findFirstMatchIn(sql).getOrElse(fail(

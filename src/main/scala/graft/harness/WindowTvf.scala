@@ -117,7 +117,7 @@ object WindowTvf {
   private def legacyAccessor(fn: String) = (
     raw"(?is)\b${fn}_(START|END|ROWTIME|PROCTIME)\s*\(\s*($Dotted)\s*" +
       raw"((?:,\s*$LegacyIv\s*){1,2})\)").r
-  private val LegacyIvRe = LegacyIv.r
+  private val LegacyIvRe = ("(?i)" + LegacyIv).r
 
   def hasWindowTvf(sql: String): Boolean =
     AnyTvfRe.findFirstIn(sql).isDefined ||

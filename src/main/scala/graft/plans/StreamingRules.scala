@@ -186,7 +186,9 @@ case class StreamingTopOneDedup() extends Rule[LogicalPlan] {
   * on two routes that never reach this rule: a GROUP BY under
   * `table.exec.state.ttl` ([[graft.harness.UnboundedAgg]]) and a
   * TUMBLE/HOP window-TVF aggregation on the pinned-window tracker
-  * ([[graft.streaming.GridAggTracker]]).
+  * ([[graft.streaming.GridAggTracker]]). It is the only HLL rewrite:
+  * a session without [[graft.functions.GraftSparkExtensions]] gets
+  * Spark's own error.
   *
   * Gated by `graft.streaming.approx-distinct` (default true); `SET
   * graft.streaming.approx-distinct = false` to surface the native error

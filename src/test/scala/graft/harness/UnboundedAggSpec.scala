@@ -268,4 +268,38 @@ class UnboundedAggSpec extends AnyFunSuite {
       "SELECT v, SUM(nope) AS s FROM uagg_bad GROUP BY v", 60L))
     assert(e2.getMessage.contains("cannot resolve"), e2.getMessage)
   }
+
+  test("an implicit aggregate alias and backticked keys route onto the " +
+      "tracker and emit the running max") {
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long, String)]
+    input.toDF().toDF("k", "v", "tag").createOrReplaceTempView("uagg_src")
+    val sql = "SELECT `k`, MAX(v) mx FROM uagg_src GROUP BY `k`"
+    assert(UnboundedAgg.hasShape(spark, sql))
+    val rewritten = UnboundedAgg.rewrite(spark, sql, stateTtlSec = 600L)
+    def rows() = spark.table("uagg_mx_out")
+      .select($"k", $"mx").as[(String, Long)].collect().toSeq
+    val q = spark.sql(rewritten).writeStream.format("memory")
+      .queryName("uagg_mx_out")
+      .trigger(Trigger.ProcessingTime("200 milliseconds"))
+      .outputMode("update").start()
+    try {
+      input.addData(("a", 5L, "x"), ("a", 9L, "y"), ("b", 3L, "x"))
+      awaitTrue("first maxima")(
+        Set(("a", 9L), ("b", 3L)).subsetOf(rows().toSet))
+      input.addData(("a", 4L, "x"), ("b", 7L, "x"))
+      awaitTrue("running max")(rows().contains(("b", 7L)))
+      assert(!rows().contains(("a", 4L)), rows())
+    } finally q.stop()
+  }
+
+  test("a WHERE with an IN subquery stays off the route (native)") {
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long, String)]
+    input.toDF().toDF("k", "v", "tag").createOrReplaceTempView("uagg_src")
+    Seq("x").toDF("t").createOrReplaceTempView("uagg_tags")
+    assert(!UnboundedAgg.hasShape(spark,
+      "SELECT `k`, MAX(v) mx FROM uagg_src " +
+        "WHERE tag IN (SELECT t FROM uagg_tags) GROUP BY `k`"))
+  }
 }

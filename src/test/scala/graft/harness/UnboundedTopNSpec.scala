@@ -346,4 +346,38 @@ class UnboundedTopNSpec extends AnyFunSuite {
       assert(got.map(_._5) === Set(1L, 2L))
     } finally q.stop()
   }
+
+  test("an implicit ROW_NUMBER alias (no AS) routes") {
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Long)]
+    input.toDF().toDF("k", "m").createOrReplaceTempView("utn_noas")
+    val sql =
+      """SELECT k, m, rn FROM (
+        |  SELECT *, row_number() over (partition by k order by m desc) rn
+        |  FROM utn_noas) WHERE rn <= 2""".stripMargin
+    assert(UnboundedTopN.hasShape(sql))
+    val q = spark.sql(UnboundedTopN.rewrite(spark, sql)).writeStream
+      .format("memory").queryName("utn_noas_out").outputMode("update")
+      .start()
+    try {
+      input.addData(("a", 5L), ("a", 9L), ("a", 7L))
+      q.processAllAvailable()
+      val got = spark.table("utn_noas_out")
+        .select($"k", $"m", $"rn").as[(String, Long, Long)].collect().toSet
+      assert(got === Set(("a", 9L, 1L), ("a", 7L, 2L)))
+    } finally q.stop()
+  }
+
+  test("an explicit window frame or a non-default NULL ordering stays " +
+      "off the route") {
+    def topn(over: String) =
+      s"""SELECT k, m, rn FROM (
+         |  SELECT *, ROW_NUMBER() OVER ($over) AS rn
+         |  FROM s) WHERE rn <= 2""".stripMargin
+    assert(UnboundedTopN.hasShape(topn("PARTITION BY k ORDER BY m DESC")))
+    assert(!UnboundedTopN.hasShape(topn("PARTITION BY k ORDER BY m DESC " +
+      "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")))
+    assert(!UnboundedTopN.hasShape(
+      topn("PARTITION BY k ORDER BY m DESC NULLS FIRST")))
+  }
 }

@@ -1292,6 +1292,14 @@ class WindowTvfSpec extends AnyFunSuite {
     assert(out.contains("window.start AS ws"))
   }
 
+  test("streaming legacy TUMBLE accessors match a lowercase interval") {
+    val out = WindowTvf.rewriteStreaming(
+      "SELECT dim, TUMBLE_START(row_time, interval '1' minute) AS ws, " +
+        "COUNT(*) AS n FROM t GROUP BY dim, TUMBLE(row_time, interval '1' minute)")
+    assert(out.contains("window(row_time, '60000 milliseconds')"), out)
+    assert(out.contains("window.start AS ws"), out)
+  }
+
   test("e2e: streaming TUMBLE TVF above a CREATE VIEW source (r16)") {
     // the CLI's view watermark registry serves every streaming rewrite
     // through the shared watermarkOf — a window TVF over a filter view
