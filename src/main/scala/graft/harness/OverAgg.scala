@@ -1,6 +1,15 @@
 package graft.harness
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias,
+  UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving,
+  UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{CurrentRow, Descending,
+  Expression, Literal, RangeFrame, RowFrame, SortOrder, SpecifiedWindowFrame,
+  UnaryMinus, UnboundedPreceding, UnspecifiedFrame, WindowExpression}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct,
+  Filter, GlobalLimit, LocalLimit, Offset, Project, Sort, SubqueryAlias}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,6 +44,12 @@ import org.apache.spark.sql.types._
   *     time attribute propagates exactly as Flink propagates it
   *     through single-table projection/filter views.
   *
+  * The statement is read from Spark's unresolved plan
+  * ([[ScriptParser.parseQuery]]): the select list's `WindowExpression`s
+  * give each call's function, DISTINCT flag, arguments, window spec and
+  * frame, and each call is spliced out by its source span. A text
+  * Spark cannot parse never takes this route.
+  *
   * Everything else — DESC time order, FOLLOWING bounds, ranking
   * functions left over after the top-N passes,
   * differing window specs, joins/GROUP BY around the OVER — rejects
@@ -56,55 +71,24 @@ object OverAgg {
   private val AggFns = Set("COUNT", "SUM", "MIN", "MAX", "AVG", "LAG",
     "FIRST_VALUE", "LAST_VALUE") ++ AggSlots.VarianceFns.keySet
 
-  /** One `fn(arg) OVER (spec)` occurrence: text region [start, end)
-    * within the statement, plus the parsed pieces. */
-  private final case class OverCall(start: Int, end: Int, fn: String,
-      arg: String, spec: String)
+  private def fnName(f: UnresolvedFunction): String =
+    f.nameParts.mkString(".").toUpperCase
 
-  /** Every `<word>(args) OVER (spec)` call in the masked text. */
-  private def overCalls(sql: String): Seq[OverCall] = {
-    val masked = MatchRecognize.maskQuoted(sql)
-    raw"(?is)\b([A-Za-z_]\w*)\s*\(".r.findAllMatchIn(masked).flatMap { m =>
-      val open = m.end - 1
-      scala.util.Try(MatchRecognize.closeParen(sql, open)).toOption
-        .flatMap { close =>
-          raw"(?is)^\s*OVER\s*\(".r
-            .findFirstMatchIn(masked.substring(close)).map { om =>
-              val specOpen = close + om.end - 1
-              val specClose = MatchRecognize.closeParen(sql, specOpen)
-              OverCall(m.start, specClose, m.group(1).toUpperCase,
-                sql.substring(open + 1, close - 1).trim,
-                sql.substring(specOpen + 1, specClose - 1).trim)
-            }
-        }
-    }.toSeq
-  }
-
-  /** True when the statement carries an aggregate-function OVER call —
-    * the shape Spark cannot stream. Ranking shapes (ROW_NUMBER) are
-    * consumed by the window/unbounded top-N passes that run BEFORE
-    * this one; a leftover ranking OVER does not trigger here (rn = 1
-    * dedup rides Spark's native streaming rules). LEAD triggers so a
-    * LEAD-only statement reaches ITS named rejection instead of
-    * Spark's raw non-time-window analysis error.
+  /** True when the statement's parsed plan carries an aggregate-function
+    * OVER call — the shape Spark cannot stream. Ranking shapes
+    * (ROW_NUMBER) are consumed by the window/unbounded top-N passes
+    * that run BEFORE this one; a leftover ranking OVER does not trigger
+    * here (rn = 1 dedup rides Spark's native streaming rules). LEAD
+    * triggers so a LEAD-only statement reaches ITS named rejection
+    * instead of Spark's raw non-time-window analysis error. A text
+    * Spark cannot parse never triggers.
     */
   def hasStreamingShape(sql: String): Boolean =
-    overCalls(sql).exists(c => AggFns(c.fn) || c.fn == "LEAD")
-
-  private val SpecRe = (
-    raw"(?is)^\s*(?:PARTITION\s+BY\s+(.*?)\s+)?" +
-      raw"ORDER\s+BY\s+([A-Za-z_]\w*)(\s+ASC|\s+DESC)?\s*(.*)$$").r
-  private val FrameRe = (
-    raw"(?is)^(ROWS|RANGE)\s+BETWEEN\s+(UNBOUNDED|INTERVAL\s+'(\d+)'\s+" +
-      raw"(SECOND|MINUTE|HOUR|DAY)S?|(\d+))\s+PRECEDING\s+AND\s+" +
-      raw"CURRENT\s+ROW\s*$$").r
-
-  private def unitMs(u: String): Long = u.toUpperCase match {
-    case "SECOND" => 1000L
-    case "MINUTE" => 60000L
-    case "HOUR" => 3600000L
-    case _ => 86400000L
-  }
+    ScriptParser.parseQuery(sql).exists(_._2.exists(_.expressions.exists(_.exists {
+      case WindowExpression(f: UnresolvedFunction, _) =>
+        AggFns(fnName(f)) || fnName(f) == "LEAD"
+      case _ => false
+    })))
 
   /** Exact string carrier for a value-typed slot (LAG, FIRST_VALUE,
     * LAST_VALUE): the encode SQL producing the state string, and the
@@ -133,163 +117,126 @@ object OverAgg {
     */
   def rewriteStreaming(
       spark: SparkSession,
-      fullSql: String,
+      sql: String,
       watermarkOf: String => Option[(String, String)]): String = {
     import graft.streaming.OverAggTracker._
-    val (insertPrefix, sql) = ScriptParser.InsertPrefixRe.findFirstMatchIn(fullSql)
-      .map(m => (m.group(1), fullSql.substring(m.end)))
-      .getOrElse(("", fullSql))
-    val masked = MatchRecognize.maskQuoted(sql)
+    val (insertPrefix, query) = ScriptParser.parseQuery(sql).getOrElse(fail(
+      "streaming OVER aggregation reads the statement with Spark's " +
+        "parser (check the DISTINCT placement: AGG(DISTINCT x)); a " +
+        "PARTITION or BY NAME insert is unsupported: " +
+        scala.util.Try(CatalystSqlParser.parsePlan(sql)).failed.toOption
+          .fold(sql)(_.getMessage).trim.linesIterator.next()))
+    def text(e: Expression): String = ScriptParser.textOf(sql, e)
 
-    val selM = raw"(?is)^\s*SELECT\s+".r.findFirstMatchIn(sql)
-      .getOrElse(fail("expected SELECT ... FROM for the OVER rewrite"))
-    // depth-0 FROM
-    val fromIdx = {
-      var depth = 0
-      var i = selM.end
-      var found = -1
-      while (found < 0 && i < masked.length) {
-        masked.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case 'f' | 'F' if depth == 0 &&
-              masked.regionMatches(true, i, "FROM", 0, 4) &&
-              (i == 0 || !masked.charAt(i - 1).isLetterOrDigit) &&
-              (i + 4 >= masked.length ||
-                !(masked.charAt(i + 4).isLetterOrDigit ||
-                  masked.charAt(i + 4) == '_')) =>
-            found = i
-          case _ =>
-        }
-        i += 1
-      }
-      if (found < 0) fail("expected SELECT ... FROM for the OVER rewrite")
-      found
-    }
-    val selectList = sql.substring(selM.end, fromIdx)
-    val TailRe = (raw"(?is)^FROM\s+([A-Za-z_][\w.]*)" +
-      raw"(?:\s+(?:AS\s+)?(?!WHERE\b)([A-Za-z_]\w*))?\s*" +
-      raw"(?:WHERE\s+(.*?))?\s*;?\s*$$").r
-    val tail = sql.substring(fromIdx)
-    val maskedTail = masked.substring(fromIdx)
-    def rejectOrderLimit(region: String): Unit =
-      // a trailing ORDER BY/LIMIT would otherwise be swallowed into the
-      // WHERE capture and die as a raw expression parse error
-      if (raw"(?is)\b(ORDER\s+BY|LIMIT)\b".r.findFirstIn(region).isDefined)
+    val (distinctOut, proj) = query match {
+      case p: Project => ("", p)
+      case Distinct(p: Project) => ("DISTINCT ", p)
+      // the statement's own ORDER BY/LIMIT/GROUP BY; a subquery
+      // source's clauses are its business, evaluated by Spark
+      case _: Sort | _: GlobalLimit | _: LocalLimit | _: Offset =>
         fail("streaming OVER aggregation takes no ORDER BY/LIMIT on its " +
           "output (rows emit in watermark-maturity order) — sort or limit " +
           "downstream")
-    def rejectGroupBy(region: String): Unit =
-      if (raw"(?is)\bGROUP\s+BY\b".r.findFirstIn(region).isDefined)
+      case _: Aggregate | _: UnresolvedHaving =>
         fail("streaming OVER aggregation does not compose with GROUP BY " +
           "in one statement — aggregate in a separate step")
-    // the FROM may name a table/view, or carry an inline SUBQUERY
-    // (r17) resolved by event-time lineage — the shared
-    // [[SubquerySource]] law; ORDER BY/GROUP BY checks then apply to
-    // the OUTER statement only (the subquery's own clauses are its
-    // business, evaluated by Spark)
-    val isSubquery =
-      raw"(?is)^FROM\s*\(".r.findFirstIn(maskedTail).isDefined
-    // absolute [start, end) of the subquery region — the outer OVER
-    // scan and splice must not see the subquery's interior
-    var subqSpan: Option[(Int, Int)] = None
-    val (srcRel, aliasOpt, whereOpt, wmFromLineage, table) =
-      if (isSubquery) {
-        val open = tail.indexOf('(')
-        val close = MatchRecognize.closeParen(tail, open)
-        subqSpan = Some((fromIdx + open, fromIdx + close))
-        val inner = tail.substring(open + 1, close - 1)
-        val rest = tail.substring(close)
-        rejectOrderLimit(MatchRecognize.maskQuoted(rest))
-        rejectGroupBy(MatchRecognize.maskQuoted(
-          selectList + " " + rest))
-        val rm = (raw"(?is)^\s*(?:(?:AS\s+)?(?!WHERE\b)([A-Za-z_]\w*))?" +
-          raw"\s*(?:WHERE\s+(.*?))?\s*;?\s*$$").r
-          .findFirstMatchIn(rest).getOrElse(fail(
-            "unsupported clause after the OVER subquery source: " +
-              rest.trim.linesIterator.next()))
+      case _ => fail("expected SELECT ... FROM for the OVER rewrite")
+    }
+    // the WHERE filters INPUT rows: SQL evaluates it before window
+    // functions
+    val (rel, whereOpt) = proj.child match {
+      case Filter(cond, child) =>
+        cond.collectFirst { case w: WindowExpression => w }.foreach(w =>
+          fail(s"OVER call outside the select list is unsupported: ${text(w)}"))
+        (child, Some(text(cond)))
+      case child => (child, None)
+    }
+    // the FROM names a table/view, or carries an inline SUBQUERY (r17)
+    // resolved by event-time lineage — the shared [[SubquerySource]] law
+    def named(r: UnresolvedRelation, alias: Option[String]) =
+      (Left(ScriptParser.textOf(sql, r)): Either[String, DataFrame], alias,
+        None, r.multipartIdentifier.mkString("."))
+    val (srcRel, aliasOpt, wmFromLineage, table) = rel match {
+      case r: UnresolvedRelation => named(r, None)
+      case SubqueryAlias(a, r: UnresolvedRelation) => named(r, Some(a.name))
+      case s @ SubqueryAlias(a, _) if sql.charAt(s.origin.startIndex.get) == '(' =>
+        val open = s.origin.startIndex.get
+        val inner = sql.substring(open + 1, MatchRecognize.closeParen(sql, open) - 1)
         val (df, wm) = SubquerySource.resolve(spark, inner, watermarkOf,
           "OVER aggregation", fail)
-        (Right(df): Either[String, org.apache.spark.sql.DataFrame],
-          Option(rm.group(1)), Option(rm.group(2)).map(_.trim),
+        (Right(df): Either[String, DataFrame],
+          Some(a.name).filter(_ != SubqueryAlias.generateSubqueryName()),
           Some(wm), "(subquery)")
-      } else {
-        rejectOrderLimit(maskedTail)
-        rejectGroupBy(masked)
-        val tm = TailRe.findFirstMatchIn(tail).getOrElse(
-          fail("streaming OVER aggregation takes a single-table FROM " +
-            "or a parenthesized subquery source (joins: aggregate in a " +
-            "separate step): " + tail.linesIterator.next()))
-        (Left(tm.group(1)): Either[String, org.apache.spark.sql.DataFrame],
-          Option(tm.group(2)), Option(tm.group(3)).map(_.trim),
-          None, tm.group(1))
-      }
+      case other =>
+        fail("streaming OVER aggregation takes a single-table FROM " +
+          "or a parenthesized subquery source (joins: aggregate in a " +
+          "separate step): FROM " + ScriptParser.textOf(sql, other)
+            .linesIterator.next())
+    }
 
-    // OVER calls of the OUTER statement only: a call inside the
+    // OVER calls of the OUTER select list only: a call inside the
     // subquery source is the subquery's own business (Spark evaluates
     // it — on a stream it dies with Spark's own rejection; stream it
     // through a CREATE VIEW + separate statement instead)
-    val outerSql = subqSpan match {
-      case Some((s, e)) =>
-        sql.substring(0, s) + (" " * (e - s)) + sql.substring(e)
-      case None => sql
-    }
-    val calls = overCalls(outerSql)
-    if (calls.exists(_.fn == "LEAD"))
+    val calls = proj.projectList.flatMap(_.collect {
+      case w @ WindowExpression(f: UnresolvedFunction, _) => (w, f, fnName(f))
+    })
+    if (calls.exists(_._3 == "LEAD"))
       fail("LEAD cannot stream — it references rows the watermark has " +
         "not matured (Flink's streaming over-windows reject it too); " +
         "use LAG over the reversed comparison, or batch runtime mode")
-    calls.filterNot(c => AggFns(c.fn)) match {
+    calls.filterNot(c => AggFns(c._3)) match {
       case Seq() =>
       case bad => fail("streaming OVER supports the aggregate functions " +
         "COUNT/SUM/MIN/MAX/AVG, STDDEV[_SAMP|_POP]/VAR[IANCE|_SAMP|_POP], " +
-        s"LAG, and FIRST_VALUE/LAST_VALUE; got ${bad.map(_.fn).mkString(", ")} " +
+        s"LAG, and FIRST_VALUE/LAST_VALUE; got ${bad.map(_._3).mkString(", ")} " +
         "(ranking shapes ride the top-N rewrites; others are batch-only)")
     }
-    val aggCalls = calls
-    if (aggCalls.isEmpty) fail("no OVER aggregate found")
-    val norm = aggCalls.map(_.spec.replaceAll("\\s+", " ").trim.toLowerCase)
-    if (norm.distinct.size > 1)
+    if (calls.isEmpty) fail("no OVER aggregate found")
+    val specs = calls.map(_._1.windowSpec)
+    if (specs.map(_.transform { case a: UnresolvedAttribute =>
+          UnresolvedAttribute(a.nameParts.map(_.toLowerCase)) }).distinct.size > 1)
       fail("streaming OVER aggregates must share one window " +
         "specification (Flink's requirement too); got: " +
-        norm.distinct.mkString(" | "))
+        specs.map(text).distinct.mkString(" | "))
 
-    val sm = SpecRe.findFirstMatchIn(aggCalls.head.spec).getOrElse(
-      fail("unsupported OVER specification (want [PARTITION BY cols] " +
-        s"ORDER BY <event-time column> [frame]): ${aggCalls.head.spec}"))
-    if (Option(sm.group(3)).exists(_.trim.equalsIgnoreCase("DESC")))
-      fail("streaming OVER aggregation must ORDER BY the event-time " +
-        "column ASCENDING (watermarks mature rows in time order)")
-    val partCols = Option(sm.group(1)).toSeq.flatMap(
-      MatchRecognize.splitTopLevel(_)).map(_.trim).filter(_.nonEmpty)
-    partCols.foreach { c =>
-      if (raw"^[A-Za-z_]\w*$$".r.findFirstIn(c).isEmpty)
-        fail(s"streaming OVER PARTITION BY takes simple columns; got $c")
+    val spec = specs.head
+    val tcol = spec.orderSpec match {
+      case Seq(SortOrder(UnresolvedAttribute(Seq(c)), dir, _, _)) =>
+        if (dir == Descending)
+          fail("streaming OVER aggregation must ORDER BY the event-time " +
+            "column ASCENDING (watermarks mature rows in time order)")
+        c
+      case _ => fail("unsupported OVER specification (want [PARTITION BY " +
+        s"cols] ORDER BY <event-time column> [frame]): ${text(spec)}")
     }
-    val tcol = sm.group(2)
-    val frame = sm.group(4).trim match {
-      case "" => UnboundedRange
-      case f => FrameRe.findFirstMatchIn(f) match {
-        case None => fail("unsupported OVER frame (streaming supports " +
-          "RANGE|ROWS BETWEEN UNBOUNDED|<bound> PRECEDING AND CURRENT " +
-          s"ROW): $f")
-        case Some(fm) =>
-          val mode = fm.group(1).toUpperCase
-          val bound = fm.group(2).toUpperCase
-          if (bound == "UNBOUNDED")
-            if (mode == "ROWS") UnboundedRows else UnboundedRange
-          else if (bound.startsWith("INTERVAL")) {
-            if (mode == "ROWS")
-              fail("ROWS frames take a row count, not an interval " +
-                s"(use RANGE for time bounds): $f")
-            RangePreceding(fm.group(3).toLong * unitMs(fm.group(4)))
-          } else {
-            if (mode == "RANGE")
-              fail("RANGE frames over event time take an INTERVAL " +
-                s"bound, not a row count (use ROWS for counts): $f")
-            RowsPreceding(fm.group(5).toInt)
-          }
+    val partCols = spec.partitionSpec.map {
+      case UnresolvedAttribute(Seq(c)) => c
+      case e => fail("streaming OVER PARTITION BY takes simple columns; " +
+        s"got ${text(e)}")
+    }
+    def badFrame = fail("unsupported OVER frame (streaming supports " +
+      "RANGE|ROWS BETWEEN UNBOUNDED|<bound> PRECEDING AND CURRENT " +
+      s"ROW): ${text(spec)}")
+    val frame = spec.frameSpecification match {
+      case UnspecifiedFrame => UnboundedRange
+      case SpecifiedWindowFrame(mode, lower, CurrentRow) => (mode, lower) match {
+        case (RowFrame, UnboundedPreceding) => UnboundedRows
+        case (RangeFrame, UnboundedPreceding) => UnboundedRange
+        case (RowFrame, UnaryMinus(Literal(n: Int, IntegerType), _)) if n >= 0 =>
+          RowsPreceding(n)
+        case (RangeFrame, UnaryMinus(Literal(us: Long, _: DayTimeIntervalType), _))
+            if us >= 0 && us % 1000 == 0 =>
+          RangePreceding(us / 1000)
+        case (RowFrame, UnaryMinus(Literal(_, _: DayTimeIntervalType), _)) =>
+          fail("ROWS frames take a row count, not an interval " +
+            s"(use RANGE for time bounds): ${text(spec)}")
+        case (RangeFrame, UnaryMinus(Literal(_, IntegerType), _)) =>
+          fail("RANGE frames over event time take an INTERVAL bound, " +
+            s"not a row count (use ROWS for counts): ${text(spec)}")
+        case _ => badFrame
       }
+      case _ => badFrame
     }
 
     val (wmCol, wmDelay) = wmFromLineage
@@ -300,7 +247,7 @@ object OverAgg {
         s"($wmCol); got $tcol")
 
     val outAlias = aliasOpt.getOrElse(
-      if (isSubquery) "subq" else table.split('.').last)
+      if (srcRel.isRight) "subq" else table.split('.').last)
     // the relation rides under its statement alias (or the bare table
     // name) so alias-qualified references in the WHERE and in aggregate
     // inputs resolve; SQL evaluates WHERE before window functions, so
@@ -318,7 +265,7 @@ object OverAgg {
     // one aggregate slot: tracker kind, the type the value has inside
     // the vals JSON (what from_json decodes), the slot input
     // expression, LAG's offset, and LAG's storage-to-source decode
-    final case class Plan(call: OverCall, kind: Int, storage: DataType,
+    final case class Plan(kind: Int, storage: DataType,
         input: String, lag: Int = 0,
         dec: Option[org.apache.spark.sql.Column =>
           org.apache.spark.sql.Column] = None,
@@ -332,64 +279,63 @@ object OverAgg {
       catch { case e: Exception =>
         fail(s"cannot resolve aggregate input $in: ${e.getMessage}")
       }
-    val plans: Seq[Plan] = aggCalls.map { a0 =>
-      val distinct =
-        raw"(?i)^DISTINCT\b".r.findFirstIn(a0.arg.trim).isDefined
-      if (!distinct &&
-          raw"(?i)\bDISTINCT\b".r.findFirstIn(a0.arg).isDefined)
-        fail(s"unsupported DISTINCT placement in ${a0.fn}(${a0.arg})")
-      val arg =
-        if (distinct) a0.arg.trim.replaceFirst(raw"(?i)^DISTINCT\s+", "")
-        else a0.arg
-      val a = a0
-      if (a.fn == "LAG") {
-        if (distinct) fail(s"LAG takes no DISTINCT: ${a.arg}")
-        val parts = MatchRecognize.splitTopLevel(arg).map(_.trim)
+    val plans: Seq[Plan] = calls.map { case (w, f, fn) =>
+      val distinct = f.isDistinct
+      if (f.filter.nonEmpty || f.ignoreNulls || f.orderingWithinGroup.nonEmpty)
+        fail("streaming OVER aggregates take no FILTER, IGNORE NULLS or " +
+          s"WITHIN GROUP clause: ${text(w)}")
+      val arg = f.arguments match {
+        // COUNT(*) parses to a literal 1 spanning the whole call
+        case Seq(l: Literal) if l.origin.startIndex == f.origin.startIndex => "*"
+        case Seq() => ""
+        case args => ScriptParser.textOf(sql, args: _*)
+      }
+      if (fn == "LAG") {
+        if (distinct) fail(s"LAG takes no DISTINCT: $arg")
         // three-arg DEFAULT must be a LITERAL: SQL applies it only
         // when the offset leaves the partition, and the tracker emits
         // a presence flag to discriminate that from an in-bounds NULL
         // — a column-referencing default would need the CURRENT row's
         // value inside the decode, which the literal splice avoids
-        val LitRe =
-          raw"(?is)^('([^']|'')*'|-?\d+(\.\d+)?|TRUE|FALSE|NULL)$$".r
-        val (in, k, dflt) = parts match {
+        val (x, k, dflt) = f.arguments match {
           case Seq(x) => (x, 1, None)
-          case Seq(x, kk) if raw"^\d+$$".r.findFirstIn(kk).isDefined =>
-            (x, kk.toInt, None)
-          case Seq(x, kk, dv)
-              if raw"^\d+$$".r.findFirstIn(kk).isDefined &&
-                LitRe.findFirstIn(dv).isDefined =>
-            (x, kk.toInt, Some(dv))
-          case Seq(_, kk, _)
-              if raw"^\d+$$".r.findFirstIn(kk).isEmpty =>
-            fail(s"LAG offset must be a literal integer: $kk")
-          case Seq(_, _, dv) => fail("LAG DEFAULT must be a literal " +
-            s"(number / string / boolean / NULL) in streaming: $dv")
-          case _ => fail(s"cannot parse LAG arguments: ${a.arg}")
+          case Seq(x, Literal(k: Int, IntegerType), rest @ _*) if rest.size <= 1 =>
+            rest.foreach { case _: Literal => case dv =>
+              fail("LAG DEFAULT must be a literal (number / string / " +
+                s"boolean / NULL) in streaming: ${text(dv)}")
+            }
+            (x, k, rest.headOption.map(text))
+          case Seq(_, kk, rest @ _*) if rest.size <= 1 =>
+            fail(s"LAG offset must be a literal integer: ${text(kk)}")
+          case _ => fail(s"cannot parse LAG arguments: $arg")
         }
-        if (k < 1) fail(s"LAG offset must be >= 1: ${a.arg}")
+        if (k < 1) fail(s"LAG offset must be >= 1: $arg")
+        val in = text(x)
         val dt = resolveType(in)
-        val (enc, dec) = stringCarrier(a.fn, in, dt)
-        Plan(a, 14, StringType, enc, lag = k, dec = Some(dec),
+        val (enc, dec) = stringCarrier(fn, in, dt)
+        Plan(14, StringType, enc, lag = k, dec = Some(dec),
           dflt = dflt.map(d => (d, dt)))
-      } else if (a.fn == "FIRST_VALUE" || a.fn == "LAST_VALUE") {
-        if (distinct) fail(s"${a.fn} takes no DISTINCT: ${a.arg}")
-        if (MatchRecognize.splitTopLevel(arg).size != 1)
-          fail(s"${a.fn} takes one argument in streaming (Flink " +
-            s"null-skipping semantics are built in): ${a.arg}")
-        val (enc, dec) = stringCarrier(a.fn, arg, resolveType(arg))
-        Plan(a, if (a.fn == "FIRST_VALUE") 15 else 16, StringType, enc,
+      } else if (fn == "FIRST_VALUE" || fn == "LAST_VALUE") {
+        if (distinct) fail(s"$fn takes no DISTINCT: $arg")
+        if (f.arguments.size != 1)
+          fail(s"$fn takes one argument in streaming (Flink " +
+            s"null-skipping semantics are built in): $arg")
+        val (enc, dec) = stringCarrier(fn, arg, resolveType(arg))
+        Plan(if (fn == "FIRST_VALUE") 15 else 16, StringType, enc,
           dec = Some(dec))
       } else {
         // COUNT/SUM/MIN/MAX/AVG/variance with optional DISTINCT: the
         // kind table is AggSlots.plan, shared with the window-TVF
         // pass; a set-passthrough slot's finish transform (decimal
         // distinct, kind 21) rides the Plan's decode seat
-        val slot = AggSlots.plan(a.fn, distinct, arg, resolveType, fail)
-        Plan(a, slot.kind, slot.storage, slot.input, dec = slot.finish)
+        val slot = AggSlots.plan(fn, distinct, arg, resolveType, fail)
+        Plan(slot.kind, slot.storage, slot.input, dec = slot.finish)
       }
     }
 
+    val (listFrom, listTo) = ScriptParser.spanOf(sql,
+      proj.projectList.map { case u: UnresolvedAlias => u.child; case e => e }: _*)
+    val selectList = sql.substring(listFrom, listTo)
     // the payload carries every non-key, non-time source column through
     // the shared exact carrier; nested/binary columns drop (and a star
     // select over dropped columns fails by name)
@@ -490,20 +436,16 @@ object OverAgg {
     val view = s"graft_over_${viewCounter.incrementAndGet()}"
     decoded.createOrReplaceTempView(view)
 
-    // splice: each AGG(...) OVER (...) region in the select list
+    // splice: each AGG(...) OVER (...) call in the select list
     // becomes its tracker column; the FROM swaps to the view, aliased
     // as the original table (or its alias) so qualified references
     // keep resolving; the WHERE was consumed into the input
-    val rel = selM.end // select-list offset within sql
-    val replaced = aggCalls.zipWithIndex.sortBy(-_._1.start)
-      .foldLeft(selectList) { case (s, (c, i)) =>
-        val st = c.start - rel
-        val en = c.end - rel
-        if (st < 0 || en > s.length)
-          fail(s"OVER call outside the select list is unsupported: " +
-            s"${c.fn}(${c.arg})")
-        s.substring(0, st) + s"__oa$i" + s.substring(en)
+    val replaced = calls.map(_._1).zipWithIndex
+      .sortBy(-_._1.origin.startIndex.get)
+      .foldLeft(selectList) { case (s, (w, i)) =>
+        s.substring(0, w.origin.startIndex.get - listFrom) + s"__oa$i" +
+          s.substring(w.origin.stopIndex.get + 1 - listFrom)
       }
-    s"${insertPrefix}SELECT $replaced FROM $view $outAlias"
+    s"${insertPrefix}SELECT $distinctOut$replaced FROM $view $outAlias"
   }
 }

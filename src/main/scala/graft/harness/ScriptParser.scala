@@ -4,6 +4,7 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.net.URI
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, LogicalPlan}
 import org.apache.spark.sql.catalyst.trees.TreeNode
@@ -84,9 +85,10 @@ object ScriptParser {
   def classify(sql: String): Statement =
     Statement(StatementType.fromStatement(sql), sql)
 
-  /** `INSERT INTO|OVERWRITE target [(cols)] ` for text front ends. */
+  /** `INSERT INTO|OVERWRITE [TABLE] target [(cols)] ` for text front
+    * ends. */
   private[harness] val InsertPrefixRe =
-    raw"(?is)^\s*(INSERT\s+(?:INTO|OVERWRITE)\s+[\w.`]+\s*(?:\([^)]*\)\s*)?)".r
+    raw"(?is)^\s*(INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?[\w.`]+\s*(?:\([^)]*\)\s*)?)".r
 
   /** The insert prefix (`INSERT INTO snk (a, b) `, or empty) and Spark's
     * unresolved plan of the query; None for a text Spark cannot parse
@@ -99,13 +101,34 @@ object ScriptParser {
       case q if !q.isInstanceOf[InsertIntoStatement] => ("", q)
     }
 
+  /** A parsed INSERT whose target is a plain table name: the target's
+    * last name part and the query's source text. */
+  private[harness] final case class Insert(stmt: InsertIntoStatement,
+      target: String, query: String)
+
+  private[harness] def parseInsert(sql: String): Option[Insert] =
+    scala.util.Try(CatalystSqlParser.parsePlan(sql)).toOption.collect {
+      case i @ InsertIntoStatement(r: UnresolvedRelation, _, _, _, _, _, _) =>
+        Insert(i, r.multipartIdentifier.last,
+          sql.substring(i.origin.stopIndex.get + 1))
+    }
+
   /** The source text of expressions (or a leaf relation) of
-    * [[parseQuery]]'s plan: their trees' origins, widened to balanced
-    * parentheses (a node's own origin can leave out enclosing
-    * parentheses and, for `a LIKE 'x%'`, the left operand). */
+    * [[parseQuery]]'s plan: their trees' origins (a case-object node
+    * such as `CURRENT ROW` keeps the origin of its first parse, so it
+    * has none here), widened as in [[spanOf]]. */
   private[harness] def textOf(sql: String,
       nodes: TreeNode[_ <: TreeNode[_]]*): String = {
-    val origins = nodes.flatMap(_.collect { case n => n.origin })
+    val (from, to) = spanOf(sql, nodes.flatMap(_.collect {
+      case n if !n.getClass.getName.endsWith("$") => n }): _*)
+    sql.substring(from, to)
+  }
+
+  /** The [from, to) span of the nodes' own origins, widened to balanced
+    * parentheses (a node's own origin can leave out enclosing
+    * parentheses and, for `a LIKE 'x%'`, the left operand). */
+  private[harness] def spanOf(sql: String, nodes: TreeNode[_]*): (Int, Int) = {
+    val origins = nodes.map(_.origin)
     val masked = MatchRecognize.maskQuoted(sql)
     def depths(from: Int, to: Int) =
       masked.substring(from, to).scanLeft(0)((d, c) =>
@@ -117,7 +140,7 @@ object ScriptParser {
       from = masked.lastIndexOf('(', from - 1).max(0)
     while (to < sql.length && depths(from, to).last > 0)
       to = Some(masked.indexOf(')', to)).filter(_ >= 0).fold(sql.length)(_ + 1)
-    sql.substring(from, to)
+    (from, to)
   }
 
   /** Load + parse a script from `file://` or `hdfs://` (or any Hadoop FS

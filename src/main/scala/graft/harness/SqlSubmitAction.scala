@@ -687,9 +687,6 @@ final class SqlSubmitAction(
   private val ShowCatalogsRe =
     raw"(?is)^\s*SHOW\s+CATALOGS\s*;?\s*$$".r
 
-  private val InsertRe =
-    raw"(?is)^\s*INSERT\s+(INTO|OVERWRITE)\s+([\w.`]+)\s*(?:\(([^)]*)\))?\s+(.*)$$".r
-
   /** Flink's default namespace (`default_catalog`.`default_database`.x)
     * has no Spark counterpart — engine tables live as session temp views.
     * Strip the default qualification so references resolve.
@@ -1495,7 +1492,12 @@ final class SqlSubmitAction(
     val bodyRe = raw"(?is)^\s*EXECUTE\s+STATEMENT\s+SET\s+BEGIN\s+(.*?)\s*END\s*$$".r
     sql match {
       case bodyRe(body) =>
-        body.split(";").map(_.trim).filter(_.nonEmpty).foreach { stmt =>
+        // split at the semicolons outside quotes: a literal may hold one
+        val masked = MatchRecognize.maskQuoted(body)
+        val cuts = -1 +: body.indices.filter(masked(_) == ';') :+ body.length
+        val stmts = cuts.zip(cuts.tail).map { case (a, b) =>
+          body.substring(a + 1, b).trim }
+        stmts.filter(_.nonEmpty).foreach { stmt =>
           if (StatementType.fromStatement(stmt) == StatementType.INSERT)
             executeInsert(spark, config, applyDynamicOptions(spark, config, stmt))
           else
@@ -1585,16 +1587,15 @@ final class SqlSubmitAction(
         // whose checkpoint does not exist yet).
         def resumingConsumer: Boolean = plan.durable &&
           config.checkpointDir.exists { base =>
-            InsertRe.findFirstMatchIn(plan.stage2)
-              .map(m => DdlParser.unquoteName(m.group(2))).exists { sink =>
-                val name = config.pipelineName.getOrElse("graft") +
-                  "-" + sink + "-" + plan.mat
-                val d = new org.apache.hadoop.fs.Path(
-                  base.stripSuffix("/") + "/" + name, "commits")
-                scala.util.Try(
-                  d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                    .listStatus(d).nonEmpty).getOrElse(false)
-              }
+            ScriptParser.parseInsert(plan.stage2).map(_.target).exists { sink =>
+              val name = config.pipelineName.getOrElse("graft") +
+                "-" + sink + "-" + plan.mat
+              val d = new org.apache.hadoop.fs.Path(
+                base.stripSuffix("/") + "/" + name, "commits")
+              scala.util.Try(
+                d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+                  .listStatus(d).nonEmpty).getOrElse(false)
+            }
           }
         // the sweep's marker file records a deletion, also one by an
         // EARLIER run: a durable intermediate's path is a hash of the
@@ -2152,40 +2153,29 @@ final class SqlSubmitAction(
   }
 
   private def executeInsertRewritten(
-      spark: SparkSession, config: EngineConfig, rewritten: String): Unit = {
-    rewritten match {
-      case InsertRe(mode, rawTarget, colList, query) =>
-        val overwrite = mode.equalsIgnoreCase("OVERWRITE")
-        val target = DdlParser.unquoteName(rawTarget)
-        sinks.get(target) match {
-          case Some(sinkDef) =>
-            // static PARTITION clauses are an engine-sink limitation
-            // only — a native catalog INSERT keeps Spark's own support
-            // via the fallthrough below
-            if (raw"(?is)^\s*PARTITION\s*\(".r.findFirstIn(query).isDefined)
-              throw new IllegalArgumentException(
-                "INSERT with a static PARTITION clause is not supported " +
-                  "on connector sinks — write the partition column in " +
-                  "the query and declare PARTITIONED BY on the sink table")
-            val df = spark.sql(query)
-            val named = Option(colList).filter(_.trim.nonEmpty) match {
-              case Some(cols) =>
-                // INSERT INTO t(c1, c2): name the query's columns c1, c2
-                df.toDF(cols.split(",").map(c =>
-                  DdlParser.unquoteName(c.trim)).toIndexedSeq: _*)
-              case None => df
-            }
-            writeToSink(spark, config, named, sinkDef, overwrite)
-          case None =>
-            // not an engine sink — let Spark SQL handle the whole INSERT
-            // (still the rewritten text: temporal joins must not leak
-            // Flink syntax into the parser on this path either)
-            spark.sql(rewritten)
-        }
+      spark: SparkSession, config: EngineConfig, rewritten: String): Unit =
+    ScriptParser.parseInsert(rewritten) match {
+      case Some(ScriptParser.Insert(i, target, query))
+          if !i.byName && sinks.contains(target) =>
+        // static PARTITION clauses are an engine-sink limitation
+        // only — a native catalog INSERT keeps Spark's own support
+        // via the fallthrough below
+        if (i.partitionSpec.nonEmpty)
+          throw new IllegalArgumentException(
+            "INSERT with a static PARTITION clause is not supported " +
+              "on connector sinks — write the partition column in " +
+              "the query and declare PARTITIONED BY on the sink table")
+        val df = spark.sql(query)
+        // INSERT INTO t(c1, c2): name the query's columns c1, c2
+        val named =
+          if (i.userSpecifiedCols.isEmpty) df else df.toDF(i.userSpecifiedCols: _*)
+        writeToSink(spark, config, named, sinks(target), i.overwrite)
       case _ =>
+        // not an engine sink — let Spark SQL handle the whole INSERT
+        // (still the rewritten text: temporal joins must not leak
+        // Flink syntax into the parser on this path either)
         spark.sql(rewritten)
     }
-  }
 
   /** The analyzed plan carries a flatMapGroupsWithState armed with
     * PROCESSING-time timeouts (the TTL'd trackers) — those queries run

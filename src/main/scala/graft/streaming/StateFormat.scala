@@ -93,7 +93,7 @@ object StateFormat {
     */
   val CumulateTrackerVersion = 3
 
-  /** Bump when [[TopNState]]/[[RankEntry]] change shape.
+  /** Bump when [[TopNState]]/[[graft.functions.RankedRow]] change shape.
     * v1 = per-key (ws, entries) windows (round 12);
     * v2 = (ws, we, entries) — CUMULATE pins per-copy window ends
     * (round 13); v3 = entries carry a null-metric flag and the
@@ -151,7 +151,8 @@ object StateFormat {
     * TTL'd updating top-N / rn=1 dedup tracker behind
     * `table.exec.state.ttl`, round 17). v1 = per-key rank-sorted
     * [[graft.functions.RankedRow]] list. RankedRow itself is ALSO the
-    * unboundedTopN element — a RankedRow field change bumps BOTH keys.
+    * unboundedTopN and topNTracker element — a RankedRow field change
+    * bumps all three keys.
     */
   val TtlTopNTrackerVersion = 1
 

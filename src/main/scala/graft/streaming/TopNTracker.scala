@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import graft.functions.{RankedRow, TopRows}
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.collection.mutable.ArrayBuffer
@@ -22,18 +23,12 @@ final case class RankEvent(key: String, ts: Timestamp, metric: Double,
     payload: String, ws: Long = Long.MinValue, we: Long = Long.MinValue,
     nullMetric: Boolean = false)
 
-/** One retained candidate inside a window's top-N buffer. `nullMetric`
-  * marks a NULL ORDER BY value (ranked smallest, batch parity; the
-  * double slot then carries a 0.0 placeholder).
-  */
-final case class RankEntry(metric: Double, payload: String,
-    nullMetric: Boolean = false)
-
 /** Per-key state: for each open (window start, window end), the (at
-  * most N) best entries seen so far — state is bounded to N rows per
-  * ACTIVE (key, window), never the window's full row count.
+  * most N) best candidates seen so far, in [[TopRows]] rank order —
+  * state is bounded to N rows per ACTIVE (key, window), never the
+  * window's full row count.
   */
-final case class TopNState(windows: List[(Long, Long, List[RankEntry])])
+final case class TopNState(windows: List[(Long, Long, List[RankedRow])])
 
 /** One emitted ranked row of a closed window. */
 final case class TopNRow(key: String, ws: Long, we: Long, rank: Int,
@@ -54,32 +49,6 @@ final case class TopNRow(key: String, ws: Long, we: Long, rank: Int,
   * traffic; a window's state drops at emission.
   */
 object TopNTracker {
-
-  /** Spark's NaN-safe double ordering (NaN sorts above +Infinity) —
-    * ranking must match what a batch `ORDER BY metric` does.
-    */
-  private def nanSafeCompare(x: Double, y: Double): Int = {
-    val xNaN = java.lang.Double.isNaN(x)
-    val yNaN = java.lang.Double.isNaN(y)
-    if ((xNaN && yNaN) || x == y) 0
-    else if (xNaN) 1
-    else if (yNaN) -1
-    else if (x > y) 1
-    else -1
-  }
-
-  /** Rank order: metric DESC (or ASC), payload ASC on ties. NULL
-    * metrics rank as the smallest value (below every real double and
-    * NaN), matching batch ROW_NUMBER under Spark's null-first total
-    * order.
-    */
-  private def entryLt(asc: Boolean)(a: RankEntry, b: RankEntry): Boolean = {
-    val c =
-      if (a.nullMetric || b.nullMetric)
-        java.lang.Boolean.compare(b.nullMetric, a.nullMetric)
-      else nanSafeCompare(a.metric, b.metric)
-    if (c != 0) { if (asc) c < 0 else c > 0 } else a.payload < b.payload
-  }
 
   def track(
       input: Dataset[RankEvent],
@@ -107,9 +76,9 @@ object TopNTracker {
       n: Int,
       asc: Boolean): Iterator[TopNRow] = {
     val buffers =
-      scala.collection.mutable.HashMap.empty[(Long, Long), List[RankEntry]]
+      scala.collection.mutable.HashMap.empty[(Long, Long), Vector[RankedRow]]
     state.getOption.foreach(_.windows.foreach {
-      case (ws, we, es) => buffers((ws, we)) = es
+      case (ws, we, es) => buffers((ws, we)) = es.toVector
     })
 
     rows.foreach { e =>
@@ -117,11 +86,10 @@ object TopNTracker {
         if (e.ws != Long.MinValue) e.ws
         else Math.floorDiv(e.ts.getTime, windowMs) * windowMs
       val we = if (e.we != Long.MinValue) e.we else ws + windowMs
-      val entry = RankEntry(e.metric, e.payload, e.nullMetric)
       // insert-sorted, trimmed: the buffer never exceeds N entries
-      val merged = (entry :: buffers.getOrElse((ws, we), Nil))
-        .sortWith(entryLt(asc)).take(n)
-      buffers((ws, we)) = merged
+      buffers((ws, we)) = TopRows.insert(n, asc)(
+        buffers.getOrElse((ws, we), Vector.empty),
+        RankedRow(e.metric, e.payload, e.nullMetric))
     }
 
     val (wmMs, isFinal) = Watermarks.current(state)
@@ -140,7 +108,7 @@ object TopNTracker {
       if (buffers.isEmpty) state.remove()
       else {
         state.update(TopNState(buffers.toList.sortBy(_._1)
-          .map { case ((ws, we), es) => (ws, we, es) }))
+          .map { case ((ws, we), es) => (ws, we, es.toList) }))
         // wake at the earliest pending window end
         val nextEnd = buffers.keys.map(_._2).min
         state.setTimeoutTimestamp(math.max(nextEnd, wmMs + 1L))

@@ -312,6 +312,13 @@ class OverAggSpec extends AnyFunSuite {
     }
   }
 
+  test("a backtick-quoted PARTITION BY column routes, batch parity") {
+    assertStreamEqualsBatch(
+      """SELECT k, v,
+        |  SUM(v) OVER (PARTITION BY `k` ORDER BY ets) AS rs
+        |FROM t """.stripMargin)
+  }
+
   test("WHERE filters input rows before the window, batch parity") {
     assertStreamEqualsBatch(
       """SELECT k, v,

@@ -115,4 +115,20 @@ class ScriptParserSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("dose not exists"))
   }
+
+  test("textOf reads a window call from its own nodes, not the frame objects' origins") {
+    import org.apache.spark.sql.catalyst.expressions.WindowExpression
+    import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+    // the frame boundaries (CURRENT ROW, the unspecified frame) are
+    // case objects: their origin is the span of whichever parse first
+    // built them (in a fresh JVM the long statement here, far past the
+    // end of the short one)
+    CatalystSqlParser.parsePlan("SELECT " + "x, " * 100 +
+      "SUM(v) OVER (ORDER BY e ROWS BETWEEN 1 PRECEDING AND CURRENT ROW), " +
+      "SUM(v) OVER (ORDER BY e) FROM t")
+    val sql = "SELECT SUM(v) OVER (ROWS 1 PRECEDING) FROM t"
+    val w = CatalystSqlParser.parsePlan(sql).expressions
+      .flatMap(_.collect { case w: WindowExpression => w }).head
+    assert(ScriptParser.textOf(sql, w) == "SUM(v) OVER (ROWS 1 PRECEDING)")
+  }
 }

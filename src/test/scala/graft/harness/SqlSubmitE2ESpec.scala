@@ -234,6 +234,72 @@ class SqlSubmitE2ESpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$outDir/t").count() == 5L)
   }
 
+  test("INSERT INTO TABLE (Spark's optional keyword) routes to the engine sink") {
+    val spark = SparkFixture.spark
+    val outDir = Files.createTempDirectory("graft-instable-out").toString
+    val script =
+      s"""SET execution.runtime-mode = batch;
+         |create table src(v bigint) with (
+         |  'connector' = 'datagen', 'number-of-rows' = '5',
+         |  'fields.v.kind' = 'sequence', 'fields.v.start' = '1');
+         |create table out_t(v bigint) with (
+         |  'connector' = 'filesystem', 'path' = '$outDir/t', 'format' = 'parquet');
+         |insert into table out_t select v from src;
+         |insert into table out_t (v) select v + 10 from src;
+         |""".stripMargin
+    val file = Files.createTempFile("graft-instable-", ".sql")
+    Files.writeString(file, script)
+    new SqlSubmitAction(file.toString, Map.empty,
+      existingSession = Some(spark)).run()
+    val got = spark.read.parquet(s"$outDir/t").collect().map(_.getLong(0)).toSet
+    assert(got == ((1L to 5L) ++ (11L to 15L)).toSet, got)
+  }
+
+  test("a static PARTITION clause on a connector sink keeps its named error") {
+    val spark = SparkFixture.spark
+    val outDir = Files.createTempDirectory("graft-staticpart-out").toString
+    val script =
+      s"""SET execution.runtime-mode = batch;
+         |create table src(v bigint) with (
+         |  'connector' = 'datagen', 'number-of-rows' = '5',
+         |  'fields.v.kind' = 'sequence', 'fields.v.start' = '1');
+         |create table out_p(v bigint, par bigint) partitioned by (par) with (
+         |  'connector' = 'filesystem', 'path' = '$outDir/p', 'format' = 'parquet');
+         |insert into out_p partition (par = 1) select v from src;
+         |""".stripMargin
+    val file = Files.createTempFile("graft-staticpart-", ".sql")
+    Files.writeString(file, script)
+    val e = intercept[Exception](new SqlSubmitAction(file.toString, Map.empty,
+      existingSession = Some(spark)).run())
+    assert(Option(e.getCause).exists(
+      _.getMessage.contains("static PARTITION clause is not supported")), e)
+  }
+
+  test("EXECUTE STATEMENT SET keeps a semicolon inside a string literal") {
+    val spark = SparkFixture.spark
+    val outDir = Files.createTempDirectory("graft-sset-semi-out").toString
+    val script =
+      s"""SET execution.runtime-mode = batch;
+         |create table src(v bigint) with (
+         |  'connector' = 'datagen', 'number-of-rows' = '3',
+         |  'fields.v.kind' = 'sequence', 'fields.v.start' = '1');
+         |create table out_s(v bigint, tag string) with (
+         |  'connector' = 'filesystem', 'path' = '$outDir/s', 'format' = 'parquet');
+         |EXECUTE STATEMENT SET BEGIN
+         |  insert into out_s select v, 'a;b' as tag from src;
+         |  insert into out_s select v + 10 as v, 'c' as tag from src;
+         |END;
+         |""".stripMargin
+    val file = Files.createTempFile("graft-sset-semi-", ".sql")
+    Files.writeString(file, script)
+    new SqlSubmitAction(file.toString, Map.empty,
+      existingSession = Some(spark)).run()
+    val got = spark.read.parquet(s"$outDir/s").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(got == Set((1L, "a;b"), (2L, "a;b"), (3L, "a;b"),
+      (11L, "c"), (12L, "c"), (13L, "c")), got)
+  }
+
   test("re-running a script whose sink path now exists still resolves the sink") {
     val spark = SparkFixture.spark
     val outDir = Files.createTempDirectory("graft-rerun-out").toString

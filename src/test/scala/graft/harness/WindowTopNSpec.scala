@@ -658,6 +658,18 @@ class WindowTopNSpec extends AnyFunSuite {
     assert(eNoWm.getMessage.contains("WATERMARK"), eNoWm.getMessage)
   }
 
+  test("INSERT INTO TABLE prefix rides through the rewrite") {
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[(String, Timestamp, Long, String)]
+    input.toDF().toDF("k", "ts", "spend", "tag")
+      .createOrReplaceTempView("wtn_src")
+    val out = WindowTopN.rewriteStreaming(spark,
+      "INSERT INTO TABLE snk " + topnSql("wtn_src"), wm)
+    assert(out.startsWith("INSERT INTO TABLE snk SELECT"), out)
+    // the spliced query analyzes
+    assert(spark.sql(out.stripPrefix("INSERT INTO TABLE snk ")).isStreaming)
+  }
+
   test("shape detection is paren-aware: expressions before window_start still detect") {
     // a parenthesized call ahead of window_start in PARTITION BY must
     // not hide the shape ([^)]* stopped at its first ')') — the query
