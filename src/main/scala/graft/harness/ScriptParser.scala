@@ -5,6 +5,7 @@ import java.net.URI
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, LogicalPlan}
 import org.apache.spark.sql.catalyst.trees.TreeNode
@@ -119,10 +120,22 @@ object ScriptParser {
     * has none here), widened as in [[spanOf]]. */
   private[harness] def textOf(sql: String,
       nodes: TreeNode[_ <: TreeNode[_]]*): String = {
-    val (from, to) = spanOf(sql, nodes.flatMap(_.collect {
-      case n if !n.getClass.getName.endsWith("$") => n }): _*)
+    val (from, to) = extentOf(sql, nodes: _*)
     sql.substring(from, to)
   }
+
+  /** The [from, to) span of [[textOf]]. */
+  private[harness] def extentOf(sql: String,
+      nodes: TreeNode[_ <: TreeNode[_]]*): (Int, Int) =
+    spanOf(sql, nodes.flatMap(_.collect {
+      case n if !n.getClass.getName.endsWith("$") => n }): _*)
+
+  /** Every node of a parsed plan, with the plans of its subquery
+    * expressions and CTE definitions, recursively. */
+  private[harness] def nodesOf(plan: LogicalPlan): Seq[LogicalPlan] =
+    plan.flatMap(n => n +: (n.innerChildren.collect {
+      case p: LogicalPlan => p } ++ n.expressions.flatMap(_.collect {
+      case s: SubqueryExpression => s.plan })).flatMap(nodesOf))
 
   /** The [from, to) span of the nodes' own origins, widened to balanced
     * parentheses (a node's own origin can leave out enclosing

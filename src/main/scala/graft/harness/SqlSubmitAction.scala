@@ -306,11 +306,11 @@ final class SqlSubmitAction(
       // stream-static validation, and the pattern/temporal branches
       // must not register past one either (r19, advice): a pattern
       // view counts any JOIN as regular (MATCH_RECOGNIZE carries
-      // none of its own); a temporal-join view counts JOINs beyond
-      // its FOR SYSTEM_TIME joins (each carries exactly one JOIN
-      // keyword); an IMPLICIT comma join in the FROM region counts
-      // for every branch (r19 review — `FROM t, dim` is the same
-      // regular join). Such views stay unregistered — fail closed,
+      // none of its own); a temporal-join view registers only when
+      // every join of its parsed body is temporal; an IMPLICIT comma
+      // join in the FROM region counts for every branch (r19 review —
+      // `FROM t, dim` is the same regular join). Such views stay
+      // unregistered — fail closed,
       // the downstream pass raises its named needs-a-WATERMARK
       // error, matching Flink's rejection of a window over a dropped
       // attribute. Deliberate asymmetry vs the plain branch: a
@@ -354,8 +354,7 @@ final class SqlSubmitAction(
         // view's stored plan holds the tracker); this record answers
         // the downstream rewrite's column/delay lookup, in batch too
         // (the interval-ized rewrite keeps the probe columns).
-        if (!hasSetOp && !hasGroupBy && !hasCommaJoin &&
-            joinKeywords == TemporalJoin.temporalJoinCount(guardBody))
+        if (!hasSetOp && !hasGroupBy)
           for {
             (pTable, pAlias) <- TemporalJoin.probeOf(unticked)
             (col, delay) <- watermarkOf(pTable)
@@ -2166,9 +2165,14 @@ final class SqlSubmitAction(
               "on connector sinks — write the partition column in " +
               "the query and declare PARTITIONED BY on the sink table")
         val df = spark.sql(query)
-        // INSERT INTO t(c1, c2): name the query's columns c1, c2
+        // INSERT INTO t(c1, c2): name the query's columns c1, c2;
+        // without a list they map onto the sink's declared physical
+        // columns by position, as Flink maps them
         val named =
-          if (i.userSpecifiedCols.isEmpty) df else df.toDF(i.userSpecifiedCols: _*)
+          if (i.userSpecifiedCols.nonEmpty) df.toDF(i.userSpecifiedCols: _*)
+          else if (df.columns.length == sinks(target).columns.length)
+            df.toDF(sinks(target).columns.map(_.name): _*)
+          else df
         writeToSink(spark, config, named, sinks(target), i.overwrite)
       case _ =>
         // not an engine sink — let Spark SQL handle the whole INSERT

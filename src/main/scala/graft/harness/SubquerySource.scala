@@ -1,6 +1,7 @@
 package graft.harness
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 
 /** Event-time LINEAGE resolution for a parenthesized streaming source
   * subquery — the r16 MATCH_RECOGNIZE technique, shared since r17 with
@@ -26,19 +27,20 @@ private[harness] object SubquerySource {
       watermarkOf: String => Option[(String, String)],
       what: String,
       fail: String => Nothing): (DataFrame, (String, String)) = {
-    // watermarked tables in relation position (after FROM/JOIN — a
-    // column merely NAMED like a watermarked table must not count).
-    // Dedup by TABLE NAME, not resolved (column, delay): two tables
-    // with identical watermark spellings are still two lineages.
-    val wmTables = raw"(?is)\b(?:FROM|JOIN)\s+([A-Za-z_][\w.]*)".r
-      .findAllMatchIn(MatchRecognize.maskQuoted(inner))
-      .map(_.group(1).toLowerCase).toSeq.distinct
-      .filter(t => watermarkOf(t).isDefined)
+    // watermarked tables among the parsed plan's relations, subqueries
+    // and CTEs included (a column merely NAMED like a watermarked table
+    // must not count). Dedup by TABLE NAME, not resolved (column,
+    // delay): two tables with identical watermark spellings are still
+    // two lineages.
+    val wmTables = ScriptParser.parseQuery(inner).toSeq
+      .flatMap(q => ScriptParser.nodesOf(q._2)).collect {
+        case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
+          .toLowerCase
+      }.distinct.filter(t => watermarkOf(t).isDefined)
     if (wmTables.isEmpty)
       fail(s"streaming $what subquery source references no " +
         "WATERMARK-declared table — the event time must come from a " +
-        "watermarked source (comma-joins are not scanned; spell joins " +
-        "with JOIN)")
+        "watermarked source")
     if (wmTables.size > 1)
       fail(s"streaming $what subquery source references multiple " +
         s"watermarked tables (${wmTables.mkString(", ")}) — one " +

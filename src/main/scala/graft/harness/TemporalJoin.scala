@@ -1,6 +1,15 @@
 package graft.harness
 
-import graft.harness.ddl.DdlParser
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Descending, EqualTo, Expression, Literal, SortOrder, SubqueryExpression, UnspecifiedFrame, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CreateView, Distinct, Filter, InsertIntoStatement, Join, LogicalPlan, Project, SubqueryAlias, UnaryNode}
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIfNeeded
+import org.apache.spark.sql.execution.SparkSqlParser
+import org.apache.spark.sql.execution.command.CreateViewCommand
+import org.apache.spark.sql.types.IntegerType
 
 /** Flink `FOR SYSTEM_TIME AS OF` temporal-join rewrite.
   *
@@ -26,6 +35,14 @@ import graft.harness.ddl.DdlParser
   * BroadcastNestedLoopJoin): quadratic, measured as a timeout at
   * sf0.1 where the interval form runs in under a second.
   *
+  * Every entry point reads the statement through Spark's parser
+  * ([[read]]): Spark's time travel takes no column operand, so each
+  * `FOR SYSTEM_TIME AS OF <column>` clause is blanked to spaces, the
+  * statement parses once, and each clause pairs with the `Join` whose
+  * version relation ends just before it. Joins, conditions, relations,
+  * aliases and column references come from the plan; rewrites splice
+  * by origin span into the original text.
+  *
   * The versioned table's event-time attribute and primary key come
   * from its DDL (WATERMARK + PRIMARY KEY — the same declarations Flink
   * requires of a versioned table), resolved through the `versionOf`
@@ -47,29 +64,98 @@ object TemporalJoin {
   private val Ident = raw"(?:`[^`]+`|[A-Za-z_]\w*)"
   private val Dotted = s"$Ident(?:\\.$Ident)*"
 
-  /** `[LEFT [OUTER]|INNER] JOIN <table> FOR SYSTEM_TIME AS OF <expr>
-    * [[AS] <alias>] ON` — `<expr>` is a (possibly qualified) column
-    * reference, the only form Flink's time-attribute rules admit; with
-    * no alias the table name itself addresses the versioned side.
-    */
-  private val JoinRe = (
-    raw"(?is)\b((?:LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?JOIN|INNER\s+JOIN|JOIN)\s+($Dotted)" +
-      raw"\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+($Dotted)" +
-      raw"(?:\s+(?:AS\s+)?($Ident))?\s+ON\b").r
-
   private val MarkerRe = raw"(?is)FOR\s+SYSTEM_TIME\s+AS\s+OF".r
+
+  /** The clause [[read]] blanks: a (possibly qualified) column operand,
+    * the only form Flink's time-attribute rules admit. A call such as
+    * `PROCTIME()` is not a column and stays unblanked (unsupported). */
+  private val ClauseRe =
+    (raw"(?is)\bFOR\s+SYSTEM_TIME\s+AS\s+OF\s+($Dotted)(?![\w.`]|\s*\()").r
 
   def hasTemporalJoin(sql: String): Boolean =
     MarkerRe.findFirstIn(sql).isDefined
 
-  /** Number of `FOR SYSTEM_TIME AS OF` joins in `sql` (each carries
-    * exactly one JOIN keyword) — the view registry compares this
-    * against the body's total JOIN-keyword count to detect a REGULAR
-    * join alongside the temporal ones, which drops the rowtime
-    * attribute in Flink. Callers pass masked text.
-    */
-  def temporalJoinCount(sql: String): Int =
-    MarkerRe.findAllIn(sql).size
+  /** One temporal join: the parsed `Join`, its version relation and
+    * optional alias, the AS OF operand's text and where the blanked
+    * clause ends. */
+  private final case class Stage(join: Join, table: UnresolvedRelation,
+      alias: Option[SubqueryAlias], asOf: String, clauseEnd: Int) {
+    def aliasName: String = alias.fold(table.multipartIdentifier.last)(_.alias)
+  }
+
+  /** A named relation and its alias node, if aliased. */
+  private def named(p: LogicalPlan)
+      : Option[(UnresolvedRelation, Option[SubqueryAlias])] = p match {
+    case a @ SubqueryAlias(_, t: UnresolvedRelation) => Some((t, Some(a)))
+    case t: UnresolvedRelation => Some((t, None))
+    case _ => None
+  }
+
+  /** A statement read through Spark's parser: the text before its
+    * query (`INSERT INTO t `, `CREATE VIEW v AS `, or empty), the
+    * query's plan, and the temporal joins in text order. */
+  private final case class Read(sql: String, head: String,
+      query: LogicalPlan, stages: Seq[Stage]) {
+    def text(n: TreeNode[_]): String = sql.substring(start(n), end(n))
+
+    /** The ON condition's text, past the version side and `ON`. */
+    def onText(st: Stage): String =
+      sql.substring(st.clauseEnd max end(st.alias.getOrElse(st.table)),
+        end(st.join)).trim.drop(2).trim
+
+    /** The version alias as written (the table text when alias-free). */
+    def aliasText(st: Stage): String = st.alias.fold(text(st.table)) { a =>
+      val t = sql.substring(st.clauseEnd, end(a)).trim
+      if (t.length > 3 && t.take(2).equalsIgnoreCase("AS") &&
+          t.charAt(2).isWhitespace) t.drop(2).trim
+      else t
+    }
+  }
+
+  private def start(n: TreeNode[_]): Int = n.origin.startIndex.get
+  private def end(n: TreeNode[_]): Int = n.origin.stopIndex.get + 1
+
+  /** Blanks every `FOR SYSTEM_TIME AS OF <column>` clause, parses the
+    * statement once and pairs each clause with its INNER/LEFT/RIGHT/
+    * FULL `Join ... ON`. None when the blanked text does not parse,
+    * a clause pairs with no such join, or a marker stays unblanked. */
+  private def read(sql: String): Option[Read] = {
+    val masked = MatchRecognize.maskQuoted(sql)
+    val clauses = ClauseRe.findAllMatchIn(masked).toSeq
+    val blanked = clauses.foldLeft(sql)((s, m) =>
+      s.patch(m.start, " " * (m.end - m.start), m.end - m.start))
+    def stageOf(joins: Seq[Join], m: scala.util.matching.Regex.Match) = {
+      val before = masked.lastIndexWhere(!_.isWhitespace, m.start - 1)
+      joins.iterator.flatMap(j => named(j.right).collect {
+        case (t, alias) if end(t) == before + 1 && j.condition.isDefined &&
+            Seq(Inner, LeftOuter, RightOuter, FullOuter).contains(j.joinType) =>
+          Stage(j, t, alias, sql.substring(m.start(1), m.end(1)), m.end)
+      }).nextOption()
+    }
+    for {
+      query <- queryOf(blanked)
+      if MarkerRe.findAllMatchIn(masked).size == clauses.size
+      joins = ScriptParser.nodesOf(query).collect { case j: Join => j }
+      stages <- clauses.foldLeft(Option(Vector.empty[Stage]))((acc, m) =>
+        acc.flatMap(ss => stageOf(joins, m).map(ss :+ _)))
+      // a LIMIT or ORDER BY node's origin starts at its own clause
+      head = sql.substring(0, query.flatMap(_.origin.startIndex).min)
+    } yield Read(sql, head, query, stages)
+  }
+
+  /** The statement's query plan: a SELECT or INSERT through
+    * [[ScriptParser.parseQuery]]; a CREATE VIEW (or PARTITION / BY
+    * NAME INSERT) through Spark's session parser, which
+    * `CatalystSqlParser` lacks the commands of. */
+  private def queryOf(sql: String): Option[LogicalPlan] =
+    ScriptParser.parseQuery(sql).map(_._2)
+      .orElse(scala.util.Try(new SparkSqlParser().parsePlan(sql)).toOption)
+      .map {
+        case c: CreateViewCommand => c.plan
+        case c: CreateView => c.query
+        case i: InsertIntoStatement => i.query
+        case q => q
+      }
 
   /** A Flink VERSIONED VIEW: a deduplication view over a changelog —
     * the `FOR SYSTEM_TIME AS OF` version side Flink accepts without a
@@ -95,69 +181,53 @@ object TemporalJoin {
       items.find(_._1.equalsIgnoreCase(src)).map(_._2).getOrElse(src)
   }
 
-  /** A select-list item of the dedup view's outer projection: a
-    * simple (optionally qualified) column, optionally renamed under a
-    * plain alias — `[q.]col`, `[q.]col AS out`, `[q.]col out`. Any
-    * real expression around the column drops the versioned shape. */
-  private val VvItemRe = (raw"(?is)^(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)" +
-    raw"(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?$$").r
-
-  /** Parses the versioned-view shape from an (unticked) CREATE VIEW
-    * body: `SELECT <simple cols> FROM (SELECT *, ROW_NUMBER() OVER
-    * (PARTITION BY <keys> ORDER BY <tcol> DESC) AS <rn> FROM <src>)
-    * [alias] WHERE <rn> = 1`. ASC ordering is keep-FIRST
+  /** Reads the versioned-view shape from a CREATE VIEW body's plan:
+    * `SELECT <cols> FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY
+    * <keys> ORDER BY <tcol> DESC) AS <rn> FROM <src>) [alias] WHERE
+    * <rn> = 1`. Each outer item is a simple (optionally qualified)
+    * column, optionally renamed under a plain alias (r20: `ts AS
+    * version_ts` is a Flink-legal rename — the (source, output) pairs
+    * ride [[VersionedView.items]]). ASC ordering is keep-FIRST
     * deduplication, not a version history — no match. Projecting the
     * rank column (under any name), a star, or expression items: no
     * match (the caller then raises the named non-versioned rejection
-    * on a temporal join over the view). Items may carry a plain
-    * alias (r20: `ts AS version_ts` is a Flink-legal rename — the
-    * (source, output) pairs ride [[VersionedView.items]]).
+    * on a temporal join over the view). Every name feeds generated
+    * SQL, so each must be a plain identifier.
     */
   def versionedViewOf(body: String): Option[VersionedView] = {
-    val masked = MatchRecognize.maskQuoted(body)
-    for {
-      om <- raw"(?is)^\s*SELECT\s+(.*?)\s+FROM\s*\(".r
-        .findFirstMatchIn(masked)
-      open = om.end - 1
-      end <- scala.util.Try(MatchRecognize.closeParen(masked, open)).toOption
-      im <- (raw"(?is)^\s*SELECT\s+\*\s*,\s*ROW_NUMBER\s*\(\s*\)\s+" +
-        raw"OVER\s*\(\s*PARTITION\s+BY\s+(.+?)\s+ORDER\s+BY\s+" +
-        raw"([A-Za-z_]\w*)\s+DESC\s*\)\s+AS\s+([A-Za-z_]\w*)\s+" +
-        raw"FROM\s+([A-Za-z_][\w.]*)\s*$$").r
-        .findFirstMatchIn(masked.substring(open + 1, end - 1))
-      wm <- (raw"(?is)^(?:(?:AS\s+)?[A-Za-z_]\w*\s+)?WHERE\s+" +
-        raw"(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)\s*=\s*1\s*;?\s*$$").r
-        .findFirstMatchIn(masked.substring(end).trim)
-      if wm.group(1).equalsIgnoreCase(im.group(3))
-      keys = MatchRecognize.splitTopLevel(im.group(1)).map(_.trim)
-      if keys.nonEmpty && keys.forall(_.matches(raw"^[A-Za-z_]\w*$$"))
-      items <- MatchRecognize.splitTopLevel(om.group(1)).map(_.trim)
-        .foldLeft(Option(Seq.empty[(String, String)])) { (acc, it) =>
-          acc.flatMap(ps => it match {
-            case VvItemRe(src, out) =>
-              Some(ps :+ (src, Option(out).getOrElse(src)))
-            case _ => None
+    def plain(s: String) = s.matches(raw"[A-Za-z_]\w*")
+    def column(e: Expression, maxParts: Int): Option[String] = e match {
+      case a: UnresolvedAttribute if a.nameParts.size <= maxParts &&
+          plain(a.nameParts.last) => Some(a.nameParts.last)
+      case _ => None
+    }
+    def sequence[A](xs: Seq[Option[A]]): Option[Seq[A]] =
+      if (xs.forall(_.isDefined)) Some(xs.flatten) else None
+    ScriptParser.parseQuery(body).collect {
+      case ("", Project(outer, Filter(EqualTo(rank, Literal(1, IntegerType)),
+          SubqueryAlias(_, Project(Seq(UnresolvedStar(None), Alias(
+            WindowExpression(f: UnresolvedFunction, WindowSpecDefinition(
+              keys, Seq(SortOrder(tcol, Descending, _, _)), UnspecifiedFrame)),
+            rn)), src: UnresolvedRelation)))))
+          if f.nameParts.map(_.toLowerCase) == Seq("row_number") &&
+            f.arguments.isEmpty && column(rank, 2).exists(_.equalsIgnoreCase(rn)) &&
+            src.multipartIdentifier.forall(plain) =>
+        for {
+          t <- column(tcol, 1)
+          ks <- sequence(keys.map(column(_, 1)))
+          if ks.nonEmpty
+          items <- sequence(outer.map {
+            case Alias(c, out) if plain(out) => column(c, 2).map(_ -> out)
+            case c => column(c, 2).map(n => n -> n)
           })
-        }
-      if items.nonEmpty
-      // the rank column stays internal: projecting it under ANY name
-      // would expose rank values as data on the version side
-      if !items.exists(_._1.equalsIgnoreCase(im.group(3)))
-    } yield VersionedView(im.group(4), im.group(2), keys, items)
+          if items.nonEmpty
+          // the rank column stays internal: projecting it under ANY name
+          // would expose rank values as data on the version side
+          if !items.exists(_._1.equalsIgnoreCase(rn))
+        } yield VersionedView(src.multipartIdentifier.mkString("."), t, ks, items)
+    }.flatten
   }
 
-  /** `JOIN <versioned view> FOR SYSTEM_TIME AS OF` → the same join
-    * over the view's HISTORY relation: the rn = 1 view output holds
-    * only the latest version per key, so the rewrite reads
-    * `SELECT <view cols> FROM <source>` — registered as a `graft_vv_`
-    * temp view whose derived VersionMeta (ORDER BY time column,
-    * PARTITION BY primary key) is handed to `metaOut` — the way
-    * Flink's planner resolves a versioned view to the underlying
-    * changelog. An alias-free form gets the view's own name as the
-    * alias so the statement's qualified references keep resolving.
-    * Names `viewOf` does not know pass through untouched and hit the
-    * named rejection downstream.
-    */
   /** The deterministic history-relation name a versioned view `name`
     * substitutes to. The sanitized name alone can collide (`my.latest`
     * vs `my_latest`) — a hash of the lowercased original is suffixed
@@ -169,168 +239,164 @@ object TemporalJoin {
     "graft_vv_" + name.toLowerCase.replaceAll(raw"\W", "_") + "_" +
       (name.toLowerCase.hashCode & 0x7fffffff)
 
+  /** `JOIN <versioned view> FOR SYSTEM_TIME AS OF` → the same join
+    * over the view's HISTORY relation: the rn = 1 view output holds
+    * only the latest version per key, so the rewrite reads
+    * `SELECT <view cols> FROM <source>` — registered as a `graft_vv_`
+    * temp view whose derived VersionMeta (ORDER BY time column,
+    * PARTITION BY primary key) is handed to `metaOut` — the way
+    * Flink's planner resolves a versioned view to the underlying
+    * changelog. An alias-free form gets the view's own name as the
+    * alias so the statement's qualified references keep resolving.
+    * Names `viewOf` does not know, and statements [[read]] cannot
+    * parse, pass through untouched and hit the named rejection
+    * downstream.
+    */
   def substituteVersionedViews(spark: org.apache.spark.sql.SparkSession,
       sql: String, viewOf: String => Option[VersionedView],
-      metaOut: (String, VersionMeta) => Unit): String = {
-    val JoinTargetRe = (raw"(?is)\b(JOIN\s+)([\w.`]+)" +
-      raw"(\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+[\w.`]+)" +
-      raw"((?:\s+(?:AS\s+)?(?!ON\b)[A-Za-z_]\w*)?)").r
-    val masked = MatchRecognize.maskQuoted(sql)
-    val out = new StringBuilder
-    var last = 0
-    JoinTargetRe.findAllMatchIn(masked).foreach { m =>
-      val name = DdlParser.unquoteName(sql.substring(m.start(2), m.end(2)))
-      viewOf(name).foreach { vv =>
-        val hist = historyNameOf(name)
-        // re-created per statement: the source temp view may have been
-        // re-registered (mode flip, re-run) since the last use. The
-        // projection carries the view's renames, and the meta names
-        // the OUTPUT columns — the statement's ON clause references
-        // the view's surface, not the source's (r20)
-        spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW $hist AS " +
-          s"SELECT ${vv.items.map { case (s, o) =>
-            if (s == o) s else s"$s AS $o" }.mkString(", ")} " +
-          s"FROM ${vv.srcTable}")
-        metaOut(hist, VersionMeta(vv.outNameOf(vv.timeCol),
-          vv.primaryKey.map(vv.outNameOf)))
-        out.append(sql.substring(last, m.start(2))).append(hist)
-          .append(sql.substring(m.end(2), m.end(3)))
-        val aliasPart = sql.substring(m.start(4), m.end(4))
-        if (aliasPart.trim.isEmpty)
-          out.append(s" AS ${name.split('.').last}")
-        else out.append(aliasPart)
-        last = m.end
-      }
+      metaOut: (String, VersionMeta) => Unit): String =
+    read(sql).fold(sql) { r =>
+      splice(sql, 0, sql.length, r.stages.flatMap { st =>
+        val name = st.table.multipartIdentifier.last
+        viewOf(name).toSeq.flatMap { vv =>
+          val hist = historyNameOf(name)
+          // re-created per statement: the source temp view may have been
+          // re-registered (mode flip, re-run) since the last use. The
+          // projection carries the view's renames, and the meta names
+          // the OUTPUT columns — the statement's ON clause references
+          // the view's surface, not the source's (r20)
+          spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW $hist AS " +
+            s"SELECT ${vv.items.map { case (s, o) =>
+              if (s == o) s else s"$s AS $o" }.mkString(", ")} " +
+            s"FROM ${vv.srcTable}")
+          metaOut(hist, VersionMeta(vv.outNameOf(vv.timeCol),
+            vv.primaryKey.map(vv.outNameOf)))
+          (start(st.table), end(st.table), hist) +: (if (st.alias.isEmpty)
+            Seq((st.clauseEnd, st.clauseEnd, s" AS $name")) else Nil)
+        }
+      })
     }
-    out.append(sql.substring(last))
-    out.toString
-  }
 
   /** For the CLI's event-time view registry
     * (SqlSubmitAction.recordViewWatermark): the PROBE (left) table and
     * its alias of the first `FOR SYSTEM_TIME AS OF` join in `sql` —
     * Flink's law: a temporal join preserves the probe side's rowtime,
-    * so a view over one can feed a downstream window/OVER/top-N. Runs
-    * on masked text; None when the FROM region before the join is not
-    * a single named table (the streaming rewrite would reject such a
-    * shape anyway). */
-  def probeOf(sql: String): Option[(String, String)] = {
-    val masked = MatchRecognize.maskQuoted(sql)
-    for {
-      jm <- JoinRe.findFirstMatchIn(masked)
-      fm <- (raw"(?is)\bFROM\s+($Dotted)" +
-        raw"(?:\s+(?:AS\s+)?(?!JOIN\b|LEFT\b|RIGHT\b|FULL\b|INNER\b)" +
-        raw"($Ident))?\s*$$").r
-        .findFirstMatchIn(masked.substring(0, jm.start).trim)
-      // group text re-read from the raw statement (masking blanks
-      // backtick-quoted names but preserves offsets; trim drops the
-      // same leading run in both)
-      rawHead = sql.substring(0, jm.start).trim
-      table = DdlParser.unquoteName(rawHead.substring(fm.start(1), fm.end(1)))
-      alias = Option(fm.group(2))
-        .map(_ => DdlParser.unquoteName(
-          rawHead.substring(fm.start(2), fm.end(2))))
-        .getOrElse(table.split('.').last)
-    } yield (table, alias)
+    * so a view over one can feed a downstream window/OVER/top-N. None
+    * when the probe is not a single named table (the streaming rewrite
+    * would reject such a shape anyway), or when any other join rides
+    * along, subqueries included: a REGULAR join drops the rowtime
+    * attribute in Flink. */
+  def probeOf(sql: String): Option[(String, String)] =
+    read(sql).filter(r => r.stages.nonEmpty &&
+      ScriptParser.nodesOf(r.query).forall {
+        case j: Join => r.stages.exists(_.join eq j)
+        case _ => true
+      }).flatMap(r => named(r.stages.head.join.left)).map { case (t, a) =>
+        (t.multipartIdentifier.last, a.fold(t.multipartIdentifier.last)(_.alias))
+      }
+
+  /** Splices `edits` ([from, to) spans with replacement text) into the
+    * [from, to) region of `sql`. */
+  private def splice(sql: String, from: Int, to: Int,
+      edits: Seq[(Int, Int, String)]): String = {
+    val out = new StringBuilder
+    val last = edits.sortBy(_._1).foldLeft(from) { case (at, (s, e, t)) =>
+      out.append(sql.substring(at, s)).append(t)
+      e
+    }
+    out.append(sql.substring(last, to)).toString
   }
+
+  private def unsupported(): Nothing = throw new IllegalArgumentException(
+    "Unsupported FOR SYSTEM_TIME AS OF form: only " +
+      "[INNER|LEFT [OUTER]] JOIN <versioned table> FOR SYSTEM_TIME " +
+      "AS OF <time column> [AS alias] ON ... is recognized")
 
   /** Rewrites every temporal join in `sql`; `versionOf` maps an
     * (unquoted) table name to its temporal metadata. Throws if a
     * temporal join references a table without a time attribute or
     * primary key — same contract as Flink, which rejects temporal
-    * joins on non-versioned tables.
+    * joins on non-versioned tables. A `FOR SYSTEM_TIME AS OF` form
+    * [[read]] cannot pair (AS OF PROCTIME(), a subquery join input,
+    * ...) fails with the contract rather than leaking Flink syntax
+    * into Spark's parser.
     */
-  def rewrite(sql: String, versionOf: String => Option[VersionMeta]): String = {
-    var out = sql
-    val rewrittenAliases = scala.collection.mutable.LinkedHashSet.empty[String]
-    var next = JoinRe.findFirstMatchIn(out)
-    while (next.isDefined) {
-      val m = next.get
-      val (leftJoin, table, alias) = parseJoinHead(m)
-      val asOf = m.group(3)
-      val (cond, condEnd) = scanOnCondition(out, m.end)
-      val tbl = DdlParser.unquoteName(table)
-      val meta = versionOf(tbl).getOrElse(throw new IllegalArgumentException(
-        s"Temporal join over '$tbl' requires an event-time attribute " +
-          "(declare WATERMARK FOR <col> in its DDL), or a versioned " +
-          "VIEW: SELECT <cols> FROM (SELECT *, ROW_NUMBER() OVER " +
-          "(PARTITION BY <key> ORDER BY <watermarked time col> DESC) " +
-          "AS rn FROM <watermarked table>) WHERE rn = 1"))
-      if (meta.primaryKey.isEmpty) throw new IllegalArgumentException(
-        s"Temporal join over '$tbl' requires a PRIMARY KEY " +
-          "(versions are ordered within it)")
-      val ts = meta.timeCol
-      val pk = meta.primaryKey.mkString(", ")
-      val outerKw = if (leftJoin) "LEFT OUTER JOIN" else "JOIN"
-      val replacement =
-        s"$outerKw (SELECT *, $ts AS __vstart, " +
-          s"LEAD($ts) OVER (PARTITION BY $pk ORDER BY $ts) AS __vend " +
-          s"FROM $table) AS $alias " +
-          s"ON ($cond) AND $asOf >= $alias.__vstart " +
-          s"AND ($alias.__vend IS NULL OR $asOf < $alias.__vend)"
-      // trailing space: condEnd sits directly on the next clause keyword
-      out = out.substring(0, m.start) + replacement + " " + out.substring(condEnd)
-      rewrittenAliases += alias
-      next = JoinRe.findFirstMatchIn(out)
+  def rewrite(sql: String, versionOf: String => Option[VersionMeta]): String =
+    if (!hasTemporalJoin(sql)) sql
+    else {
+      val r = read(sql).getOrElse(unsupported())
+      val joinEdits = r.stages.map { st =>
+        checkHead(r, st)
+        val alias = r.aliasText(st)
+        val meta = metaOf(st.table.multipartIdentifier.last, versionOf)
+        val ts = meta.timeCol
+        val pk = meta.primaryKey.mkString(", ")
+        val outerKw =
+          if (st.join.joinType == LeftOuter) "LEFT OUTER JOIN" else "JOIN"
+        // trailing space: the rest resumes at the next clause's first
+        // character
+        val rest = Some(sql.indexWhere(!_.isWhitespace, end(st.join)))
+          .filter(_ >= 0).getOrElse(sql.length)
+        (start(st.join), rest,
+          s"$outerKw (SELECT *, $ts AS __vstart, " +
+            s"LEAD($ts) OVER (PARTITION BY $pk ORDER BY $ts) AS __vend " +
+            s"FROM ${r.text(st.table)}) AS $alias " +
+            s"ON (${r.onText(st)}) AND ${st.asOf} >= $alias.__vstart " +
+            s"AND ($alias.__vend IS NULL OR ${st.asOf} < $alias.__vend) ")
+      }
+      // `SELECT v.*` over a temporal alias must not expose the interval
+      // helpers — strip them with a qualified star EXCEPT. Applied only
+      // to single-SELECT statements: in a multi-block statement (UNION,
+      // subqueries) the same alias may bind a non-temporal table in
+      // another block, where the EXCEPT would fail analysis. (A bare
+      // `SELECT *` is never rewritten for the same reason: star EXCEPT
+      // fails on scopes that don't carry the helpers.)
+      val nodes = ScriptParser.nodesOf(r.query)
+      val singleBlock = nodes.count {
+        case _: Project | _: Aggregate => true
+        case _ => false
+      } == 1
+      val starEdits = if (!singleBlock) Nil else for {
+        s <- nodes.flatMap(_.expressions).flatMap(_.collect {
+          case s @ UnresolvedStar(Some(Seq(_))) => s })
+        st <- r.stages.find(_.aliasName.equalsIgnoreCase(s.target.get.head))
+      } yield (start(s), end(s),
+        s"${r.aliasText(st)}.* EXCEPT (__vstart, __vend)")
+      splice(sql, 0, sql.length, joinEdits ++ starEdits)
     }
-    // `SELECT v.*` over a temporal alias must not expose the interval
-    // helpers — strip them with a qualified star EXCEPT. Applied only
-    // to single-SELECT statements: in a multi-block statement (UNION,
-    // subqueries) the same alias may bind a non-temporal table in
-    // another block, where the EXCEPT would fail analysis. (A bare
-    // `SELECT *` is never rewritten for the same reason: star EXCEPT
-    // fails on scopes that don't carry the helpers.)
-    // counted on the ORIGINAL statement — the rewrite itself injects
-    // version subqueries (one SELECT each)
-    val singleBlock =
-      raw"(?is)\bSELECT\b".r.findAllMatchIn(sql).take(2).size == 1
-    if (singleBlock) rewrittenAliases.foreach { a =>
-      val starRe =
-        ("(?is)(?<![\\w`.])" + java.util.regex.Pattern.quote(a) +
-          raw"\s*\.\s*\*").r
-      out = starRe.replaceAllIn(out, java.util.regex.Matcher.quoteReplacement(
-        s"$a.* EXCEPT (__vstart, __vend)"))
-    }
-    // a FOR SYSTEM_TIME AS OF form JoinRe did not match (AS OF
-    // PROCTIME(), a subquery join input, ...) must fail with the
-    // contract here — leaked Flink syntax would surface as Spark
-    // parser noise (same residual check as WindowTvf.rewrite)
-    MarkerRe.findFirstMatchIn(out).foreach(_ =>
-      throw new IllegalArgumentException(
-        "Unsupported FOR SYSTEM_TIME AS OF form: only " +
-          "[INNER|LEFT [OUTER]] JOIN <versioned table> FOR SYSTEM_TIME " +
-          "AS OF <time column> [AS alias] ON ... is recognized"))
-    out
-  }
 
   private val viewCounter = new java.util.concurrent.atomic.AtomicLong
 
-  private val QualStarRe = raw"(?is)^([A-Za-z_]\w*)\s*\.\s*\*$$".r
-
-  /** Shared validation of a [[JoinRe]] match's head — join kind and
-    * versioned-side naming — used by the batch AND streaming rewrites
-    * so the contracts cannot diverge: Flink rejects RIGHT/FULL
-    * temporal joins; an alias is optional for a single-part table
-    * name (the name itself addresses the versioned side) and required
-    * for a qualified one. Returns (leftJoin, table text, alias). */
-  private def parseJoinHead(m: scala.util.matching.Regex.Match):
-      (Boolean, String, String) =
-    parseJoinHead(m.group(1), m.group(2), Option(m.group(4)))
-
-  private def parseJoinHead(joinKw0: String, table: String,
-      aliasOpt: Option[String]): (Boolean, String, String) = {
-    val joinKw = joinKw0.toUpperCase
-    if (joinKw.startsWith("RIGHT") || joinKw.startsWith("FULL"))
+  /** Shared validation of a temporal join's kind and version-side
+    * naming, used by the batch AND streaming rewrites so the contracts
+    * cannot diverge: Flink rejects RIGHT/FULL temporal joins; an alias
+    * is optional for a single-part table name (the name itself
+    * addresses the versioned side) and required for a qualified one. */
+  private def checkHead(r: Read, st: Stage): Unit = {
+    if (st.join.joinType == RightOuter || st.join.joinType == FullOuter)
       throw new IllegalArgumentException(
-        s"${joinKw.split("\\s+").head} JOIN is not supported with " +
-          "FOR SYSTEM_TIME AS OF (only INNER and LEFT temporal joins)")
-    val alias = aliasOpt.getOrElse {
-      if (!table.matches(s"^$Ident$$"))
-        throw new IllegalArgumentException(
-          s"Temporal join over qualified table '$table' requires an alias")
-      table
-    }
-    (joinKw.startsWith("LEFT"), table, alias)
+        s"${if (st.join.joinType == RightOuter) "RIGHT" else "FULL"} JOIN " +
+          "is not supported with FOR SYSTEM_TIME AS OF (only INNER and " +
+          "LEFT temporal joins)")
+    if (st.alias.isEmpty && st.table.multipartIdentifier.size > 1)
+      throw new IllegalArgumentException(s"Temporal join over qualified " +
+        s"table '${r.text(st.table)}' requires an alias")
+  }
+
+  /** The version table's metadata, or the named versioned-table
+    * rejection. */
+  private def metaOf(table: String,
+      versionOf: String => Option[VersionMeta]): VersionMeta = {
+    val meta = versionOf(table).getOrElse(throw new IllegalArgumentException(
+      s"Temporal join over '$table' requires an event-time attribute " +
+        "(declare WATERMARK FOR <col> in its DDL), or a versioned " +
+        "VIEW: SELECT <cols> FROM (SELECT *, ROW_NUMBER() OVER " +
+        "(PARTITION BY <key> ORDER BY <watermarked time col> DESC) " +
+        "AS rn FROM <watermarked table>) WHERE rn = 1"))
+    if (meta.primaryKey.isEmpty) throw new IllegalArgumentException(
+      s"Temporal join over '$table' requires a PRIMARY KEY " +
+        "(versions are ordered within it)")
+    meta
   }
 
   /** Streaming `FOR SYSTEM_TIME AS OF` — Flink's event-time temporal
@@ -356,9 +422,12 @@ object TemporalJoin {
     * retain latest-at-watermark plus newer — per-key state bounded by
     * the watermark delay plus one version. The outer select and a
     * residual WHERE splice over the decoded view: `p.c`/`v.c`
-    * references (and unambiguous bare columns, and `p.*`/`v.*`/`*`
-    * stars) rewrite to the decoded columns. INNER filters unmatched
-    * probes; LEFT null-extends the version side.
+    * references and `p.*`/`v.*`/`*` stars rewrite to the decoded
+    * columns by their origin spans. INNER filters unmatched probes;
+    * LEFT null-extends the version side. The statement may carry an
+    * INSERT or CREATE VIEW head (r18 — a temporal-join view keeps the
+    * probe's rowtime, Flink's law; the CLI registry records the
+    * propagated attribute, see SqlSubmitAction.recordViewWatermark).
     */
   def rewriteStreaming(
       spark: org.apache.spark.sql.SparkSession,
@@ -374,100 +443,77 @@ object TemporalJoin {
     import org.apache.spark.sql.types.{StructField, StructType}
     def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
 
-    // tolerated statement heads: INSERT INTO, and CREATE VIEW (r18 —
-    // a temporal-join view keeps the probe's rowtime, Flink's law, so
-    // a view body may hold the join; the CLI registry records the
-    // propagated attribute, see SqlSubmitAction.recordViewWatermark)
-    // the column-alias list tolerates quoted parens in COMMENT
-    // clauses — the SAME shared fragment CreateViewRe interpolates, so
-    // a `COMMENT 'pct)'` cuts neither parse short
-    val colListP = DdlParser.ColListFragment
-    val insM = (raw"(?is)^(\s*INSERT\s+INTO\s+[\w.`]+\s*(?:$colListP)?\s+" +
-      raw"|\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?VIEW\s+" +
-      raw"(?:IF\s+NOT\s+EXISTS\s+)?[\w.`]+\s*(?:$colListP)?\s*AS\s+)?(.*)$$").r
-      .findFirstMatchIn(sql).get
-    val insertPrefix = Option(insM.group(1)).getOrElse("")
-    val stmt = insM.group(2)
-    val masked = MatchRecognize.maskQuoted(stmt)
-
-    // --- collect every temporal join, left to right (r17: Flink
-    // chains temporal joins — a fact enriched by several dimension
-    // histories in one SELECT; each stage's enriched output feeds the
-    // next stage's probe side) ---
-    final case class Stage(leftJoin: Boolean, vTable: String,
-        vAlias: String, asOfRaw: String, cond: String, start: Int,
-        condEnd: Int)
-    val jms = JoinRe.findAllMatchIn(masked).toList
-    if (jms.isEmpty) fail(
+    val r = read(sql).filter(_.stages.nonEmpty).getOrElse(fail(
       "unsupported streaming FOR SYSTEM_TIME AS OF form: expected " +
         "[INNER|LEFT [OUTER]] JOIN <versioned table> FOR SYSTEM_TIME " +
-        "AS OF <probe time column> [AS alias] ON ...")
-    val stages = scala.collection.mutable.ArrayBuffer.empty[Stage]
-    var scanned = 0
-    jms.foreach { m =>
-      if (m.start < scanned) fail(
-        "nested FOR SYSTEM_TIME AS OF forms are unsupported")
-      // group text re-read from the RAW statement: the match ran on
-      // the masked text, where backtick-quoted names are blanked
-      def rawGroup(i: Int): String =
-        if (m.group(i) == null) null
-        else stmt.substring(m.start(i), m.end(i))
-      val (leftJoin, vTableRaw, vAliasRaw) =
-        parseJoinHead(rawGroup(1), rawGroup(2), Option(rawGroup(4)))
-      val (cond, condEnd) = scanOnCondition(stmt, m.end)
-      if (stages.nonEmpty &&
-          stmt.substring(stages.last.condEnd, m.start).trim.nonEmpty)
-        fail("only FOR SYSTEM_TIME AS OF joins may chain in one " +
-          "statement; found '" +
-          stmt.substring(stages.last.condEnd, m.start).trim.take(40) +
-          "' between them")
-      stages += Stage(leftJoin, DdlParser.unquoteName(vTableRaw),
-        DdlParser.unquoteName(vAliasRaw), rawGroup(3), cond, m.start,
-        condEnd)
-      scanned = condEnd
-    }
+        "AS OF <probe time column> [AS alias] ON ..."))
+    r.stages.foreach(checkHead(r, _))
+    if (r.stages.exists(a => r.stages.exists(b => (a ne b) &&
+        start(b.join) <= start(a.join) && end(a.join) <= end(b.join))))
+      fail("nested FOR SYSTEM_TIME AS OF forms are unsupported")
 
-    val selM = raw"(?is)^\s*SELECT\s+".r.findFirstMatchIn(masked)
-      .getOrElse(fail("expected SELECT ... FROM for the streaming " +
-        "temporal-join rewrite"))
-    val fromIdx = WindowTvf.findTopLevel(masked, selM.end, "FROM")
-      .filter(_ < stages.head.start)
-      .getOrElse(fail("expected FROM <probe table> before the temporal join"))
-    val selectList = stmt.substring(selM.end, fromIdx).trim
-    val probeRegion = stmt.substring(fromIdx, stages.head.start).trim
-    // the probe table accepts the same Ident/Dotted form as the
-    // versioned side (backtick-quoted names included, r17)
-    val pm = (raw"(?is)^FROM\s+($Dotted)" +
-      raw"(?:\s+(?:AS\s+)?($Ident))?\s*$$").r
-      .findFirstMatchIn(probeRegion).getOrElse(fail(
+    // the query block over the chain, outermost first: SELECT
+    // [DISTINCT] <items> FROM <chain> [WHERE ...]; the clauses after a
+    // residual WHERE ride along with it
+    def block(p: LogicalPlan): List[LogicalPlan] = p match {
+      case j: Join if r.stages.exists(_.join eq j) => List(j)
+      case u: UnaryNode if !u.isInstanceOf[SubqueryAlias] =>
+        block(u.child) match {
+          case Nil => Nil
+          case rest => u :: rest
+        }
+      case _ => Nil
+    }
+    val nodes = block(r.query)
+    val where = nodes.dropRight(1).lastOption.collect { case Filter(w, _) => w }
+    val items = nodes.collectFirst {
+      case p: Project => p.projectList
+      case a: Aggregate => a.aggregateExpressions
+    }.filter(_ => where.isDefined || nodes.init.forall(n =>
+      n.isInstanceOf[Project] || n.isInstanceOf[Distinct])).getOrElse {
+      val tail =
+        sql.substring(end(r.stages.last.join)).trim.stripSuffix(";").trim
+      if (tail.nonEmpty) fail("streaming temporal join supports a " +
+        "residual WHERE only after the ON condition — aggregate, window, " +
+        s"or order in a separate statement; got '${tail.take(40)}'")
+      fail("expected SELECT ... FROM for the streaming temporal-join rewrite")
+    }
+    val (itemsFrom, itemsTo) = ScriptParser.extentOf(sql, items: _*)
+    // the chain: the top join's left spine, probe first (r17: Flink
+    // chains temporal joins — a fact enriched by several dimension
+    // histories in one SELECT; each stage's enriched output feeds the
+    // next stage's probe side)
+    def spine(p: LogicalPlan): List[LogicalPlan] = p match {
+      case j: Join => spine(j.left) :+ j
+      case leaf => List(leaf)
+    }
+    val chain = spine(nodes.last)
+    val stageAt = chain.tail.map(j => r.stages.find(_.join eq j))
+    val (pRel, pAliasNode) = named(chain.head)
+      .filter(_ => stageAt.head.isDefined).getOrElse(fail(
         "streaming temporal join takes a single named probe table in " +
-          s"FROM; got '$probeRegion'"))
-    val pTable = DdlParser.unquoteName(pm.group(1))
+          "FROM; got '" + sql.substring(itemsTo,
+            start(stageAt.flatten.head.join)).trim + "'"))
     // a qualified probe name cannot qualify column references — the
     // same alias rule the versioned side gets
-    val pAlias = Option(pm.group(2)).map(DdlParser.unquoteName).getOrElse {
-      if (!pm.group(1).matches(s"^$Ident$$"))
-        fail(s"Temporal join probe over qualified table " +
-          s"'${pm.group(1)}' requires an alias")
-      pTable
+    if (pAliasNode.isEmpty && pRel.multipartIdentifier.size > 1)
+      fail(s"Temporal join probe over qualified table '${r.text(pRel)}' " +
+        "requires an alias")
+    stageAt.sliding(2).foreach {
+      case Seq(Some(a), None) =>
+        val next = stageAt.dropWhile(_ != Some(a)).flatten.drop(1).head
+        fail("only FOR SYSTEM_TIME AS OF joins may chain in one " +
+          "statement; found '" + sql.substring(end(a.join),
+            start(next.join)).trim.take(40) + "' between them")
+      case _ =>
     }
-
-    val tailRest =
-      stmt.substring(stages.last.condEnd).trim.stripSuffix(";").trim
-    val whereResidual =
-      if (tailRest.isEmpty) None
-      else Some(raw"(?is)^WHERE\b(.*)$$".r.findFirstMatchIn(tailRest)
-        .getOrElse(fail("streaming temporal join supports a residual " +
-          "WHERE only after the ON condition — aggregate, window, or " +
-          s"order in a separate statement; got '${tailRest.take(40)}'"))
-        .group(1).trim)
-    if (MarkerRe.findFirstMatchIn(
-          masked.substring(0, stages.head.start)).isDefined ||
-        MarkerRe.findFirstMatchIn(
-          masked.substring(stages.last.condEnd)).isDefined)
+    val stages = stageAt.flatten
+    if (stages.size != r.stages.size)
       fail("unsupported FOR SYSTEM_TIME AS OF placement: only a chain " +
         "of [INNER|LEFT] temporal joins after FROM <probe> is " +
         "recognized in streaming mode")
+    val pTable = pRel.multipartIdentifier.last
+    val pAlias = pAliasNode.fold(pTable)(_.alias)
 
     val (pWmCol, pDelay) = watermarkOf(pTable).getOrElse(fail(
       s"streaming temporal join needs a WATERMARK declaration on $pTable"))
@@ -501,53 +547,52 @@ object TemporalJoin {
       (pSrc.schema.fields.toSeq.map(_.name) diff pFields.map(_.name))
 
     stages.zipWithIndex.foreach { case (st, stageIdx) =>
-      val vTable = st.vTable
-      val vAlias = st.vAlias
+      val vTable = st.table.multipartIdentifier.last
+      val vAlias = st.aliasName
       if (aliasCols.contains(vAlias.toLowerCase))
         fail(s"duplicate relation alias '$vAlias' in the temporal-join " +
           "chain — give each versioned side a distinct alias")
       // AS OF must reference the PROBE's event-time column (every
       // stage of a Flink chain enriches as of the fact row's time)
-      st.asOfRaw.split('.').map(DdlParser.unquoteName) match {
-        case Array(c) =>
+      scala.util.Try(CatalystSqlParser.parseExpression(st.asOf)).toOption
+          .collect { case a: UnresolvedAttribute => a.nameParts } match {
+        case Some(Seq(c)) =>
           if (!c.equalsIgnoreCase(pWmCol))
             fail(s"FOR SYSTEM_TIME AS OF must be $pTable's event-time " +
               s"column ($pWmCol); got $c")
-        case Array(q, c) =>
+        case Some(Seq(q, c)) =>
           val resolved = resolveQual(q, c).getOrElse(
             fail("FOR SYSTEM_TIME AS OF must reference the probe " +
-              s"table's event-time column; got ${st.asOfRaw}"))
+              s"table's event-time column; got ${st.asOf}"))
           if (!resolved.equalsIgnoreCase(curWmField))
             fail(s"FOR SYSTEM_TIME AS OF must be $pTable's event-time " +
-              s"column ($pWmCol); got ${st.asOfRaw}")
+              s"column ($pWmCol); got ${st.asOf}")
         case _ => fail("FOR SYSTEM_TIME AS OF must reference the probe " +
-          s"table's event-time column; got ${st.asOfRaw}")
+          s"table's event-time column; got ${st.asOf}")
       }
-      val meta = versionOf(vTable).getOrElse(fail(
-        s"Temporal join over '$vTable' requires an event-time attribute " +
-          "(declare WATERMARK FOR <col> in its DDL), or a versioned " +
-          "VIEW: SELECT <cols> FROM (SELECT *, ROW_NUMBER() OVER " +
-          "(PARTITION BY <key> ORDER BY <watermarked time col> DESC) " +
-          "AS rn FROM <watermarked table>) WHERE rn = 1"))
-      if (meta.primaryKey.isEmpty) fail(
-        s"Temporal join over '$vTable' requires a PRIMARY KEY " +
-          "(versions are ordered within it)")
+      val meta = metaOf(vTable, versionOf)
 
       // ON: a conjunction of probe-column = version-column equalities
       // covering exactly the version table's primary key; the probe
       // side may qualify with ANY earlier alias of the chain
-      val pairs = MatchRecognize.splitTopLevelAnd(st.cond).map { c =>
-        val em = raw"(?is)^\s*([\w.]+)\s*=\s*([\w.]+)\s*$$".r
-          .findFirstMatchIn(c).getOrElse(fail(
-            "streaming temporal join ON takes a conjunction of column " +
-              s"equalities; got '$c'"))
-        def side(ref: String): (String, String) = ref.split('.') match {
-          case Array(c0) => ("", c0)
-          case Array(q, c0) => (q.toLowerCase, c0)
-          case _ => fail(s"cannot resolve ON reference $ref")
+      def conjuncts(e: Expression): Seq[Expression] = e match {
+        case And(a, b) => conjuncts(a) ++ conjuncts(b)
+        case c => Seq(c)
+      }
+      val pairs = conjuncts(st.join.condition.get).map { c =>
+        val (a, b) = c match {
+          case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
+            (a.nameParts, b.nameParts)
+          case _ => fail("streaming temporal join ON takes a conjunction " +
+            s"of column equalities; got '${ScriptParser.textOf(sql, c)}'")
         }
-        val (q1, c1) = side(em.group(1))
-        val (q2, c2) = side(em.group(2))
+        def side(ref: Seq[String]): (String, String) = ref match {
+          case Seq(c0) => ("", c0)
+          case Seq(q, c0) => (q.toLowerCase, c0)
+          case _ => fail(s"cannot resolve ON reference ${ref.mkString(".")}")
+        }
+        val (q1, c1) = side(a)
+        val (q2, c2) = side(b)
         val va = vAlias.toLowerCase
         if (aliasCols.contains(q1) && q2 == va)
           (resolveQual(q1, c1).get, c2)
@@ -555,7 +600,7 @@ object TemporalJoin {
           (resolveQual(q2, c2).get, c1)
         else fail("streaming temporal join ON equalities must pair a " +
           "probe-side column with a version column (qualify both " +
-          s"sides): got '$c'")
+          s"sides): got '${ScriptParser.textOf(sql, c)}'")
       }
       val vKeyCols = pairs.map(_._2)
       if (vKeyCols.size != meta.primaryKey.size ||
@@ -625,7 +670,7 @@ object TemporalJoin {
         graft.streaming.TemporalJoinTracker
           .joinRows(input, pDelay, stateTtlSec).toDF()
       val tracked =
-        if (st.leftJoin) tracked0
+        if (st.join.joinType == LeftOuter) tracked0
         else tracked0.filter(col("versionPayload").isNotNull)
 
       val opts = Map("allowNonNumericNumbers" -> "true")
@@ -652,7 +697,8 @@ object TemporalJoin {
       curWmField = s"__l_$curWmField"
       cur = decoded
     }
-    WindowTopN.failOnStarOverDropped(selectList, droppedAll.toSeq, fail)
+    WindowTopN.failOnStarOverDropped(sql.substring(itemsFrom, itemsTo),
+      droppedAll.toSeq, fail)
 
     val view = s"graft_tj_${viewCounter.incrementAndGet()}"
     cur.createOrReplaceTempView(view)
@@ -661,155 +707,63 @@ object TemporalJoin {
     def starExpand(aliasLower: String): String =
       aliasCols(aliasLower).map { case (out, fld) => s"$fld AS $out" }
         .mkString(", ")
-    // alias-qualified references, then unambiguous bare columns,
-    // rewrite to the decoded view's columns; finds run on masked text
-    def rewriteRefs(text0: String): String = {
-      var text = text0
-      // a subquery inside the rewritten region may introduce its OWN
-      // alias equal to a chain alias — rewriting `r.rate` inside
-      // `(SELECT avg(r.rate) FROM rates r)` would silently turn the
-      // subquery's column into a correlated outer reference. Reject
-      // the collision by name (the bare-identifier path already
-      // rejects its ambiguity class the same way). A FROM/JOIN match
-      // counts only when it sits inside a SELECT subquery — the FROM
-      // of EXTRACT/TRIM/SUBSTRING never introduces a relation.
-      val masked0 = MatchRecognize.maskQuoted(text0)
-      def inSubquery(idx: Int): Boolean = {
-        var depth = 0
-        var i = idx - 1
-        var open = -1
-        while (i >= 0 && open < 0) {
-          masked0.charAt(i) match {
-            case ')' => depth += 1
-            case '(' => if (depth == 0) open = i else depth -= 1
-            case _ =>
-          }
-          i -= 1
-        }
-        open >= 0 && raw"(?is)\bSELECT\b".r
-          .findFirstIn(masked0.substring(open + 1, idx)).isDefined
-      }
-      val RelIntro = (raw"(?is)\b(?:FROM|JOIN)\s+($Dotted)" +
-        raw"(?:\s+(?:AS\s+)?(?!ON\b|WHERE\b|GROUP\b|ORDER\b|LIMIT\b|" +
-        raw"JOIN\b|LEFT\b|RIGHT\b|FULL\b|INNER\b|CROSS\b)($Ident))?").r
-      RelIntro.findAllMatchIn(masked0).filter(m => inSubquery(m.start))
-        .foreach { m =>
-          val introduced = Option(m.group(2)).map(DdlParser.unquoteName)
-            .getOrElse(DdlParser.unquoteName(
-              text0.substring(m.start(1), m.end(1))).split('.').last)
-          if (aliasCols.contains(introduced.toLowerCase))
-            fail(s"subquery alias '$introduced' collides with a " +
-              "temporal-join chain alias (" +
-              aliasCols.keys.mkString(", ") + ") — rename the " +
-              "subquery's relation alias so qualified references stay " +
-              "unambiguous")
-        }
-      val QualRef = raw"(?is)\b([A-Za-z_]\w*)\s*\.\s*([A-Za-z_]\w*)".r
-      QualRef.findAllMatchIn(MatchRecognize.maskQuoted(text))
-        .toSeq.reverseIterator.foreach { m =>
-          val q = m.group(1)
-          val rep =
-            if (aliasCols.contains(q.toLowerCase))
-              Some(resolveQual(q, m.group(2)).get)
-            else None
-          rep.foreach(r =>
-            text = text.substring(0, m.start) + r + text.substring(m.end))
-        }
-      // bare identifiers naming a side column REJECT rather than
-      // rewrite: a bare reference could equally be an implicit output
-      // alias or a column of a residual-WHERE subquery's own table,
-      // and a silent mis-rewrite there produces wrong rows — the
-      // contract demands the alias (or explicit AS for output names)
-      val maskedT = MatchRecognize.maskQuoted(text)
-      val Bare = raw"(?is)\b([A-Za-z_]\w*)\b".r
-      Bare.findAllMatchIn(maskedT).foreach { m =>
-        val id = m.group(1)
-        val prevCh = if (m.start > 0) maskedT.charAt(m.start - 1) else ' '
-        val after = maskedT.drop(m.end).dropWhile(_.isWhitespace)
-        val nextCh = after.headOption.getOrElse(' ')
-        val isAliasPos = raw"(?is).*\bAS$$".r
-          .matches(maskedT.substring(0, m.start).trim)
-        if (prevCh != '.' && nextCh != '.' && nextCh != '(' &&
-            !isAliasPos && allOutNames.exists(_.equalsIgnoreCase(id)))
-          fail(s"unqualified column $id in the streaming temporal " +
-            "join — qualify with one of the chain aliases (" +
-            aliasCols.keys.mkString(", ") + "); a subquery's own " +
-            "column qualifies with ITS alias; an output alias of " +
-            "that name needs the AS keyword")
-      }
-      text
+    // a chain-alias-qualified reference → its decoded column; a bare
+    // side column REJECTS rather than rewrites: it could equally be a
+    // column of a subquery's own table, and a silent mis-rewrite there
+    // produces wrong rows — the contract demands the alias
+    def resolved(a: UnresolvedAttribute): Option[String] = a.nameParts match {
+      case q +: c +: rest if aliasCols.contains(q.toLowerCase) =>
+        Some((resolveQual(q, c).get +: rest.map(quoteIfNeeded)).mkString("."))
+      case Seq(c) if allOutNames.exists(_.equalsIgnoreCase(c)) =>
+        fail(s"unqualified column $c in the streaming temporal " +
+          "join — qualify with one of the chain aliases (" +
+          aliasCols.keys.mkString(", ") + "); a subquery's own " +
+          "column qualifies with ITS alias; an output alias of " +
+          "that name needs the AS keyword")
+      case _ => None
     }
-    // a plain column item keeps its column name in SQL output
-    // (`SELECT o.k` exposes `k`) — the decoded-view splice must alias
-    // the prefixed column back, or sinks would see `__l_k`
-    val PlainRef = raw"(?is)^\s*(?:[A-Za-z_]\w*\s*\.\s*)?([A-Za-z_]\w*)\s*$$".r
-    val items2 = MatchRecognize.splitTopLevel(selectList).map {
-      case "*" =>
-        aliasCols.keys.map(starExpand).mkString(", ")
-      case QualStarRe(q) if aliasCols.contains(q.toLowerCase) =>
-        starExpand(q.toLowerCase)
-      case it @ PlainRef(outName) =>
-        val rewritten = rewriteRefs(it).trim
-        if (rewritten == it.trim) rewritten else s"$rewritten AS $outName"
-      case it => rewriteRefs(it)
-    }.mkString(", ")
-    val where2 =
-      whereResidual.map(w => " WHERE " + rewriteRefs(w)).getOrElse("")
-    s"${insertPrefix}SELECT $items2 FROM $view$where2"
-  }
-
-  /** Clause keywords that terminate an ON condition at paren depth 0. */
-  private val Stops = Set(
-    "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "QUALIFY", "WINDOW",
-    "UNION", "INTERSECT", "EXCEPT",
-    "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "NATURAL")
-
-  /** Consumes the ON condition starting at `from`: everything up to the
-    * next top-level clause keyword, an unmatched `)` (the join sits
-    * inside a subquery or CTE), or end of statement — skipping over
-    * parenthesized groups and quoted literals/identifiers. A stop
-    * keyword preceded by `.` is a qualified column segment (`o.left`),
-    * not a clause.
-    */
-  private def scanOnCondition(sql: String, from: Int): (String, Int) = {
-    var i = from
-    var depth = 0
-    var end = sql.length
-    while (i < sql.length) {
-      sql.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' if depth == 0 => end = i; i = sql.length
-        case ')' => depth -= 1; i += 1
-        // a top-level comma ends the ON condition: the FROM list
-        // continues with another (implicit-join) table reference —
-        // `JOIN v FOR SYSTEM_TIME ... ON r.k = p.k, dim d` (r19)
-        case ',' if depth == 0 => end = i; i = sql.length
-        case q @ ('\'' | '"' | '`') => i = skipQuoted(sql, i, q)
-        case c if c.isLetter || c == '_' =>
-          val s = i
-          while (i < sql.length &&
-            (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-          val qualified = s > 0 && sql.charAt(s - 1) == '.'
-          if (depth == 0 && !qualified &&
-            Stops(sql.substring(s, i).toUpperCase)) {
-            end = s
-            i = sql.length
-          }
-        case _ => i += 1
-      }
+    // references of an item or the residual WHERE, subqueries included.
+    // A subquery relation aliased like a chain alias would turn its own
+    // `r.rate` into a correlated outer reference — rejected by name
+    def refEdits(e: Expression): Seq[(Int, Int, String)] = {
+      val inner = e.collect { case s: SubqueryExpression => s.plan }
+        .flatMap(ScriptParser.nodesOf)
+      val aliased = inner.collect { case SubqueryAlias(_, t: UnresolvedRelation) => t }
+      inner.collect {
+        case a: SubqueryAlias => a.alias
+        case t: UnresolvedRelation if !aliased.exists(_ eq t) =>
+          t.multipartIdentifier.last
+      }.find(n => aliasCols.contains(n.toLowerCase)).foreach(n =>
+        fail(s"subquery alias '$n' collides with a " +
+          "temporal-join chain alias (" +
+          aliasCols.keys.mkString(", ") + ") — rename the " +
+          "subquery's relation alias so qualified references stay " +
+          "unambiguous"))
+      (e +: inner.flatMap(_.expressions))
+        .flatMap(_.collect { case a: UnresolvedAttribute => a })
+        .flatMap(a => resolved(a).map((start(a), end(a), _)))
     }
-    (sql.substring(from, end).trim, end)
-  }
-
-  /** Past a quoted region; doubled quotes escape within '...' and `...`. */
-  private def skipQuoted(sql: String, start: Int, q: Char): Int = {
-    var i = start + 1
-    while (i < sql.length) {
-      if (sql.charAt(i) == q) {
-        if (i + 1 < sql.length && sql.charAt(i + 1) == q) i += 2
-        else return i + 1
-      } else i += 1
+    val itemEdits = items.flatMap {
+      case s @ UnresolvedStar(None) =>
+        Seq((start(s), end(s), aliasCols.keys.map(starExpand).mkString(", ")))
+      case s @ UnresolvedStar(Some(Seq(q))) if aliasCols.contains(q.toLowerCase) =>
+        Seq((start(s), end(s), starExpand(q.toLowerCase)))
+      // a plain column item keeps its column name in SQL output
+      // (`SELECT o.k` exposes `k`) — the decoded-view splice must alias
+      // the prefixed column back, or sinks would see `__l_k`
+      case a: UnresolvedAttribute => resolved(a).map(x =>
+        (start(a), end(a), s"$x AS ${quoteIfNeeded(a.nameParts.last)}")).toSeq
+      case e => refEdits(e)
     }
-    sql.length
+    val where2 = where.fold("") { _ =>
+      val from = sql.indexWhere(!_.isWhitespace, end(nodes.last)) + "WHERE".length
+      val to = sql.lastIndexWhere(c => !c.isWhitespace && c != ';') + 1
+      val tailExprs =
+        nodes.init.flatMap(_.expressions).filterNot(e => items.exists(_ eq e))
+      " WHERE " + splice(sql, from, to, tailExprs.flatMap(refEdits)).trim
+    }
+    val distinct = if (nodes.head.isInstanceOf[Distinct]) "DISTINCT " else ""
+    s"${r.head}SELECT $distinct" +
+      s"${splice(sql, itemsFrom, itemsTo, itemEdits)} FROM $view$where2"
   }
 }

@@ -10,16 +10,14 @@ import scala.collection.mutable
   */
 object DdlParser {
 
-  /** Regex fragment for a parenthesized column-alias list that
-    * tolerates COMMENT clauses: quoted strings may hold parens, so the
-    * group alternates raw chars with complete single-quoted literals
-    * ('' escapes inside). Shared by SqlSubmitAction.CreateViewRe and
-    * TemporalJoin's statement-head tolerance so the two parse the SAME
-    * list boundary. Contains no capture groups — safe to interpolate
-    * without shifting group numbering. */
+  /** Regex fragment for the inside of a parenthesized column-alias
+    * list that tolerates COMMENT clauses: quoted strings may hold
+    * parens, so the group alternates raw chars with complete
+    * single-quoted literals ('' escapes inside). Used by
+    * SqlSubmitAction.CreateViewRe. Contains no capture groups — safe to
+    * interpolate without shifting group numbering. */
   private[harness] val ColListInner: String =
     raw"(?:[^()']|'(?:[^']|'')*')*"
-  private[harness] val ColListFragment: String = raw"\($ColListInner\)"
 
   private val CreateHead =
     raw"(?is)^\s*CREATE\s+(?:TEMPORARY\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(.+)$$".r

@@ -218,6 +218,19 @@ class OverAggSpec extends AnyFunSuite {
         |FROM (SELECT k, ets, v FROM t ) s WHERE v <> 7 """.stripMargin)
   }
 
+  test("a comma-joined subquery source streams by the watermarked " +
+      "relation among the parsed plan's relations") {
+    // the flush row joins too, so the watermark passes every row
+    val dim = s"oa_dim_${System.nanoTime()}"
+    Seq(("a", "A"), ("b", "B"), ("__flush__", "F")).toDF("dk", "tag")
+      .createOrReplaceTempView(dim)
+    assertStreamEqualsBatch(
+      s"""SELECT k, ets, tag,
+        |  SUM(v) OVER (PARTITION BY k ORDER BY ets) AS rs
+        |FROM (SELECT s.k, s.ets, s.v, d.tag FROM $dim d, t s
+        |  WHERE d.dk = s.k) """.stripMargin)
+  }
+
   test("subquery-source contract rejections are named (r17)") {
     val name = s"oa_sq_${System.nanoTime()}"
     Seq(("a", ts(1), 1L, 1d)).toDF("k", "ets", "v", "d")

@@ -300,6 +300,32 @@ class SqlSubmitE2ESpec extends AnyFunSuite {
       (11L, "c"), (12L, "c"), (13L, "c")), got)
   }
 
+  test("an INSERT without a column list maps its columns onto the " +
+      "connector sink's declared columns by position, as Flink does") {
+    val spark = SparkFixture.spark
+    val outDir = Files.createTempDirectory("graft-insert-pos-out").toString
+    val script =
+      s"""SET execution.runtime-mode = batch;
+         |create table src(v bigint) with (
+         |  'connector' = 'datagen', 'number-of-rows' = '3',
+         |  'fields.v.kind' = 'sequence', 'fields.v.start' = '1');
+         |create table out_s(v bigint, tag string) with (
+         |  'connector' = 'filesystem', 'path' = '$outDir/s', 'format' = 'parquet');
+         |insert into out_s select v + 10, 'c' as tag from src;
+         |""".stripMargin
+    val file = Files.createTempFile("graft-insert-pos-", ".sql")
+    Files.writeString(file, script)
+    new SqlSubmitAction(file.toString, Map.empty,
+      existingSession = Some(spark)).run()
+    val back = spark.read.parquet(s"$outDir/s")
+    assert(back.columns.toSeq == Seq("v", "tag"), back.columns.toSeq)
+    val got = back.collect()
+      .map(r => (Option(r.getAs[java.lang.Long]("v")), r.getAs[String]("tag")))
+      .toSet
+    assert(got == Set((Some(11L), "c"), (Some(12L), "c"), (Some(13L), "c")),
+      got)
+  }
+
   test("re-running a script whose sink path now exists still resolves the sink") {
     val spark = SparkFixture.spark
     val outDir = Files.createTempDirectory("graft-rerun-out").toString

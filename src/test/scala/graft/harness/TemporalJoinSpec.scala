@@ -591,6 +591,80 @@ class TemporalJoinSpec extends AnyFunSuite {
       "ON r.k = o.k").contains("collides"))
   }
 
+  /** Streams `on` over bounded twins (the tracker's MAX_WATERMARK-at-end
+    * finality) and returns the rows with the batch rewrite's rows. */
+  private def streamAndBatchOn(on: String) = {
+    val spark = SparkFixture.spark
+    import spark.implicits._
+    Seq((1L, tsOf(12), 100L), (1L, tsOf(35), 200L), (2L, tsOf(11), 400L),
+      (3L, tsOf(20), 500L)).toDF("k", "ot", "amount")
+      .createOrReplaceTempView("tjon_o")
+    Seq((1L, tsOf(10), 1.0d), (1L, tsOf(30), 2.0d), (2L, tsOf(10), 9.0d))
+      .toDF("k", "rt", "rate").createOrReplaceTempView("tjon_r")
+    val vm = Map("tjon_r" -> VersionMeta("rt", Seq("k"))).get _
+    val wmOf: String => Option[(String, String)] = t =>
+      if (t.equalsIgnoreCase("tjon_o")) Some(("ot", "5 seconds")) else None
+    val sql = "SELECT o.k, o.amount, r.rate FROM tjon_o o LEFT JOIN tjon_r " +
+      s"FOR SYSTEM_TIME AS OF o.ot AS r ON $on"
+    def rows(q: String) = spark.sql(q).collect()
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)))).toSet
+    (rows(TemporalJoin.rewriteStreaming(spark, sql, wmOf, vm)),
+      rows(TemporalJoin.rewrite(sql, vm)))
+  }
+
+  test("streaming ON takes a parenthesized key equality") {
+    val (streamed, batch) = streamAndBatchOn("(r.k = o.k)")
+    assert(streamed === batch)
+    assert(streamed === Set((1L, 100L, Some(1.0d)), (1L, 200L, Some(2.0d)),
+      (2L, 400L, Some(9.0d)), (3L, 500L, None)))
+  }
+
+  test("streaming ON takes backticked key columns") {
+    val (streamed, batch) = streamAndBatchOn("r.`k` = o.`k`")
+    assert(streamed === batch)
+    assert(streamed.size === 4)
+  }
+
+  test("a quoted FOR SYSTEM_TIME AS OF text is no temporal clause") {
+    val out = TemporalJoin.rewrite("SELECT o.k, r.rate FROM o JOIN rates " +
+      "FOR SYSTEM_TIME AS OF o.t AS r ON r.k = o.k " +
+      "WHERE o.note <> 'FOR SYSTEM_TIME AS OF x'", attr)
+    assert(out.endsWith("WHERE o.note <> 'FOR SYSTEM_TIME AS OF x'"), out)
+  }
+
+  test("streaming DISTINCT keeps plain items' column names; an INSERT " +
+      "INTO TABLE head passes through") {
+    val spark = SparkFixture.spark
+    import spark.implicits._
+    Seq((1L, tsOf(12), 100L), (1L, tsOf(35), 100L)).toDF("k", "ot", "amount")
+      .createOrReplaceTempView("tjd_o")
+    Seq((1L, tsOf(10), 1.0d)).toDF("k", "rt", "rate")
+      .createOrReplaceTempView("tjd_r")
+    val vm = Map("tjd_r" -> VersionMeta("rt", Seq("k"))).get _
+    val wmOf: String => Option[(String, String)] = t =>
+      if (t.equalsIgnoreCase("tjd_o")) Some(("ot", "5 seconds")) else None
+    val join = "FROM tjd_o o JOIN tjd_r FOR SYSTEM_TIME AS OF o.ot AS r " +
+      "ON r.k = o.k"
+    val distinct = spark.sql(TemporalJoin.rewriteStreaming(spark,
+      s"SELECT DISTINCT o.k, r.rate $join", wmOf, vm))
+    assert(distinct.columns.toSeq === Seq("k", "rate"))
+    assert(distinct.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ===
+      Seq((1L, 1.0d)))
+    val insert = TemporalJoin.rewriteStreaming(spark,
+      s"INSERT INTO TABLE tjd_sink SELECT o.k, r.rate $join", wmOf, vm)
+    assert(insert.startsWith("INSERT INTO TABLE tjd_sink SELECT "), insert)
+  }
+
+  test("versionedViewOf reads DESC NULLS LAST and a backticked source") {
+    val body = """SELECT k, rt, rate FROM (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY rt DESC
+      |    NULLS LAST) AS rn
+      |  FROM `rates_log`) WHERE rn = 1""".stripMargin
+    assert(TemporalJoin.versionedViewOf(body) ===
+      Some(TemporalJoin.VersionedView("rates_log", "rt", Seq("k"),
+        Seq("k", "rt", "rate").map(c => c -> c))))
+  }
+
   test("streaming probe table accepts backtick-quoted names like the " +
       "versioned side") {
     val spark = SparkFixture.spark
