@@ -168,7 +168,7 @@ object MatchRecognize {
     * column IS a rowtime attribute in Flink, which is what lets a
     * pattern stage feed a downstream window/OVER/top-N; the CLI's
     * view registry records a view projecting it
-    * (SqlSubmitAction.recordViewWatermark → [[rowtimeMeasureOf]]).
+    * ([[rowtimeRegionOf]]).
     * Requires an ascending TIMESTAMP ORDER BY head (the same head
     * WITHIN requires; in streaming the head is the watermark column
     * already). */
@@ -1372,30 +1372,30 @@ object MatchRecognize {
     df
   }
 
-  /** Replaces every `<table> MATCH_RECOGNIZE (...)` region with a temp
-    * view holding the recognized matches; the surrounding statement
-    * (outer SELECT list, WHERE, trailing alias) is untouched. A
-    * subquery source — `FROM (SELECT ...) MATCH_RECOGNIZE (...)`,
-    * which Flink admits — evaluates first into its own temp view
-    * (streaming too, when the subquery's FROM names a
-    * WATERMARK-declared table and projects its event-time column —
-    * see [[rewriteStreaming]]'s lineage guards).
-    * Throws on any form the subset does not cover — no Flink syntax
-    * may leak to Spark's parser.
-    */
-  /** For the CLI's event-time view registry
-    * (SqlSubmitAction.recordViewWatermark): when `sql` contains exactly
-    * one MATCH_RECOGNIZE region over a BARE table/view source whose
-    * MEASURES declare a bare `MATCH_ROWTIME() AS x`, returns (source
-    * name, x). Flink's law: the MATCH_ROWTIME measure is a rowtime
-    * attribute of the pattern output, so a view projecting it can feed
-    * a downstream window TVF / OVER / top-N / temporal probe; the
-    * registry maps the view to (x's output name, the source's
+  /** When `sql` contains exactly one MATCH_RECOGNIZE region over a
+    * BARE table/view source whose MEASURES declare a bare
+    * `MATCH_ROWTIME() AS x`, returns (source name, x)
+    * ([[rowtimeRegionOf]]). */
+  def rowtimeMeasureOf(sql: String): Option[(String, String)] =
+    rowtimeRegionOf(sql).map(r => (r.src, r.alias))
+
+  /** A MATCH_ROWTIME pattern region: the source name, the measure's
+    * alias, where the source name starts, and the [from, to) span of
+    * `MATCH_RECOGNIZE (...)`. */
+  private[harness] final case class RowtimeRegion(src: String,
+      alias: String, srcStart: Int, from: Int, to: Int)
+
+  /** For the CLI's event-time view registry (SqlSubmitAction.recordView,
+    * which blanks the region and parses the rest): the region of
+    * [[rowtimeMeasureOf]]. Flink's law: the MATCH_ROWTIME measure is a
+    * rowtime attribute of the pattern output, so a view projecting it
+    * can feed a downstream window TVF / OVER / top-N / temporal probe;
+    * the registry maps the view to (x's output name, the source's
     * watermark delay). A subquery source or a second region stays
     * unregistered — the downstream pass then raises its named
     * needs-a-WATERMARK error, same as any other non-propagating view.
     */
-  def rowtimeMeasureOf(sql: String): Option[(String, String)] = {
+  private[harness] def rowtimeRegionOf(sql: String): Option[RowtimeRegion] = {
     val masked = maskQuoted(sql)
     for {
       m <- MarkerRe.findFirstMatchIn(masked)
@@ -1414,9 +1414,20 @@ object MatchRecognize {
         .toOption
       alias <- spec.measures.collectFirst {
         case MatchRowtimeMeasure(a) => a }
-    } yield (srcName, alias)
+    } yield RowtimeRegion(srcName, alias, tm.start(1), m.start, end)
   }
 
+  /** Replaces every `<table> MATCH_RECOGNIZE (...)` region with a temp
+    * view holding the recognized matches; the surrounding statement
+    * (outer SELECT list, WHERE, trailing alias) is untouched. A
+    * subquery source — `FROM (SELECT ...) MATCH_RECOGNIZE (...)`,
+    * which Flink admits — evaluates first into its own temp view
+    * (streaming too, when the subquery's FROM names a
+    * WATERMARK-declared table and projects its event-time column —
+    * see [[rewriteStreaming]]'s lineage guards).
+    * Throws on any form the subset does not cover — no Flink syntax
+    * may leak to Spark's parser.
+    */
   def rewrite(spark: SparkSession, sql: String): String = {
     var out = sql
     var guard = 0

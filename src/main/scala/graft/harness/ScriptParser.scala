@@ -156,6 +156,18 @@ object ScriptParser {
     (from, to)
   }
 
+  /** Splices `edits` ([from, to) spans with replacement text) into the
+    * [from, to) region of `sql`. */
+  private[harness] def splice(sql: String, from: Int, to: Int,
+      edits: Seq[(Int, Int, String)]): String = {
+    val out = new StringBuilder
+    val last = edits.sortBy(_._1).foldLeft(from) { case (at, (s, e, t)) =>
+      out.append(sql.substring(at, s)).append(t)
+      e
+    }
+    out.append(sql.substring(last, to)).toString
+  }
+
   /** Load + parse a script from `file://` or `hdfs://` (or any Hadoop FS
     * scheme — one code path, unlike the reference's two-way branch at
     * `SQLSubmitAction.java:163-186`; the FS API dispatches on scheme).

@@ -4,6 +4,12 @@ import graft.harness.connectors.{Datagen, PrintSink}
 import graft.harness.ddl.{DdlParser, TableDef}
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{Star, UnresolvedAttribute, UnresolvedHaving, UnresolvedIdentifier, UnresolvedRelation, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CreateView, DropView, Filter, Join, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.SparkSqlParser
+import org.apache.spark.sql.execution.command.CreateViewCommand
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import scala.collection.mutable
 
@@ -40,20 +46,18 @@ final class SqlSubmitAction(
     * streaming rewrites (OVER aggregation, window TVFs,
     * MATCH_RECOGNIZE, top-N — everything resolving through
     * [[watermarkOf]]) must accept a registered view wherever they
-    * accept a declared table. `CREATE [TEMPORARY] VIEW v AS SELECT ...
-    * FROM <watermarked relation> [WHERE ...]` records v → (the OUTPUT
-    * name the attribute rides out under, the relation's delay) when
-    * the single-table body keeps the attribute as a SIMPLE projection
-    * item — by name, under `SELECT *`, or under a plain alias
+    * accept a declared table. A CREATE VIEW records v → (the OUTPUT
+    * name the attribute rides out under, the source's delay) when the
+    * body carries the attribute as a SIMPLE projection item at every
+    * SELECT level — by name, under `*`, or under a plain alias
     * (`row_time AS rt` keeps the attribute a time attribute named rt,
     * exactly Flink's propagation rule: aliases preserve, expressions
-    * drop). A join/aggregation around it, or wrapping it in any
-    * expression, drops the record — those views stay plain relations
-    * and the downstream pass raises its named needs-a-WATERMARK
-    * error; DROP VIEW / CREATE OR REPLACE evict. Registered views
-    * resolve through [[watermarkOf]] themselves, so views CHAIN. The
-    * underlying `EventTimeWatermark` plan node rides the view
-    * regardless on streaming sources —
+    * drop); [[recordView]] has the whole law. Views that record
+    * nothing stay plain relations and the downstream pass raises its
+    * named needs-a-WATERMARK error; DROP VIEW / CREATE OR REPLACE
+    * evict. Registered views resolve through [[watermarkOf]]
+    * themselves, so views CHAIN. The underlying `EventTimeWatermark`
+    * plan node rides the view regardless on streaming sources —
     * [[graft.streaming.Watermarks.ensure]] reuses it — so the record
     * here only answers the REWRITES' column/delay lookup (bounded
     * sources run as batch with MAX_WATERMARK-at-end semantics and
@@ -123,553 +127,264 @@ final class SqlSubmitAction(
   private val autoSplitMats: mutable.Map[String, String] =
     mutable.LinkedHashMap.empty
 
-  // the column-alias list tolerates COMMENT clauses (shared fragment,
-  // DdlParser.ColListInner — quoted strings may hold parens)
-  private val CreateViewRe = (raw"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?" +
-    raw"(?:TEMPORARY\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.`]+)" +
-    raw"\s*(?:\((${DdlParser.ColListInner})\))?\s*AS\b(.*)$$").r
+  /** A CREATE or DROP VIEW statement as Spark's session parser reads
+    * it: the view name (its last part), whether it creates, IF NOT
+    * EXISTS, the column-alias names, and where the body starts. */
+  private final case class ViewStatement(name: String, create: Boolean,
+      ifNotExists: Boolean, colList: Option[Seq[String]], bodyStart: Int)
 
-  /** Leading identifier of a column-alias-list item — the alias name
-    * ahead of any COMMENT clause. */
-  private val ColListItemRe = raw"(?s)^\s*(`[^`]+`|[A-Za-z_]\w*)".r
-  private val DropViewRe = (raw"(?is)^\s*DROP\s+(?:TEMPORARY\s+)?VIEW\s+" +
-    raw"(?:IF\s+EXISTS\s+)?([\w.`]+)\s*;?\s*$$").r
-  private val ViewBodyRe = (raw"(?is)^\s*SELECT\s+(.+?)\s+" +
-    raw"FROM\s+([A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?(?!WHERE\b)[A-Za-z_]\w*)?" +
-    raw"(?:\s+WHERE\b.*)?;?\s*$$").r
-
-  /** A select-list item that is a SIMPLE projection of one column:
-    * `[tbl.]col`, `[tbl.]col AS alias`, or `[tbl.]col alias` — the
-    * shapes under which a time attribute survives a view (any real
-    * expression around it drops the attribute, per Flink). Group 1 is
-    * the optional qualifier, group 2 the source column, group 3 the
-    * output alias (absent = same name).
-    */
-  private val SimpleItemRe = (raw"(?is)^(?:([A-Za-z_]\w*)\.)?([A-Za-z_]\w*)" +
-    raw"(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?$$").r
-
-  private val QualStarRe = raw"(?s)^([A-Za-z_]\w*)\.\*$$".r
-
-  /** Paren depth just before index `idx` of (masked) text — used to
-    * tell a TOP-LEVEL `FROM`/`JOIN` relation position from one inside
-    * a subquery. */
-  private def depthAt(s: String, idx: Int): Int = {
-    var d = 0
-    var i = 0
-    while (i < idx) {
-      s.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    d
-  }
-
-  /** The output name the event-time column `col` rides out of this
-    * view under, if any: the select-list item that is the column
-    * itself (by name or `*`/`tbl.*`) or a plain alias of it — a
-    * keep-by-name item wins over aliased duplicates. `qualifierOk`
-    * gates QUALIFIED references (`s.row_time`, `s.*`) to the
-    * relation(s) that actually carry the attribute — on a join body,
-    * `d.row_time` naming a DIM column of the same name must not pose
-    * as the stream's attribute. Unqualified references are safe on
-    * joins too: had both sides carried the name, the CREATE VIEW
-    * itself would have failed as ambiguous. An optional `CREATE VIEW
-    * v (a, b, ...)` column-alias list renames POSITIONALLY, so the
-    * attribute's output name is the list entry at the item's index —
-    * unknowable when a star item shifts positions, in which case the
-    * view stays unrecorded (conservative). */
-  private def propagatedName(selectList: String, col: String,
-      qualifierOk: String => Boolean = _ => true,
-      colList: Option[Seq[String]] = None): Option[String] = {
-    val items = MatchRecognize.splitTopLevel(selectList)
-    val hits = items.zipWithIndex.flatMap {
-      case ("*", i) => Some((i, col))
-      case (QualStarRe(q), i) if qualifierOk(q) => Some((i, col))
-      case (SimpleItemRe(qual, src, alias), i)
-          if src.equalsIgnoreCase(col) &&
-            Option(qual).forall(qualifierOk) =>
-        Some((i, Option(alias).getOrElse(src)))
+  /** The view statement `sql` is, read from the text Spark executes:
+    * the Flink-dialect rewrites splice only inside the body, so the
+    * head — and with it the body's start — is the original's. */
+  private def viewStatementOf(sql: String): Option[ViewStatement] = {
+    val stop = sql.lastIndexWhere(!_.isWhitespace) + 1
+    def created(name: String, cols: Seq[(String, Option[String])],
+        body: Option[String], ifNotExists: Boolean) =
+      body.map(b => ViewStatement(name, create = true, ifNotExists,
+        Some(cols.map(_._1)).filter(_.nonEmpty), stop - b.length))
+    scala.util.Try(new SparkSqlParser().parsePlan(sql)).toOption.flatMap {
+      case c: CreateViewCommand => created(c.name.table,
+        c.userSpecifiedColumns, c.originalText, c.allowExisting)
+      case c @ CreateView(UnresolvedIdentifier(parts, _), _, _, _, _, _, _,
+          _, _, _) =>
+        created(parts.last, c.userSpecifiedColumns, c.originalText,
+          c.allowExisting)
+      case DropView(UnresolvedIdentifier(parts, _), _) =>
+        Some(ViewStatement(parts.last, create = false, ifNotExists = false,
+          None, stop))
       case _ => None
     }
-    val hit = hits.find(_._2.equalsIgnoreCase(col)).orElse(hits.headOption)
-    hit.flatMap { case (i, nm) =>
-      colList match {
-        case None => Some(nm)
-        case Some(cl) =>
-          val hasStar = items.exists(it =>
-            it == "*" || QualStarRe.findFirstIn(it).isDefined)
-          if (hasStar) None else cl.lift(i)
-      }
+  }
+
+  /** Flink's `DROP TEMPORARY VIEW` is Spark's `DROP VIEW`. */
+  private val DropTemporaryRe = raw"(?is)^(\s*DROP\s+)TEMPORARY\s+(?=VIEW\b)".r
+
+  /** The body plan of the CREATE VIEW `sql`, parsed once with its
+    * Flink-only regions blanked by same-length text — the `FOR
+    * SYSTEM_TIME AS OF` clauses, the MATCH_ROWTIME pattern region
+    * `region`, and each window-TVF call, which leaves its source name
+    * in place — so the plan's origins index `sql`. */
+  private def viewBodyOf(sql: String,
+      region: Option[MatchRecognize.RowtimeRegion]): Option[LogicalPlan] = {
+    val blanked = (region.map(r => (r.from, r.to, "")).toSeq ++
+      WindowTvf.tvfCalls(sql)).foldLeft(TemporalJoin.blankClauses(sql)) {
+      case (s, (from, to, keep)) => s.patch(from, keep.padTo(to - from, ' '),
+        to - from)
+    }
+    scala.util.Try(new SparkSqlParser().parsePlan(blanked)).toOption.collect {
+      case c: CreateViewCommand => c.plan
+      case c: CreateView => c.query
     }
   }
 
-  /** True when this CREATE VIEW statement is a Spark NO-OP: an
-    * `IF NOT EXISTS` form whose view already exists keeps the OLD
-    * definition, so the registry must not be updated from the NEW
-    * statement's text. Checked BEFORE execution. */
-  private def isViewCreateNoOp(spark: SparkSession, sql: String): Boolean =
-    CreateViewRe.findFirstMatchIn(sql).exists(m =>
-      m.group(1) != null && scala.util.Try(
-        spark.catalog.tableExists(DdlParser.unquoteName(m.group(2))))
-        .getOrElse(false))
+  /** The event-time attribute on its way up a view body: its name at
+    * this level, the qualifiers that name it, its position in this
+    * level's projection (None past a star), and how many projection
+    * levels it has passed. */
+  private final case class Carried(name: String, quals: Seq[String],
+      index: Option[Int], levels: Int)
 
-  /** Tracks CREATE/DROP VIEW statements' effect on the event-time
+  /** Folds the attribute `attr` of the relation `leaf` inside-out
+    * through the body's levels, the way Flink applies its projection
+    * law per SELECT level: filters and subquery aliases keep it, a
+    * projection keeps it only as a SIMPLE item ([[projected]]), a
+    * join keeps it (the callers admit only lookup and temporal
+    * joins), and an aggregation keeps it only right
+    * above a window TVF (`tvf`: window_time is a rowtime attribute of
+    * the window aggregation's output). Any other node — a set op, a
+    * DISTINCT, a sort or limit, a GROUP BY elsewhere — drops it. */
+  private def carry(p: LogicalPlan, leaf: UnresolvedRelation, attr: String,
+      tvf: Boolean): Option[Carried] = {
+    def up(child: LogicalPlan) = carry(child, leaf, attr, tvf)
+    p match {
+      case r: UnresolvedRelation if r eq leaf =>
+        Some(Carried(attr, Seq(r.multipartIdentifier.last), None, 0))
+      case SubqueryAlias(id, child) =>
+        up(child).map(_.copy(quals = Seq(id.name)))
+      case Filter(_, child) => up(child)
+      case UnresolvedHaving(_, child) => up(child)
+      case Project(items, child) =>
+        up(child).filter(c => !tvf || c.levels > 0).flatMap(projected(items, _))
+      case a: Aggregate if tvf =>
+        up(a.child).filter(_.levels == 0)
+          .flatMap(projected(a.aggregateExpressions, _))
+      case j: Join =>
+        j.children.find(_.find(_ eq leaf).isDefined).flatMap(up)
+      case _ => None
+    }
+  }
+
+  /** The attribute past one select list: the item that is the column
+    * itself (by name or `*`/`q.*`) or a plain alias of it (`row_time
+    * AS rt` keeps the attribute under rt, Flink's alias propagation; a
+    * DIFFERENT column renamed onto the attribute's name is an
+    * expression item and carries nothing) — a keep-by-name item wins
+    * over aliased duplicates. Qualified references must name the
+    * attribute's relation: on a join body, `d.row_time` naming a DIM
+    * column of the same name must not pose as the stream's attribute.
+    * Unqualified references are safe on joins too: had both sides
+    * carried the name, the CREATE VIEW itself would have failed as
+    * ambiguous. */
+  private def projected(items: Seq[Expression], c: Carried): Option[Carried] = {
+    def qualOk(q: Seq[String]) =
+      q.isEmpty || q.size == 1 && c.quals.exists(_.equalsIgnoreCase(q.head))
+    def column(e: Expression) = Some(e).collect {
+      case a: UnresolvedAttribute if a.nameParts.size <= 2 &&
+          a.nameParts.last.equalsIgnoreCase(c.name) && qualOk(a.nameParts.init) =>
+        a.nameParts.last
+    }
+    val hits = items.zipWithIndex.flatMap {
+      case (UnresolvedStar(q), i) if qualOk(q.getOrElse(Nil)) => Some((i, c.name))
+      case (Alias(e, out), i) => column(e).map(_ => (i, out))
+      case (e, i) => column(e).map((i, _))
+    }
+    hits.find(_._2.equalsIgnoreCase(c.name)).orElse(hits.headOption).map {
+      case (i, out) => Carried(out, Nil,
+        Some(i).filterNot(_ => items.exists(_.isInstanceOf[Star])), c.levels + 1)
+    }
+  }
+
+  /** Tracks a CREATE/DROP VIEW statement's effect on the event-time
     * registry; called after the statement executed (so the view
-    * exists and its resolved schema is inspectable). A view records
-    * only when the attribute rides a SIMPLE projection item
-    * ([[propagatedName]]) — so `row_time AS rt` records rt (r16:
-    * Flink's alias propagation) while a DIFFERENT column renamed onto
-    * the source's event-time name is an expression item and stays
-    * unrecorded: the projection lineage, not the output name,
-    * decides. When the view keeps the source name, that field wins
-    * over aliased duplicates (`SELECT row_time, row_time AS rt2`
-    * records row_time). */
-  private def recordViewWatermark(spark: SparkSession, sql: String): Unit = {
-    def evict(name: String): Unit = {
-      viewWatermarks.keys.find(_.equalsIgnoreCase(name))
-        .foreach(viewWatermarks.remove(_): Unit)
-      versionedViews.keys.find(_.equalsIgnoreCase(name))
-        .foreach(versionedViews.remove(_): Unit)
-      // the derived history entry must not outlive its view: a stale
-      // graft_vv_* VersionMeta could otherwise shadow a later relation
-      // of the same name through versionMetaOf's orElse (r20 advice)
-      versionedHistoryMeta.remove(TemporalJoin.historyNameOf(name)): Unit
-      viewDefs.remove(name.toLowerCase): Unit
-      autoSplitMats.remove(name.toLowerCase): Unit
-    }
-    DropViewRe.findFirstMatchIn(sql).foreach(m =>
-      evict(DdlParser.unquoteName(m.group(1))))
-    CreateViewRe.findFirstMatchIn(sql).foreach { m =>
-      val name = DdlParser.unquoteName(m.group(2))
-      evict(name)
-      val colList = Option(m.group(3)).map(cl =>
-        MatchRecognize.splitTopLevel(cl).map(it =>
-          ColListItemRe.findFirstMatchIn(it)
-            .map(mm => DdlParser.unquoteName(mm.group(1)))
-            .getOrElse(it)))
-      val raw = m.group(4)
-      viewDefs(name.toLowerCase) = raw.trim
-      // KEYWORD guards run on the raw body MASKED (a backtick-quoted
-      // column named `union` or `join` is blanked and cannot trip a
-      // keyword test); STRUCTURE scans run on the body with simple
-      // backtick quotes stripped first and THEN masked, so a
-      // backticked relation (`FROM \`psrc\``) or projection item
-      // (`\`row_time\``) still reads as its identifier while string
-      // literals stay blanked. Offsets of the scan body align 1:1
-      // with the unticked raw text for select-list slicing.
-      val guardBody = MatchRecognize.maskQuoted(raw)
-      val unticked = untick(raw)
-      val body = MatchRecognize.maskQuoted(unticked)
-      // versioned-view detection (r19): the dedup shape over a
-      // watermarked relation — a DDL table OR a registered view whose
-      // propagated rowtime is the ORDER BY column (Flink accepts
-      // dedup views over views) — with the key + time columns
-      // projected (the temporal rewrite needs both on the history
-      // relation; checked by SOURCE name since r20, when in-body `AS`
-      // renames became legal — the derived history view and its
-      // VersionMeta carry the renamed outputs). A `CREATE VIEW v (a,
-      // b, ...)` column-alias list renames POSITIONALLY, composing
-      // onto the items the same way (r20; a length mismatch would
-      // have failed the CREATE itself — guarded anyway).
-      for {
-        vv0 <- TemporalJoin.versionedViewOf(unticked)
-        if colList.forall(_.length == vv0.items.length)
-        // the list's names feed engine-GENERATED history-view SQL, so
-        // they must pass the same identifier charset the in-body
-        // alias parse enforces (r20 review: a backticked multi-word
-        // alias would otherwise parse-fail text the user never wrote)
-        if colList.forall(_.forall(_.matches(GeneratedSqlIdent)))
-        vv = colList match {
-          case Some(cl) => vv0.copy(items = vv0.items.map(_._1).zip(cl))
-          case None => vv0
-        }
-        (wmCol, _) <- watermarkOf(vv.srcTable)
-        if wmCol.equalsIgnoreCase(vv.timeCol)
-        if vv.primaryKey.forall(k =>
-          vv.items.exists(_._1.equalsIgnoreCase(k)))
-        if vv.items.exists(_._1.equalsIgnoreCase(vv.timeCol))
-      } versionedViews(name) = vv
-      // a set op has no single propagated time attribute to speak for;
-      // a plain GROUP BY drops rowtime too (Flink) — EXCEPT the
-      // window-TVF aggregation, whose window_time output IS a rowtime
-      // attribute (Flink emits it as one, enabling two-stage streaming
-      // pipelines: windowed pre-agg → OVER/top-N/another window)
-      val hasSetOp = raw"(?is)\b(UNION|INTERSECT|EXCEPT)\b".r
-        .findFirstIn(guardBody).isDefined
-      val hasGroupBy = raw"(?is)\bGROUP\s+BY\b".r
-        .findFirstIn(guardBody).isDefined
-      // Flink drops time attributes through REGULAR joins — the plain
-      // branch routes such bodies through recordJoinViewWatermark's
-      // stream-static validation, and the pattern/temporal branches
-      // must not register past one either (r19, advice): a pattern
-      // view counts any JOIN as regular (MATCH_RECOGNIZE carries
-      // none of its own); a temporal-join view registers only when
-      // every join of its parsed body is temporal; an IMPLICIT comma
-      // join in the FROM region counts for every branch (r19 review —
-      // `FROM t, dim` is the same regular join). Such views stay
-      // unregistered — fail closed,
-      // the downstream pass raises its named needs-a-WATERMARK
-      // error, matching Flink's rejection of a window over a dropped
-      // attribute. Deliberate asymmetry vs the plain branch: a
-      // stream-static JOIN view registers there via the harness's
-      // r16 lookup-join mapping (a documented superset of Flink's
-      // law); the pattern/temporal branches stay on the letter of
-      // the law instead — their output already rides tracker
-      // mechanics, and widening a superset around those is not worth
-      // the drift risk.
-      val joinKeywords = raw"(?is)\bJOIN\b".r.findAllIn(guardBody).size
-      val hasCommaJoin = hasTopLevelFromComma(guardBody)
-      if (MatchRecognize.hasMatchRecognize(guardBody)) {
-        // pattern-output view (r18): Flink's MATCH_ROWTIME() measure
-        // is a rowtime attribute of the MATCH_RECOGNIZE output, so a
-        // view projecting it feeds a downstream window/OVER/top-N/
-        // temporal probe — the chained-stage mechanics
-        // (Watermarks.isChained over the tracker's
-        // flatMapGroupsWithState, never-late input, single-watermark
-        // propagation) handle the streaming execution; this record
-        // answers the downstream rewrite's column/delay lookup. The
-        // projection rule is the same SIMPLE-item law as plain views.
-        // The delay is the pattern SOURCE's — conservative, since
-        // tracker emissions are watermark-gated and non-decreasing.
-        // A GROUP BY around the pattern drops the attribute (Flink's
-        // aggregation law — only window-TVF aggs keep one, and those
-        // bodies carry no MATCH_RECOGNIZE text of their own).
-        if (!hasSetOp && !hasGroupBy && joinKeywords == 0 &&
-            !hasCommaJoin)
-          for {
-            (srcName, mrtAlias) <- MatchRecognize.rowtimeMeasureOf(unticked)
-            (_, delay) <- watermarkOf(srcName)
-          } registerSimpleAttr(spark, name, body, unticked, colList,
-            mrtAlias, delay)
-      } else if (TemporalJoin.hasTemporalJoin(guardBody)) {
-        // temporal-join view (r18): Flink preserves the PROBE side's
-        // rowtime through FOR SYSTEM_TIME AS OF, so a view over the
-        // join feeds a downstream window/OVER/top-N when its
-        // projection keeps the probe's event-time column as a SIMPLE
-        // item qualified by the probe alias (or bare / starred). The
-        // chained-stage mechanics run the streaming execution (the
-        // view's stored plan holds the tracker); this record answers
-        // the downstream rewrite's column/delay lookup, in batch too
-        // (the interval-ized rewrite keeps the probe columns).
-        if (!hasSetOp && !hasGroupBy)
-          for {
-            (pTable, pAlias) <- TemporalJoin.probeOf(unticked)
-            (col, delay) <- watermarkOf(pTable)
-          } registerSimpleAttr(spark, name, body, unticked, colList,
-            col, delay,
-            qualifierOk = q => q.equalsIgnoreCase(pAlias) ||
-              q.equalsIgnoreCase(pTable))
-      } else if (!hasSetOp && !hasGroupBy) {
-        if (joinKeywords == 0 && !hasCommaJoin) {
-          for {
-            bm <- ViewBodyRe.findFirstMatchIn(body)
-            (col, delay) <- watermarkOf(bm.group(2))
-            out <- propagatedName(
-              unticked.substring(bm.start(1), bm.end(1)), col,
-              colList = colList)
-            // sanity: the resolved view really exposes that field
-            if scala.util.Try(spark.table(name).schema).toOption
-              .exists(_.exists(_.name.equalsIgnoreCase(out)))
-          } viewWatermarks(name) = (out, delay)
-        } else recordJoinViewWatermark(spark, name, unticked, body, colList)
-      } else if (!hasSetOp && hasGroupBy &&
-          WindowTvf.hasWindowTvf(guardBody) &&
-          joinKeywords == 0 && !hasCommaJoin) {
-        // window-TVF aggregation view: record (view -> window_time's
-        // output name, the TVF SOURCE's delay). The source delay is
-        // conservative — windows emit watermark-gated, so window_time
-        // is globally non-decreasing across batches and any
-        // non-negative delay is drop-safe downstream. The projection
-        // rule is the same SIMPLE-item law as plain views: an
-        // expression around window_time drops the attribute. The
-        // downstream pass handles the chained-stateful mechanics
-        // (never-late input, single-watermark propagation) — see
-        // [[graft.streaming.Watermarks.neverLate]].
-        for {
-          src <- WindowTvf.tvfSourceName(unticked)
-          (_, delay) <- watermarkOf(src)
-        } registerSimpleAttr(spark, name, body, unticked, colList,
-          "window_time", delay)
+    * exists and its resolved schema is inspectable). `sql` is the
+    * statement as written. Both evict the view's records; a CREATE
+    * then records its body text ([[viewDefs]]), its versioned-view
+    * shape ([[recordVersionedView]]) and its rowtime attribute
+    * ([[recordRowtime]]). */
+  private def recordView(spark: SparkSession, v: ViewStatement,
+      sql: String): Unit = {
+    viewWatermarks.keys.find(_.equalsIgnoreCase(v.name))
+      .foreach(viewWatermarks.remove(_): Unit)
+    versionedViews.keys.find(_.equalsIgnoreCase(v.name))
+      .foreach(versionedViews.remove(_): Unit)
+    // the derived history entry must not outlive its view: a stale
+    // graft_vv_* VersionMeta could otherwise shadow a later relation
+    // of the same name through versionMetaOf's orElse (r20 advice)
+    versionedHistoryMeta.remove(TemporalJoin.historyNameOf(v.name)): Unit
+    viewDefs.remove(v.name.toLowerCase): Unit
+    autoSplitMats.remove(v.name.toLowerCase): Unit
+    if (v.create) {
+      viewDefs(v.name.toLowerCase) = sql.substring(v.bodyStart).trim
+      val masked = MatchRecognize.maskQuoted(sql)
+      val pattern = MatchRecognize.hasMatchRecognize(masked)
+      val region = if (pattern) MatchRecognize.rowtimeRegionOf(sql) else None
+      viewBodyOf(sql, region).foreach { body =>
+        recordVersionedView(v, body)
+        val temporal = !pattern && TemporalJoin.hasTemporalJoin(masked)
+        val tvfCall =
+          if (pattern || temporal) None else WindowTvf.tvfCalls(sql).headOption
+        recordRowtime(spark, v, sql, body, region.filter(_ => pattern),
+          temporal, tvfCall)
       }
     }
   }
 
-  /** True when ANY FROM region in the body carries a comma at that
-    * region's own paren depth — an IMPLICIT (comma) regular join,
-    * which drops time attributes in Flink exactly like the JOIN
-    * keyword (r19 review; generalized past the top level in the same
-    * round's second pass: the JOIN-keyword guard counts at any depth,
-    * and a comma join one subquery down drops the attribute just the
-    * same). Each region's scan stops at the region's closing paren or
-    * at a clause keyword AT ITS DEPTH (GROUP BY / ORDER BY lists
-    * carry legal commas); select-list commas sit before the FROM, and
-    * MATCH_RECOGNIZE / TVF / function-argument commas sit deeper.
-    * EXTRACT/TRIM/SUBSTRING(... FROM ...) regions are comma-free
-    * forms. Runs on masked text.
-    */
-  private def hasTopLevelFromComma(body: String): Boolean =
-    fromRegionCommas(body).nonEmpty
-
-  /** Indices of every comma sitting at a FROM region's own paren depth
-    * — the IMPLICIT-join relation commas. Each region's scan stops at
-    * the region's closing paren or at a clause keyword AT ITS DEPTH
-    * (GROUP BY / ORDER BY lists carry legal commas that are NOT
-    * relation positions — r20 advice: the relation-scan regex's bare
-    * `,\s*` alternative matched those too, so an ORDER BY item that
-    * coincided with a watermarked relation name inflated the lookup-
-    * shape count and silently skipped registering a legitimate view).
-    * Select-list commas sit before the FROM, and MATCH_RECOGNIZE /
-    * TVF / function-argument commas sit deeper. Runs on masked text.
-    */
-  private def fromRegionCommas(body: String): Set[Int] = {
-    val clauses = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
-      "UNION", "INTERSECT", "EXCEPT", "WINDOW")
-    val found = Set.newBuilder[Int]
-    raw"(?is)(?<![\w.])FROM\b".r.findAllMatchIn(body).foreach { m =>
-      val d0 = depthAt(body, m.start)
-      var depth = d0
-      var i = m.end
-      var stop = false
-      while (i < body.length && !stop) {
-        body.charAt(i) match {
-          case '(' => depth += 1; i += 1
-          case ')' =>
-            depth -= 1
-            if (depth < d0) stop = true else i += 1
-          case ',' if depth == d0 => found += i; i += 1
-          case c if (c.isLetter || c == '_') && depth == d0 =>
-            val s = i
-            while (i < body.length &&
-              (body.charAt(i).isLetterOrDigit || body.charAt(i) == '_'))
-              i += 1
-            if (s > 0 && body.charAt(s - 1) != '.' &&
-              clauses(body.substring(s, i).toUpperCase)) stop = true
-          case _ => i += 1
-        }
-      }
-    }
-    found.result()
-  }
-
-  /** Shared tail of the rowtime-carrying view-registration branches
-    * (window-TVF `window_time`, MATCH_ROWTIME pattern views,
-    * temporal-join probe views): resolves the attribute `col` through
-    * the body's SELECT levels, sanity-checks the created view really
-    * exposes the resolved output name, and records (out, delay).
-    *
-    * Levels resolve STRUCTURALLY, the way Flink applies its
-    * projection law per SELECT level: when a level's FROM target is a
-    * parenthesized subquery — `SELECT * FROM (SELECT ... FROM t
-    * MATCH_RECOGNIZE(...)) w` — the walk peels it, requires the tail
-    * after the subquery to be only an optional alias plus an optional
-    * clean WHERE (a top-level JOIN / GROUP BY / ORDER BY / LIMIT /
-    * set op at a wrapper level drops the attribute; a filter keeps
-    * it), and folds the attribute name inside-out through every
-    * level's SIMPLE-item law. A level that wraps the attribute in an
-    * EXPRESSION (`mrt + INTERVAL '1' HOUR AS mrt`) fails its
-    * propagatedName and the view stays unregistered — the downstream
-    * pass then raises its named needs-a-WATERMARK error, never the
-    * silent wrong-window risk of registering a shifted column.
-    * Slicing runs on body (masked unticked) with raw item text
-    * re-read from unticked at the same offsets; the walk is
-    * structural, so no keyword counting can be tripped by quoted
-    * text. */
-  private def registerSimpleAttr(spark: SparkSession, name: String,
-      body: String, unticked: String,
-      colList: Option[Seq[String]], col: String, delay: String,
-      qualifierOk: String => Boolean = _ => true): Unit = {
-    // tail after a wrapper's closing paren: an optional alias, then
-    // the remainder (must be empty or a clean WHERE — checked below)
-    val WrapTailRe =
-      raw"(?is)^(?:\s+(?:AS\s+)?(?!WHERE\b)([A-Za-z_]\w*))?\s*(.*)$$".r
-    // one (selectList, qualifier law) per level, OUTERMOST first. A
-    // wrapper level's items may qualify with its own subquery alias
-    // (`SELECT w.mrt FROM (...) w`); the innermost level's items with
-    // the branch's relations (the caller's qualifierOk).
-    def collect(b: String, u: String, depth: Int)
-        : Option[List[(String, String => Boolean)]] = {
-      if (depth > 5) return None
-      // the FROM target begins past whitespace AND block comments —
-      // `FROM /* hint */ (SELECT ...)` is still a wrapper, and must
-      // never be misread as an innermost level (that would skip the
-      // inner list's simple-item check entirely). Known bound: b is
-      // quote-MASKED by the comment-UNAWARE maskQuoted, so a comment
-      // containing a quote char blanks past its own `*/` — the scan
-      // then finds no close and the guard below fails CLOSED
-      // (unregistered + the named error downstream, never a silent
-      // mis-register); the same limitation governs every masked-text
-      // scan in this file
-      def targetStart(from: Int): Int = {
-        var i = from
-        var go = true
-        while (go) {
-          while (i < b.length && b.charAt(i).isWhitespace) i += 1
-          if (i + 1 < b.length && b.charAt(i) == '/' &&
-              b.charAt(i + 1) == '*') {
-            val e = b.indexOf("*/", i + 2)
-            i = if (e < 0) b.length else e + 2
-          } else go = false
-        }
-        i
-      }
-      for {
-        selM <- raw"(?is)^\s*SELECT\s+".r.findFirstMatchIn(b)
-        fromIdx <- WindowTvf.findTopLevel(b, selM.end, "FROM")
-        list = u.substring(selM.end, fromIdx).trim
-        targetIdx = targetStart(fromIdx + 4)
-        // fail CLOSED on anything that is neither a subquery paren nor
-        // a relation token — an unrecognized target must leave the
-        // view unregistered, never default to the innermost-level law
-        if targetIdx < b.length && (b.charAt(targetIdx) == '(' ||
-          b.charAt(targetIdx).isLetter || b.charAt(targetIdx) == '_' ||
-          b.charAt(targetIdx) == '`')
-        lvls <-
-          if (b.charAt(targetIdx) != '(')
-            Some(List((list, qualifierOk))) // innermost level
-          else
-            for {
-              close <- scala.util.Try(
-                MatchRecognize.closeParen(b, targetIdx)).toOption
-              tm <- WrapTailRe.findFirstMatchIn(b.substring(close))
-              tail = tm.group(2).trim
-              // a top-level JOIN / GROUP BY / ORDER BY / LIMIT / set
-              // op around the wrapper drops the attribute; a plain
-              // WHERE keeps it (filters preserve rowtime)
-              if tail.isEmpty || (raw"(?is)^WHERE\b".r
-                .findFirstIn(tail).isDefined &&
-                Seq("GROUP", "ORDER", "UNION", "INTERSECT", "EXCEPT",
-                  "JOIN", "LIMIT")
-                  .forall(k => WindowTvf.findTopLevel(tail, 0, k).isEmpty))
-              inner <- collect(b.substring(targetIdx + 1, close - 1),
-                u.substring(targetIdx + 1, close - 1), depth + 1)
-              alias = Option(tm.group(1))
-            } yield (list,
-              (q: String) => alias.exists(_.equalsIgnoreCase(q))) :: inner
-      } yield lvls
-    }
+  /** Versioned-view detection (r19): the dedup shape over a
+    * watermarked relation — a DDL table OR a registered view whose
+    * propagated rowtime is the ORDER BY column (Flink accepts dedup
+    * views over views) — with the key + time columns projected (the
+    * temporal rewrite needs both on the history relation; checked by
+    * SOURCE name since r20, when in-body `AS` renames became legal —
+    * the derived history view and its VersionMeta carry the renamed
+    * outputs). A column-alias list renames POSITIONALLY, composing
+    * onto the items the same way (r20; a length mismatch would have
+    * failed the CREATE itself — guarded anyway). */
+  private def recordVersionedView(v: ViewStatement, body: LogicalPlan): Unit =
     for {
-      lvls <- collect(body, unticked, 0)
-      // the attribute flows inner -> outer: fold innermost-first; the
-      // view's declared column-alias list renames the OUTERMOST level
-      ordered = lvls.reverse
-      out <- ordered.zipWithIndex.foldLeft(Option(col)) {
-        case (acc, ((list, q), i)) => acc.flatMap(n =>
-          propagatedName(list, n, q,
-            if (i == ordered.length - 1) colList else None))
-      }
-      if scala.util.Try(spark.table(name).schema).toOption
-        .exists(_.exists(_.name.equalsIgnoreCase(out)))
-    } viewWatermarks(name) = (out, delay)
-  }
+      vv0 <- TemporalJoin.versionedViewIn(body)
+      if v.colList.forall(_.length == vv0.items.length)
+      // the list's names feed engine-GENERATED history-view SQL, so
+      // they must pass the same identifier charset the in-body alias
+      // parse enforces (r20 review: a backticked multi-word alias
+      // would otherwise parse-fail text the user never wrote)
+      if v.colList.forall(_.forall(_.matches(GeneratedSqlIdent)))
+      vv = v.colList.fold(vv0)(cl => vv0.copy(items = vv0.items.map(_._1).zip(cl)))
+      (wmCol, _) <- watermarkOf(vv.srcTable)
+      if wmCol.equalsIgnoreCase(vv.timeCol)
+      if vv.primaryKey.forall(k => vv.items.exists(_._1.equalsIgnoreCase(k)))
+      if vv.items.exists(_._1.equalsIgnoreCase(vv.timeCol))
+    } versionedViews(v.name) = vv
 
-  /** Strips backtick quotes around SIMPLE identifiers. Applied to raw
-    * select-list slices only — never to text a keyword test runs on. */
-  private def untick(s: String): String =
-    raw"`([A-Za-z_]\w*)`".r.replaceAllIn(s, mm => mm.group(1))
+  /** Records the view's rowtime attribute when [[carry]] brings it to
+    * the output from one of its sources:
+    *  - a MATCH_ROWTIME pattern measure (r18, `region`): a rowtime
+    *    attribute of the MATCH_RECOGNIZE output — the chained-stage
+    *    mechanics (Watermarks.isChained over the tracker's
+    *    flatMapGroupsWithState) run the streaming execution, and the
+    *    delay is the pattern SOURCE's (tracker emissions are
+    *    watermark-gated and non-decreasing);
+    *  - the PROBE side of `FOR SYSTEM_TIME AS OF` joins (r18,
+    *    `temporal`): Flink preserves the probe's rowtime through them,
+    *    in batch too (the interval-ized rewrite keeps the probe
+    *    columns) — only while every join of the body is temporal;
+    *  - a window-TVF aggregation's window_time (r17, `tvfCall`), under
+    *    the TVF source's delay — conservative, since windows emit
+    *    watermark-gated, so window_time is non-decreasing across
+    *    batches;
+    *  - the single watermarked relation of any other body (r16),
+    *    through joins too: Spark's stream-static join is the analogue
+    *    of Flink's LOOKUP join (the static side is re-read per
+    *    micro-batch), which preserves the stream side's rowtime — a
+    *    documented superset of Flink's law. A stream-STREAM join drops
+    *    it: exactly one relation anywhere in the body, subqueries
+    *    included, may resolve through [[watermarkOf]], and an
+    *    unbounded run's analyzed view must carry one streaming leaf.
+    * Pattern and TVF bodies stay on the letter of the law: any join,
+    * comma joins and joins inside subqueries included, drops their
+    * attribute. Views that record nothing stay plain relations and the
+    * downstream pass raises its named needs-a-WATERMARK error. */
+  private def recordRowtime(spark: SparkSession, v: ViewStatement,
+      sql: String, body: LogicalPlan,
+      region: Option[MatchRecognize.RowtimeRegion], temporal: Boolean,
+      tvfCall: Option[(Int, Int, String)]): Unit = {
+    val nodes = ScriptParser.nodesOf(body)
+    val hasJoin = nodes.exists(_.isInstanceOf[Join])
+    def relName(r: UnresolvedRelation) = r.multipartIdentifier.mkString(".")
+    def relationAt(start: Int) = nodes.collectFirst {
+      case r: UnresolvedRelation if r.origin.startIndex.contains(start) => r }
+    def oneStream = scala.util.Try(spark.table(v.name)).toOption.exists(df =>
+      !df.isStreaming ||
+        df.queryExecution.analyzed.collectLeaves().count(_.isStreaming) == 1)
+    // (the relation the attribute comes from, its name there, delay)
+    val source: Option[(UnresolvedRelation, String, String)] =
+      if (region.isDefined || tvfCall.isDefined) for {
+        (src, attr, start) <- region.map(r => (r.src, r.alias, r.srcStart))
+          .orElse(tvfCall.map { case (start, _, src) =>
+            (DdlParser.unquoteName(src), "window_time", start) })
+        if !hasJoin
+        (_, delay) <- watermarkOf(src)
+        leaf <- relationAt(start)
+      } yield (leaf, attr, delay)
+      else if (temporal) for {
+        probe <- TemporalJoin.probeIn(sql, body)
+        leaf <- probe.collectFirst { case r: UnresolvedRelation => r }
+        (col, delay) <- watermarkOf(relName(leaf))
+      } yield (leaf, col, delay)
+      else nodes.collect {
+        case r: UnresolvedRelation if watermarkOf(relName(r)).isDefined => r
+      } match {
+        case Seq(leaf) if !hasJoin || oneStream =>
+          watermarkOf(relName(leaf)).map { case (col, delay) =>
+            (leaf, col, delay) }
+        case _ => None
+      }
+    for {
+      (leaf, attr, delay) <- source
+      c <- carry(body, leaf, attr, tvf = tvfCall.isDefined)
+      // a column-alias list renames the output POSITIONALLY —
+      // unknowable past a star, so the view then stays unrecorded
+      out <- v.colList.fold(Option(c.name))(cl => c.index.flatMap(cl.lift))
+      // sanity: the resolved view really exposes that field
+      if scala.util.Try(spark.table(v.name).schema).toOption
+        .exists(_.exists(_.name.equalsIgnoreCase(out)))
+    } viewWatermarks(v.name) = (out, delay)
+  }
 
   /** The identifier charset every name feeding engine-GENERATED SQL
     * must pass (auto-split DDL columns, enrichment dim columns,
     * versioned-view column-alias lists) — one constant, so the guards
     * can never desynchronize (second review pass). */
   private val GeneratedSqlIdent = raw"^[A-Za-z_]\w*$$"
-
-  /** Relations named in FROM/JOIN positions with their optional alias.
-    * The negative lookahead keeps join keywords and ON/WHERE from
-    * being read as an alias. */
-  // a relation position opens after FROM/JOIN — or after a COMMA (the
-  // implicit-join list, r19 review: `FROM s1 a, s2 b` must count BOTH
-  // relations, or a stream-stream comma join would undercount to the
-  // one-watermarked-relation lookup shape and register)
-  private val RelWithAliasRe = (raw"(?is)(?:(?<!\.)\b(?:FROM|JOIN)\s+|,\s*)" +
-    raw"([A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?" +
-    raw"(?!ON\b|WHERE\b|JOIN\b|LEFT\b|RIGHT\b|FULL\b|INNER\b|CROSS\b|" +
-    raw"USING\b|GROUP\b|ORDER\b|LIMIT\b)([A-Za-z_]\w*))?").r
-
-  /** JOIN view bodies: Spark's stream-static join is the analogue of
-    * Flink's LOOKUP join (the static side is re-read per micro-batch —
-    * processing-time enrichment), and a lookup join PRESERVES the
-    * stream side's rowtime attribute, so a view like
-    * `SELECT s.id, s.row_time, d.tag FROM stream s JOIN dim d ON ...`
-    * records the stream's (column, delay) — renamed or starred items
-    * ride [[propagatedName]] with qualifier gating (once the stream
-    * relation is aliased, ONLY the alias qualifies: a dim aliased
-    * with the stream's table name must not pose). A regular
-    * stream-STREAM join keeps the named rejection (Flink drops
-    * rowtime through regular joins, and so does this registry):
-    * exactly one FROM/JOIN relation may resolve through
-    * [[watermarkOf]] ANYWHERE in the FROM tail — subqueries included,
-    * so a second watermarked relation hidden behind `JOIN (SELECT
-    * ...)` still rejects — and on an unbounded run the analyzed plan
-    * must additionally carry exactly one streaming leaf (a bounded
-    * run executes as batch with MAX_WATERMARK-at-end semantics, where
-    * the single watermarked relation IS the structural evidence).
-    * Relation and select-list scanning is quote- and
-    * paren-depth-aware — the `FROM` inside `EXTRACT(DAY FROM ts)`, a
-    * string literal, or a qualified `s.from` column never truncates
-    * the list or anchors a relation scan. */
-  private def recordJoinViewWatermark(spark: SparkSession, name: String,
-      raw: String, body: String, colList: Option[Seq[String]]): Unit = {
-    val fromIdxOpt = WindowTvf.findTopLevel(body, 0, "FROM")
-    if (fromIdxOpt.isEmpty) return
-    val fromIdx = fromIdxOpt.get
-    val selectList = raw"(?is)^\s*SELECT\s+".r.findFirstMatchIn(body)
-      .filter(_.end <= fromIdx)
-      .map(sm => untick(raw.substring(sm.end, fromIdx)).trim)
-    val tail = body.substring(fromIdx)
-    // a COMMA-anchored match is a relation position only when its
-    // comma is a FROM-region relation comma (the implicit-join list);
-    // the regex's bare `,\s*` alternative would otherwise read an
-    // ORDER BY / select-list item that happens to carry a watermarked
-    // relation's name as another relation, inflating the lookup-shape
-    // count and skipping a legitimate registration (r20 advice)
-    val relCommas = fromRegionCommas(tail)
-    val relMatches = RelWithAliasRe.findAllMatchIn(tail).toSeq
-      .filter(mm => tail.charAt(mm.start) != ',' || relCommas(mm.start))
-    // the lookup-shape gate counts watermarked relations at ANY depth
-    // — but a parenthesized position is a RELATION position only
-    // inside a SUBQUERY (a SELECT between the innermost unclosed
-    // paren and the match); the FROM of EXTRACT/TRIM/SUBSTRING whose
-    // operand collides with a watermarked name must not count
-    def inSubquery(idx: Int): Boolean = {
-      var depth = 0
-      var i = idx - 1
-      var open = -1
-      while (i >= 0 && open < 0) {
-        tail.charAt(i) match {
-          case ')' => depth += 1
-          case '(' => if (depth == 0) open = i else depth -= 1
-          case _ =>
-        }
-        i -= 1
-      }
-      open >= 0 && raw"(?is)\bSELECT\b".r
-        .findFirstIn(tail.substring(open + 1, idx)).isDefined
-    }
-    val wmAny = relMatches.count(mm =>
-      watermarkOf(mm.group(1)).isDefined &&
-        (depthAt(tail, mm.start) == 0 || inSubquery(mm.start)))
-    val wmRels = relMatches
-      .filter(mm => depthAt(tail, mm.start) == 0)
-      .map(mm => (mm.group(1), Option(mm.group(2))))
-      .flatMap { case (rel, alias) =>
-        watermarkOf(rel).map(wd => (rel, alias, wd)) }
-    (wmRels, selectList) match {
-      case (Seq((rel, alias, (col, delay))), Some(items)) if wmAny == 1 =>
-        val streamName = alias.getOrElse(rel).toLowerCase
-        for {
-          out <- propagatedName(items, col,
-            q => q.toLowerCase == streamName, colList)
-          df <- scala.util.Try(spark.table(name)).toOption
-          if !df.isStreaming || df.queryExecution.analyzed
-            .collectLeaves().count(_.isStreaming) == 1
-          if df.schema.exists(_.name.equalsIgnoreCase(out))
-        } viewWatermarks(name) = (out, delay)
-      case _ => // zero or 2+ watermarked relations: not a lookup shape
-    }
-  }
 
   private val ShowCreateRe =
     raw"(?is)^\s*SHOW\s+CREATE\s+TABLE\s+([\w.`]+)\s*;?\s*$$".r
@@ -899,28 +614,29 @@ final class SqlSubmitAction(
             // eagerly, a temp view stores the ANALYZED plan (Spark
             // >= 3.2), and a permanent view referencing a temp view
             // fails at creation regardless
+            val sql = DropTemporaryRe.replaceFirstIn(st.sql, "$1")
+            val rewritten = rewriteFlinkDialect(spark, config, sql)
+            val view = viewStatementOf(rewritten)
             // an IF NOT EXISTS create over an EXISTING view is a
             // Spark no-op keeping the old definition — decided before
             // execution, so the registry never updates from the
             // ignored statement's text
-            val viewNoOp = isViewCreateNoOp(spark, st.sql)
-            val rewritten = rewriteFlinkDialect(spark, config, st.sql)
+            val viewNoOp = view.exists(v => v.ifNotExists &&
+              scala.util.Try(spark.catalog.tableExists(v.name))
+                .getOrElse(false))
             // a CREATE VIEW keeps its rewrite views ALIVE: the created
             // view re-resolves its body on every later reference, so
             // dropping a tracker view it references (a TVF aggregation
             // body) would break every downstream statement — CTAS
             // materializes eagerly and SELECT/INSERT resolve at
             // execution, so only the view-create path must keep them
-            val keepsRewriteViews =
-              CreateViewRe.findFirstMatchIn(st.sql).isDefined
             try spark.sql(rewritten)
-            finally if (!keepsRewriteViews)
+            finally if (!view.exists(_.create))
               MatchRecognize.dropViews(spark, rewritten)
             // CREATE/DROP VIEW maintain the event-time registry so
             // later streaming statements can window/aggregate OVER the
-            // view (classified from the ORIGINAL text — the rewrite
-            // never rewrites the CREATE VIEW header)
-            if (!viewNoOp) recordViewWatermark(spark, st.sql)
+            // view
+            if (!viewNoOp) view.foreach(recordView(spark, _, sql))
         }
       } catch {
         case e: Exception =>
@@ -1312,7 +1028,7 @@ final class SqlSubmitAction(
     */
   /** Case-insensitive source lookup → (event-time column, delay) from
     * the connector DDL's WATERMARK declaration, or from the view
-    * propagation registry ([[recordViewWatermark]]) when the name is a
+    * propagation registry ([[recordView]]) when the name is a
     * registered view over a watermarked relation. */
   private def watermarkOf(table: String): Option[(String, String)] =
     sources.keys.find(_.equalsIgnoreCase(table)).map(sources)
@@ -1889,7 +1605,7 @@ final class SqlSubmitAction(
         AutoSplitPlan(m.ddl, m.stage1, out.toString, m.mat, m.path,
           view.toLowerCase, m.reuse, durable, enrich = None)
       }
-    single.orElse(joinAutoSplit(spark, config, sql, masked, durable))
+    single.orElse(joinAutoSplit(spark, config, sql, durable))
   }
 
   /** The shared view-eligibility checks + materialization compile of
@@ -2012,59 +1728,82 @@ final class SqlSubmitAction(
     * temp view `SELECT <mat cols>, <non-colliding dim cols> FROM
     * <region with view→mat>` — a plain stream-static join, stateless
     * — and stage 2 is the updating operator over that view, which
-    * the single-plan TTL route compiles natively. Gated to INNER
-    * equi-join text (LEFT/RIGHT/FULL/CROSS and comma joins keep the
-    * named rejection: the collision-dropping projection below could
-    * silently alias a dim-side NULL onto the stream side under an
-    * outer join), exactly one streaming relation (stream-stream
-    * keeps the named rejection), and the GROUP-BY-aggregation shape
-    * (probed with the region collapsed to the view — top-N shapes
-    * stay single-FROM). Stage 2's qualifiers are stripped: the
-    * enrichment view's projection is collision-free, so bare names
-    * resolve uniquely.
+    * the single-plan TTL route compiles natively. Read from Spark's
+    * parsed plan ([[ScriptParser.parseQuery]]) and gated to
+    * condition-bearing INNER joins of named tables, exactly one
+    * streaming relation (stream-stream keeps the named rejection),
+    * and the GROUP-BY-aggregation shape (probed with the region
+    * collapsed to the view — top-N shapes stay single-FROM). Edits
+    * splice by origin span: the view→intermediate swap in the region,
+    * and stage 2's qualifier strip outside it.
     */
   private def joinAutoSplit(spark: SparkSession, config: EngineConfig,
-      sql: String, masked: String, durable: Boolean)
-      : Option[AutoSplitPlan] = {
-    if (TemporalJoin.hasTemporalJoin(masked)) return None
-    if (hasTopLevelFromComma(masked)) return None
-    if (raw"(?is)\b(LEFT|RIGHT|FULL|CROSS)\s+(?:OUTER\s+)?JOIN\b".r
-        .findFirstIn(masked).isDefined) return None
+      sql: String, durable: Boolean): Option[AutoSplitPlan] = {
+    // the outermost FROM region: the join tree under the statement's
+    // projection, aggregation and filters
+    def fromOf(p: LogicalPlan): Option[Join] = p match {
+      case j: Join => Some(j)
+      case _: Project | _: Aggregate | _: Filter => fromOf(p.children.head)
+      case _ => None
+    }
+    def relName(r: UnresolvedRelation) = r.multipartIdentifier.mkString(".")
+    def isStreaming(r: UnresolvedRelation) =
+      scala.util.Try(spark.table(relName(r)).isStreaming).toOption
     for {
-      fromIdx <- WindowTvf.findTopLevel(masked, 0, "FROM")
-      regionEnd = Seq("WHERE", "GROUP")
-        .flatMap(k => WindowTvf.findTopLevel(masked, fromIdx, k))
-        .minOption.getOrElse(masked.length)
-      regionMasked = masked.substring(fromIdx + "FROM".length, regionEnd)
-      // plain named tables only: a subquery in the region would need
-      // its own projection analysis — keep the named rejection there
-      if !regionMasked.contains("(")
-      rels = RelWithAliasRe.findAllMatchIn("FROM" + regionMasked).toSeq
-        .map(mm => (mm.group(1), Option(mm.group(2))))
-      if rels.size >= 2
+      (_, query) <- ScriptParser.parseQuery(sql)
+      join <- fromOf(query)
+      region = join.collect { case n => n }
+      // condition-bearing INNER joins of plain named tables only: comma
+      // joins, CROSS and outer joins keep the named rejection (the
+      // collision-dropping projection below could silently alias a
+      // dim-side NULL onto the stream side under an outer join), and
+      // a subquery in the region would need its own projection
+      // analysis
+      if region.forall {
+        case j: Join => j.joinType == Inner &&
+          j.condition.exists(!SubqueryExpression.hasSubquery(_))
+        case _: SubqueryAlias | _: UnresolvedRelation => true
+        case _ => false
+      }
+      rels = region.collect { case r: UnresolvedRelation => r }
+      aliasOf = (r: UnresolvedRelation) => region.collectFirst {
+        case SubqueryAlias(id, c) if c eq r => id.name }
       // exactly one STREAMING relation — the stateful view; every
       // other relation must resolve as a STATIC (batch) side
-      streaming = rels.filter { case (r, _) =>
-        scala.util.Try(spark.table(r).isStreaming).getOrElse(false) }
-      (view, viewAlias) <- Some(streaming).collect { case Seq(one) => one }
-      if rels.forall { case (r, _) =>
-        r.equalsIgnoreCase(view) ||
-          scala.util.Try(!spark.table(r).isStreaming).getOrElse(false) }
+      viewRel <- Some(rels.filter(isStreaming(_).contains(true)))
+        .collect { case Seq(one) => one }
+      if rels.forall(r => (r eq viewRel) || isStreaming(r).contains(false))
+      view = relName(viewRel)
+      (from, to) = ScriptParser.extentOf(sql, join)
+      // column references outside the join region, qualified by one of
+      // its relations or aliases
+      quals = rels.flatMap(r => relName(r) +: aliasOf(r).toSeq)
+      qualified = ScriptParser.nodesOf(query)
+        .filterNot(n => region.exists(_ eq n))
+        .flatMap(_.expressions.flatMap(_.collect {
+          case a: UnresolvedAttribute if a.nameParts.size == 2 &&
+            quals.exists(_.equalsIgnoreCase(a.nameParts.head)) => a }))
+      // stage 2 reads a collision-free projection, so bare names
+      // resolve uniquely: each qualifier is stripped by its span
+      strips = qualified.map { a =>
+        val at = a.origin.startIndex.get
+        val text = MatchRecognize.maskQuoted(ScriptParser.textOf(sql, a))
+        val dot = text.lastIndexOf('.') + 1
+        (at, at + dot + text.drop(dot).takeWhile(_.isWhitespace).length, "")
+      }
       // the updating-GROUP-BY shape, probed with the join region
       // collapsed to the view itself (textual: hasShape resolves only
       // the relation); qualifiers stripped the same way stage 2 will be
-      quals = rels.flatMap { case (r, a) => Seq(r) ++ a }
-      pre = stripQualifiers(sql.substring(0, fromIdx), quals)
-      post = stripQualifiers(sql.substring(regionEnd), quals)
-      if UnboundedAgg.hasShape(spark, s"$pre FROM $view $post")
+      if UnboundedAgg.hasShape(spark,
+        ScriptParser.splice(sql, 0, sql.length, (from, to, view) +: strips))
       m <- compileMaterialization(spark, config, view, durable)
       // dims must expose identifier-charset names for the generated
       // projection (collision-dropped against the mat side, so the
       // enrichment view's output is bare and unambiguous); each dim
       // carries BOTH its table name and alias as reference qualifiers
-      dims = rels.filterNot(_._1.equalsIgnoreCase(view)).map {
-        case (r, a) => (Seq(r) ++ a,
-          spark.table(r).schema.fieldNames.toSeq) }
+      dims = rels.filterNot(_ eq viewRel).map(r =>
+        (relName(r) +: aliasOf(r).toSeq,
+          spark.table(relName(r)).schema.fieldNames.toSeq))
       if dims.flatMap(_._2).forall(_.matches(GeneratedSqlIdent))
       // split each dim's columns into projection survivors and
       // collision-DROPPED names (the mat side's name wins)
@@ -2080,39 +1819,20 @@ final class SqlSubmitAction(
       // the statement must not reference a DROPPED dim column outside
       // the join region (r20 review: qualifier-stripping would
       // silently rebind `sum(d.s)` onto the STREAM's s) — such
-      // statements keep the named rejection. The guard text is
-      // UNTICKED first (second review pass: maskQuoted blanks
-      // backtick interiors, so ``sum(d.`s`)`` would have slipped past
-      // the regex while stripQualifiers still stripped the bare
-      // qualifier — the exact silent rebind this guard rejects)
-      maskedOutside = MatchRecognize.maskQuoted(
-        untick(sql.substring(0, fromIdx)) + " " +
-          untick(sql.substring(regionEnd)))
+      // statements keep the named rejection
       if dimSplit.forall { case (qs, _, dropped) =>
-        dropped.forall(c => qs.forall(q =>
-          (raw"(?is)\b" + java.util.regex.Pattern.quote(q) +
-            raw"\s*\.\s*" + java.util.regex.Pattern.quote(c) +
-            raw"\b").r.findFirstIn(maskedOutside).isEmpty))
+        !qualified.exists(a =>
+          qs.exists(_.equalsIgnoreCase(a.nameParts.head)) &&
+            dropped.exists(_.equalsIgnoreCase(a.nameParts.last)))
       }
     } yield {
       // the region with the view swapped for the intermediate; the
       // statement's alias (if any) survives the swap, so the ON
       // predicate's qualifiers keep resolving
-      val vQ = java.util.regex.Pattern.quote(view)
-      val RegionSwapRe = raw"(?is)(?<![\w.`])$vQ\b".r
-      val regionRaw = sql.substring(fromIdx + "FROM".length, regionEnd)
-      val swapped = {
-        val out = new StringBuilder
-        var last = 0
-        RegionSwapRe.findAllMatchIn(regionMasked).foreach { mm =>
-          out.append(regionRaw.substring(last, mm.start))
-          out.append(m.mat)
-          last = mm.end
-        }
-        out.append(regionRaw.substring(last))
-        out.toString
-      }
-      val matQual = viewAlias.getOrElse(m.mat)
+      val swapped = ScriptParser.splice(sql, from, to, Seq(
+        (viewRel.origin.startIndex.get, viewRel.origin.stopIndex.get + 1,
+          m.mat)))
+      val matQual = aliasOf(viewRel).getOrElse(m.mat)
       val items =
         m.colTypes.map { case (n, _) => s"$matQual.`$n`" } ++
           dimSplit.flatMap { case (qs, kept, _) =>
@@ -2121,34 +1841,12 @@ final class SqlSubmitAction(
       val enr = "graft_enr_" + m.mat.stripPrefix("graft_mat_") + "_" +
         ((m.mat + swapped).hashCode & 0x7fffffff)
       val enrich = s"CREATE OR REPLACE TEMPORARY VIEW $enr AS SELECT " +
-        items.mkString(", ") + s" FROM$swapped"
-      val stage2 = s"$pre FROM $enr $post"
+        items.mkString(", ") + s" FROM $swapped"
+      val stage2 =
+        ScriptParser.splice(sql, 0, sql.length, (from, to, enr) +: strips)
       AutoSplitPlan(m.ddl, m.stage1, stage2, m.mat, m.path,
         view.toLowerCase, m.reuse, durable, enrich = Some(enrich))
     }
-  }
-
-  /** Strips `qual.` prefixes for the given relation/alias names —
-    * stage 2 of the enrichment form reads the generated join view,
-    * whose projection is collision-free, so bare names resolve
-    * uniquely. Matches run on masked text (a literal spelling a
-    * qualifier is never touched); a STRUCT column sharing a
-    * qualifier's name would be mangled — accepted, the enrichment
-    * gate's relations are top-level tables. */
-  private def stripQualifiers(rawText: String, quals: Seq[String]): String = {
-    if (quals.isEmpty) return rawText
-    val re = ("(?is)\\b(?:" + quals.distinct
-      .map(java.util.regex.Pattern.quote).mkString("|") +
-      ")\\s*\\.\\s*").r
-    val m = MatchRecognize.maskQuoted(rawText)
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(m).foreach { mm =>
-      out.append(rawText.substring(last, mm.start))
-      last = mm.end
-    }
-    out.append(rawText.substring(last))
-    out.toString
   }
 
   private def executeInsertRewritten(

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.trees.TreeNode
 import org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIfNeeded
 import org.apache.spark.sql.execution.SparkSqlParser
 import org.apache.spark.sql.execution.command.CreateViewCommand
+import ScriptParser.splice
 import org.apache.spark.sql.types.IntegerType
 
 /** Flink `FOR SYSTEM_TIME AS OF` temporal-join rewrite.
@@ -115,15 +116,25 @@ object TemporalJoin {
   private def start(n: TreeNode[_]): Int = n.origin.startIndex.get
   private def end(n: TreeNode[_]): Int = n.origin.stopIndex.get + 1
 
+  /** `sql` with every `FOR SYSTEM_TIME AS OF <column>` clause blanked
+    * to as many spaces: Spark's parser reads the rest, and the plan's
+    * origins still index `sql`. */
+  private[harness] def blankClauses(sql: String): String =
+    ClauseRe.findAllMatchIn(MatchRecognize.maskQuoted(sql)).foldLeft(sql)(
+      (s, m) => s.patch(m.start, " " * (m.end - m.start), m.end - m.start))
+
   /** Blanks every `FOR SYSTEM_TIME AS OF <column>` clause, parses the
-    * statement once and pairs each clause with its INNER/LEFT/RIGHT/
-    * FULL `Join ... ON`. None when the blanked text does not parse,
-    * a clause pairs with no such join, or a marker stays unblanked. */
-  private def read(sql: String): Option[Read] = {
+    * statement once and pairs each clause with its join ([[readOf]]). */
+  private def read(sql: String): Option[Read] =
+    queryOf(blankClauses(sql)).flatMap(readOf(sql, _))
+
+  /** Pairs each clause of `sql` with its INNER/LEFT/RIGHT/FULL `Join
+    * ... ON` in `query`, the plan of `sql` with the clauses blanked.
+    * None when a clause pairs with no such join or a marker stays
+    * unblanked. */
+  private def readOf(sql: String, query: LogicalPlan): Option[Read] = {
     val masked = MatchRecognize.maskQuoted(sql)
     val clauses = ClauseRe.findAllMatchIn(masked).toSeq
-    val blanked = clauses.foldLeft(sql)((s, m) =>
-      s.patch(m.start, " " * (m.end - m.start), m.end - m.start))
     def stageOf(joins: Seq[Join], m: scala.util.matching.Regex.Match) = {
       val before = masked.lastIndexWhere(!_.isWhitespace, m.start - 1)
       joins.iterator.flatMap(j => named(j.right).collect {
@@ -132,12 +143,11 @@ object TemporalJoin {
           Stage(j, t, alias, sql.substring(m.start(1), m.end(1)), m.end)
       }).nextOption()
     }
+    val joins = ScriptParser.nodesOf(query).collect { case j: Join => j }
     for {
-      query <- queryOf(blanked)
-      if MarkerRe.findAllMatchIn(masked).size == clauses.size
-      joins = ScriptParser.nodesOf(query).collect { case j: Join => j }
       stages <- clauses.foldLeft(Option(Vector.empty[Stage]))((acc, m) =>
         acc.flatMap(ss => stageOf(joins, m).map(ss :+ _)))
+      if MarkerRe.findAllMatchIn(masked).size == clauses.size
       // a LIMIT or ORDER BY node's origin starts at its own clause
       head = sql.substring(0, query.flatMap(_.origin.startIndex).min)
     } yield Read(sql, head, query, stages)
@@ -194,7 +204,13 @@ object TemporalJoin {
     * on a temporal join over the view). Every name feeds generated
     * SQL, so each must be a plain identifier.
     */
-  def versionedViewOf(body: String): Option[VersionedView] = {
+  def versionedViewOf(body: String): Option[VersionedView] =
+    ScriptParser.parseQuery(body).collect { case ("", q) => q }
+      .flatMap(versionedViewIn)
+
+  /** [[versionedViewOf]] over a parsed view body. */
+  private[harness] def versionedViewIn(
+      query: LogicalPlan): Option[VersionedView] = {
     def plain(s: String) = s.matches(raw"[A-Za-z_]\w*")
     def column(e: Expression, maxParts: Int): Option[String] = e match {
       case a: UnresolvedAttribute if a.nameParts.size <= maxParts &&
@@ -203,12 +219,12 @@ object TemporalJoin {
     }
     def sequence[A](xs: Seq[Option[A]]): Option[Seq[A]] =
       if (xs.forall(_.isDefined)) Some(xs.flatten) else None
-    ScriptParser.parseQuery(body).collect {
-      case ("", Project(outer, Filter(EqualTo(rank, Literal(1, IntegerType)),
+    query match {
+      case Project(outer, Filter(EqualTo(rank, Literal(1, IntegerType)),
           SubqueryAlias(_, Project(Seq(UnresolvedStar(None), Alias(
             WindowExpression(f: UnresolvedFunction, WindowSpecDefinition(
               keys, Seq(SortOrder(tcol, Descending, _, _)), UnspecifiedFrame)),
-            rn)), src: UnresolvedRelation)))))
+            rn)), src: UnresolvedRelation))))
           if f.nameParts.map(_.toLowerCase) == Seq("row_number") &&
             f.arguments.isEmpty && column(rank, 2).exists(_.equalsIgnoreCase(rn)) &&
             src.multipartIdentifier.forall(plain) =>
@@ -225,7 +241,8 @@ object TemporalJoin {
           // would expose rank values as data on the version side
           if !items.exists(_._1.equalsIgnoreCase(rn))
         } yield VersionedView(src.multipartIdentifier.mkString("."), t, ks, items)
-    }.flatten
+      case _ => None
+    }
   }
 
   /** The deterministic history-relation name a versioned view `name`
@@ -277,35 +294,30 @@ object TemporalJoin {
       })
     }
 
-  /** For the CLI's event-time view registry
-    * (SqlSubmitAction.recordViewWatermark): the PROBE (left) table and
-    * its alias of the first `FOR SYSTEM_TIME AS OF` join in `sql` —
-    * Flink's law: a temporal join preserves the probe side's rowtime,
-    * so a view over one can feed a downstream window/OVER/top-N. None
-    * when the probe is not a single named table (the streaming rewrite
-    * would reject such a shape anyway), or when any other join rides
-    * along, subqueries included: a REGULAR join drops the rowtime
-    * attribute in Flink. */
+  /** The PROBE (left) table and its alias of the first `FOR
+    * SYSTEM_TIME AS OF` join in `sql` ([[probeIn]]). */
   def probeOf(sql: String): Option[(String, String)] =
-    read(sql).filter(r => r.stages.nonEmpty &&
-      ScriptParser.nodesOf(r.query).forall {
-        case j: Join => r.stages.exists(_.join eq j)
-        case _ => true
-      }).flatMap(r => named(r.stages.head.join.left)).map { case (t, a) =>
+    queryOf(blankClauses(sql)).flatMap(probeIn(sql, _)).flatMap(named)
+      .map { case (t, a) =>
         (t.multipartIdentifier.last, a.fold(t.multipartIdentifier.last)(_.alias))
       }
 
-  /** Splices `edits` ([from, to) spans with replacement text) into the
-    * [from, to) region of `sql`. */
-  private def splice(sql: String, from: Int, to: Int,
-      edits: Seq[(Int, Int, String)]): String = {
-    val out = new StringBuilder
-    val last = edits.sortBy(_._1).foldLeft(from) { case (at, (s, e, t)) =>
-      out.append(sql.substring(at, s)).append(t)
-      e
-    }
-    out.append(sql.substring(last, to)).toString
-  }
+  /** For the CLI's event-time view registry
+    * (SqlSubmitAction.recordView): the probe relation of the first
+    * temporal join in `query`, the plan of `sql` with its clauses
+    * blanked ([[blankClauses]]). Flink's law: a temporal join
+    * preserves the probe side's rowtime, so a view over one can feed
+    * a downstream window/OVER/top-N. None when the probe is not a
+    * single named table (the streaming rewrite would reject such a
+    * shape anyway), or when any other join rides along, subqueries
+    * included: a REGULAR join drops the rowtime attribute in Flink. */
+  private[harness] def probeIn(sql: String,
+      query: LogicalPlan): Option[LogicalPlan] =
+    readOf(sql, query).filter(r => r.stages.nonEmpty &&
+      ScriptParser.nodesOf(r.query).forall {
+        case j: Join => r.stages.exists(_.join eq j)
+        case _ => true
+      }).map(_.stages.head.join.left).filter(named(_).isDefined)
 
   private def unsupported(): Nothing = throw new IllegalArgumentException(
     "Unsupported FOR SYSTEM_TIME AS OF form: only " +
@@ -427,7 +439,7 @@ object TemporalJoin {
     * LEFT null-extends the version side. The statement may carry an
     * INSERT or CREATE VIEW head (r18 — a temporal-join view keeps the
     * probe's rowtime, Flink's law; the CLI registry records the
-    * propagated attribute, see SqlSubmitAction.recordViewWatermark).
+    * propagated attribute, see [[probeIn]]).
     */
   def rewriteStreaming(
       spark: org.apache.spark.sql.SparkSession,

@@ -123,14 +123,23 @@ object WindowTvf {
     AnyTvfRe.findFirstIn(sql).isDefined ||
       AnyLegacyRe.findFirstIn(sql).isDefined
 
-  /** The NAMED source relation of the first window-TVF call, for the
-    * view registry's window_time propagation (r17). */
+  /** A window-TVF call over a NAMED source relation. */
   private val TvfSrcNameRe = (raw"(?is)\bTABLE\s*\(\s*" +
     raw"(?:TUMBLE|HOP|CUMULATE|SESSION)\s*\(\s*(?:DATA\s*=>\s*)?" +
     raw"(?:TABLE\s+)?($Dotted)").r
-  def tvfSourceName(sql: String): Option[String] =
-    TvfSrcNameRe.findFirstMatchIn(sql)
-      .map(m => ddl.DdlParser.unquoteName(m.group(1)))
+
+  /** Each window-TVF call over a named source, for the view registry's
+    * window_time propagation (r17): the call's [from, to) span and the
+    * source name as written. The registry replaces each call with its
+    * source name padded with spaces, so Spark's parser reads the rest
+    * of the body and origins still index the original text. */
+  private[harness] def tvfCalls(sql: String): Seq[(Int, Int, String)] = {
+    val masked = MatchRecognize.maskQuoted(sql)
+    TvfSrcNameRe.findAllMatchIn(masked).toSeq.flatMap(m =>
+      scala.util.Try(MatchRecognize.closeParen(masked,
+        masked.indexOf('(', m.start))).toOption
+        .map((m.start, _, sql.substring(m.start(1), m.end(1)))))
+  }
 
   /** A window-TVF call whose SOURCE argument is an inline subquery —
     * `TABLE(TUMBLE(TABLE (SELECT ...), DESCRIPTOR(...), ...))`. The

@@ -10,15 +10,6 @@ import scala.collection.mutable
   */
 object DdlParser {
 
-  /** Regex fragment for the inside of a parenthesized column-alias
-    * list that tolerates COMMENT clauses: quoted strings may hold
-    * parens, so the group alternates raw chars with complete
-    * single-quoted literals ('' escapes inside). Used by
-    * SqlSubmitAction.CreateViewRe. Contains no capture groups — safe to
-    * interpolate without shifting group numbering. */
-  private[harness] val ColListInner: String =
-    raw"(?:[^()']|'(?:[^']|'')*')*"
-
   private val CreateHead =
     raw"(?is)^\s*CREATE\s+(?:TEMPORARY\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(.+)$$".r
 

@@ -1611,4 +1611,130 @@ class SqlSubmitE2ESpec extends AnyFunSuite {
       .toSeq
     assert(msgs.exists(_.contains("versioned")), msgs.mkString(" | "))
   }
+
+  /** Runs `views` in batch mode over a watermarked source `<pre>_src`
+    * (event time ts) and a static `<pre>_dim`, returning the action. */
+  private def registryRun(pre: String, views: String): SqlSubmitAction = {
+    val script =
+      s"""SET execution.runtime-mode = batch;
+         |create table ${pre}_src (
+         |  k bigint,
+         |  seq bigint,
+         |  ts as timestamp '2024-01-01 00:00:00' +
+         |    make_interval(0, 0, 0, 0, 0, 0, cast(seq * 30 as int)),
+         |  watermark for ts as ts - interval '1' second
+         |) with ('connector' = 'datagen', 'number-of-rows' = '3',
+         |  'fields.seq.kind' = 'sequence',
+         |  'fields.seq.start' = '0', 'fields.seq.end' = '2',
+         |  'fields.k.min' = '0', 'fields.k.max' = '0');
+         |create table ${pre}_src2 (
+         |  k bigint,
+         |  seq bigint,
+         |  ts2 as timestamp '2024-01-01 00:00:00' +
+         |    make_interval(0, 0, 0, 0, 0, 0, cast(seq * 30 as int)),
+         |  watermark for ts2 as ts2 - interval '1' second
+         |) with ('connector' = 'datagen', 'number-of-rows' = '3',
+         |  'fields.seq.kind' = 'sequence',
+         |  'fields.seq.start' = '0', 'fields.seq.end' = '2',
+         |  'fields.k.min' = '0', 'fields.k.max' = '0');
+         |create table ${pre}_dim (
+         |  k bigint, tag bigint
+         |) with ('connector' = 'datagen', 'number-of-rows' = '1',
+         |  'fields.k.min' = '0', 'fields.k.max' = '0');
+         |$views""".stripMargin
+    val file = Files.createTempFile(s"graft-$pre-", ".sql")
+    Files.writeString(file, script)
+    val action = new SqlSubmitAction(file.toString, Map.empty,
+      existingSession = Some(SparkFixture.spark), durationSec = 10)
+    action.run()
+    action
+  }
+
+  test("Flink's DROP TEMPORARY VIEW runs as Spark's DROP VIEW and " +
+      "evicts the view's rowtime record") {
+    val action = registryRun("dtv",
+      """create temporary view dtv_kept as select k, ts from dtv_src;
+        |create temporary view dtv_v as select k, ts from dtv_src;
+        |drop temporary view dtv_v;
+        |drop temporary view if exists dtv_never;
+        |""".stripMargin)
+    assert(action.registeredRowtimeOf("dtv_v").isEmpty)
+    assert(!SparkFixture.spark.catalog.tableExists("dtv_v"))
+    assert(action.registeredRowtimeOf("dtv_kept").contains(("ts", "1 seconds")))
+  }
+
+  test("subquery WRAPPERS, a parenthesized body and a COMMENT clause " +
+      "keep a plain view's rowtime: projections and filters keep it " +
+      "at every SELECT level") {
+    val action = registryRun("pwr",
+      """create temporary view pwr_star as
+        |  select * from (select k, ts from pwr_src) w;
+        |create temporary view pwr_qual as
+        |  select w.ts as rt, w.k from (select k, ts from pwr_src) w
+        |  where k >= 0;
+        |create temporary view pwr_paren as (select k, ts from pwr_src);
+        |create temporary view pwr_comment comment 'c' as
+        |  select k, ts from pwr_src;
+        |""".stripMargin)
+    assert(action.registeredRowtimeOf("pwr_star").contains(("ts", "1 seconds")))
+    assert(action.registeredRowtimeOf("pwr_qual").contains(("rt", "1 seconds")))
+    assert(action.registeredRowtimeOf("pwr_paren").contains(("ts", "1 seconds")))
+    assert(action.registeredRowtimeOf("pwr_comment")
+      .contains(("ts", "1 seconds")))
+  }
+
+  test("a GROUP BY inside a WHERE subquery over a static table does " +
+      "not drop the outer view's rowtime") {
+    val action = registryRun("igb",
+      """create temporary view igb_v as
+        |  select k, ts from igb_src
+        |  where k in (select k from igb_dim group by k);
+        |""".stripMargin)
+    assert(action.registeredRowtimeOf("igb_v").contains(("ts", "1 seconds")))
+  }
+
+  test("a stream-static join keeps the stream's rowtime below a " +
+      "wrapper and over a subquery of the stream") {
+    val action = registryRun("jwr",
+      """create temporary view jwr_wrapped as
+        |  select * from (
+        |    select s.k, s.ts, d.tag from jwr_src s
+        |    join jwr_dim d on d.k = s.k) w;
+        |create temporary view jwr_inner as
+        |  select x.k, x.ts, d.tag from (select * from jwr_src) x
+        |  join jwr_dim d on d.k = x.k;
+        |""".stripMargin)
+    assert(action.registeredRowtimeOf("jwr_wrapped")
+      .contains(("ts", "1 seconds")))
+    assert(action.registeredRowtimeOf("jwr_inner")
+      .contains(("ts", "1 seconds")))
+  }
+
+  test("a versioned (rn = 1 dedup) view keeps its source's rowtime, " +
+      "renamed through a column-alias list too") {
+    val dedup =
+      """select k, ts, seq from (select *, row_number() over (
+        |  partition by k order by ts desc) as rn from vvr2_src)
+        |where rn = 1""".stripMargin
+    val action = registryRun("vvr2",
+      s"""create temporary view vvr2_latest as $dedup;
+         |create temporary view vvr2_named (ck, vts, s) as $dedup;
+         |""".stripMargin)
+    assert(action.registeredRowtimeOf("vvr2_latest")
+      .contains(("ts", "1 seconds")))
+    assert(action.registeredRowtimeOf("vvr2_named")
+      .contains(("vts", "1 seconds")))
+  }
+
+  test("DISTINCT and a semi-join against a second stream drop the " +
+      "rowtime: Flink's aggregation and regular-join laws") {
+    val action = registryRun("dsj",
+      """create temporary view dsj_distinct as
+        |  select distinct k, ts from dsj_src;
+        |create temporary view dsj_semi as
+        |  select k, ts from dsj_src where k in (select k from dsj_src2);
+        |""".stripMargin)
+    assert(action.registeredRowtimeOf("dsj_distinct").isEmpty)
+    assert(action.registeredRowtimeOf("dsj_semi").isEmpty)
+  }
 }
