@@ -162,12 +162,13 @@ final class SqlSubmitAction(
   /** The body plan of the CREATE VIEW `sql`, parsed once with its
     * Flink-only regions blanked by same-length text — the `FOR
     * SYSTEM_TIME AS OF` clauses, the MATCH_ROWTIME pattern region
-    * `region`, and each window-TVF call, which leaves its source name
-    * in place — so the plan's origins index `sql`. */
+    * `region`, and each window-TVF call of `tvfCalls`, which leaves
+    * its source name in place — so the plan's origins index `sql`. */
   private def viewBodyOf(sql: String,
-      region: Option[MatchRecognize.RowtimeRegion]): Option[LogicalPlan] = {
+      region: Option[MatchRecognize.RowtimeRegion],
+      tvfCalls: Seq[(Int, Int, String)]): Option[LogicalPlan] = {
     val blanked = (region.map(r => (r.from, r.to, "")).toSeq ++
-      WindowTvf.tvfCalls(sql)).foldLeft(TemporalJoin.blankClauses(sql)) {
+      tvfCalls).foldLeft(TemporalJoin.blankClauses(sql)) {
       case (s, (from, to, keep)) => s.patch(from, keep.padTo(to - from, ' '),
         to - from)
     }
@@ -176,6 +177,9 @@ final class SqlSubmitAction(
       case c: CreateView => c.query
     }
   }
+
+  private def relName(r: UnresolvedRelation) =
+    r.multipartIdentifier.mkString(".")
 
   /** The event-time attribute on its way up a view body: its name at
     * this level, the qualifiers that name it, its position in this
@@ -268,11 +272,11 @@ final class SqlSubmitAction(
       val masked = MatchRecognize.maskQuoted(sql)
       val pattern = MatchRecognize.hasMatchRecognize(masked)
       val region = if (pattern) MatchRecognize.rowtimeRegionOf(sql) else None
-      viewBodyOf(sql, region).foreach { body =>
+      val tvfCalls = WindowTvf.tvfCalls(sql)
+      viewBodyOf(sql, region, tvfCalls).foreach { body =>
         recordVersionedView(v, body)
         val temporal = !pattern && TemporalJoin.hasTemporalJoin(masked)
-        val tvfCall =
-          if (pattern || temporal) None else WindowTvf.tvfCalls(sql).headOption
+        val tvfCall = if (pattern || temporal) None else tvfCalls.headOption
         recordRowtime(spark, v, sql, body, region.filter(_ => pattern),
           temporal, tvfCall)
       }
@@ -339,7 +343,6 @@ final class SqlSubmitAction(
       tvfCall: Option[(Int, Int, String)]): Unit = {
     val nodes = ScriptParser.nodesOf(body)
     val hasJoin = nodes.exists(_.isInstanceOf[Join])
-    def relName(r: UnresolvedRelation) = r.multipartIdentifier.mkString(".")
     def relationAt(start: Int) = nodes.collectFirst {
       case r: UnresolvedRelation if r.origin.startIndex.contains(start) => r }
     def oneStream = scala.util.Try(spark.table(v.name)).toOption.exists(df =>
@@ -1746,7 +1749,6 @@ final class SqlSubmitAction(
       case _: Project | _: Aggregate | _: Filter => fromOf(p.children.head)
       case _ => None
     }
-    def relName(r: UnresolvedRelation) = r.multipartIdentifier.mkString(".")
     def isStreaming(r: UnresolvedRelation) =
       scala.util.Try(spark.table(relName(r)).isStreaming).toOption
     for {
