@@ -114,7 +114,7 @@ final class SqlSubmitAction(
     * auto-split intermediate's stable identity hashes the DEFINITION,
     * so a restarted script resumes the same directory only while the
     * view still means the same thing (r20). */
-  private val viewDefs: mutable.Map[String, String] =
+  private[harness] val viewDefs: mutable.Map[String, String] =
     mutable.LinkedHashMap.empty
 
   /** One managed auto-split intermediate per (stateful view, run),
@@ -135,23 +135,34 @@ final class SqlSubmitAction(
 
   /** The view statement `sql` is, read from the text Spark executes:
     * the Flink-dialect rewrites splice only inside the body, so the
-    * head — and with it the body's start — is the original's. */
+    * head — and with it the body's start — is the original's. The
+    * body starts right after the head's AS: the query text Spark
+    * keeps (`originalText`) sits at or before its plan root's origin
+    * (a parenthesized query or ORDER BY roots later), and only blanks
+    * and block comments separate it from the AS. */
   private def viewStatementOf(sql: String): Option[ViewStatement] = {
-    val stop = sql.lastIndexWhere(!_.isWhitespace) + 1
+    @scala.annotation.tailrec
+    def afterAs(at: Int): Int = {
+      val end = sql.lastIndexWhere(!_.isWhitespace, at - 1) + 1
+      if (sql.startsWith("*/", end - 2)) afterAs(sql.lastIndexOf("/*", end - 3))
+      else end
+    }
     def created(name: String, cols: Seq[(String, Option[String])],
-        body: Option[String], ifNotExists: Boolean) =
-      body.map(b => ViewStatement(name, create = true, ifNotExists,
-        Some(cols.map(_._1)).filter(_.nonEmpty), stop - b.length))
+        text: Option[String], body: LogicalPlan, ifNotExists: Boolean) =
+      for (t <- text; root <- body.origin.startIndex)
+        yield ViewStatement(name, create = true, ifNotExists,
+          Some(cols.map(_._1)).filter(_.nonEmpty),
+          afterAs(sql.lastIndexOf(t, root)))
     scala.util.Try(new SparkSqlParser().parsePlan(sql)).toOption.flatMap {
       case c: CreateViewCommand => created(c.name.table,
-        c.userSpecifiedColumns, c.originalText, c.allowExisting)
+        c.userSpecifiedColumns, c.originalText, c.plan, c.allowExisting)
       case c @ CreateView(UnresolvedIdentifier(parts, _), _, _, _, _, _, _,
           _, _, _) =>
-        created(parts.last, c.userSpecifiedColumns, c.originalText,
+        created(parts.last, c.userSpecifiedColumns, c.originalText, c.query,
           c.allowExisting)
       case DropView(UnresolvedIdentifier(parts, _), _) =>
         Some(ViewStatement(parts.last, create = false, ifNotExists = false,
-          None, stop))
+          None, sql.length))
       case _ => None
     }
   }
@@ -1828,13 +1839,14 @@ final class SqlSubmitAction(
             dropped.exists(_.equalsIgnoreCase(a.nameParts.last)))
       }
     } yield {
-      // the region with the view swapped for the intermediate; the
-      // statement's alias (if any) survives the swap, so the ON
-      // predicate's qualifiers keep resolving
+      // the region with the view swapped for the intermediate, aliased
+      // as the statement names the view (its alias, else its own name),
+      // so the ON predicate's qualifiers keep resolving
+      val matQual = "`" + aliasOf(viewRel)
+        .getOrElse(viewRel.multipartIdentifier.last).replace("`", "``") + "`"
       val swapped = ScriptParser.splice(sql, from, to, Seq(
         (viewRel.origin.startIndex.get, viewRel.origin.stopIndex.get + 1,
-          m.mat)))
-      val matQual = aliasOf(viewRel).getOrElse(m.mat)
+          if (aliasOf(viewRel).isDefined) m.mat else s"${m.mat} AS $matQual")))
       val items =
         m.colTypes.map { case (n, _) => s"$matQual.`$n`" } ++
           dimSplit.flatMap { case (qs, kept, _) =>

@@ -421,6 +421,33 @@ class AutoSplitSpec extends AnyFunSuite {
     assert(readAll("SELECT K, TOTAL FROM ASPJN", 2) === Seq(Seq(0L, 12L)))
   }
 
+  test("the enrichment form keeps an UNALIASED view's qualifiers: the " +
+      "ON predicate names the view and the dim by their own names") {
+    resetTable("ASPNQ",
+      "CREATE TABLE ASPNQ (K BIGINT PRIMARY KEY, TOTAL BIGINT)")
+    run(
+      s"""SET execution.runtime-mode = streaming;
+         |SET table.exec.state.ttl = 600 s;
+         |SET graft.streaming.auto-split-updating = true;
+         |${srcAndView("aspnq")}
+         |create table aspnq_dim (
+         |  k bigint, mult bigint
+         |) with ('connector' = 'datagen', 'number-of-rows' = '1',
+         |  'fields.k.min' = '0', 'fields.k.max' = '0',
+         |  'fields.mult.min' = '3', 'fields.mult.max' = '3');
+         |create table aspnq_sink (k bigint, total bigint,
+         |  primary key (k) not enforced
+         |) with ('connector' = 'jdbc', 'url' = '$url',
+         |  'table-name' = 'ASPNQ');
+         |insert into aspnq_sink
+         |select aspnq_agg.k, sum(aspnq_dim.mult) as total
+         |from aspnq_agg join aspnq_dim on aspnq_dim.k = aspnq_agg.k
+         |group by aspnq_agg.k;
+         |""".stripMargin, "join-unaliased")
+    // four closed windows enrich against mult = 3 -> sum 12
+    assert(readAll("SELECT K, TOTAL FROM ASPNQ", 2) === Seq(Seq(0L, 12L)))
+  }
+
   test("the enrichment form chains TWO static dims (r20): both join " +
       "into one collision-free view, value-pinned") {
     resetTable("ASPJ2",

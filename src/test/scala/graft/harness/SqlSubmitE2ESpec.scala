@@ -1663,6 +1663,22 @@ class SqlSubmitE2ESpec extends AnyFunSuite {
     assert(action.registeredRowtimeOf("dtv_kept").contains(("ts", "1 seconds")))
   }
 
+  test("a view's recorded definition is all the text after AS, block " +
+      "comments and parentheses included, and comments or a TABLE body " +
+      "keep its rowtime") {
+    val action = registryRun("vdt",
+      """create temporary view vdt_tail as select k, ts from vdt_src /* note */;
+        |create temporary view vdt_lead as /* c */ (select k, ts from vdt_src);
+        |create temporary view vdt_table as table vdt_src;
+        |""".stripMargin)
+    assert(action.viewDefs.get("vdt_tail")
+      .contains("select k, ts from vdt_src /* note */"))
+    assert(action.viewDefs.get("vdt_lead")
+      .contains("/* c */ (select k, ts from vdt_src)"))
+    for (v <- Seq("vdt_tail", "vdt_lead", "vdt_table"))
+      assert(action.registeredRowtimeOf(v).contains(("ts", "1 seconds")), v)
+  }
+
   test("subquery WRAPPERS, a parenthesized body and a COMMENT clause " +
       "keep a plain view's rowtime: projections and filters keep it " +
       "at every SELECT level") {
