@@ -170,6 +170,11 @@ final class SqlSubmitAction(
   /** Flink's `DROP TEMPORARY VIEW` is Spark's `DROP VIEW`. */
   private val DropTemporaryRe = raw"(?is)^(\s*DROP\s+)TEMPORARY\s+(?=VIEW\b)".r
 
+  /** Flink's `CREATE TEMPORARY VIEW IF NOT EXISTS`, which Spark's
+    * parser rejects; group 1 is the IF NOT EXISTS. */
+  private val TempViewIfNotExistsRe =
+    raw"(?is)^\s*CREATE\s+TEMPORARY\s+VIEW\s+(IF\s+NOT\s+EXISTS)\b".r
+
   /** The body plan of the CREATE VIEW `sql`, parsed once with its
     * Flink-only regions blanked by same-length text — the `FOR
     * SYSTEM_TIME AS OF` clauses, the MATCH_ROWTIME pattern region
@@ -177,9 +182,10 @@ final class SqlSubmitAction(
     * its source name in place — so the plan's origins index `sql`. */
   private def viewBodyOf(sql: String,
       region: Option[MatchRecognize.RowtimeRegion],
-      tvfCalls: Seq[(Int, Int, String)]): Option[LogicalPlan] = {
+      tvfCalls: Seq[WindowTvf.Call]): Option[LogicalPlan] = {
     val blanked = (region.map(r => (r.from, r.to, "")).toSeq ++
-      tvfCalls).foldLeft(TemporalJoin.blankClauses(sql)) {
+      tvfCalls.map(c => (c.from, c.to, c.src))).foldLeft(
+        TemporalJoin.blankClauses(sql)) {
       case (s, (from, to, keep)) => s.patch(from, keep.padTo(to - from, ' '),
         to - from)
     }
@@ -283,7 +289,7 @@ final class SqlSubmitAction(
       val masked = MatchRecognize.maskQuoted(sql)
       val pattern = MatchRecognize.hasMatchRecognize(masked)
       val region = if (pattern) MatchRecognize.rowtimeRegionOf(sql) else None
-      val tvfCalls = WindowTvf.tvfCalls(sql)
+      val tvfCalls = WindowTvf.calls(sql).collect { case c: WindowTvf.Call => c }
       viewBodyOf(sql, region, tvfCalls).foreach { body =>
         recordVersionedView(v, body)
         val temporal = !pattern && TemporalJoin.hasTemporalJoin(masked)
@@ -351,7 +357,7 @@ final class SqlSubmitAction(
   private def recordRowtime(spark: SparkSession, v: ViewStatement,
       sql: String, body: LogicalPlan,
       region: Option[MatchRecognize.RowtimeRegion], temporal: Boolean,
-      tvfCall: Option[(Int, Int, String)]): Unit = {
+      tvfCall: Option[WindowTvf.Call]): Unit = {
     val nodes = ScriptParser.nodesOf(body)
     val hasJoin = nodes.exists(_.isInstanceOf[Join])
     def relationAt(start: Int) = nodes.collectFirst {
@@ -363,8 +369,8 @@ final class SqlSubmitAction(
     val source: Option[(UnresolvedRelation, String, String)] =
       if (region.isDefined || tvfCall.isDefined) for {
         (src, attr, start) <- region.map(r => (r.src, r.alias, r.srcStart))
-          .orElse(tvfCall.map { case (start, _, src) =>
-            (DdlParser.unquoteName(src), "window_time", start) })
+          .orElse(tvfCall.map(c =>
+            (DdlParser.unquoteName(c.src), "window_time", c.from)))
         if !hasJoin
         (_, delay) <- watermarkOf(src)
         leaf <- relationAt(start)
@@ -628,24 +634,31 @@ final class SqlSubmitAction(
             // eagerly, a temp view stores the ANALYZED plan (Spark
             // >= 3.2), and a permanent view referencing a temp view
             // fails at creation regardless
-            val sql = DropTemporaryRe.replaceFirstIn(st.sql, "$1")
+            // a temporary view's IF NOT EXISTS blanks to spaces, so
+            // positions in the text Spark reads stay the original's
+            val tempIfNotExists = TempViewIfNotExistsRe.findFirstMatchIn(st.sql)
+            val sql = tempIfNotExists.fold(
+              DropTemporaryRe.replaceFirstIn(st.sql, "$1"))(m =>
+              st.sql.patch(m.start(1), " " * (m.end(1) - m.start(1)),
+                m.end(1) - m.start(1)))
             val rewritten = rewriteFlinkDialect(spark, config, sql)
             val view = viewStatementOf(rewritten)
-            // an IF NOT EXISTS create over an EXISTING view is a
-            // Spark no-op keeping the old definition — decided before
-            // execution, so the registry never updates from the
-            // ignored statement's text
-            val viewNoOp = view.exists(v => v.ifNotExists &&
-              scala.util.Try(spark.catalog.tableExists(v.name))
-                .getOrElse(false))
+            // an IF NOT EXISTS create over an EXISTING view is a no-op
+            // keeping the old definition — decided before execution,
+            // so the registry never updates from the ignored
+            // statement's text
+            val viewNoOp = view.exists(v =>
+              (v.ifNotExists || tempIfNotExists.isDefined) &&
+                scala.util.Try(spark.catalog.tableExists(v.name))
+                  .getOrElse(false))
             // a CREATE VIEW keeps its rewrite views ALIVE: the created
             // view re-resolves its body on every later reference, so
             // dropping a tracker view it references (a TVF aggregation
             // body) would break every downstream statement — CTAS
             // materializes eagerly and SELECT/INSERT resolve at
             // execution, so only the view-create path must keep them
-            try spark.sql(rewritten)
-            finally if (!view.exists(_.create))
+            try if (!viewNoOp) spark.sql(rewritten)
+            finally if (viewNoOp || !view.exists(_.create))
               MatchRecognize.dropViews(spark, rewritten)
             // CREATE/DROP VIEW maintain the event-time registry so
             // later streaming statements can window/aggregate OVER the

@@ -49,8 +49,7 @@ object WindowTopN {
     */
   def hasStreamingShape(sql: String): Boolean = {
     val masked = MatchRecognize.maskQuoted(sql)
-    if (raw"(?is)\bTABLE\s*\(\s*(TUMBLE|HOP|CUMULATE|SESSION)\s*\(".r
-        .findFirstIn(masked).isEmpty) return false
+    if (!WindowTvf.hasWindowTvf(sql)) return false
     // Paren-aware scan of each OVER(...) body: `[^)]*` would stop at
     // the first ')' of a parenthesized PARTITION BY expression and let
     // unsupported variants fall through to Spark's raw
@@ -79,12 +78,6 @@ object WindowTopN {
     raw"(?is)^\s*SELECT\s+\*\s*,\s*ROW_NUMBER\s*\(\s*\)\s*OVER\s*\(\s*" +
       raw"PARTITION\s+BY\s+(.+?)\s+ORDER\s+BY\s+([A-Za-z_]\w*)\s+(DESC|ASC)\s*\)\s+" +
       raw"AS\s+([A-Za-z_]\w*)\s+FROM\s+(.*)$$").r
-  private val WinSrcRe = (
-    raw"(?is)^TABLE\s*\(\s*(TUMBLE|HOP|CUMULATE|SESSION)\s*\(\s*(?:DATA\s*=>\s*)?(?:TABLE\s+)?" +
-      raw"([A-Za-z_][\w.]*)\s*,\s*(?:TIMECOL\s*=>\s*)?DESCRIPTOR\s*\(\s*([A-Za-z_]\w*)\s*\)\s*,\s*" +
-      raw"INTERVAL\s+'(\d+)'\s+(\w+)" +
-      raw"(?:\s*,\s*(?:OFFSET\s*=>\s*)?INTERVAL\s+'(-?\d+)'\s+(\w+))?" +
-      raw"(?:\s*,\s*(?:OFFSET\s*=>\s*)?INTERVAL\s+'(-?\d+)'\s+(\w+))?\s*\)\s*\)\s*$$").r
   /** Flink's window-top-N outer filter: `WHERE rn <= N [AND
     * conditions]` — the rank bound leads (the docs' canonical shape),
     * any residual conjuncts run as a plain filter over the tracker's
@@ -189,51 +182,25 @@ object WindowTopN {
     val metricCol = im.group(2)
     val asc = im.group(3).equalsIgnoreCase("ASC")
     val rnAlias = im.group(4)
-    val tm = WinSrcRe.findFirstMatchIn(im.group(5).trim).getOrElse(fail(
-      "streaming window top-N source must be a TUMBLE, HOP or CUMULATE " +
-        "window TVF over a named table: TABLE(TUMBLE(TABLE t, " +
-        "DESCRIPTOR(ts), INTERVAL 'n' UNIT)) / TABLE(HOP(..., slide, " +
-        "size)) / TABLE(CUMULATE(..., step, size))"))
-    val kind = tm.group(1).toUpperCase
-    if (kind == "SESSION")
+    val from = im.group(5).trim
+    val call = WindowTvf.calls(from) match {
+      case Seq(c) if c.from == 0 && c.to == from.length => c
+      case _ => fail(
+        "streaming window top-N source must be a TUMBLE, HOP or CUMULATE " +
+          "window TVF over a named table: TABLE(TUMBLE(TABLE t, " +
+          "DESCRIPTOR(ts), INTERVAL 'n' UNIT)) / TABLE(HOP(..., slide, " +
+          "size)) / TABLE(CUMULATE(..., step, size))")
+    }
+    if (call.kind == "SESSION")
       fail("streaming window top-N supports TUMBLE, HOP and CUMULATE " +
         "windows only (got SESSION) — aggregate session windows first, " +
         "then rank the aggregate (Flink rejects session top-N too)")
-    val isHop = kind == "HOP"
-    val isCumulate = kind == "CUMULATE"
-    if ((isHop || isCumulate) && tm.group(6) == null)
-      fail(s"streaming window top-N $kind takes " +
-        s"(${if (isHop) "slide" else "step"}, size[, offset]) intervals")
-    if (kind == "TUMBLE" && tm.group(8) != null)
-      fail("streaming window top-N TUMBLE takes (size[, offset]) " +
-        "intervals")
-    val (table, tcol) = (tm.group(2), tm.group(3))
-    def ivMs(g: Int): Long =
-      tm.group(g).toLong * WindowTvf.unitMillis(tm.group(g + 1))
-    val iv1 = ivMs(4)
-    // windowMs is the EMISSION size (we = ws + windowMs unless the
-    // fan-out pins we itself): the full window for every kind;
-    // HOP's slide / CUMULATE's step drives only the fan-out grid, and
-    // the offset shifts that grid (normalized into [0, grid unit) —
-    // the slide for HOP, the span size for CUMULATE)
-    val (slideMs, windowMs, offMs) = kind match {
-      case "HOP" =>
-        val size = ivMs(6)
-        require(size % iv1 == 0,
-          s"HOP size ($size ms) must be a multiple of its slide ($iv1 ms)")
-        val off = Option(tm.group(8)).map(_ => ivMs(8)).getOrElse(0L)
-        (iv1, size, ((off % iv1) + iv1) % iv1)
-      case "CUMULATE" =>
-        val size = ivMs(6)
-        require(size % iv1 == 0,
-          s"CUMULATE size ($size ms) must be a multiple of its step ($iv1 ms)")
-        val off = Option(tm.group(8)).map(_ => ivMs(8)).getOrElse(0L)
-        (iv1, size, ((off % size) + size) % size)
-      case _ =>
-        val off = Option(tm.group(6)).map(_ => ivMs(6)).getOrElse(0L)
-        (iv1, iv1, ((off % iv1) + iv1) % iv1)
+    val win = call match {
+      case c: WindowTvf.Call => c
+      case u: WindowTvf.Unread => fail(s"streaming window top-N ${u.why}")
     }
-    require(windowMs > 0 && slideMs > 0, "window size must be positive")
+    val (table, tcol) = (win.src, win.tcol)
+    val (isHop, isCumulate) = (win.kind == "HOP", win.kind == "CUMULATE")
 
     val winCols = Set("window_start", "window_end")
     if (!winCols.forall(w => pkeys.exists(_.equalsIgnoreCase(w))))
@@ -338,11 +305,6 @@ object WindowTopN {
     // timestamp, so the watermark and late-row drop are identical to
     // the tumbling path — the tracker just pins the pre-assigned
     // window instead of deriving it
-    def floorMs(e: String, u: Long): String = s"($e - pmod($e, ${u}L))"
-    val tms =
-      if (offMs == 0L) s"unix_millis(cast($tcol as timestamp))"
-      else s"(unix_millis(cast($tcol as timestamp)) - ${offMs}L)"
-    val back = if (offMs == 0L) "" else s" + ${offMs}L"
     // a NULL event time has no window (the batch form filters it);
     // it would NPE in the tracker's time slot
     val base = src.filter(col(tcol).isNotNull)
@@ -370,33 +332,18 @@ object WindowTopN {
         // transitions, so neither bound derives from the other by a
         // fixed size) — the same expressions as the batch rewrite and
         // the zone-grid aggregation tracker
-        val wall =
-          s"unix_millis(from_utc_timestamp(cast($tcol as timestamp), '$z'))"
+        val wall = WindowTvf.epochMs(tcol, localZone)
         def toInst(c: String): String =
           s"unix_millis(to_utc_timestamp(timestamp_millis($c), '$z'))"
-        val tmsW = if (offMs == 0L) wall else s"($wall - ${offMs}L)"
         val pinned =
-          if (isCumulate) {
-            val span = s"${floorMs(tmsW, windowMs)}$back"
-            val lo =
-              s"((pmod($tmsW, ${windowMs}L) div ${slideMs}L) + 1) * ${slideMs}L"
-            base.select(common ++ Seq(expr(span).as("__wsw"),
-                explode(expr(s"sequence($lo, ${windowMs}L, ${slideMs}L)"))
-                  .as("__eo")): _*)
+          if (isCumulate)
+            base.select(common ++ Seq(expr(win.start(wall)).as("__wsw"),
+                explode(expr(win.ends(wall))).as("__eo")): _*)
               .withColumn("__wew", col("__wsw") + col("__eo"))
-          } else if (isHop) {
-            val lo = s"${floorMs(s"($tmsW - ${windowMs}L)", slideMs)} + " +
-              s"${slideMs}L$back"
-            val hi = s"${floorMs(tmsW, slideMs)}$back"
-            base.select(common ++ Seq(
-                explode(expr(s"sequence($lo, $hi, ${slideMs}L)"))
-                  .as("__wsw")): _*)
-              .withColumn("__wew", col("__wsw") + lit(windowMs))
-          } else {
-            base.select(common ++ Seq(
-                expr(s"${floorMs(tmsW, windowMs)}$back").as("__wsw")): _*)
-              .withColumn("__wew", col("__wsw") + lit(windowMs))
-          }
+          else
+            base.select(common :+ (if (isHop) explode(expr(win.starts(wall)))
+                else expr(win.start(wall))).as("__wsw"): _*)
+              .withColumn("__wew", col("__wsw") + lit(win.size))
         pinned.select(Seq(col("key"), col("ts"), col("metric"),
             col("payload"),
             expr(toInst("__wsw")).as("ws"),
@@ -406,29 +353,26 @@ object WindowTopN {
       case None if isCumulate =>
         // ws is the span start; each copy pins one growing window's
         // end: the step-multiple offsets strictly after the row
-        val span = s"${floorMs(tms, windowMs)}$back"
-        val lo = s"((pmod($tms, ${windowMs}L) div ${slideMs}L) + 1) * ${slideMs}L"
-        base.select(common ++ Seq(expr(span).as("ws"),
-            explode(expr(s"sequence($lo, ${windowMs}L, ${slideMs}L)"))
-              .as("__eo")): _*)
+        val t = WindowTvf.epochMs(tcol)
+        base.select(common ++ Seq(expr(win.start(t)).as("ws"),
+            explode(expr(win.ends(t))).as("__eo")): _*)
           .select(Seq(col("key"), col("ts"), col("metric"),
             col("payload"),
             col("ws"), (col("ws") + col("__eo")).as("we"),
             col("nullMetric")) ++ chainedTail: _*)
           .as[graft.streaming.RankEvent]
       case None =>
+        val t = WindowTvf.epochMs(tcol)
         val wsCol =
-          if (!isHop && offMs == 0L) lit(Long.MinValue)
-          else if (!isHop) expr(s"${floorMs(tms, windowMs)}$back")
-          else explode(expr(
-            s"sequence(${floorMs(s"($tms - ${windowMs}L)", slideMs)} + " +
-              s"${slideMs}L$back, ${floorMs(tms, slideMs)}$back, ${slideMs}L)"))
+          if (!isHop && win.offset == 0L) lit(Long.MinValue)
+          else if (!isHop) expr(win.start(t))
+          else explode(expr(win.starts(t)))
         base.select(common ++ Seq(wsCol.as("ws"),
             lit(Long.MinValue).as("we")): _*)
           .as[graft.streaming.RankEvent]
     }
     val ranked =
-      graft.streaming.TopNTracker.track(events, wmDelay, windowMs, n, asc)
+      graft.streaming.TopNTracker.track(events, wmDelay, win.size, n, asc)
 
     val keySchema = StructType(extras.map(k => fieldOf(k)))
     // integral/decimal metrics rank exactly for |v| < 2^53 through the

@@ -49,45 +49,180 @@ object WindowTvf {
 
   private val Ident = raw"(?:`[^`]+`|[A-Za-z_]\w*)"
   private val Dotted = s"$Ident(?:\\.$Ident)*"
-  private val Interval =
-    raw"(?:(SIZE|SLIDE|STEP)\s*=>\s*)?INTERVAL\s+'(\d+)'\s+(\w+)"
-  /** Trailing window-offset argument (Flink 1.14+): may be negative —
-    * the canonical use is shifting whole-day windows into a non-UTC
-    * timezone (`INTERVAL '-8' HOUR`).
-    */
-  private val OffsetIv =
-    raw"(?:(OFFSET)\s*=>\s*)?INTERVAL\s+'(-?\d+)'\s+(\w+)"
 
-  /** `TABLE(TUMBLE([DATA =>] [TABLE] t, [TIMECOL =>] DESCRIPTOR(col), INTERVAL 'n' UNIT[, offset]))` */
-  private val TumbleRe = (
-    raw"(?is)\bTABLE\s*\(\s*TUMBLE\s*\(\s*(?:DATA\s*=>\s*)?(?:TABLE\s+)?($Dotted)\s*,\s*" +
-      raw"(?:TIMECOL\s*=>\s*)?DESCRIPTOR\s*\(\s*($Ident)\s*\)\s*,\s*$Interval" +
-      raw"(?:\s*,\s*$OffsetIv)?\s*\)\s*\)").r
+  /** One window-TVF call argument: an optional `NAME =>` tag, then the
+    * source `[TABLE] t [PARTITION BY k]`, `DESCRIPTOR(col)` or
+    * `INTERVAL 'n' UNIT` — a further SESSION key reads as a source with
+    * neither TABLE nor PARTITION BY. */
+  private val ArgRe = (raw"(?is)(?:([A-Za-z_]\w*)\s*=>\s*)?(?:" +
+    raw"DESCRIPTOR\s*\(\s*($Ident)\s*\)|INTERVAL\s+'(-?\d+)'\s+(\w+)|" +
+    raw"(TABLE\s+)?($Dotted)(?:\s+PARTITION\s+BY\s+($Ident))?)").r
 
-  /** `TABLE(HOP(t, DESCRIPTOR(col), slide, size[, offset]))` — Flink's
-    * argument order puts the slide before the window size.
-    */
-  private val HopRe = (
-    raw"(?is)\bTABLE\s*\(\s*HOP\s*\(\s*(?:DATA\s*=>\s*)?(?:TABLE\s+)?($Dotted)\s*,\s*" +
-      raw"(?:TIMECOL\s*=>\s*)?DESCRIPTOR\s*\(\s*($Ident)\s*\)\s*,\s*$Interval\s*,\s*$Interval" +
-      raw"(?:\s*,\s*$OffsetIv)?\s*\)\s*\)").r
+  /** Each kind's parameters in declaration order. */
+  private val Params = Map(
+    "TUMBLE" -> Seq("DATA", "TIMECOL", "SIZE", "OFFSET"),
+    "HOP" -> Seq("DATA", "TIMECOL", "SLIDE", "SIZE", "OFFSET"),
+    "CUMULATE" -> Seq("DATA", "TIMECOL", "STEP", "SIZE", "OFFSET"),
+    "SESSION" -> Seq("DATA", "TIMECOL", "GAP"))
 
-  /** `TABLE(CUMULATE(t, DESCRIPTOR(col), step, size[, offset]))` */
-  private val CumulateRe = (
-    raw"(?is)\bTABLE\s*\(\s*CUMULATE\s*\(\s*(?:DATA\s*=>\s*)?(?:TABLE\s+)?($Dotted)\s*,\s*" +
-      raw"(?:TIMECOL\s*=>\s*)?DESCRIPTOR\s*\(\s*($Ident)\s*\)\s*,\s*$Interval\s*,\s*$Interval" +
-      raw"(?:\s*,\s*$OffsetIv)?\s*\)\s*\)").r
+  /** A `TABLE(TUMBLE|HOP|CUMULATE|SESSION(...))` call found in the text:
+    * its kind and its [from, to) span. */
+  private[harness] sealed trait TvfCall {
+    def kind: String; def from: Int; def to: Int
+  }
 
-  /** `TABLE(SESSION(t [PARTITION BY k1, k2], DESCRIPTOR(col), [GAP =>] INTERVAL))` */
-  private val SessionTvfRe = (
-    raw"(?is)\bTABLE\s*\(\s*SESSION\s*\(\s*(?:DATA\s*=>\s*)?(?:TABLE\s+)?($Dotted)" +
-      raw"(?:\s+PARTITION\s+BY\s+($Ident(?:\s*,\s*$Ident)*))?\s*,\s*" +
-      raw"(?:TIMECOL\s*=>\s*)?DESCRIPTOR\s*\(\s*($Ident)\s*\)\s*,\s*" +
-      raw"(?:(GAP)\s*=>\s*)?INTERVAL\s+'(\d+)'\s+(\w+)\s*\)\s*\)").r
+  /** A call whose spelling the reader does not take, and why. */
+  private[harness] final case class Unread(kind: String, from: Int, to: Int,
+      why: String) extends TvfCall
 
-  /** Broad marker: any windowing TVF call, supported shape or not —
-    * drives both the batch-only guard and the residual check below.
-    */
+  /** A window-TVF call over a named source, read once: the source as
+    * written, the DESCRIPTOR column, the window size (SESSION's gap)
+    * and its grid unit (HOP's slide, CUMULATE's step, the size
+    * otherwise) in ms, the offset normalized into [0, slide) for HOP
+    * and [0, size) otherwise, SESSION's PARTITION BY keys, and the span
+    * [[alignToZone]] rewrites: the offset argument with its leading
+    * comma, or the empty span after the last interval.
+    *
+    * Its methods are the covering-window law, written once over an
+    * epoch-ms expression `t` (UTC millis, or wall-clock millis under a
+    * DST region zone). Starts floor like Flink's even before the
+    * epoch: `t - pmod(t, unit)` (pmod is non-negative), never a
+    * truncating `div` or a double `FLOOR(x / unit)` that can misround
+    * at a boundary. */
+  private[harness] final case class Call(kind: String, from: Int, to: Int,
+      src: String, tcol: String, size: Long, slide: Long, offset: Long,
+      keys: Seq[String], offsetAt: (Int, Int)) extends TvfCall {
+    require(size > 0 && slide > 0,
+      if (kind == "SESSION") "session gap must be positive"
+      else "window TVF intervals must be positive")
+    require(size % slide == 0, s"$kind size ($size ms) " +
+      s"must be a multiple of its ${Params(kind)(2).toLowerCase} ($slide ms)")
+
+    private def shifted(t: String) = if (offset == 0L) t else s"($t - ${offset}L)"
+    private def back = if (offset == 0L) "" else s" + ${offset}L"
+
+    /** TUMBLE's window start covering `t`, CUMULATE's span start. */
+    def start(t: String): String = s"${floorTo(shifted(t), size)}$back"
+
+    /** HOP's covering window starts: from the first start whose window
+      * still contains `t` up to `t`'s own slide bucket. */
+    def starts(t: String): String =
+      s"sequence(${floorTo(s"(${shifted(t)} - ${size}L)", slide)} + " +
+        s"${slide}L$back, ${floorTo(shifted(t), slide)}$back, ${slide}L)"
+
+    /** CUMULATE's first window end after `t`, as an offset from its
+      * span start; pmod keeps it non-negative for pre-epoch rows too. */
+    def firstEnd(t: String): String =
+      s"((pmod(${shifted(t)}, ${size}L) div ${slide}L) + 1) * ${slide}L"
+
+    /** CUMULATE's window ends after `t`, step by step to the span end. */
+    def ends(t: String): String = s"sequence(${firstEnd(t)}, ${size}L, ${slide}L)"
+
+    /** Spark's native window: HOP's sliding window, TUMBLE's window
+      * (CUMULATE's span) with the offset in the startTime slot, and
+      * SESSION's gap widened by 1 ms — Flink merges sessions that
+      * merely TOUCH (`diff <= gap`), Spark's `diff < gap` only on
+      * overlap, so the emitted end reads back 1 ms to Flink's bound. */
+    def native: String = kind match {
+      case "SESSION" => s"session_window($tcol, '${size + 1L} milliseconds')"
+      case _ =>
+        val every =
+          if (kind == "HOP") s", '$slide milliseconds'"
+          else if (offset != 0L) s", '$size milliseconds'" else ""
+        val off = if (offset == 0L) "" else s", '$offset milliseconds'"
+        s"window($tcol, '$size milliseconds'$every$off)"
+    }
+  }
+
+  /** Every window-TVF call of `sql`, in text order, found on the
+    * quote-masked text so a TVF spelled inside a string literal is no
+    * call. A call reads when its arguments are, in declaration order,
+    * the named source (SESSION: with its PARTITION BY keys), the
+    * DESCRIPTOR of one unqualified column, whole-number intervals —
+    * and, except for SESSION, an optional offset. A `NAME =>` tag must
+    * name the parameter at its position: Flink's named arguments are
+    * order-free, and a positional read of a reordered call would
+    * silently swap slide and size. */
+  private[harness] def calls(sql: String): Seq[TvfCall] = {
+    val masked = MatchRecognize.maskQuoted(sql)
+    AnyTvfRe.findAllMatchIn(masked).toSeq.map { m =>
+      val kind = m.group(1).toUpperCase
+      val open = m.end - 1
+      scala.util.Try((MatchRecognize.closeParen(masked, open),
+          MatchRecognize.closeParen(masked, masked.indexOf('(', m.start))))
+        .toOption match {
+        case Some((close, to)) if masked.substring(close, to - 1).trim.isEmpty =>
+          read(sql, kind, m.start, to, open, close)
+        case _ => Unread(kind, m.start, sql.length,
+          s"$kind call has unbalanced parentheses")
+      }
+    }
+  }
+
+  /** One argument as [[ArgRe]] reads it (null for an absent part). */
+  private final case class Arg(tag: String, desc: String, n: String,
+      unit: String, table: String, src: String, key: String) {
+    /** A bare name: a further positional SESSION key. */
+    def bareKey: Boolean = Seq(tag, desc, n, table, key).forall(_ == null) &&
+      !src.contains('.')
+  }
+
+  private def read(sql: String, kind: String, from: Int, to: Int,
+      open: Int, close: Int): TvfCall = {
+    def unread(why: String) = Unread(kind, from, to, s"$kind $why")
+    val pieces = splitTopLevel(sql.substring(open + 1, close - 1))
+    // end of each trimmed argument in `sql`
+    val ends = pieces.zip(pieces.scanLeft(open + 1)(_ + _.length + 1))
+      .map { case (p, at) => at + p.lastIndexWhere(!_.isWhitespace) + 1 }
+    val args = pieces.map(_.trim match {
+      case ArgRe(tag, desc, n, unit, table, src, key) =>
+        Some(Arg(tag, desc, n, unit, table, src, key))
+      case _ => None
+    })
+    // SESSION's positional `PARTITION BY k1, k2` runs over the commas
+    val extraKeys =
+      if (kind != "SESSION" || args.head.forall(_.key == null)) 0
+      else args.drop(1).takeWhile(_.exists(_.bareKey)).size
+    val params = Params(kind)
+    val given = args.head +: args.drop(1 + extraKeys)
+    val ivs = given.size - 2
+    // size intervals; all but SESSION take a trailing offset too
+    val sizes = if (kind == "SESSION") 1 else params.size - 3
+    if (given.exists(_.isEmpty))
+      unread(s"argument not recognized: ${sql.substring(from, to)}")
+    else if (ivs < sizes || ivs > params.size - 2) unread(kind match {
+      case "SESSION" => "takes (gap) interval"
+      case "TUMBLE" => "takes (size[, offset]) intervals"
+      case _ => s"takes (${params(2).toLowerCase}, size[, offset]) intervals"
+    })
+    else {
+      val Seq(src, desc, iv @ _*) = given.flatten
+      given.flatten.zip(params).foreach { case (a, p) =>
+        Option(a.tag).map(_.toUpperCase).filter(_ != p).foreach(name =>
+          throw new IllegalArgumentException(s"Window TVF argument $name => " +
+            s"where $p was expected; write named arguments in declaration order"))
+      }
+      if (src.src == null || (src.key != null && kind != "SESSION"))
+        unread("first argument must name the source table")
+      else if (desc.desc == null)
+        unread("needs DESCRIPTOR(col) of one unqualified column")
+      else if (iv.exists(_.n == null)) unread("intervals must be INTERVAL 'n' UNIT")
+      else {
+        val ms = iv.map(a => a.n.toLong * unitMillis(a.unit))
+        val (slide, size) = if (sizes == 1) (ms.head, ms.head) else (ms(0), ms(1))
+        val keys = Option(src.key).toSeq ++
+          args.slice(1, 1 + extraKeys).flatten.map(_.src)
+        val offset =
+          if (ms.size == sizes) 0L
+          else normOffset(ms.last, if (kind == "HOP") slide else size)
+        Call(kind, from, to, src.src, desc.desc, size, slide, offset, keys,
+          (ends(1 + extraKeys + sizes), ends.last))
+      }
+    }
+  }
+
+  /** Any windowing TVF call, supported shape or not — where [[calls]]
+    * starts reading. */
   private val AnyTvfRe =
     raw"(?is)\bTABLE\s*\(\s*(TUMBLE|HOP|CUMULATE|SESSION)\s*\(".r
 
@@ -119,26 +254,12 @@ object WindowTvf {
       raw"((?:,\s*$LegacyIv\s*){1,2})\)").r
   private val LegacyIvRe = ("(?i)" + LegacyIv).r
 
-  def hasWindowTvf(sql: String): Boolean =
-    AnyTvfRe.findFirstIn(sql).isDefined ||
-      AnyLegacyRe.findFirstIn(sql).isDefined
-
-  /** A window-TVF call over a NAMED source relation. */
-  private val TvfSrcNameRe = (raw"(?is)\bTABLE\s*\(\s*" +
-    raw"(?:TUMBLE|HOP|CUMULATE|SESSION)\s*\(\s*(?:DATA\s*=>\s*)?" +
-    raw"(?:TABLE\s+)?($Dotted)").r
-
-  /** Each window-TVF call over a named source, for the view registry's
-    * window_time propagation (r17): the call's [from, to) span and the
-    * source name as written. The registry replaces each call with its
-    * source name padded with spaces, so Spark's parser reads the rest
-    * of the body and origins still index the original text. */
-  private[harness] def tvfCalls(sql: String): Seq[(Int, Int, String)] = {
+  /** A window-TVF call or a legacy group window is spelled outside
+    * string literals. */
+  def hasWindowTvf(sql: String): Boolean = {
     val masked = MatchRecognize.maskQuoted(sql)
-    TvfSrcNameRe.findAllMatchIn(masked).toSeq.flatMap(m =>
-      scala.util.Try(MatchRecognize.closeParen(masked,
-        masked.indexOf('(', m.start))).toOption
-        .map((m.start, _, sql.substring(m.start(1), m.end(1)))))
+    AnyTvfRe.findFirstIn(masked).isDefined ||
+      AnyLegacyRe.findFirstIn(masked).isDefined
   }
 
   /** A window-TVF call whose SOURCE argument is an inline subquery —
@@ -196,16 +317,6 @@ object WindowTvf {
     (out, resolver)
   }
 
-  /** A GRID-windowing TVF call is present (TUMBLE/HOP/CUMULATE —
-    * the forms whose boundaries align to an epoch grid). SESSION is
-    * deliberately excluded: gap-based windows are grid-free, so a
-    * shifted session zone cannot move their boundaries.
-    */
-  private val GridTvfRe =
-    raw"(?is)\bTABLE\s*\(\s*(TUMBLE|HOP|CUMULATE)\s*\(".r
-  def hasGridTvf(sql: String): Boolean =
-    GridTvfRe.findFirstIn(sql).isDefined
-
   /** A legacy GROUP BY grid window (TUMBLE/HOP group call or one of
     * their accessors) is present. Legacy SESSION is excluded — gap
     * windows are zone-invariant.
@@ -227,41 +338,28 @@ object WindowTvf {
     * is an instant rendered in the session zone, so "local wall-clock
     * multiple of the size" is exactly "instant ≡ −shift (mod size)":
     * one extra window offset of `−zoneShiftMs` composed with any
-    * offset the call already declares. Emitting the combined offset
-    * back into the SQL text (canonical positional form, MILLISECOND
-    * unit — always exact: declared offsets are integer multiples of a
+    * offset the call already declares. Writing the combined offset
+    * over the call's offset argument (positional, MILLISECOND unit —
+    * always exact: declared offsets are integer multiples of a
     * supported unit and zone offsets are whole seconds) lets every
     * downstream consumer — batch rewrite, streaming trackers, window
     * top-N, window join, GROUPING SETS — inherit the alignment from
     * the one offset path they already implement, instead of threading
     * a zone parameter through each.
     *
-    * SESSION stays untouched (gap windows have no grid); legacy group
-    * windows have no offset argument and are rejected upstream by
-    * name. Normalization into `[0, unit)` happens at the existing use
-    * sites, so the possibly-negative combined value is fine.
+    * SESSION stays untouched (gap windows have no grid), and so does a
+    * call the reader does not take; legacy group windows have no
+    * offset argument and are rejected upstream by name. The reader
+    * normalizes the offset again, so the possibly-negative combined
+    * value is fine.
     */
-  def alignToZone(sql: String, zoneShiftMs: Long): String = {
-    def iv(m: scala.util.matching.Regex.Match, base: Int): String =
-      // keep a `NAME =>` tag so the use-site's declaration-order
-      // validation still sees it
-      Option(m.group(base)).map(n => s"$n => ").getOrElse("") +
-        s"INTERVAL '${m.group(base + 1)}' ${m.group(base + 2)}"
-    def combined(m: scala.util.matching.Regex.Match, base: Int): String =
-      s"INTERVAL '${offsetMillis(m, base) - zoneShiftMs}' MILLISECOND"
-    val t = TumbleRe.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"TABLE(TUMBLE(TABLE ${m.group(1)}, DESCRIPTOR(${m.group(2)}), " +
-          s"${iv(m, 3)}, ${combined(m, 6)}))"))
-    val h = HopRe.replaceAllIn(t, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"TABLE(HOP(TABLE ${m.group(1)}, DESCRIPTOR(${m.group(2)}), " +
-          s"${iv(m, 3)}, ${iv(m, 6)}, ${combined(m, 9)}))"))
-    CumulateRe.replaceAllIn(h, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"TABLE(CUMULATE(TABLE ${m.group(1)}, DESCRIPTOR(${m.group(2)}), " +
-          s"${iv(m, 3)}, ${iv(m, 6)}, ${combined(m, 9)}))"))
-  }
+  def alignToZone(sql: String, zoneShiftMs: Long): String =
+    calls(sql).collect { case c: Call if c.kind != "SESSION" => c }
+      .foldRight(sql) { (c, out) =>
+        val (from, to) = c.offsetAt
+        out.patch(from,
+          s", INTERVAL '${c.offset - zoneShiftMs}' MILLISECOND", to - from)
+      }
 
   private[harness] def unitMillis(unit: String): Long =
     unit.toUpperCase.stripSuffix("S") match {
@@ -274,38 +372,6 @@ object WindowTvf {
         s"Unsupported window TVF interval unit '$other'")
     }
 
-  /** One interval argument: value in milliseconds, bound by its
-    * `name =>` tag when present (Flink's named arguments are
-    * order-free, so a positional read of a named call would silently
-    * swap slide/size).
-    */
-  private def millis(m: scala.util.matching.Regex.Match, base: Int,
-      expected: String): Long = {
-    Option(m.group(base)).map(_.toUpperCase).foreach(name =>
-      if (name != expected) throw new IllegalArgumentException(
-        s"Window TVF argument $name => where $expected was expected; " +
-          "write named intervals in declaration order"))
-    val s = m.group(base + 1).toLong * unitMillis(m.group(base + 2))
-    require(s > 0, "window TVF intervals must be positive")
-    s
-  }
-
-  /** The optional trailing offset argument: 0 when absent; signed
-    * (negative offsets shift windows earlier — the timezone-alignment
-    * use). Normalization into `[0, unit)` happens at the use site,
-    * against the window size (TUMBLE) or slide (HOP): window sets are
-    * invariant under offset mod that unit, and the normalized value
-    * keeps the epoch arithmetic single-branch.
-    */
-  private def offsetMillis(m: scala.util.matching.Regex.Match,
-      base: Int): Long = {
-    if (m.group(base + 1) == null) return 0L
-    Option(m.group(base)).map(_.toUpperCase).foreach(name =>
-      if (name != "OFFSET") throw new IllegalArgumentException(
-        s"Window TVF argument $name => where OFFSET was expected"))
-    m.group(base + 1).toLong * unitMillis(m.group(base + 2))
-  }
-
   private def normOffset(off: Long, unit: Long): Long =
     ((off % unit) + unit) % unit
 
@@ -315,32 +381,24 @@ object WindowTvf {
   private def floorTo(expr: String, unit: Long): String =
     s"($expr - pmod($expr, ${unit}L))"
 
-  /** Epoch milliseconds of the time attribute. The cast makes the
-    * arithmetic accept TIMESTAMP_NTZ columns (what a parquet file
-    * written without UTC adjustment scans as) alongside TIMESTAMP —
-    * the harness pins the session timezone to UTC, so the cast is
-    * value-preserving, matching Flink's naive TIMESTAMP(3) timeline.
-    */
-  private def epochMs(tcol: String): String = epochMs(tcol, None)
-
   /** Epoch milliseconds of the time attribute — or, under a LOCAL-zone
     * grid (`zone` set: a DST region `table.local-time-zone`, batch
     * mode), the attribute's WALL-CLOCK milliseconds in that zone
     * (`from_utc_timestamp` applies the offset in force at each
     * instant, so grid floors happen on the local timeline and daily
     * windows are 23/25 h across transitions, as Flink's). The cast
-    * makes the arithmetic accept TIMESTAMP_NTZ columns alongside
-    * TIMESTAMP.
+    * makes the arithmetic accept TIMESTAMP_NTZ columns (what a parquet
+    * file written without UTC adjustment scans as) alongside TIMESTAMP
+    * — the harness pins the session timezone to UTC, so the cast is
+    * value-preserving, matching Flink's naive TIMESTAMP(3) timeline.
     */
-  private def epochMs(tcol: String, zone: Option[String]): String =
+  private[harness] def epochMs(tcol: String,
+      zone: Option[String] = None): String =
     zone match {
       case None => s"unix_millis(cast($tcol as timestamp))"
       case Some(z) =>
         s"unix_millis(from_utc_timestamp(cast($tcol as timestamp), '$z'))"
     }
-
-  private def contract(startMs: String, endMs: String): String =
-    contract(startMs, endMs, None)
 
   /** Window contract columns. Under a local-zone grid the bounds are
     * wall-clock millis and convert back to instants with
@@ -374,90 +432,51 @@ object WindowTvf {
     // legacy HOP/SESSION group windows escalate to the TVF form first
     // (legacy TUMBLE keeps its cheaper scalar rewrite below)
     val sql0 = legacyGroupToTvf(sql, tumbleToo = false, joinsOk = true)
-    val afterTumble = TumbleRe.replaceAllIn(sql0, m => {
-      val (table, tcol) = (m.group(1), m.group(2))
-      val dur = millis(m, 3, "SIZE")
-      val off = normOffset(offsetMillis(m, 6), dur)
-      val t = epochMs(tcol, localZone)
-      // offset shifts the window grid: floor in offset-space, shift back
-      val ws =
-        if (off == 0L) floorTo(t, dur)
-        else s"(${floorTo(s"($t - ${off}L)", dur)} + ${off}L)"
-      java.util.regex.Matcher.quoteReplacement(
-        s"(SELECT $table.*, ${contract(ws, s"$ws + ${dur}L", localZone)} " +
-          s"FROM $table WHERE $tcol IS NOT NULL)")
-    })
-    val afterHop = HopRe.replaceAllIn(afterTumble, m => {
-      val (table, tcol) = (m.group(1), m.group(2))
-      val slide = millis(m, 3, "SLIDE")
-      val size = millis(m, 6, "SIZE")
-      require(size % slide == 0,
-        s"HOP size (${size} ms) must be a multiple of its slide (${slide} ms)")
-      val off = normOffset(offsetMillis(m, 9), slide)
-      val t = epochMs(tcol, localZone)
-      // covering window starts: from the first start whose window still
-      // contains the row, up to the row's own slide bucket — the grid
-      // shifted by the offset when one is declared
-      val tOff = if (off == 0L) t else s"($t - ${off}L)"
-      val back = if (off == 0L) "" else s" + ${off}L"
-      val lo = s"${floorTo(s"($tOff - ${size}L)", slide)} + ${slide}L$back"
-      val hi = s"${floorTo(tOff, slide)}$back"
-      java.util.regex.Matcher.quoteReplacement(
-        s"(SELECT $table.*, ${contract("__ws", s"__ws + ${size}L", localZone)} " +
-          s"FROM $table " +
-          s"LATERAL VIEW explode(sequence($lo, $hi, ${slide}L)) __wt AS __ws " +
-          s"WHERE $tcol IS NOT NULL)")
-    })
-    val afterCumulate = CumulateRe.replaceAllIn(afterHop, m => {
-      val (table, tcol) = (m.group(1), m.group(2))
-      val step = millis(m, 3, "STEP")
-      val size = millis(m, 6, "SIZE")
-      require(size % step == 0,
-        s"CUMULATE size (${size} ms) must be a multiple of its step (${step} ms)")
-      val off = normOffset(offsetMillis(m, 9), size)
-      val t = epochMs(tcol, localZone)
-      // offset shifts the span grid: floor in offset-space, shift back
-      val tOff = if (off == 0L) t else s"($t - ${off}L)"
-      val back = if (off == 0L) "" else s" + ${off}L"
-      val span = s"${floorTo(tOff, size)}$back"
-      // window ends after the row, in step increments to the span end;
-      // pmod keeps the offset non-negative for pre-epoch rows too
-      val lo = s"((pmod($tOff, ${size}L) div ${step}L) + 1) * ${step}L"
-      java.util.regex.Matcher.quoteReplacement(
-        s"(SELECT $table.*, ${contract(span, s"($span) + __eo", localZone)} " +
-          s"FROM $table " +
-          s"LATERAL VIEW explode(sequence($lo, ${size}L, ${step}L)) __et AS __eo " +
-          s"WHERE $tcol IS NOT NULL)")
-    })
-    val out = SessionTvfRe.replaceAllIn(afterCumulate, m => {
-      val (table, keys, tcol) = (m.group(1), Option(m.group(2)), m.group(3))
-      val gap = {
-        val g = m.group(5).toLong * unitMillis(m.group(6))
-        require(g > 0, "session gap must be positive"); g
+    val found = calls(sql0)
+    val out = found.collect { case c: Call => c }.foldRight(sql0) { (c, acc) =>
+      val (table, tcol, t) = (c.src, c.tcol, epochMs(c.tcol, localZone))
+      val derived = c.kind match {
+        case "TUMBLE" =>
+          // closed: the window end adds to it
+          val ws = if (c.offset == 0L) c.start(t) else s"(${c.start(t)})"
+          s"(SELECT $table.*, ${contract(ws, s"$ws + ${c.size}L", localZone)} " +
+            s"FROM $table WHERE $tcol IS NOT NULL)"
+        case "HOP" =>
+          s"(SELECT $table.*, " +
+            s"${contract("__ws", s"__ws + ${c.size}L", localZone)} " +
+            s"FROM $table LATERAL VIEW explode(${c.starts(t)}) __wt AS __ws " +
+            s"WHERE $tcol IS NOT NULL)"
+        case "CUMULATE" =>
+          val span = c.start(t)
+          s"(SELECT $table.*, ${contract(span, s"($span) + __eo", localZone)} " +
+            s"FROM $table LATERAL VIEW explode(${c.ends(t)}) __et AS __eo " +
+            s"WHERE $tcol IS NOT NULL)"
+        case _ =>
+          // gaps-and-islands, Flink merge semantics: per-event windows
+          // [t, t+gap) merge when they touch, so events exactly `gap`
+          // apart share a session — a break needs a STRICTLY larger
+          // gap. The session-id running sum orders ties with the break
+          // flag first (__new DESC), so tied boundary rows land in the
+          // same session no matter which physical row carried the flag.
+          val keys = c.keys.mkString(", ")
+          val part = if (keys.isEmpty) "" else s"PARTITION BY $keys"
+          val sidPart =
+            if (keys.isEmpty) "PARTITION BY __sid" else s"PARTITION BY $keys, __sid"
+          val tms = epochMs(tcol)
+          val endMs = s"MAX(__tms) OVER ($sidPart) + ${c.size}L"
+          s"(SELECT * EXCEPT (__tms, __new, __sid), " +
+            s"timestamp_millis(MIN(__tms) OVER ($sidPart)) AS window_start, " +
+            s"timestamp_millis($endMs) AS window_end, " +
+            s"timestamp_millis(($endMs) - 1L) AS window_time " +
+            s"FROM (SELECT *, SUM(__new) OVER ($part ORDER BY __tms, __new DESC " +
+            s"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __sid " +
+            s"FROM (SELECT *, $tms AS __tms, " +
+            s"CASE WHEN $tms - LAG($tms) OVER ($part ORDER BY $tms) > ${c.size}L " +
+            s"THEN 1 ELSE 0 END AS __new " +
+            s"FROM $table WHERE $tcol IS NOT NULL) __s1) __s2)"
       }
-      // gaps-and-islands, Flink merge semantics: per-event windows
-      // [t, t+gap) merge when they touch, so events exactly `gap`
-      // apart share a session — a break needs a STRICTLY larger gap.
-      // The session-id running sum orders ties with the break flag
-      // first (__new DESC), so tied boundary rows land in the same
-      // session no matter which physical row carried the flag.
-      val part = keys.map(k => s"PARTITION BY $k").getOrElse("")
-      val sidPart = keys.map(k => s"PARTITION BY $k, __sid")
-        .getOrElse("PARTITION BY __sid")
-      val t = epochMs(tcol)
-      val endMs = s"MAX(__tms) OVER ($sidPart) + ${gap}L"
-      java.util.regex.Matcher.quoteReplacement(
-        s"(SELECT * EXCEPT (__tms, __new, __sid), " +
-          s"timestamp_millis(MIN(__tms) OVER ($sidPart)) AS window_start, " +
-          s"timestamp_millis($endMs) AS window_end, " +
-          s"timestamp_millis(($endMs) - 1L) AS window_time " +
-          s"FROM (SELECT *, SUM(__new) OVER ($part ORDER BY __tms, __new DESC " +
-          s"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __sid " +
-          s"FROM (SELECT *, $t AS __tms, " +
-          s"CASE WHEN $t - LAG($t) OVER ($part ORDER BY $t) > ${gap}L " +
-          s"THEN 1 ELSE 0 END AS __new " +
-          s"FROM $table WHERE $tcol IS NOT NULL) __s1) __s2)")
-    })
+      acc.patch(c.from, derived, c.to - c.from)
+    }
     // Flink 1.x legacy group windows. TUMBLE is a clean scalar rewrite
     // (one window per row, so GROUP BY TUMBLE(..) ≡ GROUP BY the
     // window-start expression); every accessor is a function of that
@@ -466,12 +485,13 @@ object WindowTvf {
     // anything still carrying a window-function marker was a shape no
     // rewrite recognized — fail with the contract, never leak Flink
     // syntax into Spark's parser
-    AnyTvfRe.findFirstMatchIn(legacy).foreach(m =>
+    found.collectFirst { case u: Unread =>
       throw new IllegalArgumentException(
-        s"Unsupported ${m.group(1).toUpperCase} window TVF form " +
+        s"Unsupported ${u.kind} window TVF form " +
           "(CUMULATE/SESSION offsets / fractional intervals / " +
-          "qualified descriptors are not recognized)"))
-    AnyLegacyRe.findFirstMatchIn(legacy).foreach { m =>
+          "qualified descriptors are not recognized)")
+    }
+    AnyLegacyRe.findFirstMatchIn(MatchRecognize.maskQuoted(legacy)).foreach { m =>
       val fn = m.group(1).toUpperCase + Option(m.group(2)).getOrElse("").toUpperCase
       throw new IllegalArgumentException(
         if (m.group(1).equalsIgnoreCase("TUMBLE"))
@@ -520,34 +540,16 @@ object WindowTvf {
     // would hide the time attribute from watermark tracking) escalate
     // to the TVF form and take the native-window path below
     val sql = legacyGroupToTvf(rawSql, tumbleToo = true)
-    val tvfCount = AnyTvfRe.findAllMatchIn(sql).size
-    if (tvfCount == 2 &&
-        raw"(?is)\bGROUP\s+BY\b".r.findFirstIn(sql).isEmpty) {
-      if (localZone.isDefined && hasGridTvf(sql)) {
-        // CUMULATE joins under a region zone run on the wall-clock
-        // span grid (r15); both sides must be CUMULATE like the
-        // non-zone form
-        if (CumulateRe.findFirstIn(sql).isDefined) {
-          if (!AnyTvfRe.findAllMatchIn(sql).map(_.group(1).toUpperCase)
-              .forall(_ == "CUMULATE"))
-            throw new IllegalArgumentException(
-              "streaming CUMULATE window join requires BOTH sides to " +
-                "be CUMULATE (Flink windows both inputs with the same " +
-                "TVF)")
-          return rewriteStreamingCumulateJoin(sql, spark, watermarkOf,
-            zone = localZone)
-        }
-        return rewriteStreamingZoneWindowJoin(
-          sql, localZone.get, spark, watermarkOf)
-      }
-      return rewriteStreamingWindowJoin(sql, spark, watermarkOf)
-    }
-    if (tvfCount > 1)
+    val found = calls(sql)
+    if (found.size == 2 &&
+        raw"(?is)\bGROUP\s+BY\b".r.findFirstIn(sql).isEmpty)
+      return rewriteStreamingWindowJoin(sql, found, spark, watermarkOf, localZone)
+    if (found.size > 1)
       throw new IllegalArgumentException(
         "Streaming mode supports one window TVF per statement " +
           "(or two TVF relations joined on window equality with no " +
           "GROUP BY — the window-join form)")
-    if (AnyTvfRe.findFirstIn(sql).isEmpty)
+    if (found.isEmpty)
       throw new IllegalArgumentException(
         "Unsupported legacy group-window form for streaming mode; " +
           "use the TVF form (TABLE(TUMBLE/HOP/SESSION(...)))")
@@ -557,14 +559,19 @@ object WindowTvf {
         raw"(?is)\b(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(".r
           .findFirstIn(scanListClause(sql, g.end)._1).isDefined))
       return expandStreamingGroupingSets(sql, spark, watermarkOf, localZone)
+    val win = found.head match {
+      case c: Call => c
+      case _ => throw new IllegalArgumentException(
+        "Unsupported window TVF form for streaming mode")
+    }
     // grid TVFs under a DST region zone: the wall-clock grid has a
     // variable instant offset, which the native window() slide cannot
     // express — window bounds are assigned per ROW (the batch
     // rewrite's from_utc_timestamp/to_utc_timestamp arithmetic) and
     // aggregated on the pinned-window tracker. SESSION statements
     // fall through: gap windows are zone-invariant.
-    if (localZone.isDefined && hasGridTvf(sql))
-      return rewriteStreamingZoneGrid(sql, localZone.get, spark, watermarkOf)
+    if (localZone.isDefined && win.kind != "SESSION")
+      return rewriteStreamingZoneGrid(sql, win, localZone.get, spark, watermarkOf)
     // COUNT(DISTINCT) in a streaming TUMBLE/HOP aggregation: the
     // native window() path compiles to a plain streaming Aggregate,
     // where Spark rejects exact distinct (and the
@@ -572,75 +579,38 @@ object WindowTvf {
     // HLL approximation) — route through the pinned-window tracker
     // instead, whose kind-9 accumulator keeps the exact per-(key,
     // window) value set Flink's window aggregation keeps. CUMULATE
-    // falls through to its own tracker (same kind-9 support, per-step
-    // state); SESSION routes onto the gap-merge tracker below (r15 —
-    // previously the one place the engine silently approximated where
-    // Flink is exact).
+    // runs on its own tracker (same kind-9 support, per-step state);
+    // SESSION routes onto the gap-merge tracker (r15 — previously the
+    // one place the engine silently approximated where Flink is
+    // exact); sessions without a distinct aggregate stay on the native
+    // session_window path below.
     val hasDistinctAgg =
       raw"(?is)\b(COUNT|SUM|AVG|MIN|MAX)\s*\(\s*DISTINCT\b".r
         .findFirstIn(MatchRecognize.maskQuoted(sql)).isDefined
-    if (hasGridTvf(sql) && CumulateRe.findFirstMatchIn(sql).isEmpty &&
-        hasDistinctAgg)
-      return rewriteStreamingZoneGrid(sql, "UTC", spark, watermarkOf)
-    // exact distinct aggregates in streaming SESSION windows: the
-    // gap-merge tracker keeps each open session's exact value set
-    // (Flink parity); sessions without a distinct aggregate stay on
-    // the native session_window path below
-    if (SessionTvfRe.findFirstMatchIn(sql).isDefined && hasDistinctAgg)
-      return rewriteStreamingSession(sql, spark, watermarkOf)
-    case class Win(start: Int, end: Int, table: String, expr: String,
-        struct: String, partitionKeys: Seq[String] = Nil,
-        endAdjustMs: Long = 0L)
-    val win = TumbleRe.findFirstMatchIn(sql).map { m =>
-      val dur = millis(m, 3, "SIZE")
-      val off = normOffset(offsetMillis(m, 6), dur)
-      // the offset grid maps onto the native window's startTime slot
-      val tail = if (off == 0L) "" else s", '$dur milliseconds', '$off milliseconds'"
-      Win(m.start, m.end, m.group(1),
-        s"window(${m.group(2)}, '$dur milliseconds'$tail)", "window")
-    }.orElse(HopRe.findFirstMatchIn(sql).map { m =>
-      val slide = millis(m, 3, "SLIDE")
-      val size = millis(m, 6, "SIZE")
-      require(size % slide == 0,
-        s"HOP size (${size} ms) must be a multiple of its slide (${slide} ms)")
-      val off = normOffset(offsetMillis(m, 9), slide)
-      val tail = if (off == 0L) "" else s", '$off milliseconds'"
-      Win(m.start, m.end, m.group(1),
-        s"window(${m.group(2)}, '$size milliseconds', '$slide milliseconds'$tail)",
-        "window")
-    }).orElse(SessionTvfRe.findFirstMatchIn(sql).map { m =>
-      val gap = m.group(5).toLong * unitMillis(m.group(6))
-      require(gap > 0, "session gap must be positive")
-      val pkeys = Option(m.group(2)).toSeq
-        .flatMap(_.split(",").map(_.trim)).filter(_.nonEmpty)
-      // Flink merges sessions that merely TOUCH (events exactly `gap`
-      // apart share a session, ms precision); Spark merges on OVERLAP
-      // only. Widening the gap by 1 ms makes Spark's merge predicate
-      // `diff < gap+1` ≡ Flink's `diff <= gap`; the emitted end is then
-      // lastTs + gap + 1, so window_end reads back 1 ms to Flink's
-      // exact bound
-      Win(m.start, m.end, m.group(1),
-        s"session_window(${m.group(3)}, '${gap + 1L} milliseconds')",
-        "session_window", pkeys, endAdjustMs = 1L)
-    }).getOrElse {
-      CumulateRe.findFirstMatchIn(sql) match {
-        case Some(cm) =>
-          return rewriteStreamingCumulate(sql, cm, spark, watermarkOf)
-        case None => throw new IllegalArgumentException(
-          "Unsupported window TVF form for streaming mode")
-      }
+    win.kind match {
+      case "CUMULATE" =>
+        return rewriteStreamingCumulate(sql, win, spark, watermarkOf)
+      case "SESSION" if hasDistinctAgg =>
+        return rewriteStreamingSession(sql, win, spark, watermarkOf)
+      case "SESSION" =>
+      case _ if hasDistinctAgg =>
+        return rewriteStreamingZoneGrid(sql, win, "UTC", spark, watermarkOf)
+      case _ =>
     }
+    val struct = if (win.kind == "SESSION") "session_window" else "window"
+    // SESSION's native window widens the gap by 1 ms (Call.native)
+    val endAdjustMs = if (win.kind == "SESSION") 1L else 0L
     def fieldRef(name: String): String = name match {
-      case "window_start" => s"${win.struct}.start"
+      case "window_start" => s"$struct.start"
       case "window_end" =>
-        if (win.endAdjustMs == 0L) s"${win.struct}.end"
-        else s"(${win.struct}.end - INTERVAL '${win.endAdjustMs}' MILLISECOND)"
+        if (endAdjustMs == 0L) s"$struct.end"
+        else s"($struct.end - INTERVAL '$endAdjustMs' MILLISECOND)"
       case _ =>
         // window_time stays a plain expression here (Spark's tagged
         // window_time() function cannot sit in an aggregate select
         // list); the CLI view registry re-tags the view's output
         // column as a rowtime attribute for two-stage pipelines (r17)
-        s"(${win.struct}.end - INTERVAL '${win.endAdjustMs + 1L}' MILLISECOND)"
+        s"($struct.end - INTERVAL '${endAdjustMs + 1L}' MILLISECOND)"
     }
     def replTokensIn(s: String): String =
       Seq("window_start", "window_end", "window_time").foldLeft(s)(
@@ -648,7 +618,7 @@ object WindowTvf {
           java.util.regex.Matcher.quoteReplacement(fieldRef(c))))
 
     // splice the TVF call out for the bare table reference
-    var out = sql.substring(0, win.start) + win.table + sql.substring(win.end)
+    val out = sql.patch(win.from, win.src, win.to - win.from)
 
     // rebuild the (single) GROUP BY: window-column keys → the native
     // window expression, other keys kept
@@ -667,7 +637,7 @@ object WindowTvf {
     // session_window sessions form per GROUP BY key: the TVF's
     // PARTITION BY keys must all be grouping keys, or sessions that
     // Flink forms per key would silently merge globally here
-    win.partitionKeys.foreach { pk =>
+    win.keys.foreach { pk =>
       if (!kept.exists(_.trim.equalsIgnoreCase(pk)))
         throw new IllegalArgumentException(
           s"streaming SESSION TVF PARTITION BY key '$pk' must also be " +
@@ -676,7 +646,7 @@ object WindowTvf {
     }
     // kept keys may themselves reference window columns (expressions)
     val newKeys =
-      (win.expr +: kept.map(k => replTokensIn(k.trim))).mkString(", ")
+      (win.native +: kept.map(k => replTokensIn(k.trim))).mkString(", ")
 
     // select-list region: [after SELECT, the top-level FROM); bare
     // window-column items keep their output name via an alias
@@ -734,9 +704,7 @@ object WindowTvf {
       localZone: Option[String] = None): String = {
     def fail(msg: String): Nothing = throw new IllegalArgumentException(
       s"streaming GROUPING SETS over a window TVF: $msg")
-    val PrefixRe =
-      raw"(?is)^\s*(INSERT\s+(?:INTO|OVERWRITE)\s+[\w.`]+\s*(?:\([^)]*\)\s*)?)".r
-    val (prefix, body) = PrefixRe.findFirstMatchIn(sql)
+    val (prefix, body) = ScriptParser.InsertPrefixRe.findFirstMatchIn(sql)
       .map(m => (m.group(1), sql.substring(m.end))).getOrElse(("", sql))
     val gbs = raw"(?is)\bGROUP\s+BY\b".r.findAllMatchIn(body).toList
     if (gbs.size != 1) fail("exactly one GROUP BY is supported")
@@ -870,25 +838,18 @@ object WindowTvf {
     * column must be the source's declared event-time column.
     */
   private def rewriteStreamingCumulate(
-      sql: String, m: scala.util.matching.Regex.Match,
+      sql: String, call: Call,
       spark: org.apache.spark.sql.SparkSession,
-      watermarkOf: String => Option[(String, String)]): String = {
-    def fail(msg: String): Nothing = throw new IllegalArgumentException(
-      s"streaming CUMULATE: $msg")
-    val stepMs = millis(m, 3, "STEP")
-    val sizeMs = millis(m, 6, "SIZE")
-    if (sizeMs % stepMs != 0)
-      fail(s"size ($sizeMs ms) must be a multiple of its step ($stepMs ms)")
-    val offMs = normOffset(offsetMillis(m, 9), sizeMs)
-    rewriteStreamingTrackerAgg(sql, m, spark, watermarkOf, "streaming CUMULATE",
+      watermarkOf: String => Option[(String, String)]): String =
+    rewriteStreamingTrackerAgg(sql, call, spark, watermarkOf,
+      "streaming CUMULATE",
       (prepared, wmDelay, kinds) => {
         implicit val evEnc =
           org.apache.spark.sql.Encoders.product[graft.streaming.CumulateEvent]
         graft.streaming.CumulateTracker.track(
-          prepared.as[graft.streaming.CumulateEvent], wmDelay, stepMs, sizeMs,
-          kinds, offMs).toDF
+          prepared.as[graft.streaming.CumulateEvent], wmDelay, call.slide,
+          call.size, kinds, call.offset).toDF
       })
-  }
 
   /** STREAMING `SESSION(gap)` aggregation with exact DISTINCT
     * aggregates: compiled onto [[graft.streaming.SessionAggTracker]]
@@ -903,28 +864,18 @@ object WindowTvf {
     * scope), plus window_start/window_end.
     */
   private def rewriteStreamingSession(
-      sql: String,
+      sql: String, call: Call,
       spark: org.apache.spark.sql.SparkSession,
-      watermarkOf: String => Option[(String, String)]): String = {
-    val m = SessionTvfRe.findFirstMatchIn(sql).getOrElse(
-      throw new IllegalArgumentException(
-        "streaming SESSION: unsupported TVF spelling"))
-    val gapMs = m.group(5).toLong * unitMillis(m.group(6))
-    require(gapMs > 0, "session gap must be positive")
-    val pkeys = Option(m.group(2)).toSeq
-      .flatMap(_.split(",").map(_.trim)).filter(_.nonEmpty)
-    rewriteStreamingTrackerAgg(sql, m, spark, watermarkOf,
+      watermarkOf: String => Option[(String, String)]): String =
+    rewriteStreamingTrackerAgg(sql, call, spark, watermarkOf,
       "streaming SESSION",
       (prepared, wmDelay, kinds) => {
         implicit val evEnc =
           org.apache.spark.sql.Encoders.product[graft.streaming.CumulateEvent]
         graft.streaming.SessionAggTracker.track(
-          prepared.as[graft.streaming.CumulateEvent], wmDelay, gapMs,
+          prepared.as[graft.streaming.CumulateEvent], wmDelay, call.size,
           kinds).toDF
-      },
-      tableTcol = Some((m.group(1), m.group(3))),
-      requireKeys = Some(pkeys))
-  }
+      })
 
   /** STREAMING TUMBLE/HOP/CUMULATE aggregation under a DST REGION
     * `table.local-time-zone` (Flink runs these; the native `window()`
@@ -942,59 +893,25 @@ object WindowTvf {
     * timeline) passes each window's instant end.
     */
   private def rewriteStreamingZoneGrid(
-      sql: String, zone: String,
+      sql: String, call: Call, zone: String,
       spark: org.apache.spark.sql.SparkSession,
       watermarkOf: String => Option[(String, String)]): String = {
     import org.apache.spark.sql.functions._
-    def floor(e: String, u: Long): String = s"($e - pmod($e, ${u}L))"
     val wall = s"unix_millis(from_utc_timestamp(ts, '$zone'))"
     def toInstant(c: String): String =
       s"unix_millis(to_utc_timestamp(timestamp_millis($c), '$zone'))"
-    // (match, kind label, fan-out: prepared -> +(__wsw, __wew) wall bounds)
-    val grid: (scala.util.matching.Regex.Match, String,
-        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
-      TumbleRe.findFirstMatchIn(sql).map { m =>
-        val dur = millis(m, 3, "SIZE")
-        val off = normOffset(offsetMillis(m, 6), dur)
-        val tOff = if (off == 0L) wall else s"($wall - ${off}L)"
-        val back = if (off == 0L) "" else s" + ${off}L"
-        (m, "TUMBLE", (p: org.apache.spark.sql.DataFrame) =>
-          p.withColumn("__wsw", expr(s"${floor(tOff, dur)}$back"))
-            .withColumn("__wew", expr(s"__wsw + ${dur}L")))
-      }.orElse(HopRe.findFirstMatchIn(sql).map { m =>
-        val slide = millis(m, 3, "SLIDE")
-        val size = millis(m, 6, "SIZE")
-        require(size % slide == 0,
-          s"HOP size ($size ms) must be a multiple of its slide ($slide ms)")
-        val off = normOffset(offsetMillis(m, 9), slide)
-        val tOff = if (off == 0L) wall else s"($wall - ${off}L)"
-        val back = if (off == 0L) "" else s" + ${off}L"
-        val lo = s"${floor(s"($tOff - ${size}L)", slide)} + ${slide}L$back"
-        val hi = s"${floor(tOff, slide)}$back"
-        (m, "HOP", (p: org.apache.spark.sql.DataFrame) =>
-          p.withColumn("__wsw",
-              explode(expr(s"sequence($lo, $hi, ${slide}L)")))
-            .withColumn("__wew", expr(s"__wsw + ${size}L")))
-      }).orElse(CumulateRe.findFirstMatchIn(sql).map { m =>
-        val step = millis(m, 3, "STEP")
-        val size = millis(m, 6, "SIZE")
-        require(size % step == 0,
-          s"CUMULATE size ($size ms) must be a multiple of its step ($step ms)")
-        val off = normOffset(offsetMillis(m, 9), size)
-        val tOff = if (off == 0L) wall else s"($wall - ${off}L)"
-        val back = if (off == 0L) "" else s" + ${off}L"
-        val lo = s"((pmod($tOff, ${size}L) div ${step}L) + 1) * ${step}L"
-        (m, "CUMULATE", (p: org.apache.spark.sql.DataFrame) =>
-          p.withColumn("__wsw", expr(s"${floor(tOff, size)}$back"))
-            .withColumn("__eo",
-              explode(expr(s"sequence($lo, ${size}L, ${step}L)")))
-            .withColumn("__wew", expr("__wsw + __eo")))
-      }).getOrElse(throw new IllegalArgumentException(
-        "Unsupported window TVF form for streaming mode under a DST " +
-          s"region zone ($zone)"))
-    val (m, kindName, fanOut) = grid
-    rewriteStreamingTrackerAgg(sql, m, spark, watermarkOf,
-      s"streaming $kindName under zone $zone",
+    // prepared -> +(__wsw, __wew): each covering window's wall bounds
+    val fanOut = (p: org.apache.spark.sql.DataFrame) => call.kind match {
+      case "TUMBLE" => p.withColumn("__wsw", expr(call.start(wall)))
+        .withColumn("__wew", expr(s"__wsw + ${call.size}L"))
+      case "HOP" => p.withColumn("__wsw", explode(expr(call.starts(wall))))
+        .withColumn("__wew", expr(s"__wsw + ${call.size}L"))
+      case _ => p.withColumn("__wsw", expr(call.start(wall)))
+        .withColumn("__eo", explode(expr(call.ends(wall))))
+        .withColumn("__wew", expr("__wsw + __eo"))
+    }
+    rewriteStreamingTrackerAgg(sql, call, spark, watermarkOf,
+      s"streaming ${call.kind} under zone $zone",
       (prepared, wmDelay, kinds) => {
         implicit val evEnc =
           org.apache.spark.sql.Encoders.product[graft.streaming.GridEvent]
@@ -1032,19 +949,12 @@ object WindowTvf {
     * layout.
     */
   private def rewriteStreamingTrackerAgg(
-      sql: String, m: scala.util.matching.Regex.Match,
+      sql: String, call: Call,
       spark: org.apache.spark.sql.SparkSession,
       watermarkOf: String => Option[(String, String)],
       failPrefix: String,
       track: (org.apache.spark.sql.DataFrame, String, Seq[Int]) =>
-        org.apache.spark.sql.DataFrame,
-      // TVF source/descriptor columns when they are not the match's
-      // groups 1/2 (SESSION's group layout differs), and the required
-      // GROUP BY key set (SESSION: keys must equal the TVF PARTITION
-      // BY — sessions merge per that tuple, so any other grouping is
-      // not a window aggregation)
-      tableTcol: Option[(String, String)] = None,
-      requireKeys: Option[Seq[String]] = None): String = {
+        org.apache.spark.sql.DataFrame): String = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     def fail(msg: String): Nothing = throw new IllegalArgumentException(
@@ -1052,13 +962,13 @@ object WindowTvf {
     if (spark == null)
       fail("no SparkSession available for the stateful rewrite; use HOP " +
         "or batch runtime mode")
-    val (table, tcol) = tableTcol.getOrElse((m.group(1), m.group(2)))
+    val (table, tcol) = (call.src, call.tcol)
     val (wmCol, wmDelay) = watermarkOf(table).getOrElse(fail(
       s"needs a WATERMARK declaration on $table"))
     if (!tcol.equalsIgnoreCase(wmCol))
       fail(s"DESCRIPTOR column $tcol must be the declared event-time " +
         s"column $wmCol")
-    val out = sql.substring(0, m.start) + table + sql.substring(m.end)
+    val out = sql.patch(call.from, table, call.to - call.from)
     val gbs = raw"(?is)\bGROUP\s+BY\b".r.findAllMatchIn(out).toList
     if (gbs.size != 1)
       fail("must be a single windowed aggregation (exactly one GROUP BY)")
@@ -1098,13 +1008,16 @@ object WindowTvf {
         "aggregation — use batch runtime mode for that shape")
     kept.foreach(k => if (raw"^[A-Za-z_]\w*$$".r.findFirstIn(k).isEmpty)
       fail(s"group key must be a bare column: $k"))
-    requireKeys.foreach { pk =>
-      if (kept.map(_.toLowerCase).toSet != pk.map(_.toLowerCase).toSet)
-        fail("GROUP BY keys must be exactly the SESSION PARTITION BY " +
-          s"keys (${if (pk.isEmpty) "none" else pk.mkString(", ")}) — " +
-          "sessions merge per that tuple, so any other grouping is not " +
-          s"a window aggregation; got: ${kept.mkString(", ")}")
-    }
+    // SESSION: the keys must equal the TVF PARTITION BY — sessions
+    // merge per that tuple, so any other grouping is not a window
+    // aggregation
+    val pk = call.keys
+    if (call.kind == "SESSION" &&
+        kept.map(_.toLowerCase).toSet != pk.map(_.toLowerCase).toSet)
+      fail("GROUP BY keys must be exactly the SESSION PARTITION BY " +
+        s"keys (${if (pk.isEmpty) "none" else pk.mkString(", ")}) — " +
+        "sessions merge per that tuple, so any other grouping is not " +
+        s"a window aggregation; got: ${kept.mkString(", ")}")
     val selM = raw"(?is)\bSELECT\b".r.findFirstMatchIn(out)
       .getOrElse(fail("no SELECT"))
     val selIdx = selM.end
@@ -1331,9 +1244,6 @@ object WindowTvf {
     (sql.substring(from, end), end)
   }
 
-  /** Index of the first depth-0 occurrence of keyword `kw` at or after
-    * `from`, skipping quoted regions and parenthesized groups.
-    */
   /** Streaming window join (Flink 1.14+): `FROM TABLE(TUMBLE(...)) L
     * JOIN TABLE(TUMBLE(...)) R ON L.window_start = R.window_start AND
     * L.window_end = R.window_end AND <keys>` with no GROUP BY. Each
@@ -1342,99 +1252,121 @@ object WindowTvf {
     * native window STRUCT as `__graft_w`; the ON's two window
     * equalities (Flink's own window-join requirement) are replaced by
     * ONE equality on the struct — the shape Spark's stream-stream
-    * join recognizes for watermark-driven state eviction. TUMBLE
-    * and HOP only: SESSION windows are per-key merges with no shared
-    * grid to equate, CUMULATE's expanding windows pair every prefix.
+    * join recognizes for watermark-driven state eviction. SESSION
+    * windows are per-key merges with no shared grid to equate and
+    * stay rejected; CUMULATE joins (both sides CUMULATE with one
+    * spec) run through [[rewriteStreamingCumulateJoin]], and a DST
+    * region `zone` moves TUMBLE/HOP onto [[rewriteStreamingZoneWindowJoin]].
     */
   private def rewriteStreamingWindowJoin(
-      sql: String,
+      sql: String, found: Seq[TvfCall],
       spark: org.apache.spark.sql.SparkSession,
-      watermarkOf: String => Option[(String, String)]): String = {
+      watermarkOf: String => Option[(String, String)],
+      zone: Option[String]): String = {
     def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
-    def requireWatermark(table: String, tcol: String): Unit =
-      requireJoinWatermark(spark, watermarkOf, table, tcol)
-    val kinds = AnyTvfRe.findAllMatchIn(sql).map(_.group(1).toUpperCase).toSeq
+    val kinds = found.map(_.kind)
     if (kinds.contains("SESSION"))
       fail("streaming window join supports TUMBLE, HOP and CUMULATE " +
         "windows only (got SESSION) — aggregate SESSION windows " +
         "separately, then join the results")
-    if (kinds.contains("CUMULATE")) {
-      if (!kinds.forall(_ == "CUMULATE"))
-        fail("streaming CUMULATE window join requires BOTH sides to be " +
-          "CUMULATE (Flink windows both inputs with the same TVF)")
-      return rewriteStreamingCumulateJoin(sql, spark, watermarkOf)
-    }
-    val tumbles = TumbleRe.findAllMatchIn(sql).toSeq.map((_, false))
-    val hops = HopRe.findAllMatchIn(sql).toSeq.map((_, true))
-    val calls = (tumbles ++ hops).sortBy(_._1.start)
-    if (calls.size != 2)
-      fail("streaming window join needs exactly two TUMBLE/HOP window " +
+    val cumulate = kinds.contains("CUMULATE")
+    if (cumulate && !kinds.forall(_ == "CUMULATE"))
+      fail("streaming CUMULATE window join requires BOTH sides to be " +
+        "CUMULATE (Flink windows both inputs with the same TVF)")
+    val sides = found.collect { case c: Call => c }
+    if (sides.size != 2)
+      fail(if (cumulate) "streaming CUMULATE window join needs exactly two " +
+        "CUMULATE window TVF relations in supported form"
+      else "streaming window join needs exactly two TUMBLE/HOP window " +
         "TVF relations in supported form")
-    var out = sql
-    for ((m, isHop) <- calls.reverseIterator) {
-      requireWatermark(m.group(1), m.group(2))
-      val (table, tcol, winExpr) =
-        if (!isHop) {
-          val dur = millis(m, 3, "SIZE")
-          val off = normOffset(offsetMillis(m, 6), dur)
-          val tail =
-            if (off == 0L) ""
-            else s", '$dur milliseconds', '$off milliseconds'"
-          (m.group(1), m.group(2),
-            s"window(${m.group(2)}, '$dur milliseconds'$tail)")
-        } else {
-          val slide = millis(m, 3, "SLIDE")
-          val size = millis(m, 6, "SIZE")
-          require(size % slide == 0,
-            s"HOP size ($size ms) must be a multiple of its slide ($slide ms)")
-          val off = normOffset(offsetMillis(m, 9), slide)
-          val tail = if (off == 0L) "" else s", '$off milliseconds'"
-          (m.group(1), m.group(2),
-            s"window(${m.group(2)}, '$size milliseconds', " +
-              s"'$slide milliseconds'$tail)")
-        }
-      val derived =
+    if (cumulate && sides.map(c => (c.slide, c.size, c.offset)).distinct.size != 1)
+      fail("streaming CUMULATE window join requires identical (step, " +
+        "size, offset) on both sides (Flink windows both inputs with " +
+        "the same TVF)")
+    sides.reverse.foreach(c =>
+      requireJoinWatermark(spark, watermarkOf, c.src, c.tcol))
+    if (cumulate) rewriteStreamingCumulateJoin(sql, sides, zone)
+    else zone.fold(nativeWindowJoin(sql, sides))(
+      rewriteStreamingZoneWindowJoin(sql, sides, _))
+  }
+
+  /** Each side of a TUMBLE/HOP window join becomes a windowed derived
+    * table exposing window_start/window_end/window_time as plain
+    * columns plus the native window STRUCT as `__graft_w`; the ON's two
+    * window equalities collapse into one equality on the struct. */
+  private def nativeWindowJoin(sql: String, sides: Seq[Call]): String = {
+    val out = sides.foldRight(sql) { (c, acc) =>
+      acc.patch(c.from,
         s"(SELECT * EXCEPT (__w), __w.start AS window_start, " +
           "__w.end AS window_end, " +
           "__w.end - INTERVAL '1' MILLISECOND AS window_time, " +
           "__w AS __graft_w " +
-          s"FROM (SELECT *, $winExpr AS __w FROM $table " +
-          s"WHERE $tcol IS NOT NULL) __gwj)"
-      out = out.substring(0, m.start) + derived + out.substring(m.end)
+          s"FROM (SELECT *, ${c.native} AS __w FROM ${c.src} " +
+          s"WHERE ${c.tcol} IS NOT NULL) __gwj)", c.to - c.from)
     }
-    // the ON clause: Flink requires window_start AND window_end
-    // equality; both collapse into one struct equality
+    val on = windowJoinOn(out, "streaming window join")
+    on.rebuild((s"${on.la}.__graft_w = ${on.ra}.__graft_w" +: on.rest)
+      .mkString(" AND "))
+  }
+
+  /** A window join's ON clause read off the spliced statement `out`:
+    * the aliases Flink's required `L.window_start = R.window_start AND
+    * L.window_end = R.window_end` names, the other conjuncts, and the
+    * statement rebuilt around a new condition. */
+  private final case class JoinOn(la: String, ra: String, rest: Seq[String],
+      rebuild: String => String)
+
+  private val WinEqRe = raw"(?is)^\s*([A-Za-z_]\w*)\.(window_start|window_end)\s*=\s*([A-Za-z_]\w*)\.(window_start|window_end)\s*$$".r
+
+  private def windowJoinOn(out: String, what: String): JoinOn = {
+    def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
     val onIdx = findTopLevel(out, 0, "ON").getOrElse(
-      fail("streaming window join needs an ON clause equating " +
+      fail(s"$what needs an ON clause equating " +
         "window_start and window_end of both sides"))
     val condEnd = Seq("WHERE", "ORDER", "LIMIT", "HAVING")
       .flatMap(k => findTopLevel(out, onIdx + 2, k)).sorted.headOption
       .getOrElse(out.length)
-    val cond = out.substring(onIdx + 2, condEnd)
-    val WinEqRe = raw"(?is)^\s*([A-Za-z_]\w*)\.(window_start|window_end)\s*=\s*([A-Za-z_]\w*)\.(window_start|window_end)\s*$$".r
     var startPair: Option[(String, String)] = None
     var sawEndEq = false
-    val rest = splitTopLevelAnd(cond).filter { c =>
-      c match {
-        case WinEqRe(a, ca, b, cb) if ca.equalsIgnoreCase(cb) =>
-          if (ca.equalsIgnoreCase("window_start")) startPair = Some((a, b))
-          else sawEndEq = true
-          false
-        case _ => true
-      }
+    val rest = splitTopLevelAnd(out.substring(onIdx + 2, condEnd)).filter {
+      case WinEqRe(a, ca, b, cb) if ca.equalsIgnoreCase(cb) =>
+        if (ca.equalsIgnoreCase("window_start")) startPair = Some((a, b))
+        else sawEndEq = true
+        false
+      case _ => true
     }
     val (la, ra) = startPair.getOrElse(
-      fail("streaming window join requires `L.window_start = " +
-        "R.window_start` in the ON clause (Flink's window-join " +
-        "contract)"))
+      fail(s"$what requires `L.window_start = R.window_start` in the ON " +
+        "clause (Flink's window-join contract)"))
     if (!sawEndEq)
-      fail("streaming window join requires `L.window_end = " +
-        "R.window_end` in the ON clause (Flink's window-join contract)")
-    val newCond =
-      (s"$la.__graft_w = $ra.__graft_w" +: rest.map(_.trim))
-        .mkString(" AND ")
-    out.substring(0, onIdx) + "ON " + newCond +
-      (if (condEnd < out.length) " " + out.substring(condEnd) else "")
+      fail(s"$what requires `L.window_end = R.window_end` in the ON " +
+        "clause (Flink's window-join contract)")
+    JoinOn(la, ra, rest.map(_.trim), cond => out.substring(0, onIdx) +
+      "ON " + cond +
+      (if (condEnd < out.length) " " + out.substring(condEnd) else ""))
+  }
+
+  /** The ON conjuncts of a wall-clock window join: equal instant
+    * bounds `__gws`/`__gwe` on both sides, plus the event-time range
+    * that bounds each side's state, as the struct equality does on the
+    * native path — rows sharing a wall-clock window of nominal span
+    * `spanMs` are within spanMs + 24 h of each other (24 h = the
+    * largest UTC-offset jump any tzdb transition makes), so the range
+    * is spanMs + 25 h. Each side's time column is found by its alias,
+    * read from the ORIGINAL text at the call's end. */
+  private def zoneJoinConds(sql: String, sides: Seq[Call], on: JoinOn,
+      spanMs: Long, what: String): Seq[String] = {
+    val tcolOf = sides.flatMap(c => aliasAfter(sql, c.to).map(_ -> c.tcol)).toMap
+    def tcol(a: String, side: String) = tcolOf.getOrElse(a,
+      throw new IllegalArgumentException(s"$what: cannot resolve relation " +
+        s"alias $a (alias each windowed TVF relation directly: " +
+        s"TABLE(...) $side)"))
+    val (la, ra) = (on.la, on.ra)
+    val (lt, rt) = (tcol(la, "L"), tcol(ra, "R"))
+    val boundMs = spanMs + 25L * 3600000L
+    Seq(s"$la.__gws = $ra.__gws", s"$la.__gwe = $ra.__gwe",
+      s"$la.$lt >= $ra.$rt - INTERVAL '$boundMs' MILLISECOND " +
+        s"AND $la.$lt <= $ra.$rt + INTERVAL '$boundMs' MILLISECOND")
   }
 
   /** Streaming TUMBLE/HOP window join under a DST REGION
@@ -1457,115 +1389,31 @@ object WindowTvf {
     * [[rewriteStreamingCumulateJoin]] with the zone threaded through.
     */
   private def rewriteStreamingZoneWindowJoin(
-      sql: String, zone: String,
-      spark: org.apache.spark.sql.SparkSession,
-      watermarkOf: String => Option[(String, String)]): String = {
-    def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
-    if (AnyTvfRe.findAllMatchIn(sql).map(_.group(1).toUpperCase)
-        .contains("SESSION"))
-      fail("streaming window join supports TUMBLE and HOP windows " +
-        "under a region zone (got SESSION) — aggregate SESSION windows " +
-        "separately, then join the results")
-    val tumbles = TumbleRe.findAllMatchIn(sql).toSeq.map((_, false))
-    val hops = HopRe.findAllMatchIn(sql).toSeq.map((_, true))
-    val calls = (tumbles ++ hops).sortBy(_._1.start)
-    if (calls.size != 2)
-      fail("streaming window join needs exactly two TUMBLE/HOP window " +
-        "TVF relations in supported form")
-    val wall = (tcol: String) =>
-      s"unix_millis(from_utc_timestamp(cast($tcol as timestamp), '$zone'))"
+      sql: String, sides: Seq[Call], zone: String): String = {
     def toInstTs(c: String): String =
       s"to_utc_timestamp(timestamp_millis($c), '$zone')"
-    var maxSize = 0L
-    var out = sql
-    // (alias resolution happens after splicing) side order: text order
-    val sideTcols = calls.map(_._1.group(2))
-    for ((m, isHop) <- calls.reverseIterator) {
-      requireJoinWatermark(spark, watermarkOf, m.group(1), m.group(2))
-      val (table, tcol) = (m.group(1), m.group(2))
-      val w = wall(tcol)
-      val (fromText, sizeMs) =
-        if (!isHop) {
-          val dur = millis(m, 3, "SIZE")
-          val off = normOffset(offsetMillis(m, 6), dur)
-          val tOff = if (off == 0L) w else s"($w - ${off}L)"
-          val back = if (off == 0L) "" else s" + ${off}L"
-          (s"(SELECT *, ${floorTo(tOff, dur)}$back AS __wsw " +
-            s"FROM $table WHERE $tcol IS NOT NULL) __gzj", dur)
-        } else {
-          val slide = millis(m, 3, "SLIDE")
-          val size = millis(m, 6, "SIZE")
-          require(size % slide == 0,
-            s"HOP size ($size ms) must be a multiple of its slide ($slide ms)")
-          val off = normOffset(offsetMillis(m, 9), slide)
-          val tOff = if (off == 0L) w else s"($w - ${off}L)"
-          val back = if (off == 0L) "" else s" + ${off}L"
-          val lo = s"${floorTo(s"($tOff - ${size}L)", slide)} + ${slide}L$back"
-          val hi = s"${floorTo(tOff, slide)}$back"
-          (s"(SELECT * FROM $table WHERE $tcol IS NOT NULL) __gz0 " +
-            s"LATERAL VIEW explode(sequence($lo, $hi, ${slide}L)) " +
-            "__gzv AS __wsw", size)
-        }
-      maxSize = math.max(maxSize, sizeMs)
-      val derived =
+    val out = sides.foldRight(sql) { (c, acc) =>
+      val w = epochMs(c.tcol, Some(zone))
+      val fromText =
+        if (c.kind == "TUMBLE")
+          s"(SELECT *, ${c.start(w)} AS __wsw " +
+            s"FROM ${c.src} WHERE ${c.tcol} IS NOT NULL) __gzj"
+        else
+          s"(SELECT * FROM ${c.src} WHERE ${c.tcol} IS NOT NULL) __gz0 " +
+            s"LATERAL VIEW explode(${c.starts(w)}) __gzv AS __wsw"
+      val end = toInstTs(s"(__wsw + ${c.size}L)")
+      acc.patch(c.from,
         s"(SELECT * EXCEPT (__wsw), " +
           s"${toInstTs("__wsw")} AS window_start, " +
-          s"${toInstTs(s"(__wsw + ${sizeMs}L)")} AS window_end, " +
-          s"${toInstTs(s"(__wsw + ${sizeMs}L)")} - INTERVAL '1' " +
-          "MILLISECOND AS window_time, " +
+          s"$end AS window_end, " +
+          s"$end - INTERVAL '1' MILLISECOND AS window_time, " +
           s"unix_millis(${toInstTs("__wsw")}) AS __gws, " +
-          s"unix_millis(${toInstTs(s"(__wsw + ${sizeMs}L)")}) AS __gwe " +
-          s"FROM $fromText)"
-      out = out.substring(0, m.start) + derived + out.substring(m.end)
+          s"unix_millis($end) AS __gwe " +
+          s"FROM $fromText)", c.to - c.from)
     }
-    val onIdx = findTopLevel(out, 0, "ON").getOrElse(
-      fail("streaming window join needs an ON clause equating " +
-        "window_start and window_end of both sides"))
-    val condEnd = Seq("WHERE", "ORDER", "LIMIT", "HAVING")
-      .flatMap(k => findTopLevel(out, onIdx + 2, k)).sorted.headOption
-      .getOrElse(out.length)
-    val cond = out.substring(onIdx + 2, condEnd)
-    val WinEqRe = raw"(?is)^\s*([A-Za-z_]\w*)\.(window_start|window_end)\s*=\s*([A-Za-z_]\w*)\.(window_start|window_end)\s*$$".r
-    var startPair: Option[(String, String)] = None
-    var sawEndEq = false
-    val rest = splitTopLevelAnd(cond).filter { c =>
-      c match {
-        case WinEqRe(a, ca, b, cb) if ca.equalsIgnoreCase(cb) =>
-          if (ca.equalsIgnoreCase("window_start")) startPair = Some((a, b))
-          else sawEndEq = true
-          false
-        case _ => true
-      }
-    }
-    val (la, ra) = startPair.getOrElse(
-      fail("streaming window join requires `L.window_start = " +
-        "R.window_start` in the ON clause (Flink's window-join " +
-        "contract)"))
-    if (!sawEndEq)
-      fail("streaming window join requires `L.window_end = " +
-        "R.window_end` in the ON clause (Flink's window-join contract)")
-    // alias → side mapping, read from the ORIGINAL text at each TVF
-    // call's end (an unaliased relation yields no entry instead of
-    // capturing the following keyword)
-    val tcolOf: Map[String, String] =
-      calls.map(_._1).zip(sideTcols).flatMap { case (m, tc) =>
-        aliasAfter(sql, m.end).map(_ -> tc)
-      }.toMap
-    val (lt, rt) = (
-      tcolOf.getOrElse(la, fail(
-        s"streaming window join: cannot resolve relation alias $la " +
-          "(alias each windowed TVF relation directly: TABLE(...) L)")),
-      tcolOf.getOrElse(ra, fail(
-        s"streaming window join: cannot resolve relation alias $ra " +
-          "(alias each windowed TVF relation directly: TABLE(...) R)")))
-    val boundMs = maxSize + 25L * 3600000L
-    val range = s"$la.$lt >= $ra.$rt - INTERVAL '$boundMs' MILLISECOND " +
-      s"AND $la.$lt <= $ra.$rt + INTERVAL '$boundMs' MILLISECOND"
-    val newCond =
-      (Seq(s"$la.__gws = $ra.__gws", s"$la.__gwe = $ra.__gwe", range) ++
-        rest.map(_.trim)).mkString(" AND ")
-    out.substring(0, onIdx) + "ON " + newCond +
-      (if (condEnd < out.length) " " + out.substring(condEnd) else "")
+    val on = windowJoinOn(out, "streaming window join")
+    on.rebuild((zoneJoinConds(sql, sides, on, sides.map(_.size).max,
+      "streaming window join") ++ on.rest).mkString(" AND "))
   }
 
   /** Words that can follow a join relation and are therefore NOT its
@@ -1622,7 +1470,8 @@ object WindowTvf {
     * fans out STATELESSLY to the step-multiple ends from
     * `greatest(eb_l, eb_r)` to the span end, where `eb` is a row's
     * first covering end offset. Both sides must be CUMULATE with
-    * identical (step, size, offset); the ON clause must equate
+    * identical (step, size, offset) — checked by the dispatcher
+    * [[rewriteStreamingWindowJoin]] with both watermarks; the ON clause must equate
     * window_start and window_end (Flink's window-join contract —
     * both collapse into the span-struct equality, end equality being
     * implied per fanned window). `X.window_end`/`X.window_time`
@@ -1631,9 +1480,7 @@ object WindowTvf {
     * (evaluated before the fan-out).
     */
   private def rewriteStreamingCumulateJoin(
-      sql: String,
-      spark: org.apache.spark.sql.SparkSession,
-      watermarkOf: String => Option[(String, String)],
+      sql: String, sides: Seq[Call],
       // a DST REGION zone (r15): the span grid is the zone's
       // wall-clock size grid — spans are assigned per row with the
       // batch rewrite's from_utc_timestamp floor, the span-struct
@@ -1644,87 +1491,35 @@ object WindowTvf {
       // wall-clock, and no tzdb transition shifts the offset by more
       // than 24 h). The fan-out and window_end/window_time rewrites
       // then run on the WALL timeline and convert back per reference.
-      zone: Option[String] = None): String = {
+      zone: Option[String]): String = {
     def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
-    val calls = CumulateRe.findAllMatchIn(sql).toSeq
-    if (calls.size != 2)
-      fail("streaming CUMULATE window join needs exactly two CUMULATE " +
-        "window TVF relations in supported form")
-    val specs = calls.map { m =>
-      val step = millis(m, 3, "STEP")
-      val size = millis(m, 6, "SIZE")
-      require(size % step == 0,
-        s"CUMULATE size ($size ms) must be a multiple of its step ($step ms)")
-      (step, size, normOffset(offsetMillis(m, 9), size))
-    }
-    if (specs.distinct.size != 1)
-      fail("streaming CUMULATE window join requires identical (step, " +
-        "size, offset) on both sides (Flink windows both inputs with " +
-        "the same TVF)")
-    val (stepMs, sizeMs, offMs) = specs.head
-    val sideTcols = calls.map(_.group(2))
-    var out = sql
-    for (m <- calls.reverseIterator) {
-      requireJoinWatermark(spark, watermarkOf, m.group(1), m.group(2))
-      val (table, tcol) = (m.group(1), m.group(2))
+    val (stepMs, sizeMs) = (sides.head.slide, sides.head.size)
+    val out = sides.foldRight(sql) { (c, acc) =>
+      val (table, tcol) = (c.src, c.tcol)
       val derived = zone match {
         case None =>
-          val tail =
-            if (offMs == 0L) ""
-            else s", '$sizeMs milliseconds', '$offMs milliseconds'"
-          val t = epochMs(tcol)
-          val tOff = if (offMs == 0L) t else s"($t - ${offMs}L)"
-          val eb =
-            s"((pmod($tOff, ${sizeMs}L) div ${stepMs}L) + 1) * ${stepMs}L"
           s"(SELECT * EXCEPT (__w), __w.start AS window_start, " +
-            s"__w AS __graft_w, $eb AS __graft_eb " +
-            s"FROM (SELECT *, window($tcol, '$sizeMs milliseconds'$tail) AS __w " +
+            s"__w AS __graft_w, ${c.firstEnd(epochMs(tcol))} AS __graft_eb " +
+            s"FROM (SELECT *, ${c.native} AS __w " +
             s"FROM $table WHERE $tcol IS NOT NULL) __gwj)"
         case Some(z) =>
-          val w =
-            s"unix_millis(from_utc_timestamp(cast($tcol as timestamp), '$z'))"
+          val w = epochMs(tcol, zone)
           def toInstTs(c: String): String =
             s"to_utc_timestamp(timestamp_millis($c), '$z')"
-          val tOff = if (offMs == 0L) w else s"($w - ${offMs}L)"
-          val back = if (offMs == 0L) "" else s" + ${offMs}L"
-          val eb =
-            s"((pmod($tOff, ${sizeMs}L) div ${stepMs}L) + 1) * ${stepMs}L"
           s"(SELECT * EXCEPT (__wsw), " +
             s"${toInstTs("__wsw")} AS window_start, " +
             s"__wsw AS __gww, " +
             s"unix_millis(${toInstTs("__wsw")}) AS __gws, " +
             s"unix_millis(${toInstTs(s"(__wsw + ${sizeMs}L)")}) AS __gwe, " +
-            s"$eb AS __graft_eb " +
-            s"FROM (SELECT *, ${floorTo(tOff, sizeMs)}$back AS __wsw " +
+            s"${c.firstEnd(w)} AS __graft_eb " +
+            s"FROM (SELECT *, ${c.start(w)} AS __wsw " +
             s"FROM $table WHERE $tcol IS NOT NULL) __gcz)"
       }
-      out = out.substring(0, m.start) + derived + out.substring(m.end)
+      acc.patch(c.from, derived, c.to - c.from)
     }
-    val onIdx = findTopLevel(out, 0, "ON").getOrElse(
-      fail("streaming CUMULATE window join needs an ON clause equating " +
-        "window_start and window_end of both sides"))
-    val condEnd = Seq("WHERE", "ORDER", "LIMIT", "HAVING")
-      .flatMap(k => findTopLevel(out, onIdx + 2, k)).sorted.headOption
-      .getOrElse(out.length)
-    val cond = out.substring(onIdx + 2, condEnd)
-    val WinEqRe = raw"(?is)^\s*([A-Za-z_]\w*)\.(window_start|window_end)\s*=\s*([A-Za-z_]\w*)\.(window_start|window_end)\s*$$".r
-    var startPair: Option[(String, String)] = None
-    var sawEndEq = false
-    val rest = splitTopLevelAnd(cond).filter { c =>
-      c match {
-        case WinEqRe(a, ca, b, cb) if ca.equalsIgnoreCase(cb) =>
-          if (ca.equalsIgnoreCase("window_start")) startPair = Some((a, b))
-          else sawEndEq = true
-          false
-        case _ => true
-      }
-    }
-    val (la, ra) = startPair.getOrElse(
-      fail("streaming CUMULATE window join requires `L.window_start = " +
-        "R.window_start` in the ON clause (Flink's window-join contract)"))
-    if (!sawEndEq)
-      fail("streaming CUMULATE window join requires `L.window_end = " +
-        "R.window_end` in the ON clause (Flink's window-join contract)")
+    val what = "streaming CUMULATE window join"
+    val on = windowJoinOn(out, what)
+    val (la, ra, rest) = (on.la, on.ra, on.rest)
     rest.foreach { c =>
       if (raw"(?i)\bwindow_(end|time)\b".r.findFirstIn(c).isDefined)
         fail("streaming CUMULATE window join: window_end/window_time " +
@@ -1733,35 +1528,13 @@ object WindowTvf {
     }
     val spanCond = zone match {
       case None => Seq(s"$la.__graft_w = $ra.__graft_w")
-      case Some(_) =>
-        // alias → event-time column, read from the ORIGINAL text at
-        // each TVF call's end (the range condition needs both sides'
-        // time attributes for state eviction)
-        val tcolOf: Map[String, String] =
-          calls.zip(sideTcols).flatMap { case (m, tc) =>
-            aliasAfter(sql, m.end).map(_ -> tc)
-          }.toMap
-        val (lt, rt) = (
-          tcolOf.getOrElse(la, fail(
-            s"streaming CUMULATE window join: cannot resolve relation " +
-              s"alias $la (alias each windowed TVF relation directly: " +
-              "TABLE(...) L)")),
-          tcolOf.getOrElse(ra, fail(
-            s"streaming CUMULATE window join: cannot resolve relation " +
-              s"alias $ra (alias each windowed TVF relation directly: " +
-              "TABLE(...) R)")))
-        val boundMs = sizeMs + 25L * 3600000L
-        Seq(s"$la.__gws = $ra.__gws", s"$la.__gwe = $ra.__gwe",
-          s"$la.$lt >= $ra.$rt - INTERVAL '$boundMs' MILLISECOND " +
-            s"AND $la.$lt <= $ra.$rt + INTERVAL '$boundMs' MILLISECOND")
+      case Some(_) => zoneJoinConds(sql, sides, on, sizeMs, what)
     }
-    val newCond = (spanCond ++ rest.map(_.trim)).mkString(" AND ")
     // the stateless fan-out: every step-multiple end covering BOTH rows
     val fan = s" LATERAL VIEW explode(sequence(" +
       s"greatest($la.__graft_eb, $ra.__graft_eb), ${sizeMs}L, ${stepMs}L)) " +
       "__gcf AS __graft_eo"
-    var res = out.substring(0, onIdx) + "ON " + newCond + fan +
-      (if (condEnd < out.length) " " + out.substring(condEnd) else "")
+    var res = on.rebuild((spanCond ++ rest).mkString(" AND ") + fan)
     // fan-out end references: the growing window's end is the span's
     // WALL start + the end offset, converted back to an instant under
     // a zone (the wall start rides as __gww); plain epoch arithmetic
@@ -1842,6 +1615,9 @@ object WindowTvf {
     parts.toSeq
   }
 
+  /** Index of the first depth-0 occurrence of keyword `kw` at or after
+    * `from`, skipping quoted regions and parenthesized groups.
+    */
   private[harness] def findTopLevel(sql: String, from: Int,
       kw: String): Option[Int] = {
     var i = from
@@ -1958,8 +1734,11 @@ object WindowTvf {
       case "HOP" => (g.ms.head, g.ms.last)
       case _ => (g.ms.head, g.ms.head)
     }
-    if (hopInline) require(sizeMs % slideMs == 0,
-      s"HOP size ($sizeMs ms) must be a multiple of its slide ($slideMs ms)")
+    // the inline fan-out's covering-window law (its constructor checks
+    // the intervals as the TVF reader does)
+    val inlineHop =
+      if (!hopInline) None
+      else Some(Call("HOP", 0, 0, "", g.tcol, sizeMs, slideMs, 0L, Nil, (0, 0)))
 
     // accessors first: their names contain the bare call name, and the
     // replacement shifts no GROUP BY/FROM landmarks we find afterwards.
@@ -2075,10 +1854,7 @@ object WindowTvf {
       // top-level WHERE; a NULL time column makes the sequence NULL,
       // which the non-OUTER lateral view drops — the TVF's
       // `tcol IS NOT NULL` behavior
-      val t = epochMs(g.tcol)
-      val lo = s"${floorTo(s"($t - ${sizeMs}L)", slideMs)} + ${slideMs}L"
-      val hi = floorTo(t, slideMs)
-      val lv = s" LATERAL VIEW explode(sequence($lo, $hi, ${slideMs}L)) " +
+      val lv = s" LATERAL VIEW explode(${inlineHop.get.starts(epochMs(g.tcol))}) " +
         "__wt AS __ws "
       val insertAt = findTopLevel(out, fromIdx, "WHERE")
         .filter(_ < gb.start).getOrElse(gb.start)

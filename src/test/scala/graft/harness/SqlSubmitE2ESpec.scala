@@ -1663,6 +1663,17 @@ class SqlSubmitE2ESpec extends AnyFunSuite {
     assert(action.registeredRowtimeOf("dtv_kept").contains(("ts", "1 seconds")))
   }
 
+  test("Flink's CREATE TEMPORARY VIEW IF NOT EXISTS runs, and a second " +
+      "one keeps the first definition and its rowtime") {
+    val action = registryRun("cne",
+      """create temporary view if not exists cne_v as select k, ts from cne_src;
+        |create temporary view if not exists cne_v as select k from cne_src;
+        |""".stripMargin)
+    assert(action.viewDefs.get("cne_v").contains("select k, ts from cne_src"))
+    assert(action.registeredRowtimeOf("cne_v").contains(("ts", "1 seconds")))
+    assert(SparkFixture.spark.table("cne_v").columns.toSeq == Seq("k", "ts"))
+  }
+
   test("a view's recorded definition is all the text after AS, block " +
       "comments and parentheses included, and comments or a TABLE body " +
       "keep its rowtime") {

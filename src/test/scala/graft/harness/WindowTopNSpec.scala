@@ -291,6 +291,47 @@ class WindowTopNSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("named-argument HOP top-N ranks the same rows as the positional form") {
+    // the window-TVF reader takes Flink's named arguments here as in
+    // the aggregation paths: DATA/TIMECOL/SLIDE/SIZE in declaration order
+    implicit val sc = spark.sqlContext
+    def run(name: String, call: String): Set[(String, Long, Long, Long)] = {
+      val input = MemoryStream[(String, Timestamp, Long, String)]
+      input.toDF().toDF("k", "ts", "spend", "tag")
+        .createOrReplaceTempView(s"${name}_s")
+      val sql =
+        s"""SELECT k, window_start, spend, rn FROM (
+           |  SELECT *, ROW_NUMBER() OVER (
+           |    PARTITION BY window_start, window_end, k ORDER BY spend DESC) AS rn
+           |  FROM TABLE(HOP(${call.replace("SRC", s"${name}_s")})))
+           |WHERE rn <= 2""".stripMargin
+      val q = spark.sql(WindowTopN.rewriteStreaming(spark, sql,
+          t => if (t.equalsIgnoreCase(s"${name}_s")) Some(("ts", "5 seconds"))
+            else None))
+        .writeStream.format("memory").queryName(s"${name}_out")
+        .outputMode("append").start()
+      try {
+        input.addData(("a", ts(10), 5L, "t5"), ("a", ts(40), 9L, "t9"),
+          ("a", ts(50), 7L, "t7"), ("b", ts(45), 3L, "t3"))
+        q.processAllAvailable()
+        input.addData(("z", ts(900), 1L, "adv"))
+        q.processAllAvailable()
+        spark.table(s"${name}_out").filter("k <> 'z'")
+          .select($"k",
+            org.apache.spark.sql.functions.unix_timestamp($"window_start"),
+            $"spend", $"rn")
+          .as[(String, Long, Long, Long)].collect().toSet
+      } finally q.stop()
+    }
+    val positional = run("wtn_hpos",
+      "TABLE SRC, DESCRIPTOR(ts), INTERVAL '30' SECOND, INTERVAL '1' MINUTE")
+    val named = run("wtn_hnam",
+      "DATA => TABLE SRC, TIMECOL => DESCRIPTOR(ts), " +
+        "SLIDE => INTERVAL '30' SECOND, SIZE => INTERVAL '1' MINUTE")
+    assert(positional.nonEmpty)
+    assert(named == positional, s"named $named\npositional $positional")
+  }
+
   test("TUMBLE top-N with a window offset matches the batch offset grid") {
     implicit val sc = spark.sqlContext
     val input = MemoryStream[(String, Timestamp, Long, String)]

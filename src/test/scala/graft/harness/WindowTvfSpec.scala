@@ -792,6 +792,43 @@ class WindowTvfSpec extends AnyFunSuite {
       got)
   }
 
+  test("e2e: INSERT INTO TABLE-prefixed streaming GROUPING SETS runs " +
+      "through sql-submit") {
+    // Flink's optional TABLE keyword after INSERT INTO stays in the
+    // statement prefix, so each grouping-set branch starts at its SELECT
+    val spark = graft.SparkFixture.spark
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-gst-out").toString
+    val script = java.nio.file.Files.createTempFile("graft-gst", ".sql")
+    java.nio.file.Files.writeString(script,
+      s"""CREATE TABLE gst_cli_src (ems BIGINT,
+         |  k AS CAST(ems % 2 AS STRING),
+         |  ts AS TO_TIMESTAMP_LTZ(ems * 10000, 3),
+         |  WATERMARK FOR ts AS ts - INTERVAL '1' SECOND)
+         |WITH ('connector'='datagen', 'number-of-rows'='6',
+         |  'fields.ems.kind'='sequence', 'fields.ems.start'='0',
+         |  'fields.ems.end'='5');
+         |CREATE TABLE gst_cli_sink (k STRING, ws TIMESTAMP(3), n BIGINT)
+         |WITH ('connector'='filesystem', 'path'='$out/sink',
+         |  'format'='parquet');
+         |INSERT INTO TABLE gst_cli_sink
+         |SELECT k, window_start AS ws, COUNT(*) AS n
+         |FROM TABLE(TUMBLE(TABLE gst_cli_src, DESCRIPTOR(ts),
+         |  INTERVAL '30' SECOND))
+         |GROUP BY GROUPING SETS ((window_start, window_end, k),
+         |  (window_start, window_end));
+         |""".stripMargin)
+    new SqlSubmitAction(script.toString, Map.empty,
+      existingSession = Some(spark), durationSec = 20L).run()
+    val got = spark.read.parquet(s"$out/sink")
+      .select($"k",
+        org.apache.spark.sql.functions.unix_timestamp($"ws"), $"n")
+      .as[(Option[String], Long, Long)].collect().toSet
+    assert(got == Set(
+      (Some("0"), 0L, 2L), (Some("1"), 0L, 1L), (None, 0L, 3L),
+      (Some("0"), 30L, 1L), (Some("1"), 30L, 2L), (None, 30L, 3L)), got)
+  }
+
   test("streaming TVF contract violations are rejected explicitly") {
     val cum = intercept[IllegalArgumentException] {
       WindowTvf.rewriteStreaming(
